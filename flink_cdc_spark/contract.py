@@ -1699,7 +1699,7 @@ def streaming_retract_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
         env = ParquetTableSource(spark, sf_dir).changelog(
             "orders", "default.orders", _ORDERS_MUT
         )
-        ra.stage(env, "o_orderkey")
+        ra.stage(env)
     ra.run()
     return ra.current_state()
 
@@ -2045,7 +2045,6 @@ pipeline: {schema.change.behavior: EVOLVE}
             ),
             state_root=f"{work}/state",
             checkpoint_dir=f"{work}/ckpt",
-            state_backend="lsm",
         )
         runner.run_available(src)
         result = runner.state.read("db.customer")

@@ -1,30 +1,18 @@
-"""Lake-table sink: CDC MERGE statement + DDL generation.
+"""Lake-table schema evolution: CDC schema-change events as catalog DDL.
 
-The Spark mapping of the reference's lake sinks
+The Spark mapping of the reference's lake-sink metadata appliers
 (pipeline-connector-paimon/.../PaimonMetadataApplier.java, iceberg/hudi
-modules): data events become one `MERGE INTO` per micro-batch keyed on the
-primary key, schema events become `ALTER TABLE` DDL executed by a
+modules): schema events become ``ALTER TABLE`` DDL, executed by a
 MetadataApplier analog with accepted-type filtering
-(common/sink/MetadataApplier.java:33-39).
-
-This module generates the exact SQL; executing it requires a table format
-with row-level-operation support (Delta/Iceberg/Paimon) in the session
-catalog, which this runtime does not ship — `ParquetStateStore`
-(streaming/runner.py) implements the same semantics for plain parquet and
-is what tests/benchmarks execute. The generated statements are unit-tested
-as strings; semantics are pinned by `materialize_changelog`'s oracle-gated
-behavior (the MERGE below is its SQL transcription).
-
-Batch pre-step: the source frame MUST be reduced to one row per key
-(last image by __seq) before MERGE — `dedupe_last_image` does this —
-because SQL MERGE forbids multiple source matches per target row.
+(common/sink/MetadataApplier.java:33-39). ``IcebergTableStore`` records
+the same DDL next to its own metadata-only schema evolution; data
+changes land through the table stores themselves (``LsmStateStore``,
+``IcebergTableStore``, ``HudiTableStore``), never through generated SQL.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, List, Optional, Sequence
-
-from pyspark.sql import DataFrame, Window, functions as F
+from typing import Iterable, List, Optional
 
 from ..core.events import (
     AddColumnEvent,
@@ -40,47 +28,6 @@ from ..core.events import (
     expand_schema_change_types,
 )
 from ..core.types import to_spark_type
-from ..sources.envelope import ENVELOPE_OP, ENVELOPE_SEQ, OP_DELETE
-
-
-def dedupe_last_image(env: DataFrame, primary_keys: Sequence[str]) -> DataFrame:
-    """One row per key: the last change by __seq (MERGE precondition)."""
-    keys = [
-        F.coalesce(F.col(f"after.{k}"), F.col(f"before.{k}")).alias(f"__k_{k}")
-        for k in primary_keys
-    ]
-    keyed = env.select("*", *keys)
-    w = Window.partitionBy(*[f"__k_{k}" for k in primary_keys]).orderBy(
-        F.col(ENVELOPE_SEQ).desc()
-    )
-    return (
-        keyed.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
-def merge_into_sql(
-    target: str,
-    source_view: str,
-    primary_keys: Sequence[str],
-    columns: Sequence[str],
-) -> str:
-    """CDC apply as one MERGE: DELETE on -D, UPDATE on match, INSERT else.
-
-    Mirrors ValuesDatabase.applyDataChangeEvent semantics
-    (pipeline-connector-values/.../ValuesDatabase.java:352-390)."""
-    on = " AND ".join(f"t.{k} <=> s.__k_{k}" for k in primary_keys)
-    sets = ", ".join(f"t.{c} = s.after.{c}" for c in columns)
-    ins_cols = ", ".join(columns)
-    ins_vals = ", ".join(f"s.after.{c}" for c in columns)
-    return (
-        f"MERGE INTO {target} t USING {source_view} s ON {on} "
-        f"WHEN MATCHED AND s.{ENVELOPE_OP} = '{OP_DELETE}' THEN DELETE "
-        f"WHEN MATCHED THEN UPDATE SET {sets} "
-        f"WHEN NOT MATCHED AND s.{ENVELOPE_OP} <> '{OP_DELETE}' "
-        f"THEN INSERT ({ins_cols}) VALUES ({ins_vals})"
-    )
 
 
 def _sql_type(dt) -> str:

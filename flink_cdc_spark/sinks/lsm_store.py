@@ -5,8 +5,7 @@ tree: writers append sorted delta files per commit, readers merge base +
 deltas by primary key, compaction folds deltas into a new base
 (paimon-flink sink / PaimonMetadataApplier.java apply DDL as metadata
 operations). This module implements that storage contract on plain parquet
-+ a JSON manifest, replacing the round-1 ParquetStateStore whose merge()
-rewrote the full table state every micro-batch:
++ a JSON manifest, so no micro-batch rewrites the full table state:
 
   * ``merge`` — O(batch): reduce the incoming envelope to last-image-per-
     key *within the batch* (tombstones kept), append ONE delta commit.

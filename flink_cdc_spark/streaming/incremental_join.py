@@ -35,16 +35,9 @@ for view rows — so one pk-unique delta commit carries both planes and
 the epoch write stays a single all-or-nothing Spark job. Per-epoch
 WRITE volume is O(delta keys + affected view rows), never O(state).
 
-Per-epoch READ: the resolved image plane is carried across epochs
-within a run (the fold computes exactly the post-commit state, so
-re-resolving it from disk each epoch — the retract_topn r15 lesson —
-would be pure waste); only the FIRST epoch of a process attaches via
-one merge-on-read scan. Crash idempotence maps onto epoch-keyed delta
-provenance: each epoch announces itself (``begin_epoch``), drops any
-delta a crashed attempt of itself left behind (``drop_epoch_deltas``),
-folds from the committed predecessor, and re-commits — replay
-OVERWRITES its own delta; the carry is never trusted for an epoch at
-or below the one that produced it. Money columns ride as-is in the
+Per-epoch READ: the resolved image plane rides the epoch protocol's
+carry (streaming/epoch.py), so only the FIRST epoch of a process
+attaches via one merge-on-read scan. Money columns ride as-is in the
 harmonized payload (the oracle compares post-join images, not sums).
 
 Scale: state bucketing by hash(pk) is available in the store
@@ -56,15 +49,12 @@ view read).
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .retract_agg import stage_replay_batches, staged_schema
-from ..sources.envelope import ENVELOPE_OP, ENVELOPE_TABLE_ID, OP_DELETE, OP_INSERT, OP_UPDATE
-
-N_REPLAY_BATCHES = 4
+from ..sources.envelope import ENVELOPE_OP, ENVELOPE_TABLE_ID, OP_DELETE
+from .epoch import EpochMachine
 
 
 def two_sided_delta(
@@ -102,10 +92,13 @@ def two_sided_delta(
     )
 
 
-class IncrementalJoinView:
+class IncrementalJoinView(EpochMachine):
     """Maintains `left ⋈ right ON left.join_key = right.pk_right`
     incrementally from a single interleaved changelog stream carrying
     both tables (split per epoch by __table_id)."""
+
+    _TABLE = "both"
+    _PKS = ["__t", "__k1", "__k2"]
 
     def __init__(
         self,
@@ -121,7 +114,7 @@ class IncrementalJoinView:
         staged_dir: Optional[str] = None,
         compact_every: int = 8,
     ):
-        self.spark = spark
+        super().__init__(spark, work_dir, staged_dir, compact_every)
         self.left_table_id = left_table_id
         self.right_table_id = right_table_id
         self.pk_left = pk_left
@@ -129,63 +122,6 @@ class IncrementalJoinView:
         self.pk_right = pk_right
         self.left_cols = list(left_cols)
         self.right_cols = list(right_cols)
-        self.active = staged_dir or os.path.join(work_dir, "active")
-        self.ckpt = os.path.join(work_dir, "ckpt")
-        self.state_dir = os.path.join(work_dir, "state")
-        os.makedirs(self.active, exist_ok=True)
-        os.makedirs(self.state_dir, exist_ok=True)
-        from ..sinks.lsm_store import LsmStateStore
-
-        self.state = LsmStateStore(
-            spark, self.state_dir, compact_every=compact_every
-        )
-        self._schema = None
-        # resolved image plane carried across epochs within a run (see
-        # module docstring); only trusted for epochs strictly after the
-        # one that produced it
-        self._lr_carry = None
-        self._carry_epoch = None
-
-    # -- staging (same mtime-ordered single-file batches as retract_agg) ----
-
-    def stage(self, env: DataFrame) -> None:
-        """Inserts of both tables, then updates, then deletes — mutations
-        always target rows accumulated in earlier micro-batches, on both
-        sides. Three epochs: the r9 bench showed per-epoch cost is
-        dominated by the fixed state-write overhead regardless of batch
-        size, so the old parity split of inserts over two epochs bought
-        no extra coverage for a full extra epoch of overhead."""
-        env = env.withColumn(
-            "__b",
-            F.when(F.col(ENVELOPE_OP) == OP_INSERT, F.lit(0))
-            .when(F.col(ENVELOPE_OP) == OP_UPDATE, F.lit(1))
-            .otherwise(F.lit(2)),
-        )
-        self._schema = env.drop("__b").schema
-        stage_replay_batches(env, self.active)
-
-    def staged(self) -> bool:
-        return os.path.exists(os.path.join(self.active, "_STAGED"))
-
-    # -- LSM-backed state (one O(delta) union-tagged commit per epoch) -------
-
-    _BOTH = "both"
-    _PKS = ["__t", "__k1", "__k2"]
-    # lineage-truncation cadence for the carried image plane: epochs in
-    # between carry the CACHED frame directly (its cache fills during the
-    # merge job — zero extra jobs); every _CKPT_EVERY-th epoch re-anchors
-    # in a localCheckpoint so plans don't grow without bound
-    _CKPT_EVERY = 4
-
-    def _versions(self, name: str = "view"):
-        """Epochs with a live delta commit in the LSM manifest (compaction
-        folds older epochs' deltas into the base; the tests and the
-        registry row run 3-4 epochs against the default compact_every=8).
-        ``name`` is vestigial — both planes commit in ONE delta."""
-        m = self.state._load(self._BOTH)
-        if m is None:
-            return []
-        return sorted({d["epoch"] for d in m["deltas"] if "epoch" in d})
 
     def _view_cols(self):
         return self.left_cols + [
@@ -193,7 +129,7 @@ class IncrementalJoinView:
         ]
 
     def _read_plane(self, plane: str) -> Optional[DataFrame]:
-        state = self.state.read(self._BOTH, predicate=f"__t = '{plane}'")
+        state = self.state.read(self._TABLE, predicate=f"__t = '{plane}'")
         if state is None:
             return None
         if plane == "lr":
@@ -210,26 +146,11 @@ class IncrementalJoinView:
         """One epoch = ONE union-tagged LSM delta commit carrying both the
         image-plane delta and the view repair — a single all-or-nothing
         Spark write job, O(delta) volume."""
-        from ..sources.envelope import wrap_as_upsert_deletes
-
-        # replay-overwrite: drop any delta a crashed attempt of this
-        # epoch left behind, so the fold reads the state exactly as of
-        # the committed predecessor
-        self.state.begin_epoch(epoch_id)
-        self.state.drop_epoch_deltas(self._BOTH, epoch_id)
-        if self._carry_epoch is not None and self._carry_epoch >= epoch_id:
-            # replayed/retried epoch in-process: the carry reflects a
-            # commit this epoch is about to overwrite
-            self._lr_carry.unpersist()
-            self._lr_carry = None
-            self._carry_epoch = None
-
-        delta = two_sided_delta(
-            batch_df, self.left_table_id, self.pk_left, self.pk_right
-        ).cache()  # consumed ~6x below (live, keys anti/semi, plane rows)
-        fresh_read = None
-        lr_new = None
-        try:
+        with self._epoch(epoch_id):
+            # consumed ~6x below (live, keys anti/semi, plane rows)
+            delta = self._hold(two_sided_delta(
+                batch_df, self.left_table_id, self.pk_left, self.pk_right
+            ))
             superset = [f.name for f in batch_df.schema["after"].dataType.fields]
             sup_types = {
                 f.name: f.dataType
@@ -238,12 +159,11 @@ class IncrementalJoinView:
             live = delta.where(F.col("__alive")).select(
                 "__left", "__pk", *[F.col(f"after.{c}").alias(c) for c in superset]
             )
-            if self._lr_carry is not None:
-                lr_old = self._lr_carry  # materialized last epoch
-            else:
+            lr_old = self._carry
+            if lr_old is None:
                 lr_old = self._read_plane("lr")
                 if lr_old is not None:
-                    fresh_read = lr_old = lr_old.cache()
+                    lr_old = self._hold(lr_old)
             changed = delta.select("__left", "__pk")
             if lr_old is None:
                 lr_new = live
@@ -252,12 +172,9 @@ class IncrementalJoinView:
                     F.broadcast(changed), ["__left", "__pk"], "left_anti"
                 ).unionByName(live)
             # lazy cache: the merge write job below scans l_new/r_new and
-            # fills it — no separate materialization job. The carry IS
-            # this cached frame; lineage is truncated only every
-            # _CKPT_EVERY epochs (each epoch's plan reads the
-            # predecessor's cache, so execution never re-derives, and the
-            # periodic checkpoint bounds plan growth on unbounded runs).
-            lr_new = lr_new.cache()
+            # fills it — no separate materialization job; it becomes the
+            # next carry
+            lr_new = self._hold(lr_new)
             l_new = lr_new.where(F.col("__left")).select(*self.left_cols)
             r_new = lr_new.where(~F.col("__left")).select(*self.right_cols)
 
@@ -381,79 +298,15 @@ class IncrementalJoinView:
                 ],
                 F.lit(True).alias("__dead"),
             )
-            combined = tbl_plane.unionByName(view_plane).unionByName(del_plane)
             # ONE pk-unique delta commit carries both planes,
             # hive-partitioned on the plane tag so per-plane reads prune
             # at file listing
-            self.state.merge(
-                self._BOTH,
-                wrap_as_upsert_deletes(combined, self._BOTH, "__dead"),
-                combined.drop("__dead").schema,
+            self._commit(
+                tbl_plane.unionByName(view_plane).unionByName(del_plane),
                 self._PKS,
                 partition_keys=["__t"],
-                batch_unique=True,
             )
-            # commit landed: the post-commit image plane IS the next
-            # epoch's state (its cache filled during the merge job);
-            # every _CKPT_EVERY-th epoch re-anchors it in a checkpoint to
-            # bound plan growth
-            prev_carry = self._lr_carry
-            if epoch_id % self._CKPT_EVERY == self._CKPT_EVERY - 1:
-                self._lr_carry = lr_new.localCheckpoint(eager=True)
-            else:
-                self._lr_carry = lr_new
-                lr_new = None  # adopted — must not unpersist in finally
-            self._carry_epoch = epoch_id
-            if prev_carry is not None:
-                prev_carry.unpersist()
-        finally:
-            delta.unpersist()
-            if lr_new is not None:
-                # inside finally (the ADVICE r15 leak class): an exception
-                # after cache() must not leak the frame
-                lr_new.unpersist()
-            if fresh_read is not None:
-                fresh_read.unpersist()
-
-    # -- the streaming query --------------------------------------------------
-
-    def run(self) -> None:
-        if self._schema is None:  # attached to a pre-staged directory
-            self._schema = staged_schema(self.spark, self.active)
-        from .windowed import STATE_PARTITIONS, scoped_shuffle_partitions
-
-        stream = (
-            self.spark.readStream.schema(self._schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(self.active)
-        )
-        try:
-            with scoped_shuffle_partitions(self.spark, STATE_PARTITIONS):
-                q = (
-                    stream.writeStream.outputMode("update")
-                    .foreachBatch(lambda df, eid: self._merge_epoch(df, eid))
-                    .option("checkpointLocation", self.ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination(300)
-            # checkpoint committed: clear the persisted in-flight marker.
-            # Deliberately NOT in the finally: a failed run's last epoch
-            # can still replay, and sealing would let a maintenance
-            # compact() bake its delta into the base.
-            self.state.seal(self._BOTH)
-        finally:
-            # released even when the streaming query fails (ADVICE r16 —
-            # the crash-injection subclasses exercise that path): the
-            # carried image plane's cached blocks and the state-store
-            # providers must not outlive the run
-            if self._lr_carry is not None:
-                self._lr_carry.unpersist()
-                self._lr_carry = None
-                self._carry_epoch = None
-            from .windowed import unload_state_store_providers
-
-            unload_state_store_providers(self.spark)
+            self._next_carry = lr_new
 
     def current_view(self) -> DataFrame:
         view = self._read_plane("view")

@@ -16,19 +16,12 @@ Scale shape: the per-batch work is one hash aggregation over the batch's
 contribution rows (map-side combined, shuffle keyed on the group) plus a
 full-outer merge against the TOUCHED groups' prior state (broadcast
 semi-join on the batch's group set — batch-bounded). State lives in the
-repo's own ``LsmStateStore`` as delta commits keyed by group (r15,
-VERDICT r14 item 4 — the epoch-versioned full-parquet rewrite wrote
-O(live groups) per epoch; the LSM write is O(touched groups)): per
-epoch the merge commits ONLY the touched groups' new (n_rows,
-sum_cents) images, with a DELETE tombstone for any group whose row
-count reached zero; untouched groups are never rewritten; reads are
-merge-on-read with compaction amortizing the delta count. Crash
-idempotence maps onto epoch-keyed delta provenance: each epoch
-announces itself (``begin_epoch``), drops any delta a crashed attempt
-of itself left behind (``drop_epoch_deltas``), merges from the
-committed predecessor state, and re-commits — replay OVERWRITES its
-own delta (the standard idempotent-foreachBatch pattern, now with an
-O(batch) write).
+repo's own ``LsmStateStore`` as delta commits keyed by group: per epoch
+the merge commits ONLY the touched groups' new (n_rows, sum_cents)
+images, with a DELETE tombstone for any group whose row count reached
+zero; untouched groups are never rewritten. The epoch protocol
+(staging, replay-overwrite, the streaming run) is ``EpochMachine``'s
+(streaming/epoch.py).
 
 Determinism: money sums use the exact-cents idiom (floor(x*100 + 0.5) as
 BIGINT — the tpch_q1 discipline): every delta and every running sum is an
@@ -37,9 +30,6 @@ integer, immune to engine/partial-aggregation order.
 
 from __future__ import annotations
 
-import os
-import shutil
-import time
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -51,52 +41,7 @@ from ..sources.envelope import (
     OP_REPLACE,
     OP_UPDATE,
 )
-
-N_REPLAY_BATCHES = 4
-
-
-def stage_replay_batches(
-    env_with_b: DataFrame, active: str, n_batches: int = N_REPLAY_BATCHES
-) -> None:
-    """ONE pass over the changelog: hash-repartition on __b then
-    partitionBy-write — each batch value lives in exactly one task, so
-    each __b= dir gets exactly one file (a replay batch must be one file
-    for maxFilesPerTrigger=1 micro-batch ordering). The previous
-    per-batch filtered writes scanned the changelog n_batches
-    times. mtimes forced increasing so the file source delivers batches
-    in order."""
-    staged = os.path.join(active, "_staged")
-    env_with_b.repartition(n_batches, "__b").write.mode(
-        "overwrite"
-    ).partitionBy("__b").parquet(staged)
-    now = time.time()
-    for b in range(n_batches):
-        d = os.path.join(staged, f"__b={b}")
-        if not os.path.isdir(d):
-            continue
-        files = [fn for fn in os.listdir(d) if fn.endswith(".parquet")]
-        assert len(files) == 1, f"replay batch {b} must be one file: {files}"
-        dst = os.path.join(active, f"b{b}.parquet")
-        shutil.move(os.path.join(d, files[0]), dst)
-        os.utime(dst, (now + b, now + b))
-    shutil.rmtree(staged)
-    with open(os.path.join(active, "_STAGED"), "w") as f:
-        f.write("ok")  # marker: a partially-moved dir never passes staged()
-
-
-def staged_schema(spark, active: str):
-    """Replay schema of a pre-staged directory, read from the FIRST
-    existing b*.parquet: stage_replay_batches skips absent batch values,
-    so a changelog with (say) no even-parity insert keys legitimately
-    stages without b0.parquet — hard-coding b0 crashed every
-    attach-to-prestaged run of such a changelog."""
-    batches = sorted(
-        fn for fn in os.listdir(active)
-        if fn.startswith("b") and fn.endswith(".parquet")
-    )
-    if not batches:
-        raise FileNotFoundError(f"no staged b*.parquet batches in {active}")
-    return spark.read.parquet(os.path.join(active, batches[0])).schema
+from .epoch import EpochMachine, stage_replay_batches  # noqa: F401  (re-exported)
 
 
 def _cents(col: F.Column) -> F.Column:
@@ -181,9 +126,12 @@ def merge_state(prev: Optional[DataFrame], deltas: DataFrame) -> DataFrame:
     return merge_state_unfiltered(prev, deltas).where(F.col("n_rows") != 0)
 
 
-class RetractAggregateStream:
-    """Drives a staged changelog through a checkpointed Structured
-    Streaming query that maintains the aggregate state epoch by epoch."""
+class RetractAggregateStream(EpochMachine):
+    """Maintains the aggregate state epoch by epoch over a staged
+    changelog."""
+
+    # _AGG: the name perfbench/workloads.py reads the state table by
+    _AGG = _TABLE = "agg"
 
     def __init__(
         self,
@@ -195,148 +143,42 @@ class RetractAggregateStream:
         compact_every: int = 8,
         num_buckets: int = 8,
     ):
-        """staged_dir: reuse an already-staged batch directory (staging is
-        deterministic per input, so bench re-runs share it; checkpoint and
-        state stay per-run under work_dir).
-
-        num_buckets: the state table lays out hash(grp)-bucketed (r16,
-        VERDICT r15 item 4), so the per-epoch fold READS only the touched
-        groups' buckets — pruned at file listing — instead of scanning
-        the whole state under the merge window. 0 disables."""
-        self.spark = spark
+        """num_buckets: the state table lays out hash(grp)-bucketed, so
+        the per-epoch fold READS only the touched groups' buckets —
+        pruned at file listing — instead of scanning the whole state
+        under the merge window. 0 disables."""
+        super().__init__(spark, work_dir, staged_dir, compact_every)
         self.group = group
         self.value = value
         self.num_buckets = num_buckets
-        self.active = staged_dir or os.path.join(work_dir, "active")
-        self.ckpt = os.path.join(work_dir, "ckpt")
-        self.state_dir = os.path.join(work_dir, "state")
-        os.makedirs(self.active, exist_ok=True)
-        os.makedirs(self.state_dir, exist_ok=True)
-        from ..sinks.lsm_store import LsmStateStore
-
-        self.state = LsmStateStore(
-            spark, self.state_dir, compact_every=compact_every
-        )
-        self._schema = None
-
-    # -- staging ------------------------------------------------------------
-
-    def stage(self, env: DataFrame, key_column: str) -> None:
-        """Split the changelog into single-file parquet batches — all
-        inserts, then updates, then deletes — so retractions always
-        target rows accumulated in EARLIER micro-batches. Three epochs:
-        per-epoch cost is dominated by the fixed state write regardless
-        of batch size, and the old parity split of inserts over two
-        epochs bought no extra coverage (the update epoch already
-        exercises merge-onto-accumulated-state) for a full extra epoch
-        of overhead."""
-        env = env.withColumn(
-            "__b",
-            F.when(F.col(ENVELOPE_OP) == OP_INSERT, F.lit(0))
-            .when(F.col(ENVELOPE_OP) == OP_UPDATE, F.lit(1))
-            .otherwise(F.lit(2)),
-        )
-        self._schema = env.drop("__b").schema
-        stage_replay_batches(env, self.active)
-
-    # -- LSM-backed state (O(touched groups) delta commits) -------------------
-
-    _AGG = "agg"
-
-    def _committed_versions(self):
-        """Epochs with a live delta commit in the LSM manifest (compaction
-        folds older epochs' deltas into the base, so after a compaction
-        this reflects only the uncompacted tail — the tests and the
-        registry row run 3-4 epochs against the default compact_every=8)."""
-        m = self.state._load(self._AGG)
-        if m is None:
-            return []
-        return sorted({d["epoch"] for d in m["deltas"] if "epoch" in d})
-
-    # -- the streaming query ------------------------------------------------
-
-    def staged(self) -> bool:
-        return os.path.exists(os.path.join(self.active, "_STAGED"))
 
     def _merge_epoch(self, batch_df, epoch_id) -> None:
-        from ..sources.envelope import wrap_as_upsert_deletes
-
-        # replay-overwrite: announce the epoch and unreference any delta a
-        # crashed attempt of this epoch left behind, so the merge reads
-        # the state exactly as of the committed predecessor
-        self.state.begin_epoch(epoch_id)
-        self.state.drop_epoch_deltas(self._AGG, epoch_id)
-        # consumed 3x (bucket probe, semi-join broadcast, merge) — tiny
-        # (one row per touched group), so cache instead of recompute
-        deltas = contribution_deltas(batch_df, self.group, self.value).cache()
-        try:
-            # the fold SCANS only the touched groups' buckets (pruned at
-            # file listing — the bucketed layout's point) and READS only
-            # the touched groups' state (the semi-join bounds the merge
-            # work to the batch's group set)
-            prev_full = self.state.read(
-                self._AGG, touched=deltas.select("grp")
+        with self._epoch(epoch_id):
+            # consumed 3x (bucket probe, semi-join broadcast, merge) — tiny
+            # (one row per touched group), so cache instead of recompute
+            deltas = self._hold(
+                contribution_deltas(batch_df, self.group, self.value)
             )
-            if prev_full is None:
-                prev = None
-            else:
-                prev = prev_full.join(
+            # the fold SCANS only the touched groups' buckets (pruned at
+            # file listing) and READS only the touched groups' state (the
+            # semi-join bounds the merge work to the batch's group set)
+            prev = self.state.read(self._TABLE, touched=deltas.select("grp"))
+            if prev is not None:
+                prev = prev.join(
                     F.broadcast(deltas.select("grp")), "grp", "left_semi"
                 )
             merged = merge_state_unfiltered(prev, deltas)
-            # ONE O(touched groups) delta commit: upserts for live groups,
-            # DELETE tombstones for groups whose row count reached zero —
-            # untouched groups are never rewritten
-            delta = merged.withColumn("__dead", F.col("n_rows") == 0)
-            payload = merged.schema
-            self.state.merge(
-                self._AGG,
-                wrap_as_upsert_deletes(delta, self._AGG, "__dead"),
-                payload,
+            # upserts for live groups, DELETE tombstones for groups whose
+            # row count reached zero — untouched groups are never rewritten
+            self._commit(
+                merged.withColumn("__dead", F.col("n_rows") == 0),
                 ["grp"],
-                batch_unique=True,  # one row per group: a groupBy output
                 bucket_keys=["grp"],
                 num_buckets=self.num_buckets,
             )
-        finally:
-            deltas.unpersist()
-
-    def run(self) -> None:
-        if self._schema is None:  # attached to a pre-staged directory
-            self._schema = staged_schema(self.spark, self.active)
-
-        from .windowed import STATE_PARTITIONS, scoped_shuffle_partitions
-
-        stream = (
-            self.spark.readStream.schema(self._schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(self.active)
-        )
-        # tiny per-epoch relations: full shuffle width is pure overhead
-        try:
-            with scoped_shuffle_partitions(self.spark, STATE_PARTITIONS):
-                q = (
-                    stream.writeStream.outputMode("update")
-                    .foreachBatch(lambda df, eid: self._merge_epoch(df, eid))
-                    .option("checkpointLocation", self.ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination(300)
-            # checkpoint committed: the last epoch can no longer replay, so
-            # clear the persisted in-flight marker (a maintenance compaction
-            # may now fold its delta). Deliberately NOT in the finally: a
-            # failed run's last epoch can still replay.
-            self.state.seal(self._AGG)
-        finally:
-            # unloaded even when the streaming query fails (ADVICE r16 —
-            # the crash-injection subclasses exercise that path)
-            from .windowed import unload_state_store_providers
-
-            unload_state_store_providers(self.spark)
 
     def current_state(self) -> DataFrame:
-        state = self.state.read(self._AGG)
+        state = self.state.read(self._TABLE)
         if state is None:
             return self.spark.createDataFrame(
                 [], "grp string, n_rows bigint, sum_cents bigint"

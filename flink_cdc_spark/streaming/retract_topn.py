@@ -4,8 +4,7 @@ Flink SQL; reference semantics: flink's RetractableTopNFunction —
 a ranked view stays correct when INSERT/UPDATE/DELETE re-orders rows,
 re-emitting only the groups an update touched).
 
-Spark rendition, same epoch-keyed idempotent state machine as
-retract_agg / temporal_join_stream. Both state planes live in ONE
+Spark rendition, an ``EpochMachine`` (streaming/epoch.py). Both state planes live in ONE
 ``LsmStateStore`` table, union-tagged by ``__t`` and hive-partitioned
 on it (the machine's proven single-write-job epoch commit, now with
 O(delta) volume):
@@ -31,31 +30,28 @@ pass ``__t`` as the read predicate: it prunes whole hive partitions at
 file listing and, being a pk column, commutes with the merge window.
 
 Per-epoch WRITE cost is proportional to (delta keys + top-n rows of
-touched groups), never to the state or the view: the retract contract
-(r15, VERDICT r14 item 4 — the epoch-versioned full-parquet rewrite
-wrote O(state) per epoch). Reads are merge-on-read with compaction
-amortizing the delta count. Crash idempotence maps onto epoch-keyed
-delta provenance: each epoch announces itself (``begin_epoch``), drops
-any delta a crashed attempt of itself left behind
-(``drop_epoch_deltas``), recomputes from the committed predecessor,
-and re-commits — replay OVERWRITES its own delta. Money rides as
+touched groups), never to the state or the view. The resolved image
+plane rides the epoch protocol's carry (streaming/epoch.py), so only
+the first epoch of a run resolves it from the store. Money rides as
 exact integer cents.
 """
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..sources.envelope import ENVELOPE_OP, ENVELOPE_SEQ, OP_DELETE, OP_INSERT, OP_UPDATE
-from .retract_agg import stage_replay_batches, staged_schema
+from ..sources.envelope import ENVELOPE_OP, ENVELOPE_SEQ, OP_DELETE
+from .epoch import EpochMachine
 
 
-class RetractTopNStream:
+class RetractTopNStream(EpochMachine):
     """Maintains ``SELECT *, row_number() OVER (PARTITION BY group
     ORDER BY value DESC, key ASC) <= n`` over a replayed changelog."""
+
+    _TABLE = "both"
+    _PKS = ["__t", "__k1", "__k2"]
 
     def __init__(
         self,
@@ -68,71 +64,14 @@ class RetractTopNStream:
         staged_dir: Optional[str] = None,
         compact_every: int = 8,
     ):
-        self.spark = spark
+        super().__init__(spark, work_dir, staged_dir, compact_every)
         self.key = key
         self.group = group
         self.value = value
         self.n = n
-        self.active = staged_dir or os.path.join(work_dir, "active")
-        self.ckpt = os.path.join(work_dir, "ckpt")
-        self.state_dir = os.path.join(work_dir, "state")
-        os.makedirs(self.active, exist_ok=True)
-        os.makedirs(self.state_dir, exist_ok=True)
-        from ..sinks.lsm_store import LsmStateStore
-
-        self.state = LsmStateStore(
-            spark, self.state_dir, compact_every=compact_every
-        )
-        self._schema = None
-        # resolved image plane carried across epochs WITHIN a run (r16,
-        # VERDICT r15 item 3): the fold computes exactly the post-commit
-        # image state as `tbl_new` every epoch, so re-resolving it from
-        # disk next epoch (multi-commit merge-on-read scan + pk-window
-        # exchange) was pure waste — the round's one perf-weak mark.
-        # Carried as a localCheckpoint (lineage truncated, so plans don't
-        # chain across epochs). Replay-safe: a crash drops the process
-        # and the next attempt re-reads the store; within a run, the
-        # carry is only trusted for epochs STRICTLY AFTER the one that
-        # produced it (_carry_epoch guard).
-        self._tbl_carry = None
-        self._carry_epoch = None
-
-    # -- staging (retract_agg pattern: inserts, updates, deletes) -----------
-
-    def stage(self, env: DataFrame) -> None:
-        env = env.withColumn(
-            "__b",
-            F.when(F.col(ENVELOPE_OP) == OP_INSERT, F.lit(0))
-            .when(F.col(ENVELOPE_OP) == OP_UPDATE, F.lit(1))
-            .otherwise(F.lit(2)),
-        )
-        self._schema = env.drop("__b").schema
-        stage_replay_batches(env, self.active)
-
-    def staged(self) -> bool:
-        return os.path.exists(os.path.join(self.active, "_STAGED"))
-
-    # -- LSM-backed state (one O(delta) union-tagged commit per epoch) -------
-
-    _BOTH = "both"
-    _PKS = ["__t", "__k1", "__k2"]
-    # lineage-truncation cadence for the carried image plane (see
-    # incremental_join): in-between epochs carry the cached frame
-    # directly — zero extra jobs — and every _CKPT_EVERY-th epoch
-    # re-anchors in a localCheckpoint to bound plan growth
-    _CKPT_EVERY = 4
-
-    def _versions(self):
-        """Epochs with a live delta commit in the LSM manifest
-        (compaction folds older epochs' deltas into the base; the tests
-        and the registry row run 3 epochs against compact_every=8)."""
-        m = self.state._load(self._BOTH)
-        if m is None:
-            return []
-        return sorted({d["epoch"] for d in m["deltas"] if "epoch" in d})
 
     def _read_plane(self, plane: str) -> Optional[DataFrame]:
-        state = self.state.read(self._BOTH, predicate=f"__t = '{plane}'")
+        state = self.state.read(self._TABLE, predicate=f"__t = '{plane}'")
         if state is None:
             return None
         if plane == "tbl":
@@ -142,76 +81,59 @@ class RetractTopNStream:
     # -- the maintenance epoch ------------------------------------------------
 
     def _merge_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        from ..sources.envelope import wrap_as_upsert_deletes
-
         k, g, v = self.key, self.group, self.value
-        # replay-overwrite: drop any delta a crashed attempt of this
-        # epoch left behind, so the recompute reads the state exactly as
-        # of the committed predecessor
-        self.state.begin_epoch(epoch_id)
-        self.state.drop_epoch_deltas(self._BOTH, epoch_id)
-        pk = F.coalesce(F.col(f"after.{k}"), F.col(f"before.{k}"))
-        w = Window.partitionBy("__pk").orderBy(F.col(ENVELOPE_SEQ).desc())
-        delta = (
-            batch_df.withColumn("__pk", pk)
-            .withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .select(
-                "__pk",
-                (F.col(ENVELOPE_OP) != OP_DELETE).alias("__alive"),
-                F.col(f"after.{g}").alias("__g_new"),
-                # the state plane stores ONLY the ranked attributes —
-                # group, key, exact-cents value — not the full payload:
-                # per-epoch state write volume is O(keys x 3 columns),
-                # not O(keys x table width)
-                F.col(f"after.{k}").alias(k),
-                F.expr(f"CAST(floor(after.{v} * 100 + 0.5) AS BIGINT)").alias(
-                    "value_cents"
-                ),
+        with self._epoch(epoch_id):
+            pk = F.coalesce(F.col(f"after.{k}"), F.col(f"before.{k}"))
+            w = Window.partitionBy("__pk").orderBy(F.col(ENVELOPE_SEQ).desc())
+            delta = self._hold(
+                batch_df.withColumn("__pk", pk)
+                .withColumn("__rn", F.row_number().over(w))
+                .where(F.col("__rn") == 1)
+                .select(
+                    "__pk",
+                    (F.col(ENVELOPE_OP) != OP_DELETE).alias("__alive"),
+                    F.col(f"after.{g}").alias("__g_new"),
+                    # the state plane stores ONLY the ranked attributes —
+                    # group, key, exact-cents value — not the full payload:
+                    # per-epoch state write volume is O(keys x 3 columns),
+                    # not O(keys x table width)
+                    F.col(f"after.{k}").alias(k),
+                    F.expr(
+                        f"CAST(floor(after.{v} * 100 + 0.5) AS BIGINT)"
+                    ).alias("value_cents"),
+                )
             )
-        ).cache()
-        # touched groups: the group a key lands in AND every group any of
-        # the batch's images mention (a group-moving update repairs the
-        # group it left; a delete repairs the group it leaves)
-        touched = (
-            delta.select(F.col("__g_new").alias("__g"))
-            .unionByName(
-                batch_df.select(F.col(f"before.{g}").alias("__g"))
+            # touched groups: the group a key lands in AND every group any
+            # of the batch's images mention (a group-moving update repairs
+            # the group it left; a delete repairs the group it leaves)
+            touched = (
+                delta.select(F.col("__g_new").alias("__g"))
+                .unionByName(
+                    batch_df.select(F.col(f"before.{g}").alias("__g"))
+                )
+                .unionByName(batch_df.select(F.col(f"after.{g}").alias("__g")))
             )
-            .unionByName(batch_df.select(F.col(f"after.{g}").alias("__g")))
-        )
-        if self._carry_epoch is not None and self._carry_epoch >= epoch_id:
-            # replayed/retried epoch in-process: the carry reflects a
-            # commit this epoch is about to overwrite — fall back to the
-            # store (drop_epoch_deltas above restored the predecessor)
-            self._tbl_carry.unpersist()
-            self._tbl_carry = None
-            self._carry_epoch = None
-        fresh_read = None
-        if self._tbl_carry is not None:
-            tbl_old = self._tbl_carry  # materialized last epoch
-        else:
-            tbl_old = self._read_plane("tbl")
+            tbl_old = self._carry
+            if tbl_old is None:
+                tbl_old = self._read_plane("tbl")
+                if tbl_old is not None:
+                    # referenced twice below (ghost repair + tbl_new anti):
+                    # without the cache the windowed merge-on-read can
+                    # execute twice per epoch
+                    tbl_old = self._hold(tbl_old)
             if tbl_old is not None:
-                # referenced twice below (ghost repair + tbl_new anti):
-                # without the cache the windowed merge-on-read can
-                # execute twice per epoch (ADVICE r15)
-                fresh_read = tbl_old = tbl_old.cache()
-        if tbl_old is not None:
-            # a changelog whose DELETEs carry a NULL before image names no
-            # group to repair — the key silently leaves the state plane but
-            # its old topn row would survive as a ghost. The plane's own
-            # current group for every delta key closes that hole (and
-            # subsumes before.g when images are complete); one semi-join
-            # against the broadcast delta keyset, bounded by the delta.
-            touched = touched.unionByName(
-                tbl_old.join(
-                    F.broadcast(delta.select("__pk")), "__pk", "left_semi"
-                ).select(F.col(g).alias("__g"))
-            )
-        touched = touched.where(F.col("__g").isNotNull()).distinct()
-        tbl_new = None
-        try:
+                # a changelog whose DELETEs carry a NULL before image names
+                # no group to repair — the key silently leaves the state
+                # plane but its old topn row would survive as a ghost. The
+                # plane's own current group for every delta key closes that
+                # hole (and subsumes before.g when images are complete);
+                # one semi-join against the broadcast delta keyset.
+                touched = touched.unionByName(
+                    tbl_old.join(
+                        F.broadcast(delta.select("__pk")), "__pk", "left_semi"
+                    ).select(F.col(g).alias("__g"))
+                )
+            touched = touched.where(F.col("__g").isNotNull()).distinct()
             pk_t = dict(delta.dtypes)["__pk"]
             # image plane rows: the batch's keys only — live images
             # upsert, dead keys tombstone (a DELETE's after image is
@@ -243,10 +165,8 @@ class RetractTopNStream:
                     F.broadcast(delta.select("__pk")), "__pk", "left_anti"
                 ).unionByName(live)
             # lazy cache: the recompute + merge write below fill it — no
-            # separate materialization job. The post-commit localCheckpoint
-            # then reads FROM the cache (cheap) purely to truncate
-            # lineage, so per-epoch plans don't chain.
-            tbl_new = tbl_new.cache()
+            # separate materialization job; it becomes the next carry
+            tbl_new = self._hold(tbl_new)
             affected = tbl_new.join(
                 F.broadcast(touched), tbl_new[g] == F.col("__g"), "left_semi"
             )
@@ -265,15 +185,13 @@ class RetractTopNStream:
                     F.col("rnk").alias("__rrnk"),
                 )
             )
-            # fused view plane (r17, VERDICT r16 item 7): every touched
-            # group owns exactly rank slots 1..n per epoch — slots the
-            # recompute filled upsert, the rest tombstone unconditionally
-            # (a tombstone for a never-filled slot is a no-op under
-            # merge-on-read). The (touched x 1..n) grid left-joined to the
-            # recomputed ranks emits BOTH row kinds in one pass, replacing
-            # the old two-arm shape (upsert scan + count-aggregate +
-            # join + explode of vacated slots) that consumed `recomputed`
-            # twice and forced a cache on it.
+            # fused view plane: every touched group owns exactly rank
+            # slots 1..n per epoch — slots the recompute filled upsert,
+            # the rest tombstone unconditionally (a tombstone for a
+            # never-filled slot is a no-op under merge-on-read). The
+            # (touched x 1..n) grid left-joined to the recomputed ranks
+            # emits BOTH row kinds in one pass, so `recomputed` is
+            # consumed once and needs no cache.
             grid = touched.select(
                 "__g",
                 F.explode(
@@ -298,79 +216,15 @@ class RetractTopNStream:
                 F.col("rnk"),
                 F.col("__rrnk").isNull().alias("__dead"),
             )
-            combined = tbl_plane.unionByName(view_plane)
             # ONE pk-unique delta commit carries both planes — a single
             # all-or-nothing write job per epoch, hive-partitioned on the
             # plane tag so per-plane reads prune at file listing
-            self.state.merge(
-                self._BOTH,
-                wrap_as_upsert_deletes(combined, self._BOTH, "__dead"),
-                combined.drop("__dead").schema,
+            self._commit(
+                tbl_plane.unionByName(view_plane),
                 self._PKS,
                 partition_keys=["__t"],
-                batch_unique=True,
             )
-            # commit landed: the post-commit image plane IS the next
-            # epoch's state (exactly what a post-commit merge-on-read
-            # would resolve); cache filled during the merge job, periodic
-            # checkpoint bounds plan growth
-            prev_carry = self._tbl_carry
-            if epoch_id % self._CKPT_EVERY == self._CKPT_EVERY - 1:
-                self._tbl_carry = tbl_new.localCheckpoint(eager=True)
-            else:
-                self._tbl_carry = tbl_new
-                tbl_new = None  # adopted — must not unpersist in finally
-            self._carry_epoch = epoch_id
-            if prev_carry is not None:
-                prev_carry.unpersist()
-        finally:
-            delta.unpersist()
-            if tbl_new is not None:
-                # inside finally (ADVICE r15): an exception after cache()
-                # must not leak the frame for the session lifetime
-                tbl_new.unpersist()
-            if fresh_read is not None:
-                fresh_read.unpersist()
-
-    # -- the streaming query ---------------------------------------------------
-
-    def run(self) -> None:
-        if self._schema is None:  # attached to a pre-staged directory
-            self._schema = staged_schema(self.spark, self.active)
-        from .windowed import STATE_PARTITIONS, scoped_shuffle_partitions
-
-        stream = (
-            self.spark.readStream.schema(self._schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(self.active)
-        )
-        try:
-            with scoped_shuffle_partitions(self.spark, STATE_PARTITIONS):
-                q = (
-                    stream.writeStream.outputMode("update")
-                    .foreachBatch(lambda df, eid: self._merge_epoch(df, eid))
-                    .option("checkpointLocation", self.ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination(300)
-            # checkpoint committed: clear the persisted in-flight marker.
-            # Deliberately NOT in the finally: a failed run's last epoch
-            # can still replay, and sealing would let a maintenance
-            # compact() bake its delta into the base.
-            self.state.seal(self._BOTH)
-        finally:
-            # released even when the streaming query fails (ADVICE r16 —
-            # the crash-injection subclasses exercise that path): the
-            # carried image plane's cached blocks and the state-store
-            # providers must not outlive the run
-            if self._tbl_carry is not None:
-                self._tbl_carry.unpersist()
-                self._tbl_carry = None
-                self._carry_epoch = None
-            from .windowed import unload_state_store_providers
-
-            unload_state_store_providers(self.spark)
+            self._next_carry = tbl_new
 
     def current_topn(self) -> DataFrame:
         view = self._read_plane("topn")

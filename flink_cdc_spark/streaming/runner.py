@@ -16,15 +16,14 @@ Per-key ordering under shuffle: the MERGE orders by the wire sequence
 number within the batch and existing state sorts below every new event, so
 last-image-per-key is deterministic (SURVEY.md §7 hard-list #5).
 
-The state store is a versioned parquet snapshot per sink table (a stand-in
-for a Delta/Iceberg MERGE INTO target; the MetadataApplier analog is the
-schema coercion applied when the snapshot is rewritten).
+The state store is the Paimon-style merge-on-read ``LsmStateStore``
+(sinks/lsm_store.py): O(batch) delta commits, metadata-only DDL (the
+MetadataApplier analog, ``_migrate_state``), amortized compaction.
 """
 
 from __future__ import annotations
 
 import json
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -35,100 +34,14 @@ from ..operators.coerce import coerce_envelope_payload
 from ..operators.transform import TransformProcessor
 from ..pipeline.definition import PipelineDef
 from ..pipeline.schema_coordinator import SchemaCoordinator
+from ..sinks.lsm_store import LsmStateStore
 from ..sources.envelope import (
     ENVELOPE_META,
     ENVELOPE_OP,
     ENVELOPE_SEQ,
     ENVELOPE_TABLE_ID,
-    OP_DELETE,
 )
 from .wire import KIND_DATA, KIND_DDL, WIRE_SCHEMA, ddl_from_dict
-
-
-class ParquetStateStore:
-    """Versioned materialized table state: {root}/{table}/v{n} + _CURRENT.
-
-    merge() = read current snapshot (sorting below the incoming batch),
-    union, last-image-per-key, write next version, flip the pointer.
-    Stand-in for `MERGE INTO` on a lake table; the full-rewrite cost is the
-    price of parquet-without-a-table-format and is documented as such.
-    """
-
-    def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
-        self.root = root
-
-    def _dir(self, table: str) -> str:
-        return os.path.join(self.root, table.replace("/", "_"))
-
-    def _current_version(self, table: str) -> int:
-        ptr = os.path.join(self._dir(table), "_CURRENT")
-        if not os.path.exists(ptr):
-            return -1
-        with open(ptr) as f:
-            return int(f.read().strip())
-
-    def read(self, table: str) -> Optional[DataFrame]:
-        v = self._current_version(table)
-        if v < 0:
-            return None
-        return self.spark.read.parquet(os.path.join(self._dir(table), f"v{v}"))
-
-    def write(self, table: str, df: DataFrame) -> None:
-        v = self._current_version(table) + 1
-        d = self._dir(table)
-        df.write.mode("overwrite").parquet(os.path.join(d, f"v{v}"))
-        with open(os.path.join(d, "_CURRENT"), "w") as f:
-            f.write(str(v))
-
-    def drop(self, table: str) -> None:
-        """DROP TABLE: remove the versioned snapshot dir entirely."""
-        import shutil
-
-        shutil.rmtree(self._dir(table), ignore_errors=True)
-
-    def merge(self, table: str, env: DataFrame, target_struct, primary_keys,
-              partition_keys=()) -> None:
-        """Apply an envelope batch (already coerced to target_struct).
-        partition_keys is accepted for sink-interface parity with the LSM
-        store and ignored — the legacy full-rewrite backend has no
-        partition layout to exploit (found by the wave-12 trailing-DDL
-        pin: the runner has passed it since partition-key support landed,
-        which made the parquet backend un-runnable)."""
-        from pyspark.sql import Window
-
-        current = self.read(table)
-        if current is not None:
-            # existing state sorts below all new events (seq = -1), and is
-            # coerced in case this batch evolved the schema
-            state_env = current.select(
-                F.lit(table).alias(ENVELOPE_TABLE_ID),
-                F.lit("INSERT").alias(ENVELOPE_OP),
-                F.lit(None).cast(env.schema["before"].dataType).alias("before"),
-                F.struct(*[F.col(c) for c in current.columns]).alias("after"),
-                F.create_map().cast("map<string,string>").alias(ENVELOPE_META),
-                F.lit(-1).alias(ENVELOPE_SEQ),
-            )
-            state_env = coerce_envelope_payload(state_env, target_struct)
-            env = state_env.unionByName(env)
-        if primary_keys:
-            keys = [
-                F.coalesce(F.col(f"after.{k}"), F.col(f"before.{k}")).alias(f"__k_{k}")
-                for k in primary_keys
-            ]
-            keyed = env.select("*", *keys)
-            w = Window.partitionBy(*[f"__k_{k}" for k in primary_keys]).orderBy(
-                F.col(ENVELOPE_SEQ).desc()
-            )
-            latest = (
-                keyed.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .where(F.col(ENVELOPE_OP) != OP_DELETE)
-            )
-            out = latest.select("after.*")
-        else:
-            out = env.where(F.col(ENVELOPE_OP) != OP_DELETE).select("after.*")
-        self.write(table, out)
 
 
 class StreamingPipelineRunner:
@@ -141,7 +54,6 @@ class StreamingPipelineRunner:
         state_root: str,
         checkpoint_dir: str,
         udf_names=frozenset(),
-        state_backend: str = "lsm",
         parallel_metadata: bool = False,
         primary_keys: Optional[dict] = None,
         shuffle_partitions: Optional[int] = None,
@@ -159,20 +71,7 @@ class StreamingPipelineRunner:
         # (runtime/operators/schema/distributed/SchemaCoordinator.java).
         self.parallel_metadata = parallel_metadata
         self.primary_keys = dict(primary_keys or {})
-        if state_backend == "lsm":
-            # Paimon-style merge-on-read: O(batch) appends, metadata-only
-            # DDL, amortized compaction (sinks/lsm_store.py)
-            from ..sinks.lsm_store import LsmStateStore
-
-            self.state = LsmStateStore(
-                spark, state_root, compact_every=compact_every
-            )
-        elif state_backend == "parquet":
-            # legacy full-rewrite store (O(state) per batch; kept for
-            # comparison and as the simplest possible sink)
-            self.state = ParquetStateStore(spark, state_root)
-        else:
-            raise ValueError(f"unknown state backend {state_backend!r}")
+        self.state = LsmStateStore(spark, state_root, compact_every=compact_every)
         self.checkpoint_dir = checkpoint_dir
         self.udf_names = frozenset(udf_names)
         self.router = TableIdRouter(
@@ -235,9 +134,8 @@ class StreamingPipelineRunner:
         with scope:
             q = self.start(source_dir, available_now=True)
             q.awaitTermination(timeout)
-        if hasattr(self.state, "seal_all"):
-            # checkpoint committed: clear the persisted in-flight markers
-            self.state.seal_all()
+        # checkpoint committed: clear the persisted in-flight markers
+        self.state.seal_all()
         unload_state_store_providers(self.spark)
 
     # -- the core ----------------------------------------------------------
@@ -246,12 +144,11 @@ class StreamingPipelineRunner:
         """foreachBatch body: segment at DDL positions, merge each data
         segment before applying the DDL that follows it."""
         self.batches_seen += 1
-        if hasattr(self.state, "begin_epoch"):
-            # the foreachBatch batch_id is Structured Streaming's replay
-            # key: a crash-replayed batch re-delivers under the SAME id,
-            # which lets the LSM manifest tell a replayed ADD from a
-            # fresh re-ADD of a reused column name
-            self.state.begin_epoch(batch_id)
+        # the foreachBatch batch_id is Structured Streaming's replay key:
+        # a crash-replayed batch re-delivers under the SAME id, which lets
+        # the LSM manifest tell a replayed ADD from a fresh re-ADD of a
+        # reused column name
+        self.state.begin_epoch(batch_id)
         # The batch is consumed once per (segment, table) below plus the
         # DDL control pass — cache it so an N-table pipeline reads the wire
         # source once, not N+1 times (SchemaOperator keeps the control
@@ -402,10 +299,8 @@ class StreamingPipelineRunner:
     def _migrate_state(self, table: str, event) -> None:
         """Sink-side DDL execution — the MetadataApplier analog
         (common/sink/MetadataApplier.java:33-39; PaimonMetadataApplier
-        applies DDL as catalog metadata operations). On the LSM backend
-        every DDL is metadata-only; on the legacy parquet backend
-        renames/truncates rewrite the snapshot. Adds/type-widenings are
-        absorbed by the coercion in the next merge either way."""
+        applies DDL as catalog metadata operations): every DDL is a
+        metadata-only manifest edit."""
         from ..core.events import (
             AddColumnEvent,
             AlterColumnTypeEvent,
@@ -415,7 +310,6 @@ class StreamingPipelineRunner:
             TruncateTableEvent,
         )
         from ..core.types import to_spark_type
-        from ..sinks.lsm_store import LsmStateStore
 
         if isinstance(event, DropTableEvent):
             # sink-side table removal (MetadataApplier drop semantics);
@@ -433,96 +327,34 @@ class StreamingPipelineRunner:
         # (found by the wave-12 widening trials). CreateTableEvent
         # deliberately touches nothing: a recovery-prefix or N->1-merge
         # CREATE carries a historical schema.
-        if isinstance(self.state, LsmStateStore):
-            if isinstance(event, RenameColumnEvent):
-                self.state.rename_columns(table, list(event.name_mapping))
-            elif isinstance(event, TruncateTableEvent):
-                self.state.truncate(table)
-            elif isinstance(event, AddColumnEvent):
-                # a trailing ADD with no subsequent data must still be
-                # readable (wave-12 finding) — insert into the manifest,
-                # honoring FIRST/BEFORE/AFTER anchors (SchemaUtils
-                # applyAddColumnEvent ordering; ADVICE r13)
-                self.state.add_columns(
-                    table,
-                    [
-                        (
-                            cwp.column.name,
-                            to_spark_type(cwp.column.type),
-                            cwp.position.value,
-                            cwp.existed_column_name,
-                        )
-                        for cwp in event.added_columns
-                    ],
-                )
-            elif isinstance(event, AlterColumnTypeEvent):
-                self.state.alter_column_types(
-                    table,
-                    [
-                        (name, to_spark_type(dt))
-                        for name, dt in event.type_mapping
-                    ],
-                )
-            elif isinstance(event, DropColumnEvent):
-                self.state.drop_columns(
-                    table, list(event.dropped_column_names)
-                )
-            return
-        current = self.state.read(table)
-        if current is None:
-            return
         if isinstance(event, RenameColumnEvent):
-            for old, new in event.name_mapping:
-                if old in current.columns:
-                    current = current.withColumnRenamed(old, new)
-            self.state.write(table, current)
+            self.state.rename_columns(table, list(event.name_mapping))
         elif isinstance(event, TruncateTableEvent):
-            self.state.write(table, current.limit(0))
+            self.state.truncate(table)
         elif isinstance(event, AddColumnEvent):
-            # same trailing-DDL contract, legacy backend: null-pad the
-            # snapshot with exactly the event's columns (monotone),
-            # inserted at the event's FIRST/BEFORE/AFTER anchors
-            missing = [
-                cwp
-                for cwp in event.added_columns
-                if cwp.column.name not in current.columns
-            ]
-            if missing:
-                order = list(current.columns)
-                for cwp in missing:
-                    current = current.withColumn(
+            # a trailing ADD with no subsequent data must still be
+            # readable (wave-12 finding) — insert into the manifest,
+            # honoring FIRST/BEFORE/AFTER anchors (SchemaUtils
+            # applyAddColumnEvent ordering; ADVICE r13)
+            self.state.add_columns(
+                table,
+                [
+                    (
                         cwp.column.name,
-                        F.lit(None).cast(to_spark_type(cwp.column.type)),
+                        to_spark_type(cwp.column.type),
+                        cwp.position.value,
+                        cwp.existed_column_name,
                     )
-                    pos = cwp.position.value
-                    if pos == "FIRST":
-                        order.insert(0, cwp.column.name)
-                    elif (
-                        pos in ("BEFORE", "AFTER")
-                        and cwp.existed_column_name in order
-                    ):
-                        idx = order.index(cwp.existed_column_name)
-                        order.insert(
-                            idx if pos == "BEFORE" else idx + 1,
-                            cwp.column.name,
-                        )
-                    else:
-                        order.append(cwp.column.name)
-                self.state.write(table, current.select(*order))
+                    for cwp in event.added_columns
+                ],
+            )
         elif isinstance(event, AlterColumnTypeEvent):
-            changed = False
-            for name, dt in event.type_mapping:
-                if name in current.columns:
-                    current = current.withColumn(
-                        name, F.col(name).cast(to_spark_type(dt))
-                    )
-                    changed = True
-            if changed:
-                self.state.write(table, current)
+            self.state.alter_column_types(
+                table,
+                [(name, to_spark_type(dt)) for name, dt in event.type_mapping],
+            )
         elif isinstance(event, DropColumnEvent):
-            gone = [n for n in event.dropped_column_names if n in current.columns]
-            if gone:
-                self.state.write(table, current.drop(*gone))
+            self.state.drop_columns(table, list(event.dropped_column_names))
 
     def _merge_segment(self, seg: DataFrame, tables=None) -> None:
         if tables is None:

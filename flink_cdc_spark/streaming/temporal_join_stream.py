@@ -32,21 +32,14 @@ convention). Per epoch:
      (probed keys' versions + probes), never O(history).
 
 History state lives in the repo's own ``LsmStateStore`` as delta
-commits keyed ``(dim_key, valid_from_ver)`` (r15, VERDICT r14 item 4 —
-the epoch-versioned full-parquet rewrite wrote O(state) per epoch; the
-LSM write is O(batch)): per epoch the fold emits ONLY the delta — the
-batch's new version rows plus one close-update per touched open
-version — and untouched keys are never rewritten; reads are
-merge-on-read (window by pk over base ∪ deltas) with compaction
-amortizing the delta count. Crash idempotence maps onto epoch-keyed
-delta provenance: an epoch announces itself (``begin_epoch``), drops
-any delta a crashed attempt of itself (or a never-committed successor)
-left behind (``drop_epoch_deltas``), folds from the committed
-predecessor state, and re-merges — replay OVERWRITES its own delta.
-Compaction never bakes the in-flight epoch's delta into the base, so
-the overwrite stays possible (the wave-13 differential replays random
-crash epochs; enriched probes land in an epoch-keyed output dir as
-before).
+commits keyed ``(dim_key, valid_from_ver)``: per epoch the fold emits
+ONLY the delta — the batch's new version rows plus one close-update per
+touched open version — and untouched keys are never rewritten; reads
+are merge-on-read (window by pk over base ∪ deltas) with compaction
+amortizing the delta count. The epoch protocol (staging,
+replay-overwrite, the carried history, the streaming run) is
+``EpochMachine``'s (streaming/epoch.py); enriched probes land in an
+epoch-keyed output dir, so a replayed epoch overwrites its own output.
 """
 
 from __future__ import annotations
@@ -56,7 +49,6 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from .retract_agg import stage_replay_batches, staged_schema
 from ..operators.temporal_join import temporal_join
 from ..sources.envelope import (
     ENVELOPE_OP,
@@ -64,14 +56,17 @@ from ..sources.envelope import (
     ENVELOPE_TABLE_ID,
     OP_DELETE,
 )
+from .epoch import EpochMachine
 
 N_TEMPORAL_BATCHES = 3
 
 
-class StreamingTemporalJoin:
+class StreamingTemporalJoin(EpochMachine):
     """Maintains the SCD2 history of `dim_table_id` from its changelog
     and temporal-joins `probe_table_id` rows (INSERT-only probes) against
     it, epoch by epoch."""
+
+    _TABLE = "hist"
 
     def __init__(
         self,
@@ -90,21 +85,26 @@ class StreamingTemporalJoin:
         compact_every: int = 8,
         num_buckets: int = 0,
     ):
-        """num_buckets: opt-in hash(dim_key)-bucketed history layout
-        (r16, VERDICT r15 item 4 — sound because the bucket depends only
-        on the key half of the (dim_key, valid_from_ver) pk): both
-        per-epoch reads — the fold's touched-keys scan and the
-        enrichment's probed-keys scan — then prune to the relevant
-        buckets at file listing instead of scanning the whole history,
-        the 100-TB read shape. DEFAULT OFF: this machine pays TWO
-        touched-read probe jobs per epoch plus per-commit bucket
-        fan-out, and the interleaved A/B at sf0.1 read a real ~15-25%
-        regression (new 11.6 vs old 8.8-10.1) — at local scale the
-        full-history scan is cheaper than the probes; at real state
-        sizes it is not, which is when callers flip this on
+        """Staging takes the caller's `__b` epoch column (probes are
+        INSERT envelope rows of the probe table) over ``n_batches``
+        epochs.
+
+        num_buckets: opt-in hash(dim_key)-bucketed history layout
+        (sound because the bucket depends only on the key half of the
+        (dim_key, valid_from_ver) pk): both per-epoch reads — the fold's
+        touched-keys scan and the enrichment's probed-keys scan — then
+        prune to the relevant buckets at file listing instead of
+        scanning the whole history, the 100-TB read shape. DEFAULT OFF:
+        this machine pays TWO touched-read probe jobs per epoch plus
+        per-commit bucket fan-out, and the interleaved A/B at sf0.1 read
+        a real ~15-25% regression (new 11.6 vs old 8.8-10.1) — at local
+        scale the full-history scan is cheaper than the probes; at real
+        state sizes it is not, which is when callers flip this on
         (retract_agg, with ONE key-restricted read per epoch, keeps
-        bucketing on by default and audits the pruned plan)."""
-        self.spark = spark
+        bucketing on by default and audits the pruned plan). Bucketed
+        mode never carries the history: its key-restricted disk reads
+        are the at-scale shape a carry would mask."""
+        super().__init__(spark, work_dir, staged_dir, compact_every)
         self.dim_table_id = dim_table_id
         self.probe_table_id = probe_table_id
         self.dim_key = dim_key
@@ -114,100 +114,9 @@ class StreamingTemporalJoin:
         self.probe_cols = list(probe_cols)
         self.ts_expr = ts_expr
         self.n_batches = n_batches
-        self.active = staged_dir or os.path.join(work_dir, "active")
-        self.ckpt = os.path.join(work_dir, "ckpt")
-        self.state_dir = os.path.join(work_dir, "state")
-        self.out_dir = os.path.join(work_dir, "out")
-        os.makedirs(self.active, exist_ok=True)
-        os.makedirs(self.state_dir, exist_ok=True)
-        os.makedirs(self.out_dir, exist_ok=True)
-        from ..sinks.lsm_store import LsmStateStore
-
-        self.state = LsmStateStore(
-            spark, self.state_dir, compact_every=compact_every
-        )
         self.num_buckets = num_buckets
-        self._schema = None
-        # resolved history carried across epochs WITHIN a run (r16
-        # optimization round, guide §2.4/§5: the fold already computes
-        # the exact post-commit history as predecessor-minus-delta-pks
-        # plus delta, so re-resolving it from disk — a multi-commit
-        # merge-on-read scan + pk-window Exchange, TWICE per epoch (fold
-        # touched-read + enrichment probe-read) — was pure waste; the
-        # retract_topn/incremental_join r16 lesson applied here).
-        # Replay-safe: the carry is only trusted for epochs STRICTLY
-        # AFTER the one that produced it, and a fold whose post-commit
-        # image could not be adopted (no probes to fill its cache, or
-        # bucketed mode) invalidates it so the next epoch re-attaches
-        # from the store. Unused in bucketed mode (num_buckets > 0),
-        # whose key-restricted disk reads are the at-scale shape this
-        # carry would otherwise mask.
-        self._hist_carry = None
-        self._carry_epoch = None
-
-    # -- staging -------------------------------------------------------------
-
-    def stage(self, env_with_b: DataFrame) -> None:
-        """env rows for BOTH tables with a `__b` epoch column; probes are
-        INSERT envelope rows of the probe table."""
-        self._schema = env_with_b.drop("__b").schema
-        stage_replay_batches(env_with_b, self.active, n_batches=self.n_batches)
-
-    def staged(self) -> bool:
-        return os.path.exists(os.path.join(self.active, "_STAGED"))
-
-    # -- LSM-backed history state (O(batch) delta commits) ---------------------
-
-    _HIST = "hist"
-    # lineage-truncation cadence for the carried history (the
-    # retract_topn/incremental_join convention): in-between epochs carry
-    # the cached frame directly — zero extra jobs — and every
-    # _CKPT_EVERY-th epoch re-anchors it in a localCheckpoint so plans
-    # don't grow without bound on long runs. No-recompute assumption
-    # (ADVICE r16): between anchors the carry is only a filled
-    # MEMORY_AND_DISK cache whose lineage references store delta files a
-    # later compact()/drop_epoch_deltas() may rewrite — fine in local
-    # mode (blocks never recompute), but an executor/block loss on a
-    # real cluster would recompute against a mutated store; deployments
-    # with eviction should set _CKPT_EVERY = 1.
-    _CKPT_EVERY = 4
-
-    def _drop_carry(self) -> None:
-        if self._hist_carry is not None:
-            self._hist_carry.unpersist()
-        self._hist_carry = None
-        self._carry_epoch = None
-
-    def _commit_hist(self, delta: DataFrame) -> None:
-        """Append ONE upsert delta commit keyed (dim_key, valid_from_ver):
-        the batch's new version rows plus the close-updates of touched
-        open versions. The LSM merge is O(batch) — nothing existing is
-        read or rewritten; merge-on-read resolves the close over the
-        original open row (later commit wins on the same pk)."""
-        from ..sources.envelope import wrap_as_inserts
-
-        cols = [
-            self.dim_key,
-            *self.payload_cols,
-            "valid_from_ver",
-            "valid_to_ver",
-            "valid_from_ts",
-            "valid_to_ts",
-            "is_current",
-        ]
-        delta = delta.select(*cols)
-        # batch_unique: a close rewrites a version whose ordinal is <= the
-        # key's pre-batch base, new rows carry ordinals strictly above it
-        # — no (key, valid_from_ver) repeats within one fold's delta
-        self.state.merge(
-            self._HIST,
-            wrap_as_inserts(delta, self._HIST),
-            delta.schema,
-            [self.dim_key, "valid_from_ver"],
-            batch_unique=True,
-            bucket_keys=[self.dim_key] if self.num_buckets else None,
-            num_buckets=self.num_buckets,
-        )
+        self.out_dir = os.path.join(work_dir, "out")
+        os.makedirs(self.out_dir, exist_ok=True)
 
     # -- the maintenance epoch -------------------------------------------------
 
@@ -242,16 +151,14 @@ class StreamingTemporalJoin:
         # bounds it to the keys themselves (an all-new-keys batch reads
         # an empty pruned frame, which the closes/base joins below
         # handle as no-prior-versions)
-        fresh_read = None
-        if self._hist_carry is not None:
-            hist_old = self._hist_carry
-        else:
-            hist_old = self.state.read(self._HIST, touched=keys)
+        hist_old = self._carry
+        if hist_old is None:
+            hist_old = self.state.read(self._TABLE, touched=keys)
             if hist_old is not None:
                 # referenced twice per epoch (fold semi-join + the
-                # post-commit carry's anti-join): without the cache the
-                # windowed merge-on-read can execute twice (ADVICE r15)
-                fresh_read = hist_old = hist_old.cache()
+                # post-commit image's anti-join): without the cache the
+                # windowed merge-on-read can execute twice
+                hist_old = self._hold(hist_old)
         if hist_old is not None:
             # the fold only ever READS the touched keys' versions — the
             # semi-join bounds the work to the batch's key set
@@ -301,7 +208,9 @@ class StreamingTemporalJoin:
             F.col("valid_to_ver").isNull().alias("is_current"),
         )
         delta = new_rows if closes is None else closes.unionByName(new_rows)
-        delta = delta.select(
+        # the commit write job fills the cache; the post-commit image
+        # reuses it
+        delta = self._hold(delta.select(
             k,
             *self.payload_cols,
             "valid_from_ver",
@@ -309,49 +218,55 @@ class StreamingTemporalJoin:
             "valid_from_ts",
             "valid_to_ts",
             "is_current",
-        ).cache()  # the commit write job fills it; the carry reuses it
-        self._commit_hist(delta)
-        # stashed rather than returned: subclasses (the crash-injection
-        # differentials) override _fold_history without forwarding a
-        # return value
-        self._last_fold = (delta, hist_old, fresh_read)
+        ))
+        # batch_unique: a close rewrites a version whose ordinal is <= the
+        # key's pre-batch base, new rows carry ordinals strictly above it
+        # — no (key, valid_from_ver) repeats within one fold's delta. The
+        # LSM merge is O(batch): merge-on-read resolves a close over the
+        # original open row (later commit wins on the same pk).
+        self._commit(
+            delta,
+            [k, "valid_from_ver"],
+            bucket_keys=[k] if self.num_buckets else None,
+            num_buckets=self.num_buckets,
+        )
+        if not self.num_buckets:
+            # post-commit history as a PLAN built from frames already in
+            # hand — predecessor minus the delta's pks plus the delta is
+            # exactly what a post-commit merge-on-read would resolve
+            # (broadcast anti, no disk scan, no pk-window Exchange); its
+            # cache fills during the enrichment write
+            self._next_carry = delta if hist_old is None else self._hold(
+                hist_old.join(
+                    F.broadcast(delta.select(k, "valid_from_ver")),
+                    [k, "valid_from_ver"],
+                    "left_anti",
+                ).unionByName(delta)
+            )
 
     def _merge_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        # replay-overwrite: announce the epoch and unreference any delta
-        # a crashed attempt of this epoch left behind, so the fold reads
-        # the state exactly as of the committed predecessor
-        self.state.begin_epoch(epoch_id)
-        self.state.drop_epoch_deltas(self._HIST, epoch_id)
-        if self._carry_epoch is not None and self._carry_epoch >= epoch_id:
-            # replayed/retried epoch in-process: the carry reflects a
-            # commit this epoch is about to overwrite — fall back to the
-            # store (drop_epoch_deltas above restored the predecessor)
-            self._drop_carry()
-        # ONE metadata job decides which planes the batch carries (a
-        # limit(1).count() per plane costs an extra Spark job per epoch —
-        # measured against the bench's per-epoch fixed-overhead budget)
-        present = {
-            r[0]
-            for r in batch_df.select(ENVELOPE_TABLE_ID).distinct().collect()
-        }
-        delta = hist_old = fresh_read = hist_new = None
-        folded = adopted = False
-        self._last_fold = None
-        try:
+        with self._epoch(epoch_id):
+            # ONE metadata job decides which planes the batch carries (a
+            # limit(1).count() per plane costs an extra Spark job per
+            # epoch)
+            present = {
+                r[0]
+                for r in batch_df.select(ENVELOPE_TABLE_ID).distinct().collect()
+            }
             if self.dim_table_id in present:
-                dim_env = batch_df.where(
-                    F.col(ENVELOPE_TABLE_ID) == self.dim_table_id
+                self._fold_history(
+                    batch_df.where(F.col(ENVELOPE_TABLE_ID) == self.dim_table_id),
+                    epoch_id,
                 )
-                self._fold_history(dim_env, epoch_id)
-                delta, hist_old, fresh_read = self._last_fold
-                folded = True
-            # probe-only epochs commit no history delta: the enrichment
-            # below reads the carry (or the merge-on-read state), which
-            # under replay is either this epoch's own freshly-rewritten
-            # fold or the predecessor — identical either way (epoch-keyed
-            # overwrites)
             if self.probe_table_id not in present:
+                # no enrichment write fills the post-commit image's cache,
+                # so it cannot become the carry
+                self._next_carry = None
                 return
+            # probe-only epochs commit no history delta: the enrichment
+            # reads the carry (or the merge-on-read state), which under
+            # replay is either this epoch's own freshly-rewritten fold or
+            # the predecessor — identical either way
             probes = batch_df.where(
                 F.col(ENVELOPE_TABLE_ID) == self.probe_table_id
             ).select(*[F.col(f"after.{c}").alias(c) for c in self.probe_cols])
@@ -359,32 +274,14 @@ class StreamingTemporalJoin:
             probe_keys = probes.select(
                 F.col(self.probe_key).alias(self.dim_key)
             ).distinct()
-            if folded and not self.num_buckets:
-                # post-commit history as a PLAN built from frames already
-                # in hand — predecessor minus the delta's pks plus the
-                # delta is exactly what a post-commit merge-on-read would
-                # resolve (broadcast anti, no disk scan, no pk-window
-                # Exchange); its cache fills during the enrichment write
-                # below — zero extra jobs
-                if hist_old is None:
-                    hist_new = delta  # already cached by the fold
-                else:
-                    hist_new = hist_old.join(
-                        F.broadcast(
-                            delta.select(self.dim_key, "valid_from_ver")
-                        ),
-                        [self.dim_key, "valid_from_ver"],
-                        "left_anti",
-                    ).unionByName(delta).cache()
-                hist = hist_new
-            elif not folded and self._hist_carry is not None:
-                hist = self._hist_carry
-            else:
-                # bucketed mode (or a probe-only epoch with no carry):
-                # the store serves the read, pruned to the probed keys'
-                # buckets at file listing before the semi-join below
-                # bounds it to the keys themselves
-                hist = self.state.read(self._HIST, touched=probe_keys)
+            hist = self._next_carry
+            if hist is None:
+                hist = self._carry
+            if hist is None:
+                # bucketed mode (or no carry yet): the store serves the
+                # read, pruned to the probed keys' buckets at file listing
+                # before the semi-join below bounds it to the keys
+                hist = self.state.read(self._TABLE, touched=probe_keys)
             if hist is None:
                 # probes before any dimension version: NULL-enriched,
                 # typed from the harmonized envelope payload
@@ -406,7 +303,7 @@ class StreamingTemporalJoin:
             hist_probe = hist.join(
                 F.broadcast(probe_keys), self.dim_key, "left_semi"
             )
-            enriched = temporal_join(
+            temporal_join(
                 probes,
                 hist_probe,
                 probe_key=self.probe_key,
@@ -414,95 +311,12 @@ class StreamingTemporalJoin:
                 dim_key=self.dim_key,
                 payload_cols=self.payload_cols,
                 version_col="valid_from_ver",
-            )
-            enriched.write.mode("overwrite").parquet(out_path)
-            if hist_new is not None:
-                # the write above materialized hist_new's cache — adopt
-                # it as the next epoch's carry, re-anchored in a
-                # localCheckpoint every _CKPT_EVERY epochs to bound plan
-                # growth
-                prev = self._hist_carry
-                if epoch_id % self._CKPT_EVERY == self._CKPT_EVERY - 1:
-                    self._hist_carry = hist_new.localCheckpoint(eager=True)
-                    hist_new.unpersist()
-                else:
-                    self._hist_carry = hist_new
-                hist_new = None  # adopted — must not unpersist in finally
-                self._carry_epoch = epoch_id
-                adopted = True
-                if prev is not None:
-                    prev.unpersist()
-        finally:
-            if not folded and self._last_fold is not None:
-                # the fold committed but raised before handing its frames
-                # back (a crash-injection subclass) — take ownership here
-                # so the caches don't leak, and treat it as an unadopted
-                # fold (the store moved past the carry)
-                delta, hist_old, fresh_read = self._last_fold
-                if hist_old is self._hist_carry:
-                    hist_old = None  # owned by the carry, released below
-                folded = True
-            if folded and not adopted:
-                # the store moved past the carry but no post-commit image
-                # was adopted (no probes this epoch, bucketed mode, or a
-                # failure) — the carry is stale; the next epoch
-                # re-attaches from the store
-                self._drop_carry()
-            if hist_new is not None:
-                hist_new.unpersist()
-            if delta is not None and not (adopted and hist_old is None):
-                # when the adopted carry IS the delta frame (first fold),
-                # they share one cache entry — unpersisting it here would
-                # strip the carry; _drop_carry releases it later instead
-                delta.unpersist()
-            if fresh_read is not None:
-                # an exception after cache() must not leak the frame for
-                # the session lifetime (the ADVICE r15 leak class)
-                fresh_read.unpersist()
-
-    # -- the streaming query -----------------------------------------------------
-
-    def run(self) -> None:
-        if self._schema is None:
-            self._schema = staged_schema(self.spark, self.active)
-        from .windowed import (
-            STATE_PARTITIONS,
-            scoped_shuffle_partitions,
-            unload_state_store_providers,
-        )
-
-        stream = (
-            self.spark.readStream.schema(self._schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(self.active)
-        )
-        try:
-            with scoped_shuffle_partitions(self.spark, STATE_PARTITIONS):
-                q = (
-                    stream.writeStream.outputMode("update")
-                    .foreachBatch(lambda df, eid: self._merge_epoch(df, eid))
-                    .option("checkpointLocation", self.ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination(300)
-            # checkpoint committed: clear the persisted in-flight marker.
-            # Deliberately NOT in the finally: a failed run's last epoch
-            # can still replay, and sealing would let a maintenance
-            # compact() bake its delta into the base.
-            self.state.seal(self._HIST)
-        finally:
-            # released even when the streaming query fails (ADVICE r16 —
-            # the crash-injection subclasses exercise that path): the
-            # carried history's cached blocks and the state-store
-            # providers must not outlive the run
-            self._drop_carry()
-            unload_state_store_providers(self.spark)
+            ).write.mode("overwrite").parquet(out_path)
 
     # -- results -------------------------------------------------------------
 
     def current_history(self) -> DataFrame:
-        hist = self.state.read(self._HIST)
+        hist = self.state.read(self._TABLE)
         if hist is None:
             raise RuntimeError("no committed history state")
         return hist

@@ -56,7 +56,7 @@ def test_retract_agg_compact_inside_crash_replay_window(spark, tmp_path, trial):
     env = _kv_env(spark, ops)
 
     base = RetractAggregateStream(spark, str(tmp_path / "base"), "g", "val")
-    base.stage(env, "k")
+    base.stage(env)
     base.run()
     want = sorted((r.grp, r.n_rows, r.sum_cents)
                   for r in base.current_state().collect())
@@ -64,7 +64,7 @@ def test_retract_agg_compact_inside_crash_replay_window(spark, tmp_path, trial):
     # post-write crash: the epoch's delta is committed, its checkpoint not
     epoch = rng.randrange(1, 3)
     crash = CrashingAgg(spark, str(tmp_path / "crash"), "g", "val")
-    crash.stage(env, "k")
+    crash.stage(env)
     assert _run_with_crash(crash, epoch, "post")
 
     # the attack: maintenance compaction from a fresh process, THEN replay

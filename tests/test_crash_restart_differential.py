@@ -217,7 +217,7 @@ def test_retract_agg_crash_restart(spark, tmp_path, trial):
     env = _kv_env(spark, ops)
 
     base = RetractAggregateStream(spark, str(tmp_path / "base"), "g", "val")
-    base.stage(env, "k")
+    base.stage(env)
     base.run()
     want = sorted((r.grp, r.n_rows, r.sum_cents)
                   for r in base.current_state().collect())
@@ -230,7 +230,7 @@ def test_retract_agg_crash_restart(spark, tmp_path, trial):
     ce = 1 if trial % 2 else 8
     crash = CrashingAgg(spark, str(tmp_path / "crash"), "g", "val",
                         compact_every=ce)
-    crash.stage(env, "k")
+    crash.stage(env)
     assert _run_with_crash(crash, epoch, phase)
     resumed = RetractAggregateStream(spark, str(tmp_path / "crash"), "g",
                                      "val", compact_every=ce)

@@ -109,7 +109,7 @@ def test_epoch_retry_is_idempotent(spark, tmp_path):
     before = sorted(
         (r.o_pk, r.o_val, r.c_name) for r in ijv.current_view().collect()
     )
-    last = ijv._versions("view")[-1]
+    last = ijv._committed_epochs()[-1]
     batch_df = ijv.spark.read.schema(ijv._schema).parquet(
         f"{ijv.active}/b2.parquet"  # the deletes batch (3-epoch staging)
     )
@@ -133,7 +133,7 @@ def test_restart_resumes_from_checkpoint(spark, tmp_path):
         ("t.orders", OP_INSERT, None, _o(2, 10, "b"), 3),
     ]
     ijv = _build(spark, tmp_path, rows)
-    n_epochs = len(ijv._versions("view"))
+    n_epochs = len(ijv._committed_epochs())
     # a later batch file: delete order 1
     late = _env(spark, [("t.orders", OP_DELETE, _o(1, 10, "a"), None, 30)])
     d = str(tmp_path / "late")
@@ -152,7 +152,7 @@ def test_restart_resumes_from_checkpoint(spark, tmp_path):
     )
     ijv2._schema = ijv._schema
     ijv2.run()
-    assert len(ijv2._versions("view")) == n_epochs + 1  # exactly one new epoch
+    assert len(ijv2._committed_epochs()) == n_epochs + 1  # exactly one new epoch
     view = sorted((r.o_pk, r.c_name) for r in ijv2.current_view().collect())
     assert view == [(2, "ann")]
 
@@ -181,7 +181,7 @@ def test_per_epoch_writes_are_o_delta(spark, tmp_path):
         ("t.orders", OP_DELETE, _o(3, 11, "c"), None, 20),
     ]
     ijv = _build(spark, tmp_path, rows)
-    m = ijv.state._load(ijv._BOTH)
+    m = ijv.state._load(ijv._TABLE)
     assert len(m["deltas"]) == 3
     frames = {
         d["epoch"]: ijv.spark.read.parquet(
@@ -246,8 +246,8 @@ def test_forced_compaction_inside_run_converges(spark, tmp_path):
     view = {r.o_pk: (r.o_val, r.c_name) for r in ijv.current_view().collect()}
     assert view == {2: ("b", "ANN")}
     # sealed post-run: a maintenance compaction may now fold everything
-    ijv.state.compact(ijv._BOTH)
-    m = ijv.state._load(ijv._BOTH)
+    ijv.state.compact(ijv._TABLE)
+    m = ijv.state._load(ijv._TABLE)
     assert m["deltas"] == [] and m["base"] is not None
     view = {r.o_pk: (r.o_val, r.c_name) for r in ijv.current_view().collect()}
     assert view == {2: ("b", "ANN")}

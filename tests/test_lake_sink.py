@@ -1,7 +1,4 @@
-"""Lake sink: MERGE/DDL generation and the dedupe-last-image precondition."""
-
-import pytest
-from pyspark.sql import functions as F
+"""Lake sink: schema-change DDL generation and the metadata applier."""
 
 from flink_cdc_spark.core import types as ct
 from flink_cdc_spark.core.events import (
@@ -19,36 +16,10 @@ from flink_cdc_spark.core.schema import Column, new_schema
 from flink_cdc_spark.core.table_id import TableId
 from flink_cdc_spark.sinks.lake import (
     LakeMetadataApplier,
-    dedupe_last_image,
-    merge_into_sql,
     schema_change_to_ddl,
 )
-from flink_cdc_spark.sources.parquet_source import MutationSpec, ParquetTableSource
-from tests.conftest import SF_DIR
 
 TID = TableId.parse("db.t")
-
-
-def test_merge_sql_shape():
-    sql = merge_into_sql("lake.orders", "batch_v", ["o_orderkey"], ["o_orderkey", "o_totalprice"])
-    assert "MERGE INTO lake.orders t USING batch_v s" in sql
-    assert "t.o_orderkey <=> s.__k_o_orderkey" in sql
-    assert "WHEN MATCHED AND s.__op = 'DELETE' THEN DELETE" in sql
-    assert "WHEN MATCHED THEN UPDATE SET t.o_orderkey = s.after.o_orderkey" in sql
-    assert "WHEN NOT MATCHED AND s.__op <> 'DELETE'" in sql
-
-
-def test_dedupe_last_image_one_row_per_key(spark):
-    mut = MutationSpec(key_column="o_orderkey", update_exprs={"o_totalprice": "o_totalprice + 1"})
-    env = ParquetTableSource(spark, SF_DIR).changelog("orders", "db.orders", mut)
-    deduped = dedupe_last_image(env, ["o_orderkey"])
-    counts = (
-        deduped.groupBy("__k_o_orderkey").count().where(F.col("count") > 1).count()
-    )
-    assert counts == 0
-    # deleted keys surface exactly once with op DELETE
-    dels = deduped.where(F.col("__op") == "DELETE").count()
-    assert dels > 0
 
 
 def test_ddl_generation_all_types():

@@ -88,12 +88,12 @@ def test_end_to_end_stream_matches_recompute(spark, tmp_path):
         (OP_DELETE, (1, "A", 10.0), None, 21),            # A count -> 0
     ])
     ra = RetractAggregateStream(spark, str(tmp_path / "work"), "grp", "v")
-    ra.stage(env, "k")
+    ra.stage(env)
     ra.run()
     out = {r.grp: (r.n_rows, r.sum_cents) for r in ra.current_state().collect()}
     assert out == {"B": (1, 2500)}  # only k2 survives, moved to B
     # three committed epochs, one per staged micro-batch
-    assert len(ra._committed_versions()) == 3
+    assert len(ra._committed_epochs()) == 3
 
 
 def test_epoch_retry_is_idempotent(spark, tmp_path):
@@ -107,12 +107,12 @@ def test_epoch_retry_is_idempotent(spark, tmp_path):
         (OP_DELETE, (1, "A", 10.0), None, 20),
     ])
     ra = RetractAggregateStream(spark, str(tmp_path / "work"), "grp", "v")
-    ra.stage(env, "k")
+    ra.stage(env)
     ra.run()
     before = sorted(
         (r.grp, r.n_rows, r.sum_cents) for r in ra.current_state().collect()
     )
-    versions = ra._committed_versions()
+    versions = ra._committed_epochs()
     last = versions[-1]
     n_deltas = len(ra.state._load(ra._AGG)["deltas"])
     # replay the LAST epoch: the re-merge must OVERWRITE its own delta
@@ -139,9 +139,9 @@ def test_restart_resumes_from_checkpoint(spark, tmp_path):
         (OP_INSERT, None, (2, "B", 20.0), 2),
     ])
     ra = RetractAggregateStream(spark, str(tmp_path / "work"), "grp", "v")
-    ra.stage(env, "k")
+    ra.stage(env)
     ra.run()
-    n = len(ra._committed_versions())
+    n = len(ra._committed_epochs())
     late = _env(spark, [(OP_DELETE, (2, "B", 20.0), None, 30)])
     d = str(tmp_path / "late")
     late.coalesce(1).write.mode("overwrite").parquet(d)
@@ -153,7 +153,7 @@ def test_restart_resumes_from_checkpoint(spark, tmp_path):
             os.utime(dst, (t, t))
     ra2 = RetractAggregateStream(spark, str(tmp_path / "work"), "grp", "v")
     ra2.run()  # schema inferred from the staged files
-    assert len(ra2._committed_versions()) == n + 1
+    assert len(ra2._committed_epochs()) == n + 1
     out = {r.grp: (r.n_rows, r.sum_cents) for r in ra2.current_state().collect()}
     assert out == {"A": (1, 1000)}
 
@@ -178,7 +178,7 @@ def test_per_epoch_state_write_is_o_touched_groups(spark, tmp_path):
         (OP_DELETE, (4, "C", 50.0), None, 20),
     ])
     ra = RetractAggregateStream(spark, str(tmp_path / "work"), "grp", "v")
-    ra.stage(env, "k")
+    ra.stage(env)
     ra.run()
 
     m = ra.state._load(ra._AGG)
@@ -217,7 +217,7 @@ def test_fold_read_is_bucket_pruned_at_file_listing(spark, tmp_path):
         (OP_DELETE, (2, "C", 30.0), None, 20),
     ])
     ra = RetractAggregateStream(spark, str(tmp_path / "work"), "grp", "v")
-    ra.stage(env, "k")
+    ra.stage(env)
     ra.run()
     assert ra.state._load(ra._AGG)["bucket"]["keys"] == ["grp"]
 

@@ -111,7 +111,7 @@ def test_epoch_retry_is_idempotent(spark, tmp_path):
     tn = _build(spark, tmp_path, rows)
     before = sorted((r.g, r.rnk, r.k, r.value_cents)
                     for r in tn.current_topn().collect())
-    last = tn._versions()[-1]
+    last = tn._committed_epochs()[-1]
     batch_df = tn.spark.read.schema(tn._schema).parquet(
         os.path.join(tn.active, "b2.parquet")  # the deletes batch
     )

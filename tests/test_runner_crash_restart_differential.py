@@ -284,9 +284,9 @@ def test_runner_crash_restart_matches_uninterrupted_and_model(
     )
 
 
-@pytest.mark.parametrize("backend", ["lsm", "parquet"])
+@pytest.mark.parametrize("backend", ["lsm"])
 def test_trailing_add_column_is_readable(spark, tmp_path, backend):
-    """The wave-12 finding, pinned on BOTH state backends: an ADD COLUMN
+    """The wave-12 finding: an ADD COLUMN
     as the stream's LAST event (no data after it) must still surface in
     reads — new column present, NULL for every existing row."""
     from flink_cdc_spark.core.events import AddColumnEvent as ACE
@@ -308,7 +308,6 @@ def test_trailing_add_column_is_readable(spark, tmp_path, backend):
         spark, parse_pipeline_yaml(YAML),
         state_root=str(tmp_path / "state"),
         checkpoint_dir=str(tmp_path / "ckpt"),
-        state_backend=backend,
         shuffle_partitions=4,
     )
     runner.run_available(src)
@@ -318,7 +317,7 @@ def test_trailing_add_column_is_readable(spark, tmp_path, backend):
     assert rows == {1: ("a", None), 2: ("b", None)}
 
 
-@pytest.mark.parametrize("backend", ["lsm", "parquet"])
+@pytest.mark.parametrize("backend", ["lsm"])
 def test_drop_table_removes_sink_state(spark, tmp_path, backend):
     """DROP TABLE through the streaming runner must remove the sink
     table (MetadataApplier drop semantics) — it used to leave the state
@@ -338,7 +337,6 @@ def test_drop_table_removes_sink_state(spark, tmp_path, backend):
         spark, parse_pipeline_yaml(YAML),
         state_root=str(tmp_path / "state"),
         checkpoint_dir=str(tmp_path / "ckpt"),
-        state_backend=backend,
         shuffle_partitions=4,
     )
     runner.run_available(src)
@@ -353,7 +351,6 @@ def test_drop_table_removes_sink_state(spark, tmp_path, backend):
         spark, parse_pipeline_yaml(YAML),
         state_root=str(tmp_path / "state"),
         checkpoint_dir=str(tmp_path / "ckpt"),
-        state_backend=backend,
         shuffle_partitions=4,
     )
     runner2.run_available(src)

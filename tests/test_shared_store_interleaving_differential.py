@@ -64,7 +64,7 @@ def test_shared_store_interleaved_crash_replay(spark, tmp_path, trial):
 
     # references: uninterrupted runs in private dirs
     ref_a = RetractAggregateStream(spark, str(tmp_path / "ref_a"), "g", "val")
-    ref_a.stage(env_a, "k")
+    ref_a.stage(env_a)
     ref_a.run()
     want_a = sorted((r.grp, r.n_rows, r.sum_cents)
                     for r in ref_a.current_state().collect())
@@ -77,7 +77,7 @@ def test_shared_store_interleaved_crash_replay(spark, tmp_path, trial):
 
     shared = str(tmp_path / "shared_store")
     a = _mk_agg(spark, str(tmp_path / "a"), shared)
-    a.stage(env_a, "k")
+    a.stage(env_a)
     b = _mk_topn(spark, str(tmp_path / "b"), shared)
     b.stage(env_b)
     ba, bb = _batches(a, spark), _batches(b, spark)

@@ -180,7 +180,7 @@ def test_retract_aggregate_vs_sequential_model(spark, tmp_path, trial):
     ra = RetractAggregateStream(
         spark, str(tmp_path / f"w{trial}"), group="g", value="val"
     )
-    ra.stage(_env_df(spark, ops), key_column="k")
+    ra.stage(_env_df(spark, ops))
     ra.run()
     got = {r.grp: (r.n_rows, r.sum_cents)
            for r in ra.current_state().collect() if r.n_rows}

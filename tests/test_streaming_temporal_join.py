@@ -337,7 +337,7 @@ def test_bucketed_history_opt_in_matches_model(spark, tmp_path, trial):
     tj = StreamingTemporalJoin(spark, str(tmp_path / "w"), **tj_args)
     tj.stage(spark.createDataFrame(rows, ENV_SCHEMA))
     tj.run()
-    assert tj.state._load(tj._HIST)["bucket"] == {"keys": ["k"], "n": 4}
+    assert tj.state._load(tj._TABLE)["bucket"] == {"keys": ["k"], "n": 4}
     got = {r.pid: (r.v, r.valid_from_ver) for r in tj.enriched().collect()}
     want = _model(dim_events, probes)
     assert got == want
