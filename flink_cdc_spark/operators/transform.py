@@ -50,6 +50,7 @@ from ..sources.envelope import (
     OP_INSERT,
     OP_REPLACE,
     OP_UPDATE,
+    row_image,
 )
 
 
@@ -335,7 +336,7 @@ class TransformProcessor:
                 F.col(ENVELOPE_TABLE_ID),
                 F.when(is_del, F.lit(OP_INSERT)).otherwise(F.col(ENVELOPE_OP)).alias(ENVELOPE_OP),
                 F.when(is_del, F.lit(None)).otherwise(F.col("before")).alias("before"),
-                F.when(is_del, F.col("before")).otherwise(F.col("after")).alias("after"),
+                row_image().alias("after"),
                 F.col(ENVELOPE_META),
                 F.col(ENVELOPE_SEQ),
             )

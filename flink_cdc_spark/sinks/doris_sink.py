@@ -32,11 +32,12 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..sources.envelope import (
-    ENVELOPE_META,
     ENVELOPE_OP,
     ENVELOPE_SEQ,
     ENVELOPE_TABLE_ID,
     OP_DELETE,
+    from_images,
+    row_image,
 )
 
 DORIS_DELETE_SIGN = "__DORIS_DELETE_SIGN__"
@@ -77,7 +78,7 @@ def encode_doris(
     Doris rejects a duplicate label, which is the exactly-once mechanism.
     """
     is_del = F.col(ENVELOPE_OP) == OP_DELETE
-    image = F.when(is_del, F.col("before")).otherwise(F.col("after"))
+    image = row_image()
     if partition_key is not None:
         default = F.lit(DEFAULT_DATE if partition_is_date else DEFAULT_DATETIME)
         filled = F.coalesce(
@@ -115,16 +116,8 @@ def decode_doris(records: DataFrame, payload: T.StructType, table_id: str) -> Da
     parsed = F.from_json(F.col("row"), schema, _JSON_OPTS)
     row = F.struct(*[parsed.getField(f.name).alias(f.name) for f in payload.fields])
     is_del = parsed.getField(DORIS_DELETE_SIGN) == "1"
-    return records.select(
-        F.lit(table_id).alias(ENVELOPE_TABLE_ID),
-        F.when(is_del, F.lit(OP_DELETE)).otherwise(F.lit("INSERT")).alias(ENVELOPE_OP),
-        F.when(is_del, row).alias("before"),
-        F.when(~is_del, row).alias("after"),
-        F.create_map(
-            F.lit("sink"), F.lit("doris"), F.lit("label"), F.col("label")
-        ).alias(ENVELOPE_META),
-        F.col("__seq"),
-    )
+    meta = F.create_map(F.lit("sink"), F.lit("doris"), F.lit("label"), F.col("label"))
+    return from_images(records, table_id, row, is_del, meta)
 
 
 # ---------------------------------------------------------------------------

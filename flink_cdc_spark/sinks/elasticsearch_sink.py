@@ -35,16 +35,13 @@ from ..sources.envelope import (
     ENVELOPE_SEQ,
     ENVELOPE_TABLE_ID,
     OP_DELETE,
+    row_image,
 )
 
 
 def _doc_id(pk_names: List[str]) -> F.Column:
-    side = F.when(F.col(ENVELOPE_OP) == OP_DELETE, F.col("before")).otherwise(
-        F.col("after")
-    )
-    return F.concat_ws(
-        "_", *[side.getField(k).cast("string") for k in pk_names]
-    )
+    side = row_image()
+    return F.concat_ws("_", *[side.getField(k).cast("string") for k in pk_names])
 
 
 def encode_es_bulk(

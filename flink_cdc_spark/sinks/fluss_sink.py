@@ -20,11 +20,12 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..sources.envelope import (
-    ENVELOPE_META,
     ENVELOPE_OP,
     ENVELOPE_SEQ,
     ENVELOPE_TABLE_ID,
     OP_DELETE,
+    from_images,
+    row_image,
 )
 
 OP_UPSERT_F = "UPSERT"
@@ -46,7 +47,7 @@ def encode_fluss(
     changes of one key land in one bucket and per-key order survives.
     """
     is_del = F.col(ENVELOPE_OP) == OP_DELETE
-    image = F.when(is_del, F.col("before")).otherwise(F.col("after"))
+    image = row_image()
     keys = bucket_keys or pk_names
     if keys:
         bucket = F.pmod(
@@ -86,17 +87,10 @@ def decode_fluss(
     Callers materialize by primary key over __seq."""
     row = F.from_json(F.col("row"), payload)
     is_del = F.col("op") == OP_DELETE_F
-    return records.select(
-        F.lit(table_id).alias(ENVELOPE_TABLE_ID),
-        F.when(is_del, F.lit(OP_DELETE)).otherwise(F.lit("INSERT")).alias(ENVELOPE_OP),
-        F.when(is_del, row).alias("before"),
-        F.when(~is_del, row).alias("after"),
-        F.create_map(
-            F.lit("sink"), F.lit("fluss"), F.lit("bucket"),
-            F.col("bucket").cast("string"),
-        ).alias(ENVELOPE_META),
-        F.col("__seq"),
+    meta = F.create_map(
+        F.lit("sink"), F.lit("fluss"), F.lit("bucket"), F.col("bucket").cast("string")
     )
+    return from_images(records, table_id, row, is_del, meta)
 
 
 # -- factory option surface (FlussDataSinkFactory.java) ---------------------

@@ -46,7 +46,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.functions import pandas_udf
 
-from ..sources.envelope import ENVELOPE_OP, ENVELOPE_SEQ, OP_DELETE
+from ..sources.envelope import (
+    ENVELOPE_OP,
+    ENVELOPE_SEQ,
+    OP_DELETE,
+    first_per_key,
+    row_image,
+)
 
 META_COMMIT_TIME = "_hoodie_commit_time"
 META_RECORD_KEY = "_hoodie_record_key"
@@ -175,7 +181,7 @@ class HudiTableStore:
 
         payload = [f.name for f in target_struct.fields]
         is_del = F.col(ENVELOPE_OP) == OP_DELETE
-        img = F.when(is_del, F.col("before")).otherwise(F.col("after"))
+        img = row_image()
         # RowDataKeyGen: single field -> value; composite -> f1:v1,f2:v2
         if len(keys) == 1:
             record_key = img.getField(keys[0]).cast("string")
@@ -223,7 +229,7 @@ class HudiTableStore:
             merged = (
                 current.unionByName(rows) if current is not None else rows
             )
-            merged = self._resolve(merged, props)
+            merged = self._resolve(merged)
             out = os.path.join(ddir, f"base-{instant:08d}")
             merged.write.mode("overwrite").partitionBy(_BUCKET).parquet(out)
             action = "commit"
@@ -246,7 +252,7 @@ class HudiTableStore:
         current = self._read_files(table, props)
         if current is None:
             return 0
-        resolved = self._resolve(current, props)
+        resolved = self._resolve(current)
         instants = self._instants(table)
         instant = (instants[-1] + 1) if instants else 1
         out = os.path.join(self._dir(table), f"clog-{instant:08d}")
@@ -264,7 +270,6 @@ class HudiTableStore:
         from functools import reduce
 
         ddir = self._dir(table)
-        struct = T.StructType.fromJson(json.loads(props["schema"]))
         parts = []
         instants = self._instants(table)
         if props["hoodie.table.type"] == COPY_ON_WRITE:
@@ -291,22 +296,13 @@ class HudiTableStore:
                 parts.append(self.spark.read.parquet(p))
         if not parts:
             return None
-        _ = struct
         return reduce(lambda a, b: a.unionByName(b), parts)
 
-    def _resolve(self, df: DataFrame, props: dict) -> DataFrame:
+    def _resolve(self, df: DataFrame) -> DataFrame:
         """Precombine: per record key the highest ordering value wins,
         ties broken by the later instant."""
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(META_RECORD_KEY).orderBy(
-            F.col(_ORDERING).desc(), F.col(META_COMMIT_TIME).desc()
-        )
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        order = (F.col(_ORDERING).desc(), F.col(META_COMMIT_TIME).desc())
+        return first_per_key(df, [META_RECORD_KEY], *order)
 
     def read(self, table: str) -> Optional[DataFrame]:
         """Snapshot read: MOR merges log files (merge-on-read); COW is the
@@ -317,7 +313,7 @@ class HudiTableStore:
         if df is None:
             return self.spark.createDataFrame([], struct)
         if props["hoodie.table.type"] == MERGE_ON_READ:
-            df = self._resolve(df, props)
+            df = self._resolve(df)
         live = df.where(~F.col(IS_DELETED))
         return live.select(*[f.name for f in struct.fields])
 

@@ -26,10 +26,12 @@ the public Iceberg v2 spec concepts the reference relies on:
     sequence number, so an update's insert (same sequence) survives its
     own delete entry.
 
-Spark-first: the read path is one union of referenced data files, one
-keyed anti-condition join against the (small) delete set, and one window
-for last-image-per-key — all shuffles keyed by primary key, no driver
-rows. DDL never touches a data file.
+Spark-first: a commit's data file is the batch's last image per key
+(``materialize_changelog``); the read path is one union of referenced
+data files, one keyed anti-condition join against the (small) delete set,
+and one ``first_per_key`` window for the highest data sequence per key —
+all shuffles keyed by primary key, no driver rows. DDL never touches a
+data file.
 """
 
 from __future__ import annotations
@@ -42,7 +44,8 @@ from typing import Dict, List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..sources.envelope import ENVELOPE_OP, ENVELOPE_SEQ, OP_DELETE, OP_UPDATE
+from ..sources.envelope import ENVELOPE_OP, OP_DELETE, OP_UPDATE, first_per_key
+from .materialize import materialize_changelog
 
 _SEQ = "__ice_seq"  # data sequence number column carried inside files
 
@@ -206,8 +209,6 @@ class IcebergTableStore:
         (INSERT/UPDATE/REPLACE) + an equality-delete file for keys whose
         previous version dies (UPDATE old image, DELETE). Returns the new
         snapshot id. O(batch): nothing existing is read or rewritten."""
-        from pyspark.sql import Window
-
         meta = self._load(table)
         if meta is None:
             raise ValueError(f"iceberg table {table} does not exist")
@@ -230,27 +231,11 @@ class IcebergTableStore:
         # strictly-lower data sequences, so a surviving same-commit row
         # would wrongly outlive it)
         payload = [f.name for f in cur_struct.fields]
-        if pk_names:
-            key_cols = [
-                F.coalesce(
-                    F.col("after").getField(k), F.col("before").getField(k)
-                ).alias(f"__key_{k}")
-                for k in pk_names
-            ]
-            w = Window.partitionBy(*[f"__key_{k}" for k in pk_names]).orderBy(
-                F.col(ENVELOPE_SEQ).desc()
-            )
-            last = (
-                env.select("*", *key_cols)
-                .withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-            )
-            writes = last.where(F.col(ENVELOPE_OP) != OP_DELETE)
-        else:
-            writes = env.where(F.col(ENVELOPE_OP) != OP_DELETE)
-        data_rows = writes.select(
-            *[F.col("after").getField(c).alias(c) for c in payload],
-        ).withColumn(_SEQ, F.lit(seq).cast("long"))
+        data_rows = (
+            materialize_changelog(env, pk_names)
+            .select(*payload)
+            .withColumn(_SEQ, F.lit(seq).cast("long"))
+        )
         data_path = os.path.join(ddir, "data", f"data-{snap_id:08d}.parquet")
         parts = [p for p in self._partition_names(meta) if p in payload]
         part_values = None
@@ -377,7 +362,6 @@ class IcebergTableStore:
         also reaches the hive-partitioned parquet listing. Sound under
         Iceberg's partition-immutability rule."""
         from functools import reduce
-        from pyspark.sql import Window
 
         meta = self._load(table)
         if meta is None:
@@ -402,12 +386,9 @@ class IcebergTableStore:
         ddir = self._dir(table)
 
         def project(df: DataFrame, writer_names: Dict[str, int]) -> DataFrame:
-            id_by_writer_name = writer_names
             cols = []
             for fid, rname in name_by_id.items():
-                src = next(
-                    (n for n, i in id_by_writer_name.items() if i == fid), None
-                )
+                src = next((n for n, i in writer_names.items() if i == fid), None)
                 dt = T._parse_datatype_json_string(type_by_id[fid])
                 if src is not None and src in df.columns:
                     cols.append(F.col(src).cast(dt).alias(rname))
@@ -477,12 +458,7 @@ class IcebergTableStore:
                 .select(*[data[f.name] for f in read_struct.fields], data[_SEQ])
             )
         if pk_names:
-            w = Window.partitionBy(*pk_names).orderBy(F.col(_SEQ).desc())
-            data = (
-                data.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .drop("__rn")
-            )
+            data = first_per_key(data, pk_names, F.col(_SEQ).desc())
         return data.select(*[f.name for f in read_struct.fields])
 
     def compact(self, table: str) -> int:

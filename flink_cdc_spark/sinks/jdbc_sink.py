@@ -36,7 +36,13 @@ from ..core.events import (
     TruncateTableEvent,
 )
 from ..core.schema import Schema
-from ..sources.envelope import ENVELOPE_OP, ENVELOPE_SEQ, OP_DELETE
+from ..sources.envelope import (
+    ENVELOPE_OP,
+    ENVELOPE_SEQ,
+    OP_DELETE,
+    first_per_key,
+    row_image,
+)
 from ..sources.jdbc_live import DERBY_DRIVER, JdbcEndpoint
 
 _STG_SUFFIX = "__STG"
@@ -146,8 +152,6 @@ class JdbcWarehouseSink:
         half-staged attempt leaves garbage that must not merge twice); and
         the MERGE + ledger insert run in one database transaction, so
         either both happen or neither."""
-        from pyspark.sql import Window
-
         t = self._table_name(table_id)
         stg = f"{t}{_STG_SUFFIX}"
         if batch_id is not None and self.is_committed(table_id, batch_id):
@@ -158,9 +162,7 @@ class JdbcWarehouseSink:
         if not pks:
             raise ValueError(f"JDBC warehouse sink requires primary keys for {table_id}")
 
-        img = F.when(F.col(ENVELOPE_OP) == OP_DELETE, F.col("before")).otherwise(
-            F.col("after")
-        )
+        img = row_image()
         rows = env.select(
             *[img[c].alias(c) for c in cols],
             F.when(F.col(ENVELOPE_OP) == OP_DELETE, F.lit("D"))
@@ -168,14 +170,9 @@ class JdbcWarehouseSink:
             .alias("__op_flag"),
             F.col(ENVELOPE_SEQ).alias("__seq_tmp"),
         )
-        w = Window.partitionBy(*pks).orderBy(F.col("__seq_tmp").desc())
-        reduced = (
-            rows.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .select(
-                *[F.col(c).alias(c.upper()) for c in cols],
-                F.col("__op_flag").alias("OP_FLAG"),
-            )
+        reduced = first_per_key(rows, pks, F.col("__seq_tmp").desc()).select(
+            *[F.col(c).alias(c.upper()) for c in cols],
+            F.col("__op_flag").alias("OP_FLAG"),
         )
         # executor-side parallel staging INSERTs
         reduced.write.jdbc(self.url, stg, mode="append", properties=self._props)

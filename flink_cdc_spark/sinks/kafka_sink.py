@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..core import types as ct
 from ..core.selectors import Selectors, split_unescaped
 from ..core.table_id import TableId
-from ..sources.envelope import ENVELOPE_OP, ENVELOPE_SEQ, OP_DELETE
+from ..sources.envelope import ENVELOPE_SEQ, row_image
 
 PARTITION_STRATEGIES = ("all-to-zero", "hash-by-key")
 KEY_FORMATS = ("json", "csv")
@@ -240,9 +240,7 @@ def kafka_producer_records(
     topic = infer_topic(config, table_id)
     tid = TableId.parse(table_id)
 
-    key_img = F.when(
-        F.col(ENVELOPE_OP) == OP_DELETE, F.col("before")
-    ).otherwise(F.col("after"))
+    key_img = row_image()
     if config.key_format == "json":
         key = F.to_json(
             F.struct(

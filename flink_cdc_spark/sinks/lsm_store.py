@@ -40,6 +40,8 @@ from ..sources.envelope import (
     ENVELOPE_OP,
     ENVELOPE_SEQ,
     OP_DELETE,
+    first_per_key,
+    row_image,
 )
 
 _TOMBSTONE = "__deleted"
@@ -273,8 +275,6 @@ class LsmStateStore:
         and base files lay out hive-partitioned on these columns, so a
         filtered read prunes whole partitions at the file listing and a
         commit touching few partitions writes few directories."""
-        from pyspark.sql import Window
-
         m = self._load(table) or {
             "schema": target_struct.json(),
             "base": None,
@@ -311,21 +311,14 @@ class LsmStateStore:
         # bake NULLs into the base (wave-12 widening trials). Forward
         # path: the translation is the identity.
         out_names = [mapping.get(c, c) for c in payload_cols]
-        img = F.when(
-            F.col(ENVELOPE_OP) == OP_DELETE, F.col("before")
-        ).otherwise(F.col("after"))
+        img = row_image()
         rows = env.select(
             *[img[c].alias(n) for c, n in zip(payload_cols, out_names)],
             (F.col(ENVELOPE_OP) == OP_DELETE).alias(_TOMBSTONE),
             F.col(ENVELOPE_SEQ).alias(ENVELOPE_SEQ),
         )
         if primary_keys and not batch_unique:
-            w = Window.partitionBy(*primary_keys).orderBy(F.col(ENVELOPE_SEQ).desc())
-            rows = (
-                rows.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .drop("__rn")
-            )
+            rows = first_per_key(rows, primary_keys, F.col(ENVELOPE_SEQ).desc())
         elif primary_keys and batch_unique and DEBUG_ASSERT_BATCH_UNIQUE:
             n, nd = rows.select(
                 F.count(F.lit(1)),
@@ -457,8 +450,6 @@ class LsmStateStore:
         """Merge-on-read over the base and an explicit delta subset —
         read() passes every manifest delta; compact() passes only the
         committed-epoch ones."""
-        from pyspark.sql import Window
-
         schema_struct = T.StructType.fromJson(json.loads(m["schema"]))
         spec = m.get("bucket")
         parts = []
@@ -496,13 +487,8 @@ class LsmStateStore:
         # one part there is nothing to resolve — this drops the read's
         # only shuffle for fully-compacted tables and first-epoch state
         if pks and len(parts) > 1:
-            w = Window.partitionBy(*pks).orderBy(
-                F.col(_COMMIT).desc(), F.col(ENVELOPE_SEQ).desc()
-            )
-            merged = (
-                merged.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .drop("__rn")
+            merged = first_per_key(
+                merged, pks, F.col(_COMMIT).desc(), F.col(ENVELOPE_SEQ).desc()
             )
         live = merged.where(~F.col(_TOMBSTONE))
         return live.select(*[f.name for f in schema_struct.fields])

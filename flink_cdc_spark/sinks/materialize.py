@@ -8,8 +8,9 @@ final state is the map's contents. On Spark this is last-image-per-key:
     fast path  (insert-only changelog, unique keys): select after.* — a pure
                narrow projection, NO shuffle. At 100 TB this is the path the
                initial snapshot load takes, so it must not shuffle.
-    general    one hash shuffle on the primary key: max(__seq) per key via a
-               window, keep rn=1, drop rows whose last image is DELETE.
+    general    one hash shuffle on the primary key: the highest __seq per
+               key via ``first_per_key`` (sources/envelope.py), then drop
+               keys whose last image is DELETE.
 
 Without a primary key the changelog degenerates to append-only semantics
 (deletes/updates need keys), matching the reference's non-PK behavior.
@@ -17,11 +18,11 @@ Without a primary key the changelog degenerates to append-only semantics
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Sequence
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from ..sources.envelope import ENVELOPE_OP, ENVELOPE_SEQ, OP_DELETE
+from ..sources.envelope import ENVELOPE_OP, ENVELOPE_SEQ, OP_DELETE, first_per_key
 
 
 def materialize_changelog(
@@ -33,17 +34,6 @@ def materialize_changelog(
     if insert_only or not primary_keys:
         return df.where(F.col(ENVELOPE_OP) != OP_DELETE).select("after.*")
 
-    key_exprs = [
-        F.coalesce(F.col(f"after.{k}"), F.col(f"before.{k}")).alias(f"__key_{k}")
-        for k in primary_keys
-    ]
-    keyed = df.select("*", *key_exprs)
-    w = Window.partitionBy(*[f"__key_{k}" for k in primary_keys]).orderBy(
-        F.col(ENVELOPE_SEQ).desc()
-    )
-    latest = (
-        keyed.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .where(F.col(ENVELOPE_OP) != OP_DELETE)
-    )
-    return latest.select("after.*")
+    keys = [F.coalesce(F.col(f"after.{k}"), F.col(f"before.{k}")) for k in primary_keys]
+    latest = first_per_key(df, keys, F.col(ENVELOPE_SEQ).desc())
+    return latest.where(F.col(ENVELOPE_OP) != OP_DELETE).select("after.*")

@@ -23,11 +23,12 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..sources.envelope import (
-    ENVELOPE_META,
     ENVELOPE_OP,
     ENVELOPE_SEQ,
     ENVELOPE_TABLE_ID,
     OP_DELETE,
+    from_images,
+    row_image,
 )
 
 OP_UPSERT_MC = "UPSERT"
@@ -51,7 +52,7 @@ def encode_maxcompute(
     ordered within a bucket.
     """
     is_del = F.col(ENVELOPE_OP) == OP_DELETE
-    image = F.when(is_del, F.col("before")).otherwise(F.col("after"))
+    image = row_image()
     part = (
         partition_expr.cast("string")
         if partition_expr is not None
@@ -78,18 +79,12 @@ def decode_maxcompute(
     reference moves it through event meta, Constant.MAXCOMPUTE_PARTITION_NAME)."""
     row = F.from_json(F.col("record"), payload)
     is_del = F.col("op") == OP_DELETE_MC
-    return records.select(
-        F.lit(table_id).alias(ENVELOPE_TABLE_ID),
-        F.when(is_del, F.lit(OP_DELETE)).otherwise(F.lit("INSERT")).alias(ENVELOPE_OP),
-        F.when(is_del, row).alias("before"),
-        F.when(~is_del, row).alias("after"),
-        F.create_map(
-            F.lit("sink"), F.lit("maxcompute"),
-            F.lit("partition"), F.col("partition_name"),
-            F.lit("session"), F.col("session_id"),
-        ).alias(ENVELOPE_META),
-        F.col("__seq"),
+    meta = F.create_map(
+        F.lit("sink"), F.lit("maxcompute"),
+        F.lit("partition"), F.col("partition_name"),
+        F.lit("session"), F.col("session_id"),
     )
+    return from_images(records, table_id, row, is_del, meta)
 
 
 # -- factory option surface (MaxComputeDataSinkFactory.java) ----------------

@@ -33,11 +33,12 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..sources.envelope import (
-    ENVELOPE_META,
     ENVELOPE_OP,
     ENVELOPE_SEQ,
     ENVELOPE_TABLE_ID,
     OP_DELETE,
+    from_images,
+    row_image,
 )
 
 STARROCKS_OP = "__op"
@@ -60,7 +61,7 @@ def encode_starrocks(env: DataFrame) -> DataFrame:
     `row` is the JSON line EventRecordSerializationSchema.serializeRecord
     builds: image columns plus integer `__op` (0 upsert / 1 delete)."""
     is_del = F.col(ENVELOPE_OP) == OP_DELETE
-    image = F.when(is_del, F.col("before")).otherwise(F.col("after"))
+    image = row_image()
     body = image.withField(
         STARROCKS_OP,
         F.when(is_del, F.lit(OP_DELETE_SR)).otherwise(F.lit(OP_UPSERT)),
@@ -87,14 +88,8 @@ def decode_starrocks(
     parsed = F.from_json(F.col("row"), schema, _JSON_OPTS)
     row = F.struct(*[parsed.getField(f.name).alias(f.name) for f in payload.fields])
     is_del = parsed.getField(STARROCKS_OP) == OP_DELETE_SR
-    return records.select(
-        F.lit(table_id).alias(ENVELOPE_TABLE_ID),
-        F.when(is_del, F.lit(OP_DELETE)).otherwise(F.lit("INSERT")).alias(ENVELOPE_OP),
-        F.when(is_del, row).alias("before"),
-        F.when(~is_del, row).alias("after"),
-        F.create_map(F.lit("sink"), F.lit("starrocks")).alias(ENVELOPE_META),
-        F.col("__seq"),
-    )
+    meta = F.create_map(F.lit("sink"), F.lit("starrocks"))
+    return from_images(records, table_id, row, is_del, meta)
 
 
 # ---------------------------------------------------------------------------

@@ -13,11 +13,24 @@ This is the Spark representation of the reference's DataChangeEvent
 Design rule (SURVEY.md §7.6): an UPDATE carries BOTH images in one row, so
 before/after pairing survives any shuffle by construction; events are only
 split (to -U/+U style rows) transiently inside operators that need it.
+
+Keyed-sink rule (ValuesDatabase, Paimon's merge engine): per primary key the
+last image wins, and a DELETE's key comes from its before image. This module
+is its only implementation; stores, sinks and carry machines import it:
+
+    row_image()       the image a keyed consumer writes or keys on —
+                      ``before`` for a DELETE, ``after`` otherwise
+    first_per_key()   the one ``row_number() = 1`` window: one row per key,
+                      the first under the given order
+    from_images()     the envelope a keyed sink's records decode to — a
+                      DELETE of the record's image, or an INSERT of it
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from typing import Sequence, Union
+
+from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
 ENVELOPE_TABLE_ID = "__table_id"
 ENVELOPE_OP = "__op"
@@ -58,6 +71,40 @@ def payload_struct(df: DataFrame) -> T.StructType:
     raise ValueError("Not an envelope DataFrame (no 'after' column)")
 
 
+def row_image() -> Column:
+    """The image a keyed consumer writes or keys on: ``before`` for a
+    DELETE, ``after`` for every other op."""
+    return F.when(F.col(ENVELOPE_OP) == OP_DELETE, F.col("before")).otherwise(F.col("after"))
+
+
+def first_per_key(
+    df: DataFrame, keys: Sequence[Union[str, Column]], *order: Column
+) -> DataFrame:
+    """One row per ``keys`` (names or expressions): the first under
+    ``order``. One window partitioned on the keys, and no helper column
+    left behind. Last-image-per-key passes a descending sequence."""
+    w = Window.partitionBy(*keys).orderBy(*order)
+    ranked = df.withColumn("__rn", F.row_number().over(w))
+    return ranked.where(F.col("__rn") == 1).drop("__rn")
+
+
+def from_images(
+    records: DataFrame, table_id: str, row: Column, is_del: Column, meta: Column
+) -> DataFrame:
+    """The envelope a keyed sink's records decode to: where ``is_del`` a
+    DELETE whose before image is ``row``, otherwise an INSERT (a full-row
+    REPLACE under last-image-per-key) whose after image is ``row``.
+    ``records`` carries the sink's ``__seq``."""
+    return records.select(
+        F.lit(table_id).alias(ENVELOPE_TABLE_ID),
+        F.when(is_del, F.lit(OP_DELETE)).otherwise(F.lit(OP_INSERT)).alias(ENVELOPE_OP),
+        F.when(is_del, row).alias("before"),
+        F.when(~is_del, row).alias("after"),
+        meta.alias(ENVELOPE_META),
+        F.col(ENVELOPE_SEQ),
+    )
+
+
 def wrap_as_inserts(df: DataFrame, table_id: str, seq_offset: int = 0) -> DataFrame:
     """Wrap a plain table DataFrame as an insert-only changelog envelope.
 
@@ -81,9 +128,8 @@ def wrap_as_upsert_deletes(
     """Wrap a plain DataFrame as a changelog envelope whose per-row op is
     DELETE where the boolean column ``delete_col`` is true and INSERT
     otherwise — the upsert/tombstone delta shape the LSM state store
-    consumes (`sinks/lsm_store.py` reads the before image for deletes,
-    the after image otherwise; both carry the same payload here, since a
-    tombstone only needs its primary-key columns populated).
+    consumes. Both images carry the same payload, so the row's
+    ``row_image()`` is that payload whatever its op.
 
     Input contract: at most ONE row per primary key (ADVICE r15). The
     ``__seq`` assigned here is ``monotonically_increasing_id()`` — stable

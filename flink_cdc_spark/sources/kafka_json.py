@@ -36,6 +36,7 @@ from .envelope import (
     OP_REPLACE,
     OP_UPDATE,
     payload_struct,
+    row_image,
 )
 
 _DBZ_OP = {OP_INSERT: "c", OP_UPDATE: "u", OP_DELETE: "d", OP_REPLACE: "r"}
@@ -150,9 +151,7 @@ def canal_value_expr(env: DataFrame, pk_names: Sequence[str] = ()):
         .otherwise("INSERT")
     )
     # canal DELETE carries the removed row in `data`
-    data_img = F.when(F.col(ENVELOPE_OP) == OP_DELETE, F.col("before")).otherwise(
-        F.col("after")
-    )
+    data_img = row_image()
     old_img = F.when(F.col(ENVELOPE_OP) == OP_UPDATE, F.col("before")).otherwise(
         F.lit(None).cast(payload_struct(env))
     )

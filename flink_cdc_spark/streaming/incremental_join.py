@@ -53,7 +53,13 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..sources.envelope import ENVELOPE_OP, ENVELOPE_TABLE_ID, OP_DELETE
+from ..sources.envelope import (
+    ENVELOPE_OP,
+    ENVELOPE_SEQ,
+    ENVELOPE_TABLE_ID,
+    OP_DELETE,
+    first_per_key,
+)
 from .epoch import EpochMachine
 
 
@@ -67,10 +73,6 @@ def two_sided_delta(
     shuffle: (__left, __pk, __alive, after). Requires the harmonized
     superset payload (harmonize_envelope) and pks of a comparable type.
     __alive=false is a tombstone (the key was deleted)."""
-    from pyspark.sql import Window
-
-    from ..sources.envelope import ENVELOPE_SEQ
-
     is_left = F.col(ENVELOPE_TABLE_ID) == left_table_id
     pk_col = F.when(
         is_left,
@@ -78,17 +80,9 @@ def two_sided_delta(
     ).otherwise(
         F.coalesce(F.col(f"after.{pk_right}"), F.col(f"before.{pk_right}")),
     )
-    w = Window.partitionBy("__left", "__pk").orderBy(F.col(ENVELOPE_SEQ).desc())
-    return (
-        env.select("*", is_left.alias("__left"), pk_col.alias("__pk"))
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .select(
-            "__left",
-            "__pk",
-            (F.col(ENVELOPE_OP) != OP_DELETE).alias("__alive"),
-            "after",
-        )
+    keyed = env.select("*", is_left.alias("__left"), pk_col.alias("__pk"))
+    return first_per_key(keyed, ["__left", "__pk"], F.col(ENVELOPE_SEQ).desc()).select(
+        "__left", "__pk", (F.col(ENVELOPE_OP) != OP_DELETE).alias("__alive"), "after"
     )
 
 

@@ -42,7 +42,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..sources.envelope import ENVELOPE_OP, ENVELOPE_SEQ, OP_DELETE
+from ..sources.envelope import ENVELOPE_OP, ENVELOPE_SEQ, OP_DELETE, first_per_key
 from .epoch import EpochMachine
 
 
@@ -84,12 +84,9 @@ class RetractTopNStream(EpochMachine):
         k, g, v = self.key, self.group, self.value
         with self._epoch(epoch_id):
             pk = F.coalesce(F.col(f"after.{k}"), F.col(f"before.{k}"))
-            w = Window.partitionBy("__pk").orderBy(F.col(ENVELOPE_SEQ).desc())
+            keyed = batch_df.withColumn("__pk", pk)
             delta = self._hold(
-                batch_df.withColumn("__pk", pk)
-                .withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .select(
+                first_per_key(keyed, ["__pk"], F.col(ENVELOPE_SEQ).desc()).select(
                     "__pk",
                     (F.col(ENVELOPE_OP) != OP_DELETE).alias("__alive"),
                     F.col(f"after.{g}").alias("__g_new"),

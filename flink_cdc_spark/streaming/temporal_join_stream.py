@@ -55,6 +55,7 @@ from ..sources.envelope import (
     ENVELOPE_SEQ,
     ENVELOPE_TABLE_ID,
     OP_DELETE,
+    first_per_key,
 )
 from .epoch import EpochMachine
 
@@ -139,9 +140,9 @@ class StreamingTemporalJoin(EpochMachine):
             F.expr(self.ts_expr).alias("__ts"),
         )
         w = Window.partitionBy(k).orderBy(F.col("__seq").asc())
-        firsts = events.withColumn("__rn", F.row_number().over(w)).where(
-            F.col("__rn") == 1
-        ).select(k, F.col("__ts").alias("__first_ts"))
+        firsts = first_per_key(events, [k], F.col("__seq").asc()).select(
+            k, F.col("__ts").alias("__first_ts")
+        )
 
         keys = events.select(k).distinct()
         # the fold only ever reads the touched keys' versions; the carry

@@ -147,16 +147,49 @@ def test_soft_delete(spark):
 
 
 def test_materialize_last_per_key(spark):
+    """Last image per key, a DELETE's key taken from its before image —
+    also the data file of every IcebergTableStore commit."""
     events = [
         DataChangeEvent.insert(TID, (1, "a", 30)),
         DataChangeEvent.insert(TID, (2, "b", 40)),
         DataChangeEvent.update(TID, (1, "a", 30), (1, "a2", 31)),
         DataChangeEvent.delete(TID, (2, "b", 40)),
         DataChangeEvent.insert(TID, (3, "c", 50)),
+        # inserted then deleted in the same frame: absent
+        DataChangeEvent.insert(TID, (4, "d", 60)),
+        DataChangeEvent.delete(TID, (4, "d", 60)),
+        # deleted (a prior frame's row) then re-inserted: present
+        DataChangeEvent.delete(TID, (5, "e", 70)),
+        DataChangeEvent.insert(TID, (5, "e2", 71)),
     ]
+    want = [(1, "a2", 31), (3, "c", 50), (5, "e2", 71)]
     df = make_changelog(spark, events)
-    final = materialize_changelog(df, ["id"]).orderBy("id").collect()
-    assert [(r.id, r.name, r.age) for r in final] == [(1, "a2", 31), (3, "c", 50)]
+
+    def final(frame, keys):
+        rows = materialize_changelog(frame, keys).collect()
+        return sorted((r.id, r.name, r.age) for r in rows)
+
+    assert final(df, ["id"]) == want
+    # rows supplied out of __seq order: the order comes from __seq alone
+    newest_first = df.orderBy(F.col("__seq").desc()).collect()
+    reordered = spark.createDataFrame(newest_first, df.schema)
+    seqs = [r["__seq"] for r in reordered.collect()]
+    assert seqs == sorted(seqs, reverse=True) and len(set(seqs)) > 1
+    assert final(reordered.repartition(3), ["id"]) == want
+
+    # composite primary key: (id, name) rows are distinct keys
+    composite = make_changelog(
+        spark,
+        [
+            DataChangeEvent.insert(TID, (1, "x", 1)),
+            DataChangeEvent.insert(TID, (1, "y", 2)),
+            DataChangeEvent.insert(TID, (2, "x", 3)),
+            DataChangeEvent.update(TID, (1, "x", 1), (1, "x", 5)),
+            DataChangeEvent.delete(TID, (1, "y", 2)),
+            DataChangeEvent.delete(TID, (2, "y", 9)),
+        ],
+    )
+    assert final(composite, ["id", "name"]) == [(1, "x", 5), (2, "x", 3)]
 
 
 def test_materialize_insert_only_no_shuffle(spark):
