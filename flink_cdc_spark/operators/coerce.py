@@ -11,7 +11,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..sources.envelope import ENVELOPE_META, ENVELOPE_OP, ENVELOPE_SEQ, ENVELOPE_TABLE_ID
+from ..sources.envelope import (
+    ENVELOPE_META,
+    ENVELOPE_OP,
+    ENVELOPE_SEQ,
+    ENVELOPE_TABLE_ID,
+    payload_struct,
+)
 
 
 def coerce_envelope_payload(
@@ -22,11 +28,7 @@ def coerce_envelope_payload(
     source_names maps target column name -> source column name for columns
     that were renamed between the frame's emission schema and the target
     (rename_map_through in pipeline/schema_coordinator.py)."""
-    current = None
-    for f_ in df.schema.fields:
-        if f_.name == "after":
-            current = f_.dataType
-    have = {f_.name for f_ in current.fields} if current else set()
+    have = {f_.name for f_ in payload_struct(df).fields}
     source_names = source_names or {}
 
     def image(name: str):

@@ -314,9 +314,9 @@ class MultiTableCdcPipeline:
         udf_names=frozenset(),
         shuffle_partitions=None,
     ):
-        from ..core.router import RouteRule, TableIdRouter
-        from ..pipeline.composer import _transform_rule_of
         from ..sources.jdbc_live import JdbcEndpoint
+        from .composer import PipelineFront
+        from .definition import PipelineDef, SinkDef, SourceDef
 
         self.spark = spark
         self.url = url
@@ -326,21 +326,13 @@ class MultiTableCdcPipeline:
         # width down (None = session default — correct when one captured
         # table IS corpus-scale)
         self.shuffle_partitions = shuffle_partitions
-        self.pipeline_def = pipeline_def
-        self.udf_names = frozenset(udf_names)
-        routes = pipeline_def.routes if pipeline_def else []
-        self.router = TableIdRouter(
-            [RouteRule(r.source_table, r.sink_table, r.replace_symbol, r.description) for r in routes]
+        self.front = PipelineFront(
+            pipeline_def or PipelineDef(SourceDef("jdbc"), SinkDef("lake")), udf_names
         )
-        self._transform_rules = [
-            (_transform_rule_of(t), _transform_rule_of(t).selectors())
-            for t in (pipeline_def.transforms if pipeline_def else [])
-        ]
         self.tables_selector = tables_selector
         self.chunk_size = chunk_size
         ep = JdbcEndpoint(spark, url)
         self.pipes = {}
-        self.sink_schemas = {}  # sink table str -> Schema (post-transform)
         for tid in ep.discover_tables(selectors=tables_selector):
             self._add_pipe(ep, tid)
 
@@ -379,12 +371,6 @@ class MultiTableCdcPipeline:
                     self.pipes[str(tid)].bootstrap()
                     added.append(str(tid))
         return added
-
-    def _rule_for(self, tid):
-        for rule, selectors in self._transform_rules:
-            if selectors.is_match(tid):
-                return rule
-        return None
 
     def _scope(self):
         import contextlib
@@ -444,35 +430,25 @@ class _RoutedTablePipe(JdbcCdcPipeline):
         self._tid = TableId.parse(self.table)
 
     def targets(self):
-        return [str(t) for t in self.parent.router.route(self._tid)]
+        return [str(t) for t in self.parent.front.router.route(self._tid)]
 
     def _apply_sink_schema(self):
-        from ..operators.transform import TransformProcessor
-
-        rule = self.parent._rule_for(self._tid)
-        schema = self.schema
-        if rule is not None:
-            proc = TransformProcessor(
-                rule, schema.to_spark_struct(), udf_names=self.parent.udf_names
-            )
-            schema = proc.output_schema(schema)
+        proc = self.parent.front.processor(self._tid, self.schema)
+        schema = self.schema if proc is None else proc.output_schema(self.schema)
         struct = schema.to_spark_struct()
-        for target in self.parent.router.route(self._tid):
-            self.state.set_schema(str(target), struct)
+        for target in self.targets():
+            self.state.set_schema(target, struct)
 
     # the single-table lifecycle funnels every merge through _merge_env;
     # route and transform by overriding that one hook
     def _merge_env(self, env, target_struct, pks):
-        from ..operators.transform import TransformProcessor
+        from ..sources.envelope import payload_struct
 
-        rule = self.parent._rule_for(self._tid)
+        proc = self.parent.front.processor(self._tid, self.schema)
         out_struct, out_pks = target_struct, pks
-        if rule is not None:
-            proc = TransformProcessor(
-                rule, target_struct, udf_names=self.parent.udf_names
-            )
+        if proc is not None:
             env = proc.apply(env)
-            out_struct = env.schema["after"].dataType
-            out_pks = list(rule.primary_keys) or pks
-        for target in self.parent.router.route(self._tid):
-            self.state.merge(str(target), env, out_struct, out_pks)
+            out_struct = payload_struct(env)
+            out_pks = list(proc.rule.primary_keys) or pks
+        for target in self.targets():
+            self.state.merge(target, env, out_struct, out_pks)

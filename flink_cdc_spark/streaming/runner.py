@@ -4,8 +4,11 @@ The streaming shape of the engine (SURVEY.md §7 phase 4):
 
     readStream(wire JSON) -> foreachBatch(process_batch) -> state store
 
-Each micro-batch is processed with the same core as the batch composer
-(transform -> route -> schema coordination -> coercion -> MERGE), with the
+Each micro-batch goes through the same ``PipelineFront``
+(pipeline/composer.py) as the event composer: wire payloads decode with
+the front's pre-transform source schema, the transform compiles against
+it, and the sink side reads the coordinator's post-transform schemas
+(SURVEY.md §2.1 topology). Then route -> coercion -> MERGE, with the
 reference's FlushEvent/coordinator dance collapsed into batch segmentation:
 DDL records split the batch at their sequence positions; every data segment
 is fully merged into the sink state *before* the DDL is applied, exactly
@@ -28,12 +31,10 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..core.router import RouteRule, TableIdRouter
 from ..core.table_id import TableId
 from ..operators.coerce import coerce_envelope_payload
-from ..operators.transform import TransformProcessor
+from ..pipeline.composer import PipelineFront
 from ..pipeline.definition import PipelineDef
-from ..pipeline.schema_coordinator import SchemaCoordinator
 from ..sinks.lsm_store import LsmStateStore
 from ..sources.envelope import (
     ENVELOPE_META,
@@ -61,9 +62,8 @@ class StreamingPipelineRunner:
     ):
         self.spark = spark
         self.pipeline = pipeline
-        from ..pipeline.composer import meta_keys_of
-
-        self.meta_keys = meta_keys_of(pipeline)
+        self.front = PipelineFront(pipeline, udf_names)
+        self.coordinator = self.front.coordinator
         # parallel-metadata source mode (DataSource.isParallelMetadataSource,
         # common/source/DataSource.java:51): partitions may carry divergent
         # payload schemas and no in-band DDL; each batch starts with a
@@ -73,26 +73,6 @@ class StreamingPipelineRunner:
         self.primary_keys = dict(primary_keys or {})
         self.state = LsmStateStore(spark, state_root, compact_every=compact_every)
         self.checkpoint_dir = checkpoint_dir
-        self.udf_names = frozenset(udf_names)
-        self.router = TableIdRouter(
-            [
-                RouteRule(r.source_table, r.sink_table, r.replace_symbol, r.description)
-                for r in pipeline.routes
-            ],
-            route_mode=pipeline.config.route_mode,
-        )
-        self.coordinator = SchemaCoordinator.from_sink_def(
-            self.router,
-            pipeline.config.schema_change_behavior,
-            pipeline.sink.include_schema_evolution_types,
-            pipeline.sink.exclude_schema_evolution_types,
-        )
-        from ..pipeline.composer import _transform_rule_of
-
-        self._transform_rules = [
-            (_transform_rule_of(t), _transform_rule_of(t).selectors())
-            for t in pipeline.transforms
-        ]
         self.batches_seen = 0
         # bounded-replay callers (the file-replay bridges) pass a small
         # width: their micro-batches are tiny, and the LSM merge's state
@@ -101,12 +81,6 @@ class StreamingPipelineRunner:
         self.shuffle_partitions = shuffle_partitions
 
     # -- plumbing ----------------------------------------------------------
-
-    def _rule_for(self, table_id: TableId):
-        for rule, selectors in self._transform_rules:
-            if selectors.is_match(table_id):
-                return rule
-        return None
 
     def start(self, source_dir: str, available_now: bool = True):
         """Start the stream over a directory of wire JSON files."""
@@ -257,7 +231,7 @@ class StreamingPipelineRunner:
                 continue
             merged = merged_schema_for_table(table, ddls)
             pks = tuple(self.primary_keys.get(table, ()))
-            current = self.coordinator.original_schema(tid)
+            current = self.front.source_schema(tid)
             if current is None:
                 merged = Schema(
                     columns=merged.columns, primary_keys=pks
@@ -269,32 +243,8 @@ class StreamingPipelineRunner:
                 self._apply_ddl(ev)
 
     def _apply_ddl(self, event) -> None:
-        from ..core.events import CreateTableEvent
-        from ..pipeline.composer import schema_change_passes_projection
-
-        rule = self._rule_for(event.table_id)
-        if isinstance(event, CreateTableEvent) and rule is not None:
-            proc = TransformProcessor(
-                rule,
-                event.schema.to_spark_struct(),
-                udf_names=self.udf_names,
-                meta_keys=self.meta_keys,
-                local_time_zone=self.pipeline.config.local_time_zone,
-            )
-            event = CreateTableEvent(event.table_id, proc.output_schema(event.schema))
-        if isinstance(event, CreateTableEvent) or schema_change_passes_projection(
-            event, rule
-        ):
-            applied = self.coordinator.process_schema_change(event)
-            for target, evolved_event in applied:
-                self._migrate_state(str(target), evolved_event)
-        else:
-            from ..core.schema_evolution import apply_schema_change_event
-
-            cur = self.coordinator.original_schema(event.table_id)
-            self.coordinator.original_schemas.setdefault(event.table_id, []).append(
-                apply_schema_change_event(cur, event)
-            )
+        for target, evolved_event in self.front.apply_ddl(event):
+            self._migrate_state(str(target), evolved_event)
 
     def _migrate_state(self, table: str, event) -> None:
         """Sink-side DDL execution — the MetadataApplier analog
@@ -356,12 +306,10 @@ class StreamingPipelineRunner:
         elif isinstance(event, DropColumnEvent):
             self.state.drop_columns(table, list(event.dropped_column_names))
 
-    def _merge_segment(self, seg: DataFrame, tables=None) -> None:
-        if tables is None:
-            tables = [r.table_id for r in seg.select("table_id").distinct().collect()]
+    def _merge_segment(self, seg: DataFrame, tables) -> None:
         for table in sorted(tables):
             tid = TableId.parse(table)
-            schema = self.coordinator.original_schema(tid)
+            schema = self.front.source_schema(tid)
             if schema is None:
                 raise ValueError(f"Data before CreateTableEvent for {table}")
             payload = schema.to_spark_struct()
@@ -374,21 +322,12 @@ class StreamingPipelineRunner:
                 F.col("meta").alias(ENVELOPE_META),
                 F.col("seq").alias(ENVELOPE_SEQ),
             )
-            rule = self._rule_for(tid)
-            if rule is not None:
-                proc = TransformProcessor(
-                    rule,
-                    payload,
-                    udf_names=self.udf_names,
-                    meta_keys=self.meta_keys,
-                    local_time_zone=self.pipeline.config.local_time_zone,
-                )
-                env = proc.apply(env)
-            for target in self.router.route(tid):
+            env = self.front.transform(tid, env, schema)
+            for target in self.front.router.route(tid):
                 final_schema = self.coordinator.evolved_schema(target)
                 if final_schema is None:
                     raise ValueError(f"No sink schema for {target}")
-                # data decodes with the *current* original schema, so no
+                # data decodes with the *current* source schema, so no
                 # rename redirection is needed here — state migrated at
                 # DDL-apply time carries renamed history forward
                 routed = env.withColumn(ENVELOPE_TABLE_ID, F.lit(str(target)))

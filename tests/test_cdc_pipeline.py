@@ -250,3 +250,48 @@ pipeline: {{execution.runtime-mode: STREAMING}}
     assert inv == {7: "LATE"}  # routed AND transformed
     users = {r.id: r.uname for r in loop.current_state("mart.users").collect()}
     assert users == {1: "ANN"}
+
+
+def test_live_route_mode_first_match(spark, tmp_path):
+    """`route-mode: FIRST_MATCH` with two overlapping route rules: the live
+    loop lands the table only in the first rule's sink table, as the
+    batch composer does."""
+    from flink_cdc_spark.pipeline.cdc_pipeline import MultiTableCdcPipeline
+    from flink_cdc_spark.core.schema import Schema
+    from flink_cdc_spark.core.table_id import TableId
+    from flink_cdc_spark.pipeline.composer import BatchPipelineComposer, TableStream
+    from flink_cdc_spark.pipeline.yaml_parser import parse_pipeline_yaml
+    from flink_cdc_spark.sources.envelope import wrap_as_inserts
+
+    ep, _ = _mk(spark, tmp_path)
+    url = derby_url(str(tmp_path / "db"), create=False)
+    pdef = parse_pipeline_yaml(
+        f"""
+source: {{type: jdbc, url: "{url}"}}
+sink: {{type: lake, path: {tmp_path / "live"}}}
+route:
+  - source-table: app.items
+    sink-table: mart.first
+  - source-table: app.\\.*
+    sink-table: mart.second
+pipeline: {{execution.runtime-mode: STREAMING, route-mode: FIRST_MATCH}}
+"""
+    )
+    rows = spark.createDataFrame([(1, "n1", 1.0)], "id BIGINT, name STRING, val DOUBLE")
+    batch = BatchPipelineComposer(spark, pdef).compose([
+        TableStream(TableId.parse("app.items"), wrap_as_inserts(rows, "app.items"),
+                    Schema.from_spark_struct(rows.schema, primary_keys=("id",)))
+    ])
+    assert set(batch.tables) == {"mart.first"}
+
+    loop = MultiTableCdcPipeline(
+        spark, url, str(tmp_path / "live"), pipeline_def=pdef,
+        tables_selector=r"app.\.*", chunk_size=8,
+    )
+    loop.bootstrap()
+    ep.execute_update("DELETE FROM items WHERE id = 4")
+    loop.poll_once()
+    assert loop.sink_tables() == ["mart.first"]
+    assert loop.current_state("mart.second") is None
+    ids = {r.id for r in loop.current_state("mart.first").collect()}
+    assert ids == set(range(1, 21)) - {4}

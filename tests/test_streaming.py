@@ -173,31 +173,72 @@ def test_stream_rename_migrates_state(spark, tmp_path):
     assert rows[2].full_name == "bob"
 
 
-def test_stream_transform_applies(spark, tmp_path):
-    yaml_text = """
-source: {type: wire}
-sink: {type: state}
+SCHEMA_TIME = (
+    new_schema()
+    .physical_column("id", "BIGINT NOT NULL")
+    .physical_column("t", "TIME")
+    .primary_key("id")
+    .build()
+)
+
+
+@pytest.mark.parametrize(
+    "transform, schema, payloads, expected",
+    [
+        (
+            "projection: id, UPPER(name) AS name, score * 2 AS score\n"
+            "    filter: score > 5",
+            SCHEMA_V1,
+            [(1, "alice", 10.0), (2, "bob", 2.0)],
+            [{"id": 1, "name": "ALICE", "score": 20.0}],
+        ),
+        # output names differ from the source columns: the wire must still
+        # decode with the pre-transform schema
+        (
+            "projection: id, UPPER(name) AS uname",
+            SCHEMA_V1,
+            [(1, "alice", 10.0), (2, "bob", 2.0)],
+            [{"id": 1, "uname": "ALICE"}, {"id": 2, "uname": "BOB"}],
+        ),
+        # TIME is an int of millis on the wire; only the logical schema
+        # tells DATE_FORMAT to read it as a time of day
+        (
+            "projection: id, DATE_FORMAT(t, 'HH:mm:ss') AS ts",
+            SCHEMA_TIME,
+            [(1, 3_723_000), (2, 45_296_000)],
+            [{"id": 1, "ts": "01:02:03"}, {"id": 2, "ts": "12:34:56"}],
+        ),
+    ],
+    ids=["same-names", "renamed", "time-format"],
+)
+def test_stream_transform_applies(spark, tmp_path, transform, schema, payloads, expected):
+    """The wire runner and the batch event composer run one pipeline
+    front, so they agree on every projection."""
+    from flink_cdc_spark.pipeline.composer import EventPipelineComposer
+
+    yaml_text = f"""
+source: {{type: wire}}
+sink: {{type: state}}
 transform:
   - source-table: db.users
-    projection: id, UPPER(name) AS name, score * 2 AS score
-    filter: score > 5
-pipeline: {schema.change.behavior: EVOLVE}
+    {transform}
+pipeline: {{schema.change.behavior: EVOLVE}}
 """
+    events = [CreateTableEvent(TID, schema)] + [
+        DataChangeEvent.insert(TID, p) for p in payloads
+    ]
     src = tmp_path / "src"
     src.mkdir()
-    write_wire_file(
-        str(src / "f0.json"),
-        [
-            CreateTableEvent(TID, SCHEMA_V1),
-            DataChangeEvent.insert(TID, (1, "alice", 10.0)),
-            DataChangeEvent.insert(TID, (2, "bob", 2.0)),
-        ],
-    )
+    write_wire_file(str(src / "f0.json"), events)
     runner = _runner(spark, tmp_path, yaml_text)
     runner.run_available(str(src))
-    rows = {r.id: r for r in runner.state.read("db.users").collect()}
-    assert set(rows) == {1}
-    assert rows[1].name == "ALICE" and rows[1].score == 20.0
+
+    def rows(df):
+        return sorted((r.asDict() for r in df.collect()), key=lambda r: r["id"])
+
+    streamed = rows(runner.state.read("db.users"))
+    batch = EventPipelineComposer(spark, parse_pipeline_yaml(yaml_text)).run(events)
+    assert streamed == rows(batch.tables["db.users"]) == expected
 
 
 def test_stream_route_renames_sink_table(spark, tmp_path):
@@ -276,9 +317,7 @@ def test_batch_data_plane_scanned_once_per_batch(spark, tmp_path):
     tables = ["db.t1", "db.t2", "db.t3"]
     runner = _runner(spark, tmp_path)
     for t in tables:
-        runner.coordinator.process_schema_change(
-            CreateTableEvent(TableId.parse(t), SCHEMA_V1)
-        )
+        runner._apply_ddl(CreateTableEvent(TableId.parse(t), SCHEMA_V1))
 
     rows = []
     seq = 0

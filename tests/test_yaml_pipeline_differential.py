@@ -12,13 +12,19 @@ the scripted contract rows each prove one deterministic YAML shape.
 This probes the composed space around them: transform-per-table
 changelogs where updates cross the filter boundary in both directions,
 deletes of already-filtered rows, and N->1 route merges downstream of
-identical transforms."""
+identical transforms.
+
+Trials in STREAM_TRIALS also replay the same changelogs as wire files
+through StreamingPipelineRunner and compare its state with the same
+model: the streaming and batch paths share one pipeline front, so they
+must agree."""
 
 import random
 
 import pytest
 from pyspark.sql import Row
 
+from flink_cdc_spark.core.events import CreateTableEvent, DataChangeEvent
 from flink_cdc_spark.core.schema import Schema
 from flink_cdc_spark.core.table_id import TableId
 from flink_cdc_spark.pipeline import BatchPipelineComposer, parse_pipeline_yaml
@@ -26,6 +32,9 @@ from flink_cdc_spark.pipeline.composer import TableStream
 from flink_cdc_spark.sources.envelope import OP_DELETE, OP_INSERT, OP_UPDATE
 
 SEED = 0xA71E
+# trial 0's projection keeps its column names (`k, v AS v`); trial 2's
+# renames (`n7`, `dv`) and drops `v`, which the wire must still decode
+STREAM_TRIALS = (0, 2)
 
 # (select-list item, python evaluator over the state tuple (k, s, v, n))
 # — generated as a PAIR so both interpreters see the same expression;
@@ -143,13 +152,39 @@ def _model_rows(finals, proj, filt):
     return out
 
 
+def _wire_events(tid, ops, schema):
+    t = TableId.parse(tid)
+    make = {
+        OP_INSERT: lambda b, a: DataChangeEvent.insert(t, a),
+        OP_UPDATE: lambda b, a: DataChangeEvent.update(t, b, a),
+        OP_DELETE: lambda b, a: DataChangeEvent.delete(t, b),
+    }
+    return [CreateTableEvent(t, schema)] + [make[op](b, a) for op, b, a, _ in ops]
+
+
+def _stream_tables(spark, tmp_path, pipeline, events, sinks):
+    """Replay `events` as one wire file through the streaming runner;
+    returns {sink: DataFrame} read back from its state store."""
+    from flink_cdc_spark.streaming import StreamingPipelineRunner, write_wire_file
+
+    src = tmp_path / "src"
+    src.mkdir()
+    write_wire_file(str(src / "f0.json"), events)
+    runner = StreamingPipelineRunner(
+        spark, pipeline, state_root=str(tmp_path / "state"),
+        checkpoint_dir=str(tmp_path / "ckpt"), shuffle_partitions=2,
+    )
+    runner.run_available(str(src))
+    return {sink: runner.state.read(sink) for sink in sinks}
+
+
 @pytest.mark.parametrize("trial", [0, 1, 2, 3, 4])
-def test_yaml_pipeline_vs_sequential_model(spark, trial):
+def test_yaml_pipeline_vs_sequential_model(spark, tmp_path, trial):
     rng = random.Random(SEED + trial)
     table_ids = [f"db.t{i}" for i in range(rng.choice([2, 3]))]
     yaml_text, proj, filt, sinks = _gen_pipeline(rng, table_ids)
 
-    streams, finals = [], {}
+    streams, finals, events = [], {}, []
     for i, tid in enumerate(table_ids):
         ops, final = _random_changelog(
             rng, n_keys=rng.choice([15, 25]), n_mut=40, key0=1000 * i
@@ -164,6 +199,7 @@ def test_yaml_pipeline_vs_sequential_model(spark, trial):
         streams.append(TableStream(TableId.parse(tid), env, schema,
                                    insert_only=False))
         finals[tid] = final
+        events += _wire_events(tid, ops, schema)
 
     pipeline = parse_pipeline_yaml(yaml_text)
     result = BatchPipelineComposer(spark, pipeline).compose(streams)
@@ -172,11 +208,15 @@ def test_yaml_pipeline_vs_sequential_model(spark, trial):
     if sinks == ["out.merged"]:
         model = {"out.merged": set().union(*model.values())}
 
-    for sink in sinks:
-        df = result.tables[sink]
-        got = {
-            tuple(row[c] for c in sorted(df.columns)) for row in df.collect()
-        }
-        assert got == model[sink], (
-            f"trial {trial} sink {sink}\nyaml:\n{yaml_text}"
-        )
+    legs = {"batch": result.tables}
+    if trial in STREAM_TRIALS:
+        legs["stream"] = _stream_tables(spark, tmp_path, pipeline, events, sinks)
+    for leg, tables in legs.items():
+        for sink in sinks:
+            df = tables[sink]
+            got = {
+                tuple(row[c] for c in sorted(df.columns)) for row in df.collect()
+            }
+            assert got == model[sink], (
+                f"trial {trial} {leg} sink {sink}\nyaml:\n{yaml_text}"
+            )
