@@ -5,8 +5,11 @@ flink-cdc's reason to exist) on the engine's own connectors: bootstrap via
 the chunked LW/HW hybrid snapshot, then poll the trigger-capture log
 incrementally — every poll is a micro-batch merged into the LSM store as
 one O(batch) delta commit. Source-side DDL (ALTER TABLE) is detected by
-metadata diff at each poll, the capture channel is re-aligned
-(refresh_capture), and the store's schema evolves metadata-only.
+metadata diff at each poll and the capture channel is re-aligned
+(refresh_capture). Each loop holds a ``PipelineFront`` and writes through
+the LSM sink path it shares with the wire runner (sinks/lsm_store.py):
+detected DDL goes through the schema coordinator to the store's
+``apply_schema_change``, data through transform, route, coercion and merge.
 
 The consumed offset is persisted next to the state (checkpoint analog), so
 a restarted pipeline resumes from where it stopped — the same contract as
@@ -25,13 +28,22 @@ from typing import Optional
 
 from pyspark.sql import SparkSession
 
-from ..core.schema_evolution import apply_schema_change_event
+from ..core.events import CreateTableEvent
+from ..core.schema import Schema
+from ..core.schema_evolution import (
+    get_least_common_schema,
+    get_schema_difference,
+)
+from ..core.table_id import TableId
 from ..sinks.lsm_store import LsmStateStore
+from ..sources.envelope import wrap_as_inserts
 from ..sources.jdbc_live import (
     JdbcLiveSource,
     JdbcLiveSourceConfig,
     refresh_capture,
 )
+from .composer import PipelineFront
+from .definition import PipelineDef, SinkDef, SourceDef
 
 
 class JdbcCdcPipeline:
@@ -49,7 +61,8 @@ class JdbcCdcPipeline:
         self.source = JdbcLiveSource(spark, source_cfg)
         self.state = LsmStateStore(spark, state_root, compact_every=compact_every)
         self.table = self.source.table_id
-        self.schema = None  # discovered at bootstrap
+        self._tid = TableId.parse(self.table)
+        self.front = PipelineFront(PipelineDef(SourceDef("jdbc"), SinkDef("lake")))
         self._offset_file = os.path.join(
             state_root, self.table.replace("/", "_") + ".offset"
         )
@@ -70,7 +83,9 @@ class JdbcCdcPipeline:
     def bootstrap(self) -> None:
         """Initial load: hybrid snapshot+tail (or resume from a stored
         offset after a restart — the snapshot is then already in state)."""
-        self.schema = self.source.ep.discover_schema(self.cfg.table)
+        self._apply_sink_schema(
+            [CreateTableEvent(self._tid, self.source.ep.discover_schema(self.cfg.table))]
+        )
         if self._load_offset() is not None:
             return  # restart: state + offset already persisted
         # record the consumed-through offset BEFORE the plan executes:
@@ -81,25 +96,22 @@ class JdbcCdcPipeline:
         # backfill replay.
         hw = self.source.current_offset()
         env = self.source.read()  # startup-mode driven (INITIAL by default)
-        self._merge_env(env, self.schema.to_spark_struct(), list(self.schema.primary_keys))
+        self._merge_env(env)
         self.source.release_caches()  # merge materialized the snapshot
         self._store_offset(hw)
 
-    def _merge_env(self, env, target_struct, pks) -> None:
-        """Single merge point for bootstrap/poll/repair — the routed
-        multi-table variant overrides this to transform + fan out."""
-        self.state.merge(self.table, env, target_struct, pks)
+    def _merge_env(self, env) -> None:
+        """Single merge point for bootstrap/poll/repair: the table's
+        transform, then route -> coercion -> merge into every sink table."""
+        env = self.front.transform(self._tid, env, self.front.source_schema(self._tid))
+        self.front.merge_routed(self.state, self._tid, env)
 
-    def _apply_sink_schema(self) -> None:
-        """Push the evolved source schema to the sink table(s) at
-        DDL-detect time so a TRAILING DDL (no subsequent data) is still
-        visible in reads; the routed variant overrides this to apply
-        the transform and fan out to the router targets (wave-13b-era
-        finding: the base set_schema addressed the SOURCE table id,
-        which a routed pipe's state never materializes — a trailing ADD
-        on a routed live pipeline stayed invisible until the next
-        merge)."""
-        self.state.set_schema(self.table, self.schema.to_spark_struct())
+    def _apply_sink_schema(self, events) -> None:
+        """Detected source DDL through the schema coordinator to the sink
+        tables' ``apply_schema_change`` at DDL-detect time, so a TRAILING
+        DDL (no subsequent data) is still visible in reads."""
+        for event in events:
+            self.front.apply_sink_ddl(self.state, event)
 
     def _repair_marker(self) -> str:
         return self._offset_file + ".repair_pending"
@@ -126,23 +138,35 @@ class JdbcCdcPipeline:
         clears only AFTER the offset store, so every replay path repairs
         at least once; the repair itself is idempotent (it upserts the
         live table's own current rows)."""
-        events, _ = self.source.detect_schema_changes(self.schema)
+        events, _ = self.source.detect_schema_changes(
+            self.front.source_schema(self._tid)
+        )
         marker = self._repair_marker()
         if events:
             os.makedirs(os.path.dirname(marker), exist_ok=True)
             with open(marker, "w") as f:
                 f.write("pending")
             refresh_capture(self.source.ep, self.cfg.table)
-            for ev in events:
-                self.schema = apply_schema_change_event(self.schema, ev)
-            self._apply_sink_schema()
+            self._apply_sink_schema(events)
         pending = os.path.exists(marker)
         if pending and not events:
             # replaying a crashed DDL poll: the crash may have landed
             # before the capture refresh / sink-schema push — re-assert
-            # both (idempotent) so the stale window ends here
+            # both (idempotent) so the stale window ends here. The sink
+            # catches up by the difference events from its manifest to
+            # the coordinator's schema, compared as Spark types and
+            # widened, so it only ever moves forward.
             refresh_capture(self.source.ep, self.cfg.table)
-            self._apply_sink_schema()
+            for target in self.front.router.route(self._tid):
+                have = self.state.current_schema(str(target))
+                if have is None:
+                    continue
+                have = Schema.from_spark_struct(have)
+                want = get_least_common_schema(have, Schema.from_spark_struct(
+                    self.front.coordinator.evolved_schema(target).to_spark_struct()
+                ))
+                for ev in get_schema_difference(target, have, want):
+                    self.state.apply_schema_change(str(target), ev)
         last = self._load_offset() or 0
         hw = self.source.current_offset()
         if hw <= last:
@@ -153,10 +177,9 @@ class JdbcCdcPipeline:
                 os.remove(marker)
             return 0
         env = self.source.read_log_envelope(last).where(f"__seq <= {hw}")
-        target = self.schema.to_spark_struct()
-        self._merge_env(env, target, list(self.schema.primary_keys))
+        self._merge_env(env)
         if events or pending:
-            self._repair_touched_keys(env, target)
+            self._repair_touched_keys(env)
         self._store_offset(hw)
         if pending or events:
             os.remove(marker)
@@ -166,10 +189,9 @@ class JdbcCdcPipeline:
     # IN-predicates to a chunked re-scan + executor-side semi join
     repair_collect_cap = 10_000
 
-    def _repair_touched_keys(self, env, target) -> None:
+    def _repair_touched_keys(self, env) -> None:
         from pyspark.sql import functions as F
 
-        from ..sources.envelope import wrap_as_inserts
         from ..sources.jdbc_live import fresh_rows_for_keys
 
         pk = self.cfg.key_column
@@ -184,10 +206,9 @@ class JdbcCdcPipeline:
         )
         if fresh is None:
             return
-        repair = wrap_as_inserts(fresh, self.table)
         # its own (later) commit: wins over the slice for keys still present;
         # deleted keys are absent here, so their tombstones stand
-        self._merge_env(repair, target, list(self.schema.primary_keys))
+        self._merge_env(wrap_as_inserts(fresh, self.table))
 
     def run(self, polls: int, interval_s: float = 0.0) -> int:
         """Poll N times (the availableNow analog of a continuous loop)."""
@@ -218,30 +239,33 @@ class PostgresCdcPipeline:
         self.source = source
         self.state = LsmStateStore(spark, state_root, compact_every=compact_every)
         self.table = source.table_id
-        self.schema = None
+        self._tid = TableId.parse(self.table)
+        self.front = PipelineFront(PipelineDef(SourceDef("postgres"), SinkDef("lake")))
         self._snap_root = os.path.join(state_root, "_pg_snapshots")
+
+    # shared with the JDBC loop: the sink path and the polling loop
+    _merge_env = JdbcCdcPipeline._merge_env
+    _apply_sink_schema = JdbcCdcPipeline._apply_sink_schema
+    run = JdbcCdcPipeline.run
+    current_state = JdbcCdcPipeline.current_state
 
     def bootstrap(self) -> None:
         """Create the slot (its position = now), then snapshot. Changes
         committed between slot creation and the snapshot read replay from
         the slot over the snapshot — idempotent last-image merge, the same
         at-least-once contract as the JDBC loop."""
-        self.schema = self.source.discover_schema()
+        self._apply_sink_schema(
+            [CreateTableEvent(self._tid, self.source.discover_schema())]
+        )
         self.source.create_slot()
-        if self.state.read(self.table) is not None:
+        if self.state.current_schema(self.table) is not None:
             return  # restart: state exists, the slot holds the position
         import uuid
 
         snap = self.source.snapshot(
             os.path.join(self._snap_root, uuid.uuid4().hex[:8])
         )
-        from ..sources.envelope import wrap_as_inserts
-
-        env = wrap_as_inserts(snap, self.table)
-        self.state.merge(
-            self.table, env, self.schema.to_spark_struct(),
-            list(self.schema.primary_keys),
-        )
+        self._merge_env(wrap_as_inserts(snap, self.table))
 
     def poll_once(self) -> int:
         """One micro-batch under the flush-then-confirm contract: capture a
@@ -251,44 +275,17 @@ class PostgresCdcPipeline:
         replays the same window on restart — safe, because the keyed
         last-image merge is idempotent (at-least-once delivery,
         exactly-once state)."""
-        events, new_schema = self._detect_ddl()
-        if events:
-            for ev in events:
-                self.schema = apply_schema_change_event(self.schema, ev)
-            self.state.set_schema(self.table, self.schema.to_spark_struct())
+        self._apply_sink_schema(get_schema_difference(
+            self._tid, self.front.source_schema(self._tid),
+            self.source.discover_schema(),
+        ))
         cap = self.source.current_lsn()
         env = self.source.read_changes(peek=True, upto_lsn=cap)
         n = env.count()
         if n:
-            self.state.merge(
-                self.table, env, self.schema.to_spark_struct(),
-                list(self.schema.primary_keys),
-            )
+            self._merge_env(env)
         self.source.advance_slot(cap)  # confirm only after the merge landed
         return n
-
-    def _detect_ddl(self):
-        from ..core.schema_evolution import get_schema_difference
-        from ..core.table_id import TableId
-
-        current = self.source.discover_schema()
-        if self.schema is None:
-            return [], current
-        return (
-            get_schema_difference(TableId.parse(self.table), self.schema, current),
-            current,
-        )
-
-    def run(self, polls: int, interval_s: float = 0.0) -> int:
-        total = 0
-        for _ in range(polls):
-            total += self.poll_once()
-            if interval_s:
-                time.sleep(interval_s)
-        return total
-
-    def current_state(self):
-        return self.state.read(self.table)
 
 
 class MultiTableCdcPipeline:
@@ -315,8 +312,6 @@ class MultiTableCdcPipeline:
         shuffle_partitions=None,
     ):
         from ..sources.jdbc_live import JdbcEndpoint
-        from .composer import PipelineFront
-        from .definition import PipelineDef, SinkDef, SourceDef
 
         self.spark = spark
         self.url = url
@@ -417,38 +412,13 @@ class MultiTableCdcPipeline:
 
 
 class _RoutedTablePipe(JdbcCdcPipeline):
-    """One source table inside a MultiTableCdcPipeline: same bootstrap/
-    poll/repair lifecycle, but every envelope batch goes through the
-    transform rule and the router before merging (possibly into several
-    sink tables)."""
+    """One source table inside a MultiTableCdcPipeline: the single-table
+    lifecycle through the parent's front, whose transform rules and
+    routes may send every batch to several sink tables."""
 
     def __init__(self, parent: MultiTableCdcPipeline, cfg: JdbcLiveSourceConfig):
         super().__init__(parent.spark, cfg, parent.state_root)
-        self.parent = parent
-        from ..core.table_id import TableId
-
-        self._tid = TableId.parse(self.table)
+        self.front = parent.front
 
     def targets(self):
-        return [str(t) for t in self.parent.front.router.route(self._tid)]
-
-    def _apply_sink_schema(self):
-        proc = self.parent.front.processor(self._tid, self.schema)
-        schema = self.schema if proc is None else proc.output_schema(self.schema)
-        struct = schema.to_spark_struct()
-        for target in self.targets():
-            self.state.set_schema(target, struct)
-
-    # the single-table lifecycle funnels every merge through _merge_env;
-    # route and transform by overriding that one hook
-    def _merge_env(self, env, target_struct, pks):
-        from ..sources.envelope import payload_struct
-
-        proc = self.parent.front.processor(self._tid, self.schema)
-        out_struct, out_pks = target_struct, pks
-        if proc is not None:
-            env = proc.apply(env)
-            out_struct = payload_struct(env)
-            out_pks = list(proc.rule.primary_keys) or pks
-        for target in self.targets():
-            self.state.merge(target, env, out_struct, out_pks)
+        return [str(t) for t in self.front.router.route(self._tid)]

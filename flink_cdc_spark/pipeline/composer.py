@@ -6,21 +6,23 @@ mode (BatchSchemaOperator path): source -> transform (first matching rule,
 transform.md:388-401) -> route (fan-out / N->1 merge) -> materializing sink.
 ``PipelineFront`` is the source -> transform -> schema-coordination front
 that both composers, the wire runner (streaming/runner.py) and the live
-JDBC loop (pipeline/cdc_pipeline.py) share.
+JDBC/Postgres loops (pipeline/cdc_pipeline.py) share; it also holds the
+one LSM sink path of the latter two (sinks/lsm_store.py).
 
 Everything stays declarative DataFrame ops so Catalyst does column pruning,
 predicate pushdown and join/shuffle planning; the composer's own logic is
 driver-side metadata (which tables, which rules, which routes).
 
 N->1 merged tables are aligned to the least-common schema
-(core/schema_evolution.py merge_create_table_events) with missing columns
-null-padded and types cast — the Spark rendition of
+(core/schema_evolution.py merge_create_table_events) by
+operators/coerce.py — the Spark rendition of
 SchemaDerivator.coerceDataRecord (SchemaDerivator.java:299).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -29,15 +31,10 @@ from ..core.router import RouteRule, TableIdRouter
 from ..core.schema import Schema
 from ..core.schema_evolution import merge_create_table_events
 from ..core.table_id import TableId
+from ..operators.coerce import coerce_envelope_payload
 from ..operators.transform import TransformProcessor, TransformRule
 from ..sinks.materialize import materialize_changelog
-from ..sources.envelope import (
-    ENVELOPE_META,
-    ENVELOPE_OP,
-    ENVELOPE_SEQ,
-    ENVELOPE_TABLE_ID,
-    payload_struct,
-)
+from ..sources.envelope import ENVELOPE_TABLE_ID, payload_struct
 from .definition import PipelineDef
 
 
@@ -166,6 +163,29 @@ class PipelineFront:
             return []
         return self.coordinator.process_schema_change(event)
 
+    # -- the LSM sink path (sinks/lsm_store.py) ------------------------------
+    def apply_sink_ddl(self, state, event) -> None:
+        """One upstream schema change through the front into `state`: each
+        (sink table, event) the coordinator emits goes to the store's
+        MetadataApplier, ``apply_schema_change``."""
+        for target, evolved_event in self.apply_ddl(event):
+            state.apply_schema_change(str(target), evolved_event)
+
+    def merge_routed(self, state, table_id: TableId, env: DataFrame) -> None:
+        """A transformed envelope of `table_id` into each of its routed
+        sink tables in `state`, coerced to the coordinator's sink schema."""
+        for target in self.router.route(table_id):
+            schema = self.coordinator.evolved_schema(target)
+            if schema is None:
+                raise ValueError(f"No sink schema for {target}")
+            struct = schema.to_spark_struct()
+            routed = env.withColumn(ENVELOPE_TABLE_ID, F.lit(str(target)))
+            state.merge(
+                str(target), coerce_envelope_payload(routed, struct), struct,
+                list(schema.primary_keys),
+                partition_keys=list(schema.partition_keys),
+            )
+
     def _passes_projection(self, event) -> bool:
         """A wildcard projection passes every change; an explicit one
         only passes changes touching projected columns
@@ -206,7 +226,6 @@ class EventPipelineComposer:
     def run(self, events) -> PipelineResult:
         """events: ordered DataChangeEvent | SchemaChangeEvent stream."""
         from ..core.events import SchemaChangeEvent
-        from ..operators.coerce import coerce_envelope_payload
         from ..sources.values_source import Epoch, ValuesSource
         from .schema_coordinator import rename_map_through
 
@@ -247,9 +266,7 @@ class EventPipelineComposer:
                 fwd = rename_map_through(later_ddl)  # emission name -> final name
                 source_names = {final: src for src, final in fwd.items()}
                 coerced.append(coerce_envelope_payload(frame, target_struct, source_names))
-            env = coerced[0]
-            for other in coerced[1:]:
-                env = env.unionByName(other)
+            env = reduce(DataFrame.unionByName, coerced)
             result.changelogs[sink_table] = env
             result.schemas[sink_table] = final_schema
             result.tables[sink_table] = materialize_changelog(
@@ -289,7 +306,11 @@ class BatchPipelineComposer:
                 schema = merge_create_table_events(
                     TableId.parse(sink_table), [s for _, s, _ in parts]
                 )
-                env = self._align_and_union(parts, schema)
+                struct = schema.to_spark_struct()
+                env = reduce(
+                    DataFrame.unionByName,
+                    [coerce_envelope_payload(p, struct) for p, _, _ in parts],
+                )
                 insert_only = all(io for _, _, io in parts)
             result.changelogs[sink_table] = env
             result.schemas[sink_table] = schema
@@ -297,36 +318,3 @@ class BatchPipelineComposer:
                 env, list(schema.primary_keys), insert_only=insert_only
             )
         return result
-
-    # -- N->1 schema alignment -----------------------------------------------------
-    def _align_and_union(self, parts, merged_schema: Schema) -> DataFrame:
-        target_struct = merged_schema.to_spark_struct()
-        aligned = []
-        for env, schema, _ in parts:
-            have = {c.name for c in schema.columns}
-
-            def coerce_image(image: str):
-                cols = []
-                for f_ in target_struct.fields:
-                    if f_.name in have:
-                        cols.append(
-                            F.col(f"{image}.{f_.name}").cast(f_.dataType).alias(f_.name)
-                        )
-                    else:
-                        cols.append(F.lit(None).cast(f_.dataType).alias(f_.name))
-                return F.when(F.col(image).isNotNull(), F.struct(*cols)).otherwise(F.lit(None))
-
-            aligned.append(
-                env.select(
-                    F.col(ENVELOPE_TABLE_ID),
-                    F.col(ENVELOPE_OP),
-                    coerce_image("before").alias("before"),
-                    coerce_image("after").alias("after"),
-                    F.col(ENVELOPE_META),
-                    F.col(ENVELOPE_SEQ),
-                )
-            )
-        out = aligned[0]
-        for other in aligned[1:]:
-            out = out.unionByName(other)
-        return out

@@ -32,7 +32,7 @@ from ..core.router import TableIdRouter
 from ..core.schema import Schema
 from ..core.schema_evolution import (
     apply_schema_change_event,
-    get_least_common_schema,
+    get_schema_difference,
     is_schema_change_event_redundant,
     lenientize_schema_change_event,
     merge_create_table_events,
@@ -106,22 +106,21 @@ class SchemaCoordinator:
             for evolved_event in self._deduce(event, target):
                 current = self.evolved_schema(target)
                 evolved_event = _retable(evolved_event, target)
+                events = [evolved_event]
                 if isinstance(evolved_event, CreateTableEvent) and current is not None:
-                    # N->1 merge: widen the existing sink schema instead
+                    # N->1 merge: widen the existing sink table by the
+                    # difference events (SchemaMergingUtils
+                    # .getSchemaDifference), never a second CREATE
                     merged = merge_create_table_events(
                         target, [current, evolved_event.schema]
                     )
-                    if merged == current:
-                        continue
-                    merged_event = CreateTableEvent(target, merged)
-                    self.evolved_schemas[target].append(merged)
-                    self.ddl_log.setdefault(target, []).append(merged_event)
-                    out.append((target, merged_event))
-                    continue
-                new_schema = apply_schema_change_event(current, evolved_event)
-                self.evolved_schemas.setdefault(target, []).append(new_schema)
-                self.ddl_log.setdefault(target, []).append(evolved_event)
-                out.append((target, evolved_event))
+                    events = get_schema_difference(target, current, merged)
+                for ev in events:
+                    self.evolved_schemas.setdefault(target, []).append(
+                        apply_schema_change_event(self.evolved_schema(target), ev)
+                    )
+                    self.ddl_log.setdefault(target, []).append(ev)
+                    out.append((target, ev))
         self.applied_ddl.extend(out)
         return out
 

@@ -22,6 +22,15 @@ operations). This module implements that storage contract on plain parquet
     manifest. No data file is ever rewritten for DDL — exactly how
     Delta/Iceberg/Paimon execute ALTER TABLE.
 
+One sink path feeds it, shared by the wire runner (streaming/runner.py)
+and the live JDBC/Postgres loops (pipeline/cdc_pipeline.py), both through
+a ``PipelineFront`` (pipeline/composer.py): every upstream DDL goes
+through the schema coordinator, and each event it emits for a sink table
+reaches ``apply_schema_change`` — the store's MetadataApplier
+(common/sink/MetadataApplier.java:33-39) and its only DDL entry point;
+every data batch is transformed, routed, coerced to the coordinator's
+sink schema and then ``merge``d (``PipelineFront.merge_routed``).
+
 The manifest is one small JSON per table, rewritten atomically
 (tmp + rename) on each commit — control-plane metadata, like a lake
 table's snapshot log.
@@ -36,6 +45,15 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from ..core.events import (
+    AddColumnEvent,
+    AlterColumnTypeEvent,
+    DropColumnEvent,
+    DropTableEvent,
+    RenameColumnEvent,
+    TruncateTableEvent,
+)
+from ..core.types import to_spark_type
 from ..sources.envelope import (
     ENVELOPE_OP,
     ENVELOPE_SEQ,
@@ -607,6 +625,61 @@ class LsmStateStore:
         self._epoch = None
 
     # -- DDL (metadata-only; the MetadataApplier contract) -----------------
+    def current_schema(self, table: str) -> Optional[T.StructType]:
+        """The manifest's current schema; None for an absent table."""
+        m = self._load(table)
+        return None if m is None else T.StructType.fromJson(json.loads(m["schema"]))
+
+    def apply_schema_change(self, table: str, event) -> None:
+        """Sink-side DDL execution — the MetadataApplier
+        (common/sink/MetadataApplier.java:33-39; PaimonMetadataApplier
+        applies DDL as catalog metadata operations): every DDL is a
+        metadata-only manifest edit."""
+        if isinstance(event, DropTableEvent):
+            # sink-side table removal (MetadataApplier drop semantics);
+            # found by probing: a DROP through the runner used to leave
+            # the state fully readable
+            self.drop(table)
+            return
+        # NOTE: every edit below is EVENT-DRIVEN and monotone — derived
+        # from the event against the sink's CURRENT state, never a
+        # snapshot of the coordinator's evolved schema. A crash-replayed
+        # batch re-applies its DDL against a sink that is already AHEAD
+        # (the first attempt's edits landed); pushing the coordinator's
+        # mid-replay view would move the schema BACKWARDS, and a
+        # compaction run while regressed bakes NULLs into the base
+        # (found by the wave-12 widening trials). CreateTableEvent
+        # deliberately touches nothing: a recovery-prefix CREATE carries
+        # a historical schema.
+        if isinstance(event, RenameColumnEvent):
+            self.rename_columns(table, list(event.name_mapping))
+        elif isinstance(event, TruncateTableEvent):
+            self.truncate(table)
+        elif isinstance(event, AddColumnEvent):
+            # a trailing ADD with no subsequent data must still be
+            # readable (wave-12 finding) — insert into the manifest,
+            # honoring FIRST/BEFORE/AFTER anchors (SchemaUtils
+            # applyAddColumnEvent ordering; ADVICE r13)
+            self.add_columns(
+                table,
+                [
+                    (
+                        cwp.column.name,
+                        to_spark_type(cwp.column.type),
+                        cwp.position.value,
+                        cwp.existed_column_name,
+                    )
+                    for cwp in event.added_columns
+                ],
+            )
+        elif isinstance(event, AlterColumnTypeEvent):
+            self.alter_column_types(
+                table,
+                [(name, to_spark_type(dt)) for name, dt in event.type_mapping],
+            )
+        elif isinstance(event, DropColumnEvent):
+            self.drop_columns(table, list(event.dropped_column_names))
+
     def rename_columns(self, table: str, mapping) -> None:
         """RENAME COLUMN without touching a single data file: record ONE
         rename event (pairs applied simultaneously, so a single-event
@@ -657,16 +730,6 @@ class LsmStateStore:
         self._record_history(m)
         self._store(table, m)
 
-    def set_schema(self, table: str, target_struct) -> None:
-        """ADD/ALTER COLUMN: update the manifest schema; old commits
-        null-pad / cast at read time."""
-        m = self._load(table)
-        if m is None:
-            return
-        m["schema"] = target_struct.json()
-        self._record_history(m)
-        self._store(table, m)
-
     def add_columns(self, table: str, fields) -> None:
         """ADD COLUMN as a MONOTONE manifest-schema edit: insert the
         missing fields into whatever schema the manifest currently holds.
@@ -679,8 +742,8 @@ class LsmStateStore:
         RAISES, matching the reference's Preconditions.checkNotNull on
         existedColumnName (ADVICE r14 — silent degrade-to-LAST was an
         ordering divergence); an anchor renamed since the event's epoch
-        is translated forward first, so crash replay still lands. Unlike set_schema, this can be replayed
-        against an ALREADY-ahead manifest without regressing it (a
+        is translated forward first, so crash replay still lands. This
+        can be replayed against an ALREADY-ahead manifest without regressing it (a
         crash-replayed DDL must never move the schema backwards — a
         compaction run while regressed would bake NULLs into the base;
         found by the wave-12 widening trials).

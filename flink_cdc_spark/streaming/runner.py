@@ -8,8 +8,10 @@ Each micro-batch goes through the same ``PipelineFront``
 (pipeline/composer.py) as the event composer: wire payloads decode with
 the front's pre-transform source schema, the transform compiles against
 it, and the sink side reads the coordinator's post-transform schemas
-(SURVEY.md §2.1 topology). Then route -> coercion -> MERGE, with the
-reference's FlushEvent/coordinator dance collapsed into batch segmentation:
+(SURVEY.md §2.1 topology). Then the LSM sink path shared with the live
+loops (sinks/lsm_store.py: route -> coercion -> MERGE, coordinator DDL ->
+``apply_schema_change``), with the reference's FlushEvent/coordinator
+dance collapsed into batch segmentation:
 DDL records split the batch at their sequence positions; every data segment
 is fully merged into the sink state *before* the DDL is applied, exactly
 the "flush then apply DDL on a consistent boundary" contract of
@@ -19,9 +21,8 @@ Per-key ordering under shuffle: the MERGE orders by the wire sequence
 number within the batch and existing state sorts below every new event, so
 last-image-per-key is deterministic (SURVEY.md §7 hard-list #5).
 
-The state store is the Paimon-style merge-on-read ``LsmStateStore``
-(sinks/lsm_store.py): O(batch) delta commits, metadata-only DDL (the
-MetadataApplier analog, ``_migrate_state``), amortized compaction.
+The state store is the Paimon-style merge-on-read ``LsmStateStore``:
+O(batch) delta commits, metadata-only DDL, amortized compaction.
 """
 
 from __future__ import annotations
@@ -32,7 +33,6 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..core.table_id import TableId
-from ..operators.coerce import coerce_envelope_payload
 from ..pipeline.composer import PipelineFront
 from ..pipeline.definition import PipelineDef
 from ..sinks.lsm_store import LsmStateStore
@@ -243,68 +243,7 @@ class StreamingPipelineRunner:
                 self._apply_ddl(ev)
 
     def _apply_ddl(self, event) -> None:
-        for target, evolved_event in self.front.apply_ddl(event):
-            self._migrate_state(str(target), evolved_event)
-
-    def _migrate_state(self, table: str, event) -> None:
-        """Sink-side DDL execution — the MetadataApplier analog
-        (common/sink/MetadataApplier.java:33-39; PaimonMetadataApplier
-        applies DDL as catalog metadata operations): every DDL is a
-        metadata-only manifest edit."""
-        from ..core.events import (
-            AddColumnEvent,
-            AlterColumnTypeEvent,
-            DropColumnEvent,
-            DropTableEvent,
-            RenameColumnEvent,
-            TruncateTableEvent,
-        )
-        from ..core.types import to_spark_type
-
-        if isinstance(event, DropTableEvent):
-            # sink-side table removal (MetadataApplier drop semantics);
-            # found by probing: a DROP through the runner used to leave
-            # the state fully readable
-            self.state.drop(table)
-            return
-        # NOTE: every edit below is EVENT-DRIVEN and monotone — derived
-        # from the event against the sink's CURRENT state, never a
-        # snapshot of the coordinator's evolved schema. A crash-replayed
-        # batch re-applies its DDL against a sink that is already AHEAD
-        # (the first attempt's edits landed); pushing the coordinator's
-        # mid-replay view would move the schema BACKWARDS, and a
-        # compaction run while regressed bakes NULLs into the base
-        # (found by the wave-12 widening trials). CreateTableEvent
-        # deliberately touches nothing: a recovery-prefix or N->1-merge
-        # CREATE carries a historical schema.
-        if isinstance(event, RenameColumnEvent):
-            self.state.rename_columns(table, list(event.name_mapping))
-        elif isinstance(event, TruncateTableEvent):
-            self.state.truncate(table)
-        elif isinstance(event, AddColumnEvent):
-            # a trailing ADD with no subsequent data must still be
-            # readable (wave-12 finding) — insert into the manifest,
-            # honoring FIRST/BEFORE/AFTER anchors (SchemaUtils
-            # applyAddColumnEvent ordering; ADVICE r13)
-            self.state.add_columns(
-                table,
-                [
-                    (
-                        cwp.column.name,
-                        to_spark_type(cwp.column.type),
-                        cwp.position.value,
-                        cwp.existed_column_name,
-                    )
-                    for cwp in event.added_columns
-                ],
-            )
-        elif isinstance(event, AlterColumnTypeEvent):
-            self.state.alter_column_types(
-                table,
-                [(name, to_spark_type(dt)) for name, dt in event.type_mapping],
-            )
-        elif isinstance(event, DropColumnEvent):
-            self.state.drop_columns(table, list(event.dropped_column_names))
+        self.front.apply_sink_ddl(self.state, event)
 
     def _merge_segment(self, seg: DataFrame, tables) -> None:
         for table in sorted(tables):
@@ -323,20 +262,7 @@ class StreamingPipelineRunner:
                 F.col("seq").alias(ENVELOPE_SEQ),
             )
             env = self.front.transform(tid, env, schema)
-            for target in self.front.router.route(tid):
-                final_schema = self.coordinator.evolved_schema(target)
-                if final_schema is None:
-                    raise ValueError(f"No sink schema for {target}")
-                # data decodes with the *current* source schema, so no
-                # rename redirection is needed here — state migrated at
-                # DDL-apply time carries renamed history forward
-                routed = env.withColumn(ENVELOPE_TABLE_ID, F.lit(str(target)))
-                target_struct = final_schema.to_spark_struct()
-                coerced = coerce_envelope_payload(routed, target_struct)
-                self.state.merge(
-                    str(target), coerced, target_struct,
-                    list(final_schema.primary_keys),
-                    partition_keys=list(
-                        getattr(final_schema, "partition_keys", ()) or ()
-                    ),
-                )
+            # data decodes with the *current* source schema, so no rename
+            # redirection is needed here — state migrated at DDL-apply time
+            # carries renamed history forward
+            self.front.merge_routed(self.state, tid, env)

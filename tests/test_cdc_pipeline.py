@@ -4,6 +4,8 @@ The end-to-end loop of the reference (database -> incremental snapshot ->
 streaming tail -> lake sink), asserted against the live database state.
 """
 
+import pytest
+
 from flink_cdc_spark.pipeline.cdc_pipeline import JdbcCdcPipeline
 from flink_cdc_spark.sources.jdbc_live import (
     JdbcEndpoint,
@@ -148,6 +150,29 @@ def test_live_ddl_evolves_state_and_capture(spark, tmp_path):
     pipe.poll_once()
     rows = {r.id: r.score for r in pipe.current_state().collect()}
     assert rows[50] == 1.25
+
+
+def test_restart_after_crash_before_sink_ddl_catches_the_sink_up(spark, tmp_path):
+    """A DDL poll that crashed before its sink DDL, with no data logged
+    since: the restarted loop detects no DDL (live metadata is already
+    current), so the persisted repair marker must bring the sink schema
+    forward by itself."""
+    ep, pipe = _mk(spark, tmp_path)
+    pipe.bootstrap()
+    ep.execute("ALTER TABLE items ADD COLUMN score DOUBLE")
+
+    def boom(events):
+        raise RuntimeError("crash before the sink DDL")
+    pipe._apply_sink_schema = boom
+    with pytest.raises(RuntimeError):
+        pipe.poll_once()
+
+    pipe2 = JdbcCdcPipeline(spark, pipe.cfg, str(tmp_path / "state"))
+    pipe2.bootstrap()
+    assert pipe2.poll_once() == 0
+    out = pipe2.current_state()
+    assert out.columns == COLS + ["score"]
+    assert out.count() == 20
 
 
 def test_newly_added_table_captured_mid_stream(spark, tmp_path):
@@ -295,3 +320,80 @@ pipeline: {{execution.runtime-mode: STREAMING, route-mode: FIRST_MATCH}}
     assert loop.current_state("mart.second") is None
     ids = {r.id for r in loop.current_state("mart.first").collect()}
     assert ids == set(range(1, 21)) - {4}
+
+
+@pytest.mark.parametrize("behavior", ["IGNORE", "EXCEPTION", "EVOLVE"])
+def test_live_loop_honors_schema_change_behavior(spark, tmp_path, behavior):
+    """A live ALTER TABLE reaches the sink through the schema coordinator,
+    so `schema.change.behavior` decides it, as in the wire runner."""
+    from flink_cdc_spark.pipeline.cdc_pipeline import MultiTableCdcPipeline
+    from flink_cdc_spark.pipeline.schema_coordinator import SchemaEvolveError
+    from flink_cdc_spark.pipeline.yaml_parser import parse_pipeline_yaml
+
+    ep, _ = _mk(spark, tmp_path)
+    url = derby_url(str(tmp_path / "db"), create=False)
+    pdef = parse_pipeline_yaml(
+        f"""
+source: {{type: jdbc, url: "{url}"}}
+sink: {{type: lake, path: {tmp_path / "live"}}}
+pipeline: {{execution.runtime-mode: STREAMING, schema.change.behavior: {behavior}}}
+"""
+    )
+    loop = MultiTableCdcPipeline(
+        spark, url, str(tmp_path / "live"), pipeline_def=pdef,
+        tables_selector=r"app.\.*", chunk_size=8,
+    )
+    loop.bootstrap()
+    ep.execute("ALTER TABLE items ADD COLUMN extra INT")
+    ep.execute_update("UPDATE items SET extra = 7 WHERE id = 1")
+    if behavior == "EXCEPTION":
+        with pytest.raises(SchemaEvolveError):
+            loop.poll_once()
+        return
+    loop.poll_once()
+    state = loop.current_state("app.items")
+    rows = {r.id: r for r in state.collect()}
+    assert len(rows) == 20
+    if behavior == "IGNORE":
+        assert state.columns == COLS
+    else:
+        assert state.columns == COLS + ["extra"]
+        assert rows[1].extra == 7 and rows[2].extra is None
+
+
+def test_live_n_to_1_route_widens_the_sink(spark, tmp_path):
+    """Two live tables routed into one sink table whose column types
+    differ (INT, BIGINT): the sink widens to BIGINT, so a value past the
+    INT range reads back."""
+    from flink_cdc_spark.pipeline.cdc_pipeline import MultiTableCdcPipeline
+    from flink_cdc_spark.pipeline.yaml_parser import parse_pipeline_yaml
+
+    ep = JdbcEndpoint(spark, derby_url(str(tmp_path / "db")))
+    for t, v_type in (("a1", "INT"), ("a2", "BIGINT")):
+        ep.execute(f"CREATE TABLE {t} (id BIGINT NOT NULL PRIMARY KEY, v {v_type})")
+        install_capture(ep, t, ["id", "v"])
+    ep.insert_rows("a1", ["id", "v"], [(1, 5)])
+    ep.insert_rows("a2", ["id", "v"], [(2, 5_000_000_000)])
+    url = derby_url(str(tmp_path / "db"), create=False)
+    pdef = parse_pipeline_yaml(
+        f"""
+source: {{type: jdbc, url: "{url}"}}
+sink: {{type: lake, path: {tmp_path / "live"}}}
+route:
+  - source-table: app.a\\.*
+    sink-table: mart.all
+pipeline: {{execution.runtime-mode: STREAMING}}
+"""
+    )
+    loop = MultiTableCdcPipeline(
+        spark, url, str(tmp_path / "live"), pipeline_def=pdef,
+        tables_selector=r"app.\.*", chunk_size=8,
+    )
+    loop.bootstrap()
+    ep.insert_rows("a2", ["id", "v"], [(3, 6_000_000_000)])
+    loop.poll_once()
+    state = loop.current_state("mart.all")
+    assert dict(state.dtypes)["v"] == "bigint"
+    assert {r.id: r.v for r in state.collect()} == {
+        1: 5, 2: 5_000_000_000, 3: 6_000_000_000
+    }

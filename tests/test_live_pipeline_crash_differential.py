@@ -87,12 +87,12 @@ def _arm(loop, rng, phase):
     elif phase == "merge":
         orig = pipe._merge_env
 
-        def boom_merge(env, target_struct, pks):
-            orig(env, target_struct, pks)
+        def boom_merge(env):
+            orig(env)
             raise _Crash("crash right after merge, before anything else")
         pipe._merge_env = boom_merge
     elif phase == "repair":
-        def boom_repair(env, target):
+        def boom_repair(env):
             raise _Crash("crash before the DDL repair")
         pipe._repair_touched_keys = boom_repair
     return pipe
@@ -281,7 +281,7 @@ pipeline: {execution.runtime-mode: STREAMING}
     # crash between the DDL poll's merge and its repair, on one pipe
     pipe = loop.pipes["app.orders"]
 
-    def boom(env, target):
+    def boom(env):
         raise _Crash("crash before the DDL repair")
     pipe._repair_touched_keys = boom
     with pytest.raises(_Crash):

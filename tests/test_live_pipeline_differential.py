@@ -195,7 +195,8 @@ def test_trailing_ddl_visible_on_routed_sink(spark, tmp_path):
     surface in the ROUTED sink table's reads — the base pipeline pushed
     the evolved schema to the SOURCE table id, which a routed pipe's
     state never materializes, so the new column stayed invisible until
-    the next merge (r14 finding; `_apply_sink_schema` override)."""
+    the next merge (r14 finding). The coordinator's events now reach
+    every routed sink table through `apply_schema_change`."""
     rng = random.Random(SEED + 99)
     ep = JdbcEndpoint(spark, derby_url(str(tmp_path / "db")))
     url = derby_url(str(tmp_path / "db"), create=False)

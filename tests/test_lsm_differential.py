@@ -97,7 +97,6 @@ def test_lsm_store_vs_sequential_model(spark, tmp_path, trial):
         elif r < 0.3:  # metadata-only rename of the string column
             new_name = f"name_{seq}"
             store.rename_columns(table, {value_col: new_name})
-            store.set_schema(table, _payload_struct(new_name))
             value_col = new_name
         elif r < 0.35:
             store.truncate(table)

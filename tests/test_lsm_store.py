@@ -133,10 +133,7 @@ def test_truncate_is_metadata_only(spark, tmp_path):
 def test_add_column_old_commits_null_pad(spark, tmp_path):
     st = _state(spark, tmp_path)
     st.merge("db.t", _env(spark, [("INSERT", None, (1, "a"), 1)]), PAYLOAD, ["id"])
-    wider = T.StructType(
-        PAYLOAD.fields + [T.StructField("extra", T.IntegerType(), True)]
-    )
-    st.set_schema("db.t", wider)
+    st.add_columns("db.t", [("extra", T.IntegerType())])
     out = {r.id: (r.name, r.extra) for r in st.read("db.t").collect()}
     assert out == {1: ("a", None)}
 

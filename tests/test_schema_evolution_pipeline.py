@@ -154,14 +154,20 @@ transform:
     assert rows == {1: "A", 2: "B", 3: "C"}
 
 
-def test_n_to_1_merge_with_create_widening(spark):
+def _n_to_1_widening(spark, tmp_path, b_type, b_value):
+    """Shards db.shard_a (v INT) and db.shard_b (v `b_type`) routed into
+    db.merged, through the event composer and, replayed as a wire file,
+    through the streaming runner. Returns both sink tables."""
+    from flink_cdc_spark.core.schema_evolution import merge_create_table_events
+    from flink_cdc_spark.streaming import StreamingPipelineRunner, write_wire_file
+
     t_a, t_b = TableId.parse("db.shard_a"), TableId.parse("db.shard_b")
     schema_a = (
         new_schema().physical_column("id", "BIGINT NOT NULL").physical_column("v", "INT")
         .primary_key("id").build()
     )
     schema_b = (
-        new_schema().physical_column("id", "BIGINT NOT NULL").physical_column("v", "DOUBLE")
+        new_schema().physical_column("id", "BIGINT NOT NULL").physical_column("v", b_type)
         .primary_key("id").build()
     )
     routes = """
@@ -173,13 +179,47 @@ route:
         CreateTableEvent(t_a, schema_a),
         DataChangeEvent.insert(t_a, (1, 10)),
         CreateTableEvent(t_b, schema_b),
-        DataChangeEvent.insert(t_b, (2, 2.5)),
+        DataChangeEvent.insert(t_b, (2, b_value)),
     ]
-    result = make_composer(spark, "EVOLVE", routes=routes).run(events)
-    df = result.tables["db.merged"]
-    assert dict(df.dtypes)["v"] == "double"
-    rows = {r.id: r.v for r in df.collect()}
-    assert rows == {1: 10.0, 2: 2.5}
+    composer = make_composer(spark, "EVOLVE", routes=routes)
+    result = composer.run(events)
+    merged = TableId.parse("db.merged")
+    coordinator = composer.front.coordinator
+    # the widening reaches the sink as difference events, one schema
+    # version per event, ending at the merged CREATE's schema
+    assert [ev.TYPE for ev in coordinator.ddl_log[merged]] == [
+        "CREATE_TABLE", "ALTER_COLUMN_TYPE"
+    ]
+    assert len(coordinator.evolved_schemas[merged]) == 2
+    assert coordinator.evolved_schema(merged) == merge_create_table_events(
+        merged, [schema_a, schema_b]
+    )
+
+    src = tmp_path / "src"
+    src.mkdir()
+    write_wire_file(str(src / "f0.json"), events)
+    runner = StreamingPipelineRunner(
+        spark, composer.front.pipeline, state_root=str(tmp_path / "state"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    runner.run_available(str(src))
+    return result.tables["db.merged"], runner.state.read("db.merged")
+
+
+def test_n_to_1_merge_with_create_widening(spark, tmp_path):
+    composed, streamed = _n_to_1_widening(spark, tmp_path, "DOUBLE", 2.5)
+    for df in (composed, streamed):
+        assert dict(df.dtypes)["v"] == "double"
+        assert {r.id: r.v for r in df.collect()} == {1: 10.0, 2: 2.5}
+
+
+def test_n_to_1_merge_bigint_widening_runner_matches_composer(spark, tmp_path):
+    """INT + BIGINT: a value past the INT range reads back from the
+    runner's state, so its manifest was widened, not pinned at INT."""
+    composed, streamed = _n_to_1_widening(spark, tmp_path, "BIGINT", 5_000_000_000)
+    for df in (composed, streamed):
+        assert dict(df.dtypes)["v"] == "bigint"
+        assert {r.id: r.v for r in df.collect()} == {1: 10, 2: 5_000_000_000}
 
 
 def test_truncate_table_discards_prior_rows(spark):
