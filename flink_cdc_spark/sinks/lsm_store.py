@@ -64,7 +64,6 @@ from ..sources.envelope import (
 
 _TOMBSTONE = "__deleted"
 _COMMIT = "__commit"
-_BUCKET = "__bucket"
 
 # Test hook (ADVICE r15): when true, merge(batch_unique=True) verifies the
 # caller's pk-uniqueness contract with a count-vs-distinct check before
@@ -89,40 +88,6 @@ class LsmStateStore:
 
     def begin_epoch(self, epoch) -> None:
         self._epoch = epoch
-
-    # -- key buckets -------------------------------------------------------
-    #
-    # Optional hash(pk)-bucketed physical layout (r16, VERDICT r15 item 4):
-    # state tables gain a synthetic hive-partition column
-    # __bucket = pmod(xxhash64(bucket keys), n), so a delta-bounded fold can
-    # prune its read to the TOUCHED buckets at file listing — the 100-TB
-    # shape for the epoch-state machines, whose per-epoch read was otherwise
-    # an O(state) scan regardless of how small the delta was. Sound because
-    # the bucket is a pure function of key columns (immutable per pk), so
-    # filtering whole buckets commutes with the pk merge window — the same
-    # rule that admits partition-column predicates.
-
-    @staticmethod
-    def _bucket_col(spec) -> F.Column:
-        return F.pmod(
-            F.xxhash64(*[F.col(k) for k in spec["keys"]]), F.lit(spec["n"])
-        ).cast("int")
-
-    def touched_buckets(self, table: str, keys_df: DataFrame):
-        """Distinct bucket ids of ``keys_df`` (a frame carrying the bucket
-        key columns — e.g. one epoch's delta keys), as a sorted list. At
-        most ``n`` values, so the collect is driver-safe by construction.
-        Returns None when the table is unbucketed."""
-        m = self._load(table)
-        spec = (m or {}).get("bucket")
-        if not spec:
-            return None
-        return sorted(
-            r[0]
-            for r in keys_df.select(self._bucket_col(spec).alias("b"))
-            .distinct()
-            .collect()
-        )
 
     # -- manifest ----------------------------------------------------------
     def _dir(self, table: str) -> str:
@@ -261,8 +226,7 @@ class LsmStateStore:
         return T.StructType(fields)
 
     def merge(self, table: str, env: DataFrame, target_struct, primary_keys,
-              partition_keys=(), batch_unique: bool = False,
-              bucket_keys=None, num_buckets: int = 0) -> None:
+              partition_keys=(), batch_unique: bool = False) -> None:
         """Append one delta commit from an envelope batch (already coerced
         to target_struct). O(batch) — never touches existing state.
 
@@ -280,14 +244,6 @@ class LsmStateStore:
         fully-compacted tables (ADVICE r15). Set
         ``DEBUG_ASSERT_BATCH_UNIQUE`` in tests to check the contract.
 
-        ``bucket_keys``/``num_buckets``: opt into the hash-bucketed
-        layout on table CREATION — the commit's rows additionally
-        hive-partition on ``__bucket = pmod(xxhash64(bucket_keys),
-        num_buckets)`` so key-restricted reads (``read(touched=...)``)
-        prune at file listing. Bucket keys must be key columns
-        (immutable per pk); the spec is sticky in the manifest and
-        later merges ignore the arguments.
-
         ``partition_keys`` (the Paimon `partition.key` sink option /
         Schema.partitionKeys — PaimonMetadataApplier.java:157-165): delta
         and base files lay out hive-partitioned on these columns, so a
@@ -302,11 +258,6 @@ class LsmStateStore:
             "partition_keys": list(partition_keys),
             "rename_log": [],
             "history": [],
-            **(
-                {"bucket": {"keys": list(bucket_keys), "n": int(num_buckets)}}
-                if bucket_keys and num_buckets
-                else {}
-            ),
         }
         payload_cols = [f.name for f in target_struct.fields]
         mapping = self._translate_set(m, payload_cols)
@@ -351,18 +302,6 @@ class LsmStateStore:
         cid = m["next"]
         path = os.path.join(self._dir(table), f"delta-{cid:08d}")
         pts = [k for k in m.get("partition_keys", []) if k in out_names]
-        spec = m.get("bucket")
-        if spec:
-            rows = rows.withColumn(_BUCKET, self._bucket_col(spec))
-            pts = pts + [_BUCKET]
-            # cluster by bucket before the partitioned write (guide §6 —
-            # Iceberg's write.distribution-mode=hash): without it every
-            # upstream task fans out one file into EACH bucket dir it
-            # holds rows for (tasks × buckets small files), and the
-            # r17 8M-key crossover A/B measured the pruned read LOSING
-            # 0.43x to listing/open overhead of that fan-out; with it a
-            # bucket's rows land in exactly one task → one file per dir
-            rows = rows.repartition(F.col(_BUCKET))
         writer = rows.write.mode("overwrite")
         if pts:
             writer = writer.partitionBy(*pts)
@@ -389,8 +328,7 @@ class LsmStateStore:
             self.compact(table)
 
     # -- read path ---------------------------------------------------------
-    def _read_commit(self, path: str, renames, schema_struct,
-                     bucket_spec=None) -> DataFrame:
+    def _read_commit(self, path: str, renames, schema_struct) -> DataFrame:
         df = self.spark.read.parquet(path)
         # renames: ordered rename EVENTS (each a list of [old, new] pairs
         # applied simultaneously — one select per event, so a single-event
@@ -420,21 +358,10 @@ class LsmStateStore:
                 cols.append(F.col(f_.name).cast(f_.dataType).alias(f_.name))
             else:
                 cols.append(F.lit(None).cast(f_.dataType).alias(f_.name))
-        if bucket_spec:
-            # expose the bucket for pre-window pruning predicates: commits
-            # written bucketed carry it as a PHYSICAL hive-partition column
-            # (a predicate on it prunes at file listing); commits that
-            # predate the spec fall back to computing it from the key
-            # columns — same values, just unprunable for those files
-            cols.append(
-                F.col(_BUCKET).cast("int")
-                if _BUCKET in df.columns
-                else self._bucket_col(bucket_spec).alias(_BUCKET)
-            )
         return df.select(*cols, F.col(_TOMBSTONE), F.col(ENVELOPE_SEQ))
 
-    def read(self, table: str, predicate: Optional[str] = None,
-             touched: Optional[DataFrame] = None) -> Optional[DataFrame]:
+    def read(self, table: str,
+             predicate: Optional[str] = None) -> Optional[DataFrame]:
         """Merge-on-read: base ∪ deltas -> last image per key -> live rows.
 
         ``predicate`` (a SQL boolean over payload columns) applies to each
@@ -443,25 +370,10 @@ class LsmStateStore:
         at file listing (PartitionFilters), which the post-merge filter
         cannot (no pushdown through a PK-partitioned window). Sound for
         any column whose value is immutable per key (partition columns
-        are, by the same rule Paimon imposes on partition keys).
-
-        ``touched`` (bucketed tables only): a frame of bucket-key columns
-        — e.g. one epoch's delta keys — restricting the read to those
-        keys' BUCKETS at file listing. The result still contains every
-        row of the touched buckets (a superset of the touched keys), so
-        callers keep their key-level semi-join; what changes is that the
-        scan underneath it is O(touched buckets), not O(state)."""
+        are, by the same rule Paimon imposes on partition keys)."""
         m = self._load(table)
         if m is None:
             return None
-        if touched is not None and m.get("bucket"):
-            buckets = self.touched_buckets(table, touched)
-            if not buckets:
-                return self.spark.createDataFrame(
-                    [], T.StructType.fromJson(json.loads(m["schema"]))
-                )
-            in_list = f"{_BUCKET} IN ({', '.join(map(str, buckets))})"
-            predicate = f"({predicate}) AND {in_list}" if predicate else in_list
         return self._merged(table, m, m["deltas"], predicate)
 
     def _merged(self, table: str, m: dict, deltas, predicate=None) -> DataFrame:
@@ -469,14 +381,12 @@ class LsmStateStore:
         read() passes every manifest delta; compact() passes only the
         committed-epoch ones."""
         schema_struct = T.StructType.fromJson(json.loads(m["schema"]))
-        spec = m.get("bucket")
         parts = []
         if m["base"] is not None:
             base = self._read_commit(
                 os.path.join(self._dir(table), f"base-{m['base']:08d}"),
                 m.get("base_renames", []),
                 schema_struct,
-                bucket_spec=spec,
             )
             if predicate:
                 base = base.where(F.expr(predicate))
@@ -486,7 +396,6 @@ class LsmStateStore:
                 os.path.join(self._dir(table), f"delta-{d['id']:08d}"),
                 d["renames"],
                 schema_struct,
-                bucket_spec=spec,
             )
             if predicate:
                 delta = delta.where(F.expr(predicate))
@@ -555,13 +464,6 @@ class LsmStateStore:
             k for k in m.get("partition_keys", [])
             if k in {f.name for f in schema_struct.fields}
         ]
-        if m.get("bucket"):
-            out = out.withColumn(_BUCKET, self._bucket_col(m["bucket"]))
-            pts = pts + [_BUCKET]
-            # same hash-clustering as merge(): one file per bucket dir
-            # instead of (tasks × buckets) — the compacted BASE is the
-            # dominant file count a pruned read lists/opens
-            out = out.repartition(F.col(_BUCKET))
         writer = out.write.mode("overwrite")
         if pts:
             writer = writer.partitionBy(*pts)
@@ -718,10 +620,6 @@ class LsmStateStore:
         m["partition_keys"] = [
             ev_map.get(k, k) for k in m.get("partition_keys", [])
         ]
-        if m.get("bucket"):
-            m["bucket"]["keys"] = [
-                ev_map.get(k, k) for k in m["bucket"]["keys"]
-            ]
         for d in m["deltas"]:
             d["renames"].append(event)
         if m["base"] is not None:

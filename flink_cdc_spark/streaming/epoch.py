@@ -217,7 +217,7 @@ class EpochMachine:
         self._held.append(df)
         return df
 
-    def _commit(self, frame: DataFrame, primary_keys, **merge_kw) -> None:
+    def _commit(self, frame: DataFrame, primary_keys, partition_keys=()) -> None:
         """The epoch's ONE pk-unique delta commit. Rows whose ``__dead``
         column is true tombstone, the rest upsert; without ``__dead``
         every row upserts."""
@@ -227,7 +227,8 @@ class EpochMachine:
         else:
             env, payload = wrap_as_inserts(frame, self._TABLE), frame.schema
         self.state.merge(
-            self._TABLE, env, payload, primary_keys, batch_unique=True, **merge_kw
+            self._TABLE, env, payload, primary_keys, partition_keys,
+            batch_unique=True,
         )
         self._moved = True
 

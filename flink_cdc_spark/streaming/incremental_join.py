@@ -40,11 +40,9 @@ carry (streaming/epoch.py), so only the FIRST epoch of a process
 attaches via one merge-on-read scan. Money columns ride as-is in the
 harmonized payload (the oracle compares post-join images, not sums).
 
-Scale: state bucketing by hash(pk) is available in the store
-(``bucket_keys``) but not enabled here — the per-epoch path never does
-a key-restricted disk read (the carry serves it), and the plane tag
-already partitions the two read patterns that exist (attach, final
-view read).
+Scale: the per-epoch path never reads the store after the attach (the
+carry serves it), and the plane tag already partitions the two read
+patterns that exist (attach, final view read).
 """
 
 from __future__ import annotations

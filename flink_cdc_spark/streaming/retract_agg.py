@@ -128,7 +128,12 @@ def merge_state(prev: Optional[DataFrame], deltas: DataFrame) -> DataFrame:
 
 class RetractAggregateStream(EpochMachine):
     """Maintains the aggregate state epoch by epoch over a staged
-    changelog."""
+    changelog. Each epoch reads the whole state with one merge-on-read
+    and bounds the fold to the batch's groups with a broadcast
+    semi-join. Small epochs are paced by fixed per-job cost, so this
+    beats pruning the read to the touched groups' hash partitions of
+    the state, which needs a probe job per epoch and lost every
+    measurement."""
 
     # _AGG: the name perfbench/workloads.py reads the state table by
     _AGG = _TABLE = "agg"
@@ -141,28 +146,20 @@ class RetractAggregateStream(EpochMachine):
         value: str,
         staged_dir: Optional[str] = None,
         compact_every: int = 8,
-        num_buckets: int = 8,
     ):
-        """num_buckets: the state table lays out hash(grp)-bucketed, so
-        the per-epoch fold READS only the touched groups' buckets —
-        pruned at file listing — instead of scanning the whole state
-        under the merge window. 0 disables."""
         super().__init__(spark, work_dir, staged_dir, compact_every)
         self.group = group
         self.value = value
-        self.num_buckets = num_buckets
 
     def _merge_epoch(self, batch_df, epoch_id) -> None:
         with self._epoch(epoch_id):
-            # consumed 3x (bucket probe, semi-join broadcast, merge) — tiny
-            # (one row per touched group), so cache instead of recompute
-            deltas = self._hold(
-                contribution_deltas(batch_df, self.group, self.value)
-            )
-            # the fold SCANS only the touched groups' buckets (pruned at
-            # file listing) and READS only the touched groups' state (the
-            # semi-join bounds the merge work to the batch's group set)
-            prev = self.state.read(self._TABLE, touched=deltas.select("grp"))
+            # used twice (the semi-join's broadcast keys and the merge);
+            # recomputing this small batch aggregate is cheaper than a
+            # cache, which cost one more job per epoch and 2.5x the tasks
+            deltas = contribution_deltas(batch_df, self.group, self.value)
+            # the fold READS only the touched groups' state (the semi-join
+            # bounds the merge work to the batch's group set)
+            prev = self.state.read(self._TABLE)
             if prev is not None:
                 prev = prev.join(
                     F.broadcast(deltas.select("grp")), "grp", "left_semi"
@@ -173,8 +170,6 @@ class RetractAggregateStream(EpochMachine):
             self._commit(
                 merged.withColumn("__dead", F.col("n_rows") == 0),
                 ["grp"],
-                bucket_keys=["grp"],
-                num_buckets=self.num_buckets,
             )
 
     def current_state(self) -> DataFrame:

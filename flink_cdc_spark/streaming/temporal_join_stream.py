@@ -65,7 +65,10 @@ N_TEMPORAL_BATCHES = 3
 class StreamingTemporalJoin(EpochMachine):
     """Maintains the SCD2 history of `dim_table_id` from its changelog
     and temporal-joins `probe_table_id` rows (INSERT-only probes) against
-    it, epoch by epoch."""
+    it, epoch by epoch. An epoch that enriches probes carries its
+    post-commit history to the next epoch; without a carry, the fold and
+    the enrichment each read the store with one full merge-on-read,
+    bounded to the batch's keys by a broadcast semi-join."""
 
     _TABLE = "hist"
 
@@ -84,27 +87,10 @@ class StreamingTemporalJoin(EpochMachine):
         staged_dir: Optional[str] = None,
         n_batches: int = N_TEMPORAL_BATCHES,
         compact_every: int = 8,
-        num_buckets: int = 0,
     ):
         """Staging takes the caller's `__b` epoch column (probes are
         INSERT envelope rows of the probe table) over ``n_batches``
-        epochs.
-
-        num_buckets: opt-in hash(dim_key)-bucketed history layout
-        (sound because the bucket depends only on the key half of the
-        (dim_key, valid_from_ver) pk): both per-epoch reads — the fold's
-        touched-keys scan and the enrichment's probed-keys scan — then
-        prune to the relevant buckets at file listing instead of
-        scanning the whole history, the 100-TB read shape. DEFAULT OFF:
-        this machine pays TWO touched-read probe jobs per epoch plus
-        per-commit bucket fan-out, and the interleaved A/B at sf0.1 read
-        a real ~15-25% regression (new 11.6 vs old 8.8-10.1) — at local
-        scale the full-history scan is cheaper than the probes; at real
-        state sizes it is not, which is when callers flip this on
-        (retract_agg, with ONE key-restricted read per epoch, keeps
-        bucketing on by default and audits the pruned plan). Bucketed
-        mode never carries the history: its key-restricted disk reads
-        are the at-scale shape a carry would mask."""
+        epochs."""
         super().__init__(spark, work_dir, staged_dir, compact_every)
         self.dim_table_id = dim_table_id
         self.probe_table_id = probe_table_id
@@ -115,7 +101,6 @@ class StreamingTemporalJoin(EpochMachine):
         self.probe_cols = list(probe_cols)
         self.ts_expr = ts_expr
         self.n_batches = n_batches
-        self.num_buckets = num_buckets
         self.out_dir = os.path.join(work_dir, "out")
         os.makedirs(self.out_dir, exist_ok=True)
 
@@ -147,14 +132,10 @@ class StreamingTemporalJoin(EpochMachine):
         keys = events.select(k).distinct()
         # the fold only ever reads the touched keys' versions; the carry
         # (when valid) serves that read in-memory, and otherwise the
-        # store resolves it — with the bucketed layout pruning the SCAN
-        # to the touched buckets at file listing before the semi-join
-        # bounds it to the keys themselves (an all-new-keys batch reads
-        # an empty pruned frame, which the closes/base joins below
-        # handle as no-prior-versions)
+        # store resolves it with one merge-on-read
         hist_old = self._carry
         if hist_old is None:
-            hist_old = self.state.read(self._TABLE, touched=keys)
+            hist_old = self.state.read(self._TABLE)
             if hist_old is not None:
                 # referenced twice per epoch (fold semi-join + the
                 # post-commit image's anti-join): without the cache the
@@ -225,25 +206,19 @@ class StreamingTemporalJoin(EpochMachine):
         # — no (key, valid_from_ver) repeats within one fold's delta. The
         # LSM merge is O(batch): merge-on-read resolves a close over the
         # original open row (later commit wins on the same pk).
-        self._commit(
-            delta,
-            [k, "valid_from_ver"],
-            bucket_keys=[k] if self.num_buckets else None,
-            num_buckets=self.num_buckets,
+        self._commit(delta, [k, "valid_from_ver"])
+        # post-commit history as a PLAN built from frames already in
+        # hand — predecessor minus the delta's pks plus the delta is
+        # exactly what a post-commit merge-on-read would resolve
+        # (broadcast anti, no disk scan, no pk-window Exchange); its
+        # cache fills during the enrichment write
+        self._next_carry = delta if hist_old is None else self._hold(
+            hist_old.join(
+                F.broadcast(delta.select(k, "valid_from_ver")),
+                [k, "valid_from_ver"],
+                "left_anti",
+            ).unionByName(delta)
         )
-        if not self.num_buckets:
-            # post-commit history as a PLAN built from frames already in
-            # hand — predecessor minus the delta's pks plus the delta is
-            # exactly what a post-commit merge-on-read would resolve
-            # (broadcast anti, no disk scan, no pk-window Exchange); its
-            # cache fills during the enrichment write
-            self._next_carry = delta if hist_old is None else self._hold(
-                hist_old.join(
-                    F.broadcast(delta.select(k, "valid_from_ver")),
-                    [k, "valid_from_ver"],
-                    "left_anti",
-                ).unionByName(delta)
-            )
 
     def _merge_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
         with self._epoch(epoch_id):
@@ -279,10 +254,9 @@ class StreamingTemporalJoin(EpochMachine):
             if hist is None:
                 hist = self._carry
             if hist is None:
-                # bucketed mode (or no carry yet): the store serves the
-                # read, pruned to the probed keys' buckets at file listing
-                # before the semi-join below bounds it to the keys
-                hist = self.state.read(self._TABLE, touched=probe_keys)
+                # no carry yet: the store serves the read, and the
+                # semi-join below bounds it to the probed keys
+                hist = self.state.read(self._TABLE)
             if hist is None:
                 # probes before any dimension version: NULL-enriched,
                 # typed from the harmonized envelope payload

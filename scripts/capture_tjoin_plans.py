@@ -44,8 +44,8 @@ def main():
     orig_read = LsmStateStore.read
     orig_join = tj_op.temporal_join
 
-    def read_spy(self, table, predicate=None, touched=None):
-        df = orig_read(self, table, predicate=predicate, touched=touched)
+    def read_spy(self, table, predicate=None):
+        df = orig_read(self, table, predicate=predicate)
         if df is not None and table == "hist":
             sections.append(
                 ("state.read(hist) [merge-on-read from disk]", fmt(df))

@@ -1,13 +1,14 @@
 """Randomized differential for the LSM merge-on-read state store
-(sinks/lsm_store.py): random I/U/D batches interleaved with random
-compact() / rename_columns() / truncate() calls, final read compared
-against a sequential dict model. The unit tests pin each behavior in
-isolation and the schema-evolution differential exercises the store
-through the runner with its own op mix; this probes the store's own
-commit/merge/maintenance space directly — keys rewritten across many
-commits, deletes of keys living in the base, re-inserts after
-tombstones, renames applying to already-written deltas, truncate
-mid-history, compaction at arbitrary points."""
+(sinks/lsm_store.py): random I/U/D batches, with one compact(), one
+rename_columns() and one truncate() after seeded batches of every trial
+(never the last), final read compared against a sequential dict model.
+The unit tests pin each behavior in isolation and the schema-evolution
+differential exercises the store through the runner with its own op
+mix; this probes the store's own commit/merge/maintenance space
+directly — keys rewritten across many commits, deletes of keys living
+in the base, re-inserts after tombstones, renames applying to
+already-written deltas, truncate mid-history, compaction at arbitrary
+points."""
 
 import random
 
@@ -59,7 +60,11 @@ def test_lsm_store_vs_sequential_model(spark, tmp_path, trial):
     seq = 0
     strings = ["red", "green", "blue", ""]
 
-    for _batch in range(rng.randrange(4, 8)):
+    n_batches = rng.randrange(4, 8)
+    maintenance = dict(zip(
+        rng.sample(range(n_batches - 1), 3), ["compact", "rename", "truncate"]
+    ))
+    for batch in range(n_batches):
         rows = []
         for _ in range(rng.randrange(3, 12)):
             r = rng.random()
@@ -91,14 +96,14 @@ def test_lsm_store_vs_sequential_model(spark, tmp_path, trial):
             _payload_struct(value_col),
             primary_keys=["id"],
         )
-        r = rng.random()
-        if r < 0.2:
+        op = maintenance.get(batch)
+        if op == "compact":
             store.compact(table)
-        elif r < 0.3:  # metadata-only rename of the string column
+        elif op == "rename":  # metadata-only rename of the string column
             new_name = f"name_{seq}"
-            store.rename_columns(table, {value_col: new_name})
+            store.rename_columns(table, [(value_col, new_name)])
             value_col = new_name
-        elif r < 0.35:
+        elif op == "truncate":
             store.truncate(table)
             state.clear(); dead |= live; live.clear()
 

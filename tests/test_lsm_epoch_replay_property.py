@@ -17,12 +17,6 @@ leftover delta -> read -> recompute -> merge) must converge anyway:
     never baked into the base (else the drop is impossible and the
     replay compounds);
   * final state == a sequential dict model applying each epoch once.
-
-r16 extension: every trial shape also runs on a hash(k)-BUCKETED table
-with the epoch's read going through ``read(touched=keys)`` — the
-bucketing x replay x compaction interaction (pruned reads must see the
-post-drop state; compaction re-buckets the base; the in-flight delta's
-bucket dirs are dropped whole on replay).
 """
 
 import random
@@ -40,43 +34,30 @@ STRUCT = T.StructType([
     T.StructField("k", T.LongType()),
     T.StructField("val", T.LongType()),
 ])
-N_BUCKETS = 3
 
 
-def _merge(store, spark, rows, bucketed):
+def _merge(store, spark, rows):
     df = spark.createDataFrame(rows, STRUCT)
-    store.merge(
-        TABLE,
-        wrap_as_inserts(df, TABLE),
-        STRUCT,
-        ["k"],
-        bucket_keys=["k"] if bucketed else None,
-        num_buckets=N_BUCKETS if bucketed else 0,
-    )
+    store.merge(TABLE, wrap_as_inserts(df, TABLE), STRUCT, ["k"])
 
 
-def _epoch_body(store, spark, epoch, touched, increments, bucketed=False):
+def _epoch_body(store, spark, epoch, touched, increments):
     """The state-dependent epoch: announce, drop leftovers, READ the
-    current values of the touched keys — bucket-pruned when the table is
-    bucketed, exactly the machines' fold shape — and merge val+inc
-    back."""
+    current values of the touched keys and merge val+inc back."""
     store.begin_epoch(epoch)
     store.drop_epoch_deltas(TABLE, epoch)
-    keys_df = spark.createDataFrame([(k,) for k in touched], "k long")
-    cur = store.read(TABLE, touched=keys_df if bucketed else None)
+    cur = store.read(TABLE)
     have = (
         {r.k: r.val for r in cur.where(F.col("k").isin(touched)).collect()}
         if cur is not None
         else {}
     )
     rows = [(k, have.get(k, 0) + inc) for k, inc in zip(touched, increments)]
-    _merge(store, spark, rows, bucketed)
+    _merge(store, spark, rows)
 
 
-@pytest.mark.parametrize("bucketed", [False, True])
 @pytest.mark.parametrize("trial", range(4))
-def test_state_dependent_epoch_replay_converges(spark, tmp_path, trial,
-                                                bucketed):
+def test_state_dependent_epoch_replay_converges(spark, tmp_path, trial):
     rng = random.Random(SEED + trial)
     compact_every = 1 if trial % 2 else 8
     store = LsmStateStore(
@@ -91,25 +72,23 @@ def test_state_dependent_epoch_replay_converges(spark, tmp_path, trial,
         replays = rng.randrange(0, 3)  # 0 = clean; 1-2 crashed attempts
         for _attempt in range(replays):
             # crashed attempt: the delta COMMITS, the checkpoint doesn't
-            _epoch_body(store, spark, epoch, touched, increments, bucketed)
-        _epoch_body(store, spark, epoch, touched, increments, bucketed)
+            _epoch_body(store, spark, epoch, touched, increments)
+        _epoch_body(store, spark, epoch, touched, increments)
         for k, inc in zip(touched, increments):  # model: applied ONCE
             model[k] = model.get(k, 0) + inc
 
     got = {r.k: r.val for r in store.read(TABLE).collect()}
     assert got == model, (
-        f"trial {trial} (compact_every={compact_every}, "
-        f"bucketed={bucketed}): {got} != {model}"
+        f"trial {trial} (compact_every={compact_every}): {got} != {model}"
     )
 
 
-@pytest.mark.parametrize("bucketed", [False, True])
-def test_replay_after_compaction_of_predecessors(spark, tmp_path, bucketed):
+def test_replay_after_compaction_of_predecessors(spark, tmp_path):
     """Deterministic pin of the exact seam: epoch N's crashed delta is
     dropped on replay even though a compaction (triggered during the
     crashed attempt) folded all PRIOR epochs into a new base."""
     store = LsmStateStore(spark, str(tmp_path / "lsm"), compact_every=2)
-    _epoch = lambda e, inc: _epoch_body(store, spark, e, [0], [inc], bucketed)
+    _epoch = lambda e, inc: _epoch_body(store, spark, e, [0], [inc])
     _epoch(0, 5)
     _epoch(1, 7)   # compaction fires here (2 committed deltas)
     _epoch(2, 11)  # crashed attempt: delta commits, compact folds 0/1

@@ -8,6 +8,7 @@ merge-on-read correctness, metadata-only DDL, compaction.
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F, types as T
 
 from flink_cdc_spark.sinks.lsm_store import LsmStateStore
@@ -253,3 +254,23 @@ def test_single_commit_read_is_windowless(spark, tmp_path):
     compacted = store.read("app.t")
     assert "Window" not in plan(compacted)  # base-only: windowless again
     assert {(r.id, r.v) for r in compacted.collect()} == want
+
+
+def test_batch_unique_debug_assertion(spark, tmp_path):
+    """ADVICE r15: under the debug flag, a batch_unique=True caller that
+    violates pk-uniqueness fails loudly at merge time instead of
+    corrupting the single-part windowless read path."""
+    from flink_cdc_spark.sinks import lsm_store as mod
+
+    st = _state(spark, tmp_path, compact_every=100)
+    dup = _env(spark, [("INSERT", None, (1, "a"), 1),
+                       ("INSERT", None, (1, "b"), 2)])
+    mod.DEBUG_ASSERT_BATCH_UNIQUE = True
+    try:
+        with pytest.raises(AssertionError, match="uniqueness contract"):
+            st.merge("db.t", dup, PAYLOAD, ["id"], batch_unique=True)
+    finally:
+        mod.DEBUG_ASSERT_BATCH_UNIQUE = False
+    # the same batch WITHOUT the flag's contract claim dedups soundly
+    st.merge("db.t", dup, PAYLOAD, ["id"])
+    assert st.read("db.t").count() == 1

