@@ -45,6 +45,14 @@ def tune_for_engine(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def default_driver_memory() -> str:
+    """Half the host's physical memory, capped at 48g: a 48g heap on a
+    16 GB host lost the driver JVM mid-suite. ``SPARK_GRAFT_DRIVER_MEM``
+    overrides it."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(48 << 10, phys_mb // 2)}m"
+
+
 def get_spark(app_name: str = "flink_cdc_spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = _DEFAULT_CPUS
     builder = (
@@ -56,7 +64,7 @@ def get_spark(app_name: str = "flink_cdc_spark", shuffle_partitions: int | None 
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # testdata events.parquet stores TIMESTAMP(NANOS); read as long and

@@ -1,6 +1,6 @@
 """Hudi pipeline sink analog: record-key/bucket/precombine semantics plus
-a timeline-instant table layout, executed natively (hudi jars are not
-available in this environment).
+a timeline-instant table layout over the LSM store's commit files
+(hudi jars are not available in this environment).
 
 Reference: pipeline-connector-hudi
   - RowDataUtils.java:220-264 — each DataChangeEvent becomes a
@@ -24,12 +24,21 @@ Public-Hudi semantics reproduced natively:
     & Integer.MAX_VALUE) % numBuckets — BucketIdentifier's arithmetic,
     computed by an Arrow-batched pandas UDF (Java's 31-fold string hash
     has no JVM-side Spark builtin);
-  * MERGE_ON_READ: commits append per-bucket log files; read merges by
-    key with the ordering/precombine field deciding the winner (ties ->
-    later instant), `_hoodie_is_deleted` tombstones drop rows;
-  * COPY_ON_WRITE: each commit rewrites merged file slices; read is the
-    latest slice, no merge;
-  * timeline: `.hoodie/<instant>.deltacommit` / `.commit` JSON instants;
+  * file slices: every write is one LSM commit file
+    (``lsm_store.write_commit``), hive-partitioned by bucket (a directory
+    per file group), one row per record key — the highest ordering
+    (precombine) value, ties to the later change;
+  * MERGE_ON_READ: each commit appends a `log-<instant>` slice; a read
+    merges the latest `base-<instant>` slice and the later logs in one
+    ``merge_commits`` window ordered by ordering desc, then instant desc,
+    and drops `__deleted` tombstones after it;
+  * compaction writes that merge as a new base slice, tombstones and
+    ordering values kept: a later log row with a lower precombine value
+    must still lose to a compacted winner, deleted or not. MOR `compact`
+    folds the logs; a COPY_ON_WRITE upsert is the compaction of (latest
+    base slice ∪ batch), so a COW read is one slice and no merge;
+  * timeline: `.hoodie/<instant>.deltacommit` / `.commit` JSON instants,
+    next to an atomically written `hoodie.properties`;
   * Hudi meta columns `_hoodie_commit_time`, `_hoodie_record_key`,
     `_hoodie_partition_path` stored in every data file.
 """
@@ -38,7 +47,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 from dataclasses import dataclass, field
 from typing import List, Optional, Sequence
 
@@ -46,23 +54,31 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.functions import pandas_udf
 
-from ..sources.envelope import (
-    ENVELOPE_OP,
-    ENVELOPE_SEQ,
-    OP_DELETE,
-    first_per_key,
-    row_image,
+from ..sources.envelope import ENVELOPE_OP, ENVELOPE_SEQ, OP_DELETE, row_image
+from .lsm_store import (
+    COMMIT,
+    TOMBSTONE,
+    live_rows,
+    merge_commits,
+    read_json,
+    write_commit,
+    write_json,
 )
 
 META_COMMIT_TIME = "_hoodie_commit_time"
 META_RECORD_KEY = "_hoodie_record_key"
 META_PARTITION_PATH = "_hoodie_partition_path"
-IS_DELETED = "_hoodie_is_deleted"
 _ORDERING = "__hoodie_ordering"
 _BUCKET = "__bucket"
 
 COPY_ON_WRITE = "COPY_ON_WRITE"
 MERGE_ON_READ = "MERGE_ON_READ"
+
+
+def _precombine(*by):
+    """Precombine order: the highest ordering value first, then ``by``
+    (the instant, when merging slices), then the later change."""
+    return [F.col(c).desc() for c in (_ORDERING, *by, ENVELOPE_SEQ)]
 
 
 def _java_string_hash(s: str) -> int:
@@ -86,7 +102,7 @@ def _bucket_udf(num_buckets: int):
     @pandas_udf(T.IntegerType())
     def compute(keys: pd.Series) -> pd.Series:
         return keys.map(
-            lambda k: bucket_id(k.split(""), num_buckets)
+            lambda k: bucket_id(k.split("\x01"), num_buckets)
         ).astype("int32")
 
     return compute
@@ -143,58 +159,83 @@ class HudiTableStore:
             "schema": struct.json(),
             **{f"user.{k}": str(v) for k, v in cfg.properties.items()},
         }
-        with open(self._props_path(table), "w") as f:
-            json.dump(props, f, indent=1)
+        write_json(self._props_path(table), props, indent=1)
 
     def _load_cfg(self, table: str) -> dict:
-        with open(self._props_path(table)) as f:
-            return json.load(f)
+        return read_json(self._props_path(table))
 
     # -- timeline ----------------------------------------------------------
+    def _timeline_files(self, table: str) -> List[str]:
+        """Completed instant files, oldest first."""
+        return sorted(
+            f for f in os.listdir(self._hoodie_dir(table))
+            if f.partition(".")[2] in ("commit", "deltacommit")
+        )
+
     def _instants(self, table: str) -> List[int]:
-        d = self._hoodie_dir(table)
-        out = []
-        for f_ in os.listdir(d):
-            base, dot, action = f_.partition(".")
-            if dot and action in ("commit", "deltacommit"):
-                out.append(int(base))
-        return sorted(out)
+        return [int(f.partition(".")[0]) for f in self._timeline_files(table)]
+
+    def _next_instant(self, table: str) -> int:
+        instants = self._instants(table)
+        return (instants[-1] + 1) if instants else 1
 
     def _write_instant(self, table: str, instant: int, action: str, summary: dict):
-        p = os.path.join(self._hoodie_dir(table), f"{instant:08d}.{action}")
-        fd, tmp = tempfile.mkstemp(dir=self._hoodie_dir(table))
-        with os.fdopen(fd, "w") as f:
-            json.dump({"instant": instant, "action": action, **summary}, f)
-        os.replace(tmp, p)
+        write_json(
+            os.path.join(self._hoodie_dir(table), f"{instant:08d}.{action}"),
+            {"instant": instant, "action": action, **summary},
+        )
+
+    # -- file slices ---------------------------------------------------------
+    def _write(self, table: str, name: str, rows: DataFrame) -> int:
+        """Write one file slice and return its row count, observed on the
+        write."""
+        got = write_commit(
+            rows, os.path.join(self._dir(table), name), [META_RECORD_KEY],
+            _precombine(), [_BUCKET], [F.count(F.lit(1)).alias("n")],
+        )
+        return got["n"]
+
+    def _slices(self, table: str) -> list:
+        """What a read merges, each with its instant: the latest base slice
+        (a COW commit or a MOR compaction) and the logs after it."""
+        ddir = self._dir(table)
+        path = lambda kind, i: os.path.join(ddir, f"{kind}-{i:08d}")
+        instants = self._instants(table)
+        floor = max(
+            (i for i in instants if os.path.isdir(path("base", i))), default=0
+        )
+        slices = [("base", floor)] if floor else []
+        slices += [
+            ("log", i) for i in instants
+            if i > floor and os.path.isdir(path("log", i))
+        ]
+        return [(self.spark.read.parquet(path(k, i)), i) for k, i in slices]
+
+    def _compact(self, table: str, instant: int, parts) -> int:
+        """Merge ``parts`` into base slice ``instant``, tombstones and
+        ordering values kept; returns its row count. A lone part is
+        written unmerged, so the slice write's own precombine reduces a
+        first COW batch to one row per key."""
+        merged = merge_commits(parts, [META_RECORD_KEY], *_precombine(COMMIT))
+        return self._write(table, f"base-{instant:08d}", merged.drop(COMMIT))
 
     # -- write path ---------------------------------------------------------
     def upsert(self, table: str, env: DataFrame, target_struct: T.StructType) -> int:
-        """One envelope batch -> one timeline instant. MOR appends a
-        per-bucket log file (O(batch)); COW rewrites the merged slice."""
+        """One envelope batch -> one timeline instant. MOR appends a log
+        slice (O(batch)); COW compacts the batch into the latest slice."""
         props = self._load_cfg(table)
         keys = props["hoodie.table.recordkey.fields"].split(",")
         num_buckets = int(props["hoodie.bucket.index.num.buckets"])
         ordering = props["hoodie.table.precombine.field"] or None
         partition_field = props["hoodie.table.partition.fields"] or None
-        instants = self._instants(table)
-        instant = (instants[-1] + 1) if instants else 1
+        instant = self._next_instant(table)
 
         payload = [f.name for f in target_struct.fields]
-        is_del = F.col(ENVELOPE_OP) == OP_DELETE
         img = row_image()
+        vals = [img.getField(k).cast("string") for k in keys]
         # RowDataKeyGen: single field -> value; composite -> f1:v1,f2:v2
-        if len(keys) == 1:
-            record_key = img.getField(keys[0]).cast("string")
-        else:
-            record_key = F.concat_ws(
-                ",",
-                *[
-                    F.concat_ws(":", F.lit(k), img.getField(k).cast("string"))
-                    for k in keys
-                ],
-            )
-        hash_input = F.concat_ws(
-            "", *[img.getField(k).cast("string") for k in keys]
+        record_key = vals[0] if len(keys) == 1 else F.concat_ws(
+            ",", *[F.concat_ws(":", F.lit(k), v) for k, v in zip(keys, vals)]
         )
         partition = (
             img.getField(partition_field).cast("string")
@@ -202,131 +243,73 @@ class HudiTableStore:
             else F.lit("")
         )
         order_col = (
-            img.getField(ordering).cast("double")
-            if ordering
-            else F.col(ENVELOPE_SEQ).cast("double")
-        )
+            img.getField(ordering) if ordering else F.col(ENVELOPE_SEQ)
+        ).cast("double")
         rows = env.select(
             *[img.getField(c).alias(c) for c in payload],
             F.lit(f"{instant:08d}").alias(META_COMMIT_TIME),
             record_key.alias(META_RECORD_KEY),
             partition.alias(META_PARTITION_PATH),
-            is_del.alias(IS_DELETED),
+            (F.col(ENVELOPE_OP) == OP_DELETE).alias(TOMBSTONE),
             order_col.alias(_ORDERING),
-            _bucket_udf(num_buckets)(hash_input).alias(_BUCKET),
+            _bucket_udf(num_buckets)(F.concat_ws("\x01", *vals)).alias(_BUCKET),
+            F.col(ENVELOPE_SEQ),
         )
-
-        table_type = props["hoodie.table.type"]
-        ddir = self._dir(table)
-        if table_type == MERGE_ON_READ:
-            out = os.path.join(ddir, f"log-{instant:08d}")
-            rows.write.mode("overwrite").partitionBy(_BUCKET).parquet(out)
-            action = "deltacommit"
+        if props["hoodie.table.type"] == MERGE_ON_READ:
+            name, action = f"log-{instant:08d}", "deltacommit"
+            count = self._write(table, name, rows)
         else:
-            # COPY_ON_WRITE: merge incoming over current state, rewrite the
-            # file slice (classic COW write amplification)
-            current = self._read_files(table, props)
-            merged = (
-                current.unionByName(rows) if current is not None else rows
+            # COPY_ON_WRITE: rewrite the file slice with the batch merged
+            # in (classic COW write amplification)
+            name, action = f"base-{instant:08d}", "commit"
+            count = self._compact(
+                table, instant, self._slices(table) + [(rows, instant)]
             )
-            merged = self._resolve(merged)
-            out = os.path.join(ddir, f"base-{instant:08d}")
-            merged.write.mode("overwrite").partitionBy(_BUCKET).parquet(out)
-            action = "commit"
-        count = self.spark.read.parquet(out).count()
-        self._write_instant(
-            table, instant, action, {"records": count, "file": os.path.basename(out)}
-        )
+        self._write_instant(table, instant, action, {"records": count, "file": name})
         return instant
 
     def compact(self, table: str) -> int:
         """MOR compaction (Hudi's deltacommit -> commit rewrite): resolve
-        the accumulated log files per record key (keeping each winner's
-        ORDERING value and tombstones — a later log row with a LOWER
-        precombine value must still lose to the compacted winner) into
-        one consolidated bucket-partitioned slice; subsequent reads merge
-        only logs newer than the compaction instant. No-op for COW."""
-        props = self._load_cfg(table)
-        if props["hoodie.table.type"] != MERGE_ON_READ:
+        the latest base slice and the later logs per record key into one
+        new bucket-partitioned base slice, keeping each winner's ORDERING
+        value and tombstones (a later log row with a LOWER precombine
+        value must still lose to the compacted winner); later reads merge
+        only logs newer than it. No-op for COW."""
+        if self._load_cfg(table)["hoodie.table.type"] != MERGE_ON_READ:
             return 0
-        current = self._read_files(table, props)
-        if current is None:
+        parts = self._slices(table)
+        if not parts:
             return 0
-        resolved = self._resolve(current)
-        instants = self._instants(table)
-        instant = (instants[-1] + 1) if instants else 1
-        out = os.path.join(self._dir(table), f"clog-{instant:08d}")
-        resolved.write.mode("overwrite").partitionBy(_BUCKET).parquet(out)
-        count = self.spark.read.parquet(out).count()
+        instant = self._next_instant(table)
+        count = self._compact(table, instant, parts)
         self._write_instant(
             table, instant, "commit",
-            {"records": count, "file": os.path.basename(out),
+            {"records": count, "file": f"base-{instant:08d}",
              "operation": "compaction"},
         )
         return instant
 
     # -- read path -----------------------------------------------------------
-    def _read_files(self, table: str, props: dict) -> Optional[DataFrame]:
-        from functools import reduce
-
-        ddir = self._dir(table)
-        parts = []
-        instants = self._instants(table)
-        if props["hoodie.table.type"] == COPY_ON_WRITE:
-            bases = [i for i in instants if os.path.isdir(
-                os.path.join(ddir, f"base-{i:08d}"))]
-            if not bases:
-                return None
-            return self.spark.read.parquet(
-                os.path.join(ddir, f"base-{bases[-1]:08d}")
-            )
-        # MOR: the latest compacted slice (if any) replaces all logs at or
-        # below its instant; only later deltacommit logs merge on top
-        compacted = [i for i in instants if os.path.isdir(
-            os.path.join(ddir, f"clog-{i:08d}"))]
-        floor = compacted[-1] if compacted else 0
-        if floor:
-            parts.append(self.spark.read.parquet(
-                os.path.join(ddir, f"clog-{floor:08d}")))
-        for i in instants:
-            if i <= floor:
-                continue
-            p = os.path.join(ddir, f"log-{i:08d}")
-            if os.path.isdir(p):
-                parts.append(self.spark.read.parquet(p))
-        if not parts:
-            return None
-        return reduce(lambda a, b: a.unionByName(b), parts)
-
-    def _resolve(self, df: DataFrame) -> DataFrame:
-        """Precombine: per record key the highest ordering value wins,
-        ties broken by the later instant."""
-        order = (F.col(_ORDERING).desc(), F.col(META_COMMIT_TIME).desc())
-        return first_per_key(df, [META_RECORD_KEY], *order)
-
     def read(self, table: str) -> Optional[DataFrame]:
-        """Snapshot read: MOR merges log files (merge-on-read); COW is the
-        latest slice. Tombstones drop after resolution."""
-        props = self._load_cfg(table)
-        struct = T.StructType.fromJson(json.loads(props["schema"]))
-        df = self._read_files(table, props)
-        if df is None:
+        """Snapshot read: the latest base slice and the later logs merged
+        per record key (a COW table has one slice, so no merge);
+        tombstones drop after resolution."""
+        struct = T.StructType.fromJson(
+            json.loads(self._load_cfg(table)["schema"])
+        )
+        parts = self._slices(table)
+        if not parts:
             return self.spark.createDataFrame([], struct)
-        if props["hoodie.table.type"] == MERGE_ON_READ:
-            df = self._resolve(df)
-        live = df.where(~F.col(IS_DELETED))
-        return live.select(*[f.name for f in struct.fields])
+        return live_rows(
+            merge_commits(parts, [META_RECORD_KEY], *_precombine(COMMIT)),
+            struct.fieldNames(),
+        )
 
     def timeline(self, table: str) -> List[dict]:
-        d = self._hoodie_dir(table)
-        out = []
-        for i in self._instants(table):
-            for action in ("commit", "deltacommit"):
-                p = os.path.join(d, f"{i:08d}.{action}")
-                if os.path.exists(p):
-                    with open(p) as f:
-                        out.append(json.load(f))
-        return out
+        return [
+            read_json(os.path.join(self._hoodie_dir(table), name))
+            for name in self._timeline_files(table)
+        ]
 
 
 # ---------------------------------------------------------------------------

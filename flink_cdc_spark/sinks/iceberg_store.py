@@ -1,11 +1,11 @@
 """Iceberg table-format analog: snapshot / manifest / field-id metadata
-model executed natively on parquet, no catalog jars required.
+model over the LSM store's commit files, no catalog jars required.
 
 Reference: pipeline-connector-iceberg (IcebergMetadataApplier drives
 CreateTable/Add/Drop/Rename/AlterType onto an Iceberg catalog;
 IcebergEventSink commits WriteResults per checkpoint = one Iceberg
-snapshot per flush barrier). The storage semantics implemented here are
-the public Iceberg v2 spec concepts the reference relies on:
+snapshot per flush barrier). The metadata implemented here is the public
+Iceberg v2 spec the reference relies on:
 
   * **Immutable, versioned table metadata** — `metadata/v{N}.metadata.json`
     plus `version-hint.text` (the HadoopCatalog commit protocol): every
@@ -22,32 +22,48 @@ the public Iceberg v2 spec concepts the reference relies on:
     file columns become unreferenced).
   * **Equality deletes (v2 row-level deletes)** — a commit carrying
     UPDATE/DELETE changes writes an equality-delete file on the key
-    columns; a delete applies to data rows with a STRICTLY LOWER data
-    sequence number, so an update's insert (same sequence) survives its
-    own delete entry.
+    columns, keyed on ``coalesce(before.k, after.k)``; a delete applies
+    to data rows with a STRICTLY LOWER data sequence number, so an
+    update's insert (same sequence) survives its own delete entry.
 
-Spark-first: a commit's data file is the batch's last image per key
-(``materialize_changelog``); the read path is one union of referenced
-data files, one keyed anti-condition join against the (small) delete set,
-and one ``first_per_key`` window for the highest data sequence per key —
-all shuffles keyed by primary key, no driver rows. DDL never touches a
-data file.
+The data path is the LSM store's (``lsm_store.py``): a data file is a
+commit file of the batch's last image per key (``write_commit``), and a
+delete file is read as tombstone rows at its snapshot's sequence number.
+Their ``__seq`` is null, which sorts last under the merge's ``__seq
+desc``: a data row at the same sequence number outranks the delete, which
+is the v2 "strictly lower" rule. The read is one union of the referenced
+files projected by field id and one ``merge_commits`` window keyed by the
+identifier fields. Post-write counts and partition values are observed on
+the write itself. DDL never touches a data file.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import tempfile
+import shutil
 import time
 from typing import Dict, List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..sources.envelope import ENVELOPE_OP, OP_DELETE, OP_UPDATE, first_per_key
-from .materialize import materialize_changelog
-
-_SEQ = "__ice_seq"  # data sequence number column carried inside files
+from ..sources.envelope import (
+    ENVELOPE_OP,
+    ENVELOPE_SEQ,
+    OP_DELETE,
+    OP_UPDATE,
+    row_image,
+)
+from .lsm_store import (
+    TOMBSTONE,
+    base_rows,
+    live_rows,
+    merge_commits,
+    newest_first,
+    project,
+    read_json,
+    write_commit,
+    write_json,
+)
 
 
 class IcebergTableStore:
@@ -71,11 +87,15 @@ class IcebergTableStore:
         hint = self._hint_path(table)
         if not os.path.exists(hint):
             return None
-        with open(hint) as f:
-            v = int(f.read().strip())
-        with open(os.path.join(self._meta_dir(table), f"v{v}.metadata.json")) as f:
-            meta = json.load(f)
+        v = read_json(hint)
+        meta = read_json(os.path.join(self._meta_dir(table), f"v{v}.metadata.json"))
         meta["_version"] = v
+        return meta
+
+    def _load_existing(self, table: str) -> dict:
+        meta = self._load(table)
+        if meta is None:
+            raise ValueError(f"iceberg table {table} does not exist")
         return meta
 
     def _store(self, table: str, meta: dict) -> int:
@@ -84,52 +104,25 @@ class IcebergTableStore:
         d = self._meta_dir(table)
         os.makedirs(d, exist_ok=True)
         v = meta.pop("_version", 0) + 1
-        path = os.path.join(d, f"v{v}.metadata.json")
-        fd, tmp = tempfile.mkstemp(dir=d, suffix=".json")
-        with os.fdopen(fd, "w") as f:
-            json.dump(meta, f, indent=1)
-        os.replace(tmp, path)  # version files are write-once
-        fd, tmp = tempfile.mkstemp(dir=d)
-        with os.fdopen(fd, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, self._hint_path(table))
+        write_json(os.path.join(d, f"v{v}.metadata.json"), meta, indent=1)
+        write_json(self._hint_path(table), v)
         return v
 
     # -- schema encoding (field ids) ---------------------------------------
     @staticmethod
-    def _schema_entry(schema_id: int, fields: List[dict]) -> dict:
-        return {"schema-id": schema_id, "fields": fields}
-
-    @staticmethod
-    def _fields_from_struct(struct: T.StructType, start_id: int = 1) -> List[dict]:
-        return [
-            {
-                "id": start_id + i,
-                "name": f.name,
-                "type": f.dataType.json(),
-                "required": not f.nullable,
-            }
-            for i, f in enumerate(struct.fields)
-        ]
-
-    @staticmethod
     def _struct_from_fields(fields: List[dict]) -> T.StructType:
-        return T.StructType(
-            [
-                T.StructField(
-                    f["name"],
-                    T._parse_datatype_json_string(f["type"]),
-                    not f["required"],
-                )
-                for f in fields
-            ]
-        )
+        return T.StructType([
+            T.StructField(
+                f["name"], T._parse_datatype_json_string(f["type"]),
+                not f["required"],
+            )
+            for f in fields
+        ])
 
-    def _current_schema(self, meta: dict) -> dict:
-        sid = meta["current-schema-id"]
-        return next(s for s in meta["schemas"] if s["schema-id"] == sid)
-
-    def _schema_by_id(self, meta: dict, schema_id: int) -> dict:
+    def _current_schema(self, meta: dict, schema_id=None) -> dict:
+        """The schema ``schema_id`` (default: the current one)."""
+        if schema_id is None:
+            schema_id = meta["current-schema-id"]
         return next(s for s in meta["schemas"] if s["schema-id"] == schema_id)
 
     # -- table lifecycle ----------------------------------------------------
@@ -153,13 +146,17 @@ class IcebergTableStore:
         `properties` map at creation."""
         if self._load(table) is not None:
             return
-        fields = self._fields_from_struct(struct)
+        fields = [
+            {"id": i, "name": f.name, "type": f.dataType.json(),
+             "required": not f.nullable}
+            for i, f in enumerate(struct.fields, 1)
+        ]
         name_to_id = {f["name"]: f["id"] for f in fields}
         meta = {
             "format-version": 2,
             "table": table,
             "last-column-id": len(fields),
-            "schemas": [self._schema_entry(0, fields)],
+            "schemas": [{"schema-id": 0, "fields": fields}],
             "current-schema-id": 0,
             # identifier-field-ids: the PK, by field id (spec's term)
             "identifier-field-ids": [name_to_id[k] for k in primary_keys],
@@ -191,152 +188,134 @@ class IcebergTableStore:
     def _partition_names(self, meta: dict) -> List[str]:
         """Current partition columns, resolved by source field id (renames
         of the source column follow automatically)."""
-        specs = {s["spec-id"]: s for s in meta.get("partition-specs", [])}
-        spec = specs.get(meta.get("default-spec-id", 0))
-        if not spec:
-            return []
-        cur = self._current_schema(meta)
-        name_by_id = {f["id"]: f["name"] for f in cur["fields"]}
+        name_by_id = {
+            f["id"]: f["name"] for f in self._current_schema(meta)["fields"]
+        }
         return [
             name_by_id[f["source-id"]]
+            for spec in meta["partition-specs"]
+            if spec["spec-id"] == meta["default-spec-id"]
             for f in spec["fields"]
             if f["source-id"] in name_by_id
         ]
 
     # -- write path ----------------------------------------------------------
-    def commit(self, table: str, env: DataFrame, target_struct: T.StructType) -> int:
-        """One envelope batch -> one snapshot: a data file of after-images
-        (INSERT/UPDATE/REPLACE) + an equality-delete file for keys whose
-        previous version dies (UPDATE old image, DELETE). Returns the new
-        snapshot id. O(batch): nothing existing is read or rewritten."""
-        meta = self._load(table)
-        if meta is None:
-            raise ValueError(f"iceberg table {table} does not exist")
-        cur = self._current_schema(meta)
-        cur_struct = self._struct_from_fields(cur["fields"])
-        id_by_name = {f["name"]: f["id"] for f in cur["fields"]}
-        pk_names = [
-            f["name"]
-            for f in cur["fields"]
-            if f["id"] in meta["identifier-field-ids"]
-        ]
+    def _keys(self, meta: dict, schema: dict) -> List[str]:
+        """The identifier (primary-key) columns, named as in ``schema``."""
+        ids = meta["identifier-field-ids"]
+        return [f["name"] for f in schema["fields"] if f["id"] in ids]
 
-        seq = meta["last-sequence-number"] + 1
-        snap_id = seq
-        ddir = self._dir(table)
-
-        # data file: last image per key within the batch — reduced over
-        # ALL ops INCLUDING deletes, so a key whose final in-batch op is
-        # DELETE writes no data row (the equality delete only reaches
-        # strictly-lower data sequences, so a surviving same-commit row
-        # would wrongly outlive it)
-        payload = [f.name for f in cur_struct.fields]
-        data_rows = (
-            materialize_changelog(env, pk_names)
-            .select(*payload)
-            .withColumn(_SEQ, F.lit(seq).cast("long"))
-        )
-        data_path = os.path.join(ddir, "data", f"data-{snap_id:08d}.parquet")
-        parts = [p for p in self._partition_names(meta) if p in payload]
-        part_values = None
-        if parts:
-            # control-plane metadata: distinct partition values this file
-            # adds (bounded by partition cardinality, not row count)
-            part_values = {
-                p: sorted(
-                    str(r[0])
-                    for r in data_rows.select(p).distinct().collect()
-                    if r[0] is not None
-                )
-                for p in parts
-            }
-            data_rows.write.mode("overwrite").partitionBy(*parts).parquet(data_path)
-        else:
-            data_rows.write.mode("overwrite").parquet(data_path)
-        added = self.spark.read.parquet(data_path).count()
-
-        # equality-delete file: every key whose previous version dies.
-        # With a partition spec, the dying keys' partition values are
-        # recorded too (from the dying image — a batch may write rows in
-        # one partition while deleting keys in another, so delete-file
-        # pruning must use its OWN values, not the data file's).
-        del_part_cols = [
-            F.coalesce(
-                F.col("before").getField(p), F.col("after").getField(p)
-            ).alias(f"__part_{p}")
-            for p in parts
-        ]
-        dying_full = env.where(
-            F.col(ENVELOPE_OP).isin(OP_DELETE, OP_UPDATE)
-        ).select(
-            *[
-                F.coalesce(
-                    F.col("before").getField(k), F.col("after").getField(k)
-                ).alias(k)
-                for k in pk_names
+    def _write(self, table: str, name: str, rows: DataFrame, keys, parts,
+               counted) -> dict:
+        """Write one commit file under ``data/``, hive-partitioned on the
+        identity spec, and return what its manifest records: the relative
+        path, the number of ``counted`` rows and, per partition column,
+        the distinct values of those rows — observed on the write."""
+        path = os.path.join(self._dir(table), "data", name)
+        got = write_commit(
+            rows, path, keys, [F.col(ENVELOPE_SEQ).desc()], parts,
+            [F.count_if(counted).alias("__n")] + [
+                F.collect_set(F.when(counted, F.col(p))).alias(p) for p in parts
             ],
-            *del_part_cols,
         )
-        delete_part_values = None
-        if parts:
-            delete_part_values = {
-                p: sorted(
-                    str(r[0])
-                    for r in dying_full.select(f"__part_{p}").distinct().collect()
-                    if r[0] is not None
-                )
-                for p in parts
-            }
-        dying = (
-            dying_full.select(*pk_names)
-            .distinct()
-            .withColumn(_SEQ, F.lit(seq).cast("long"))
-        )
-        delete_path = None
-        deleted = 0
-        if dying.take(1):
-            delete_path = os.path.join(
-                ddir, "data", f"eq-delete-{snap_id:08d}.parquet"
-            )
-            dying.write.mode("overwrite").parquet(delete_path)
-            deleted = self.spark.read.parquet(delete_path).count()
+        # str() on the driver, as read() compares the predicate's values
+        return {
+            "file": os.path.relpath(path, self._dir(table)),
+            "records": got["__n"],
+            "values": {p: sorted(map(str, got[p])) for p in parts} or None,
+        }
 
-        manifest = {
+    def _manifest(self, meta: dict, seq: int, data: dict,
+                  deletes: Optional[dict] = None) -> dict:
+        cur = self._current_schema(meta)
+        return {
             "sequence-number": seq,
             "schema-id": cur["schema-id"],
             # names written by this file, bound to field ids (the reader
             # resolves columns by id, so later renames cost nothing)
-            "name-to-id": id_by_name,
-            "data-file": os.path.relpath(data_path, ddir),
-            "delete-file": (
-                os.path.relpath(delete_path, ddir) if delete_path else None
-            ),
+            "name-to-id": {f["name"]: f["id"] for f in cur["fields"]},
+            "data-file": data["file"],
+            "delete-file": deletes and deletes["file"],
             "equality-ids": list(meta["identifier-field-ids"]),
             # identity-partition value summaries for metadata pruning
-            "partition-values": part_values,
-            "delete-partition-values": delete_part_values,
+            "partition-values": data["values"],
+            "delete-partition-values": deletes and deletes["values"],
         }
-        prev = self._snapshot(meta, meta["current-snapshot-id"])
-        manifests = (list(prev["manifests"]) if prev else []) + [manifest]
+
+    def _append(self, table: str, meta: dict, seq: int, manifests,
+                summary: dict) -> int:
+        """Append snapshot ``seq`` (its id is its sequence number) and make
+        it current — the one snapshot-append behind commit, compact and
+        truncate."""
         meta["snapshots"].append(
             {
-                "snapshot-id": snap_id,
+                "snapshot-id": seq,
                 "sequence-number": seq,
                 "timestamp-ms": int(time.time() * 1000),
-                "schema-id": cur["schema-id"],
+                "schema-id": meta["current-schema-id"],
                 "manifests": manifests,
-                "summary": {
-                    "operation": "overwrite" if deleted else "append",
-                    "added-records": added,
-                    "equality-delete-records": deleted,
-                },
+                "summary": summary,
             }
         )
-        meta["current-snapshot-id"] = snap_id
+        meta["current-snapshot-id"] = seq
         meta["last-sequence-number"] = seq
-        meta["snapshot-log"].append({"snapshot-id": snap_id})
+        meta["snapshot-log"].append({"snapshot-id": seq})
         self._store(table, meta)
-        return snap_id
+        return seq
+
+    def commit(self, table: str, env: DataFrame, target_struct: T.StructType) -> int:
+        """One envelope batch -> one snapshot: a data file of the batch's
+        last image per key (a key whose last op is DELETE writes a
+        tombstone: the equality delete only reaches strictly-lower
+        sequences, so a surviving same-commit row would outlive it) + an
+        equality-delete file for keys whose previous version dies (UPDATE
+        old image, DELETE). Returns the new snapshot id. O(batch): nothing
+        existing is read or rewritten."""
+        meta = self._load_existing(table)
+        cur = self._current_schema(meta)
+        payload = [f["name"] for f in cur["fields"]]
+        keys = self._keys(meta, cur)
+        parts = [p for p in self._partition_names(meta) if p in payload]
+        seq = meta["last-sequence-number"] + 1
+        img = row_image()
+        data = self._write(
+            table, f"data-{seq:08d}",
+            env.select(
+                *[img[c].alias(c) for c in payload],
+                (F.col(ENVELOPE_OP) == OP_DELETE).alias(TOMBSTONE),
+                F.col(ENVELOPE_SEQ),
+            ),
+            keys, parts, ~F.col(TOMBSTONE),
+        )
+        # the delete file carries the dying image's partition values: a
+        # batch may write rows in one partition while deleting keys in
+        # another, so delete-file pruning must use its OWN values
+        dying = env.where(F.col(ENVELOPE_OP).isin(OP_DELETE, OP_UPDATE)).select(
+            *[
+                F.coalesce(F.col("before")[c], F.col("after")[c]).alias(c)
+                for c in dict.fromkeys(keys + parts)
+            ],
+            F.lit(True).alias(TOMBSTONE),
+            F.lit(None).cast("long").alias(ENVELOPE_SEQ),
+        )
+        deletes = self._write(
+            table, f"eq-delete-{seq:08d}", dying, keys, parts, F.col(TOMBSTONE)
+        )
+        if not deletes["records"]:
+            shutil.rmtree(os.path.join(self._dir(table), deletes["file"]))
+            deletes = None
+        prev = self._snapshot(meta, meta["current-snapshot-id"])
+        return self._append(
+            table, meta, seq,
+            (prev["manifests"] if prev else []) + [
+                self._manifest(meta, seq, data, deletes)
+            ],
+            {
+                "operation": "overwrite" if deletes else "append",
+                "added-records": data["records"],
+                "equality-delete-records": deletes["records"] if deletes else 0,
+            },
+        )
 
     def _snapshot(self, meta: dict, snapshot_id) -> Optional[dict]:
         if snapshot_id is None:
@@ -351,9 +330,9 @@ class IcebergTableStore:
         self, table: str, snapshot_id=None, predicate: Optional[dict] = None
     ) -> Optional[DataFrame]:
         """State at a snapshot (default: current). Columns resolve by field
-        id against the schema the snapshot recorded; equality deletes apply
-        to strictly-lower data sequence numbers; the newest surviving row
-        per identifier wins.
+        id against the schema the snapshot recorded; data and delete files
+        merge in one window per identifier, where a delete wins only over
+        strictly-lower data sequence numbers.
 
         ``predicate`` ({partition-column: value}) prunes at METADATA time:
         manifests whose recorded partition-value summaries cannot match
@@ -361,8 +340,6 @@ class IcebergTableStore:
         delete files by the dying keys' values), and the residual filter
         also reaches the hive-partitioned parquet listing. Sound under
         Iceberg's partition-immutability rule."""
-        from functools import reduce
-
         meta = self._load(table)
         if meta is None:
             return None
@@ -377,89 +354,48 @@ class IcebergTableStore:
         if snapshot_id is None or snap is None:
             schema = self._current_schema(meta)
         else:
-            schema = self._schema_by_id(meta, snap["schema-id"])
+            schema = self._current_schema(meta, snap["schema-id"])
         read_struct = self._struct_from_fields(schema["fields"])
-        name_by_id = {f["id"]: f["name"] for f in schema["fields"]}
-        type_by_id = {f["id"]: f["type"] for f in schema["fields"]}
-        if snap is None or not snap["manifests"]:
-            return self.spark.createDataFrame([], read_struct)
         ddir = self._dir(table)
 
-        def project(df: DataFrame, writer_names: Dict[str, int]) -> DataFrame:
-            cols = []
-            for fid, rname in name_by_id.items():
-                src = next((n for n, i in writer_names.items() if i == fid), None)
-                dt = T._parse_datatype_json_string(type_by_id[fid])
-                if src is not None and src in df.columns:
-                    cols.append(F.col(src).cast(dt).alias(rname))
-                else:
-                    cols.append(F.lit(None).cast(dt).alias(rname))
-            return df.select(*cols, F.col(_SEQ))
+        def scan(file: str, writer_names: Dict[str, int]) -> DataFrame:
+            by_id = {i: n for n, i in writer_names.items()}
+            df = project(
+                self.spark.read.parquet(os.path.join(ddir, file)), read_struct,
+                {f["name"]: by_id.get(f["id"]) for f in schema["fields"]},
+            )
+            # filtered under the read schema's names, so a file written
+            # before a partition column's rename is filtered too; the
+            # filter still reaches the parquet listing as a partition filter
+            for col, want in (predicate or {}).items():
+                if col in df.columns:
+                    df = df.where(F.col(col) == F.lit(want))
+            return df
 
-        def _prunable(values_key: str, mf: dict) -> bool:
-            """True when the predicate proves this manifest irrelevant."""
-            if not predicate:
-                return False
-            vals = mf.get(values_key)
-            if not vals:
-                return False
-            for col, want in predicate.items():
-                if col in vals and str(want) not in vals[col]:
-                    return True
-            return False
+        def prunable(values: Optional[dict]) -> bool:
+            """True when the predicate proves this file irrelevant."""
+            return bool(predicate and values) and any(
+                col in values and str(want) not in values[col]
+                for col, want in predicate.items()
+            )
 
-        data_parts, delete_parts = [], []
-        pk_ids = meta["identifier-field-ids"]
-        pk_names = [name_by_id[i] for i in pk_ids if i in name_by_id]
-        for mf in snap["manifests"]:
+        parts = [
+            (scan(mf[file], mf["name-to-id"]), mf["sequence-number"])
+            for mf in (snap["manifests"] if snap else [])
             # data and delete files prune INDEPENDENTLY: a manifest may
             # write partition X while its delete file kills keys in Y
-            if not _prunable("partition-values", mf):
-                df = self.spark.read.parquet(os.path.join(ddir, mf["data-file"]))
-                if predicate:
-                    for col, want in predicate.items():
-                        if col in df.columns:
-                            df = df.where(F.col(col) == F.lit(want))
-                data_parts.append(project(df, mf["name-to-id"]))
-            if mf["delete-file"] and not _prunable(
-                "delete-partition-values", mf
-            ):
-                dd = self.spark.read.parquet(os.path.join(ddir, mf["delete-file"]))
-                # delete files carry only key columns + sequence
-                writer = {
-                    n: i for n, i in mf["name-to-id"].items() if i in pk_ids
-                }
-                keyed = dd.select(
-                    *[
-                        F.col(n).alias(name_by_id[i])
-                        for n, i in writer.items()
-                        if n in dd.columns and i in name_by_id
-                    ],
-                    F.col(_SEQ).alias("__del_seq"),
-                )
-                delete_parts.append(keyed)
-
-        if not data_parts:  # every data manifest pruned
+            for file, values in (
+                ("data-file", "partition-values"),
+                ("delete-file", "delete-partition-values"),
+            )
+            if mf[file] and not prunable(mf[values])
+        ]
+        if not parts:  # no snapshot, truncated, or every file pruned
             return self.spark.createDataFrame([], read_struct)
-        data = reduce(lambda a, b: a.unionByName(b), data_parts)
-        if delete_parts and pk_names:
-            dels = reduce(lambda a, b: a.unionByName(b), delete_parts)
-            # keep the highest delete sequence per key: one compact side
-            dels = dels.groupBy(*pk_names).agg(
-                F.max("__del_seq").alias("__del_seq")
-            )
-            cond = [data[k] == dels[k] for k in pk_names]
-            data = (
-                data.join(dels, cond, "left")
-                # equality deletes apply to STRICTLY lower data sequences
-                .where(
-                    F.col("__del_seq").isNull() | (F.col(_SEQ) >= F.col("__del_seq"))
-                )
-                .select(*[data[f.name] for f in read_struct.fields], data[_SEQ])
-            )
-        if pk_names:
-            data = first_per_key(data, pk_names, F.col(_SEQ).desc())
-        return data.select(*[f.name for f in read_struct.fields])
+        return live_rows(
+            merge_commits(parts, self._keys(meta, schema), *newest_first()),
+            read_struct.fieldNames(),
+        )
 
     def compact(self, table: str) -> int:
         """Binpack-style compaction (the connector's `sink.compaction.*`
@@ -470,82 +406,29 @@ class IcebergTableStore:
         snapshots keep their original manifests, so time travel across
         the compaction still works. Metadata-only for readers: the
         replace snapshot's content EQUALS the pre-compaction read."""
-        meta = self._load(table)
-        if meta is None:
-            raise ValueError(f"iceberg table {table} does not exist")
+        meta = self._load_existing(table)
         state = self.read(table)
-        cur = self._current_schema(meta)
-        id_by_name = {f["name"]: f["id"] for f in cur["fields"]}
         seq = meta["last-sequence-number"] + 1
-        snap_id = seq
-        ddir = self._dir(table)
-        data_path = os.path.join(ddir, "data", f"compact-{snap_id:08d}.parquet")
-        rows = state.withColumn(_SEQ, F.lit(seq).cast("long"))
         parts = [p for p in self._partition_names(meta) if p in state.columns]
-        part_values = None
-        if parts:
-            part_values = {
-                p: sorted(
-                    str(r[0])
-                    for r in rows.select(p).distinct().collect()
-                    if r[0] is not None
-                )
-                for p in parts
-            }
-            rows.write.mode("overwrite").partitionBy(*parts).parquet(data_path)
-        else:
-            rows.write.mode("overwrite").parquet(data_path)
-        added = self.spark.read.parquet(data_path).count()
-        meta["snapshots"].append(
-            {
-                "snapshot-id": snap_id,
-                "sequence-number": seq,
-                "timestamp-ms": int(time.time() * 1000),
-                "schema-id": cur["schema-id"],
-                "manifests": [
-                    {
-                        "sequence-number": seq,
-                        "schema-id": cur["schema-id"],
-                        "name-to-id": id_by_name,
-                        "data-file": os.path.relpath(data_path, ddir),
-                        "delete-file": None,
-                        "equality-ids": list(meta["identifier-field-ids"]),
-                        "partition-values": part_values,
-                        "delete-partition-values": None,
-                    }
-                ],
-                "summary": {"operation": "replace", "added-records": added},
-            }
+        data = self._write(
+            table, f"compact-{seq:08d}", base_rows(state), (), parts,
+            ~F.col(TOMBSTONE),
         )
-        meta["current-snapshot-id"] = snap_id
-        meta["last-sequence-number"] = seq
-        meta["snapshot-log"].append({"snapshot-id": snap_id})
-        self._store(table, meta)
-        return snap_id
+        return self._append(
+            table, meta, seq, [self._manifest(meta, seq, data)],
+            {"operation": "replace", "added-records": data["records"]},
+        )
 
     def truncate(self, table: str) -> None:
         """TRUNCATE TABLE as a delete-all snapshot: a new snapshot with an
         EMPTY manifest list (operation "delete"). Data files stay on disk,
         referenced by older snapshots — time travel across the truncate
         still works, exactly like an Iceberg `DELETE FROM t` commit."""
-        meta = self._load(table)
-        if meta is None:
-            raise ValueError(f"iceberg table {table} does not exist")
-        seq = meta["last-sequence-number"] + 1
-        meta["snapshots"].append(
-            {
-                "snapshot-id": seq,
-                "sequence-number": seq,
-                "timestamp-ms": int(time.time() * 1000),
-                "schema-id": meta["current-schema-id"],
-                "manifests": [],
-                "summary": {"operation": "delete", "added-records": 0},
-            }
+        meta = self._load_existing(table)
+        self._append(
+            table, meta, meta["last-sequence-number"] + 1, [],
+            {"operation": "delete", "added-records": 0},
         )
-        meta["current-snapshot-id"] = seq
-        meta["last-sequence-number"] = seq
-        meta["snapshot-log"].append({"snapshot-id": seq})
-        self._store(table, meta)
 
     def snapshots(self, table: str) -> List[dict]:
         meta = self._load(table)
@@ -559,14 +442,12 @@ class IcebergTableStore:
 
     # -- schema evolution (metadata-only, field-id based) --------------------
     def _evolve(self, table: str, mutate) -> None:
-        meta = self._load(table)
-        if meta is None:
-            raise ValueError(f"iceberg table {table} does not exist")
-        cur = self._current_schema(meta)
-        fields = [dict(f) for f in cur["fields"]]
-        fields = mutate(meta, fields)
+        """Append a new current schema: ``mutate(meta, fields)`` returns the
+        new field list (it may also edit ``meta``)."""
+        meta = self._load_existing(table)
+        fields = mutate(meta, self._current_schema(meta)["fields"])
         new_id = max(s["schema-id"] for s in meta["schemas"]) + 1
-        meta["schemas"].append(self._schema_entry(new_id, fields))
+        meta["schemas"].append({"schema-id": new_id, "fields": fields})
         meta["current-schema-id"] = new_id
         self._store(table, meta)
 
@@ -575,46 +456,30 @@ class IcebergTableStore:
     ) -> None:
         def mutate(meta, fields):
             meta["last-column-id"] += 1
-            fields.append(
-                {
-                    "id": meta["last-column-id"],
-                    "name": name,
-                    "type": dt.json(),
-                    "required": not nullable,
-                }
-            )
-            return fields
+            return fields + [{"id": meta["last-column-id"], "name": name,
+                              "type": dt.json(), "required": not nullable}]
 
         self._evolve(table, mutate)
 
     def rename_column(self, table: str, old: str, new: str) -> None:
-        def mutate(meta, fields):
-            for f in fields:
-                if f["name"] == old:
-                    f["name"] = new
-            return fields
-
-        self._evolve(table, mutate)
+        self._evolve(table, lambda meta, fields: [
+            {**f, "name": new} if f["name"] == old else f for f in fields
+        ])
 
     def drop_column(self, table: str, name: str) -> None:
         def mutate(meta, fields):
-            out = [f for f in fields if f["name"] != name]
-            dropped = [f["id"] for f in fields if f["name"] == name]
+            gone = {f["id"] for f in fields if f["name"] == name}
             meta["identifier-field-ids"] = [
-                i for i in meta["identifier-field-ids"] if i not in dropped
+                i for i in meta["identifier-field-ids"] if i not in gone
             ]
-            return out
+            return [f for f in fields if f["id"] not in gone]
 
         self._evolve(table, mutate)
 
     def alter_column_type(self, table: str, name: str, dt: T.DataType) -> None:
-        def mutate(meta, fields):
-            for f in fields:
-                if f["name"] == name:
-                    f["type"] = dt.json()
-            return fields
-
-        self._evolve(table, mutate)
+        self._evolve(table, lambda meta, fields: [
+            {**f, "type": dt.json()} if f["name"] == name else f for f in fields
+        ])
 
 
 class IcebergMetadataApplier:

@@ -8,6 +8,11 @@ MetadataApplier analog with accepted-type filtering
 the same DDL next to its own metadata-only schema evolution; data
 changes land through the table stores themselves (``LsmStateStore``,
 ``IcebergTableStore``, ``HudiTableStore``), never through generated SQL.
+The three stores share one data path, ``lsm_store.py``'s commit files:
+``write_commit`` writes one, ``merge_commits`` merges them on read and
+a compaction writes the merge back as a base. Each store keeps only its
+own metadata — the LSM manifest, Iceberg's versioned metadata and
+snapshots, Hudi's ``hoodie.properties`` and timeline.
 """
 
 from __future__ import annotations

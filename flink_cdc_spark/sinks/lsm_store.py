@@ -32,18 +32,27 @@ every data batch is transformed, routed, coerced to the coordinator's
 sink schema and then ``merge``d (``PipelineFront.merge_routed``).
 
 The manifest is one small JSON per table, rewritten atomically
-(tmp + rename) on each commit — control-plane metadata, like a lake
-table's snapshot log.
+(tmp + rename, ``write_json``) on each commit — control-plane metadata,
+like a lake table's snapshot log.
+
+The data path is a set of module functions that take files and commit
+numbers instead of the manifest, so the Iceberg and Hudi analogs
+(``iceberg_store.py``, ``hudi_sink.py``) write, merge and compact through
+it too, each keeping only its own metadata: ``write_commit`` writes one
+commit file, ``project`` reads one under a schema, ``merge_commits`` and
+``live_rows`` merge them on read, and ``base_rows`` turns a merged state
+into a compacted file.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
 from ..core.events import (
     AddColumnEvent,
@@ -62,13 +71,110 @@ from ..sources.envelope import (
     row_image,
 )
 
-_TOMBSTONE = "__deleted"
-_COMMIT = "__commit"
+TOMBSTONE = "__deleted"
+COMMIT = "__commit"
 
 # Test hook (ADVICE r15): when true, merge(batch_unique=True) verifies the
 # caller's pk-uniqueness contract with a count-vs-distinct check before
 # committing. Off by default — it costs one extra job per commit.
 DEBUG_ASSERT_BATCH_UNIQUE = False
+
+
+def read_json(path: str):
+    with open(path) as f:
+        return json.load(f)
+
+
+def write_json(path: str, obj, indent=None) -> None:
+    """Write ``obj`` as JSON to ``path`` atomically: a temp file in the
+    same directory, then ``os.replace``. A crash mid-dump leaves the old
+    file (or none), never a torn one, and no temp file behind."""
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
+    try:
+        with os.fdopen(fd, "w") as f:
+            json.dump(obj, f, indent=indent)
+        os.replace(tmp, path)
+    except BaseException:
+        os.unlink(tmp)
+        raise
+
+
+def write_commit(rows: DataFrame, path: str, keys=(), order=(),
+                 partition_by=(), metrics=()) -> dict:
+    """Write one commit file: payload images + ``__deleted`` + ``__seq``
+    (plus any columns a format keeps). With ``keys``, one row per key —
+    the first under ``order``. ``partition_by`` lays the file out
+    hive-partitioned. ``metrics`` (aggregate columns) are observed on the
+    rows as they are written and returned by alias, so post-write counts
+    cost no second read."""
+    if keys:
+        rows = first_per_key(rows, keys, *order)
+    obs = Observation() if metrics else None
+    if obs is not None:
+        rows = rows.observe(obs, *metrics)
+    writer = rows.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
+    return obs.get if obs is not None else {}
+
+
+def project(df: DataFrame, struct: T.StructType, source=None) -> DataFrame:
+    """A commit file's rows under ``struct``: each field read from the
+    column ``source.get(name, name)`` (a ``None`` source is absent), cast
+    to the field's type, or null where the file lacks it; then
+    ``__deleted`` and ``__seq``."""
+    have = {f.name: f.dataType for f in df.schema.fields}
+    cols = []
+    for f in struct.fields:
+        src = (source or {}).get(f.name, f.name)
+        if have.get(src) == f.dataType and src == f.name:
+            cols.append(F.col(src))  # no-op cast elided
+        elif src in have:
+            cols.append(F.col(src).cast(f.dataType).alias(f.name))
+        else:
+            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
+    return df.select(*cols, F.col(TOMBSTONE), F.col(ENVELOPE_SEQ))
+
+
+def merge_commits(parts, keys, *order) -> DataFrame:
+    """Merge-on-read over commit files: ``parts`` is ``[(frame, commit
+    number)]``; each frame is tagged with its number as ``__commit``, the
+    frames are unioned, and one window keeps the first row per key under
+    ``order``. A single part skips the window: every commit file is one
+    row per key by construction (``write_commit``), so with one file
+    there is nothing to resolve. Tombstones stay in the result: a read
+    drops them (``live_rows``); a compaction that must keep a deleted
+    key's winner (Hudi precombine) writes them."""
+    merged = None
+    for df, commit in parts:
+        df = df.withColumn(COMMIT, F.lit(commit))
+        merged = df if merged is None else merged.unionByName(df)
+    if keys and len(parts) > 1:
+        merged = first_per_key(merged, keys, *order)
+    return merged
+
+
+def newest_first():
+    """The merge order of a keyed LSM read: the newest commit, then the
+    newest change within it (``__seq`` desc, nulls last)."""
+    return F.col(COMMIT).desc(), F.col(ENVELOPE_SEQ).desc()
+
+
+def live_rows(merged: DataFrame, names) -> DataFrame:
+    """The rows a merge-on-read returns: tombstones dropped, ``names``
+    kept."""
+    return merged.where(~F.col(TOMBSTONE)).select(*names)
+
+
+def base_rows(state: DataFrame) -> DataFrame:
+    """A merged live state as commit-file rows for a compacted base: no
+    tombstones, and a sequence below every change."""
+    return state.select(
+        *[F.col(c) for c in state.columns],
+        F.lit(False).alias(TOMBSTONE),
+        F.lit(-1).cast("long").alias(ENVELOPE_SEQ),
+    )
 
 
 class LsmStateStore:
@@ -98,18 +204,11 @@ class LsmStateStore:
 
     def _load(self, table: str) -> Optional[dict]:
         p = self._manifest_path(table)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
+        return read_json(p) if os.path.exists(p) else None
 
     def _store(self, table: str, manifest: dict) -> None:
-        d = self._dir(table)
-        os.makedirs(d, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=d, suffix=".manifest")
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path(table))
+        os.makedirs(self._dir(table), exist_ok=True)
+        write_json(self._manifest_path(table), manifest)
 
     # -- write path --------------------------------------------------------
     #
@@ -283,12 +382,10 @@ class LsmStateStore:
         img = row_image()
         rows = env.select(
             *[img[c].alias(n) for c, n in zip(payload_cols, out_names)],
-            (F.col(ENVELOPE_OP) == OP_DELETE).alias(_TOMBSTONE),
+            (F.col(ENVELOPE_OP) == OP_DELETE).alias(TOMBSTONE),
             F.col(ENVELOPE_SEQ).alias(ENVELOPE_SEQ),
         )
-        if primary_keys and not batch_unique:
-            rows = first_per_key(rows, primary_keys, F.col(ENVELOPE_SEQ).desc())
-        elif primary_keys and batch_unique and DEBUG_ASSERT_BATCH_UNIQUE:
+        if primary_keys and batch_unique and DEBUG_ASSERT_BATCH_UNIQUE:
             n, nd = rows.select(
                 F.count(F.lit(1)),
                 F.count_distinct(*[F.col(k) for k in primary_keys]),
@@ -300,12 +397,13 @@ class LsmStateStore:
                     "uniqueness contract is violated"
                 )
         cid = m["next"]
-        path = os.path.join(self._dir(table), f"delta-{cid:08d}")
-        pts = [k for k in m.get("partition_keys", []) if k in out_names]
-        writer = rows.write.mode("overwrite")
-        if pts:
-            writer = writer.partitionBy(*pts)
-        writer.parquet(path)
+        write_commit(
+            rows,
+            os.path.join(self._dir(table), f"delta-{cid:08d}"),
+            () if batch_unique else primary_keys,
+            [F.col(ENVELOPE_SEQ).desc()],
+            [k for k in m.get("partition_keys", []) if k in out_names],
+        )
         delta = {"id": cid, "renames": []}
         if self._epoch is not None:
             # epoch provenance: lets a crash-replayed epoch OVERWRITE its
@@ -348,17 +446,7 @@ class LsmStateStore:
                 df = df.select(
                     *[F.col(c).alias(ev_map.get(c, c)) for c in df.columns]
                 )
-        have_types = {f.name: f.dataType for f in df.schema.fields}
-        cols = []
-        for f_ in schema_struct.fields:
-            cur_t = have_types.get(f_.name)
-            if cur_t == f_.dataType:
-                cols.append(F.col(f_.name))  # no-op cast elided
-            elif cur_t is not None:
-                cols.append(F.col(f_.name).cast(f_.dataType).alias(f_.name))
-            else:
-                cols.append(F.lit(None).cast(f_.dataType).alias(f_.name))
-        return df.select(*cols, F.col(_TOMBSTONE), F.col(ENVELOPE_SEQ))
+        return project(df, schema_struct)
 
     def read(self, table: str,
              predicate: Optional[str] = None) -> Optional[DataFrame]:
@@ -390,7 +478,7 @@ class LsmStateStore:
             )
             if predicate:
                 base = base.where(F.expr(predicate))
-            parts.append(base.withColumn(_COMMIT, F.lit(-1)))
+            parts.append((base, -1))
         for d in deltas:
             delta = self._read_commit(
                 os.path.join(self._dir(table), f"delta-{d['id']:08d}"),
@@ -399,26 +487,15 @@ class LsmStateStore:
             )
             if predicate:
                 delta = delta.where(F.expr(predicate))
-            parts.append(delta.withColumn(_COMMIT, F.lit(d["id"])))
+            parts.append((delta, d["id"]))
         if not parts:
             # truncated (or never written): an empty table with the schema
-            empty = self.spark.createDataFrame([], schema_struct)
-            return empty
-        merged = parts[0]
-        for p in parts[1:]:
-            merged = merged.unionByName(p)
-        pks = m.get("pks") or []
-        # single-commit reads skip the pk window entirely: every commit
-        # is pk-unique by construction (merge() dedups by seq within the
-        # batch; a compacted base is the windowed merge itself), so with
-        # one part there is nothing to resolve — this drops the read's
-        # only shuffle for fully-compacted tables and first-epoch state
-        if pks and len(parts) > 1:
-            merged = first_per_key(
-                merged, pks, F.col(_COMMIT).desc(), F.col(ENVELOPE_SEQ).desc()
-            )
-        live = merged.where(~F.col(_TOMBSTONE))
-        return live.select(*[f.name for f in schema_struct.fields])
+            return self.spark.createDataFrame([], schema_struct)
+        # a single-commit read (a fully-compacted table, first-epoch
+        # state) skips the pk window: merge() dedups by seq within the
+        # batch and a compacted base is the windowed merge itself
+        merged = merge_commits(parts, m.get("pks") or [], *newest_first())
+        return live_rows(merged, [f.name for f in schema_struct.fields])
 
     # -- maintenance -------------------------------------------------------
     def compact(self, table: str) -> None:
@@ -453,21 +530,13 @@ class LsmStateStore:
             return
         state = self._merged(table, m, safe)
         cid = m["next"]
-        path = os.path.join(self._dir(table), f"base-{cid:08d}")
-        schema_struct = T.StructType.fromJson(json.loads(m["schema"]))
-        out = state.select(
-            *[F.col(f.name) for f in schema_struct.fields],
-            F.lit(False).alias(_TOMBSTONE),
-            F.lit(-1).cast("long").alias(ENVELOPE_SEQ),
+        write_commit(
+            base_rows(state),
+            os.path.join(self._dir(table), f"base-{cid:08d}"),
+            partition_by=[
+                k for k in m.get("partition_keys", []) if k in state.columns
+            ],
         )
-        pts = [
-            k for k in m.get("partition_keys", [])
-            if k in {f.name for f in schema_struct.fields}
-        ]
-        writer = out.write.mode("overwrite")
-        if pts:
-            writer = writer.partitionBy(*pts)
-        writer.parquet(path)
         m["base"] = cid
         m["base_renames"] = []
         m["deltas"] = in_flight
@@ -496,8 +565,6 @@ class LsmStateStore:
             return
         m["deltas"] = keep
         self._store(table, m)
-        import shutil
-
         for d in dropped:  # best-effort: unreferenced either way
             shutil.rmtree(
                 os.path.join(self._dir(table), f"delta-{d['id']:08d}"),
@@ -770,8 +837,6 @@ class LsmStateStore:
         later CREATE + merge re-materializes from scratch (the
         MetadataApplier drop semantics; data files become unreferenced
         like truncate's)."""
-        import shutil
-
         shutil.rmtree(self._dir(table), ignore_errors=True)
 
 

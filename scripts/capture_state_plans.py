@@ -9,6 +9,8 @@ Instrumented call sites:
     carry makes these disappear from steady-state epochs);
   * ``LsmStateStore.merge`` — the ONE union-tagged delta-commit input
     plan per epoch (its plan shows the O(delta) write volume);
+  * ``IcebergTableStore.read`` — each Iceberg merge-on-read (data and
+    delete files in one window), for the Iceberg registry rows;
   * on pre-conversion code (r15 ``IncrementalJoinView._write``), the
     per-epoch ``mode("overwrite")`` full-state write plans instead.
 
@@ -39,6 +41,7 @@ def main():
     row, out_path = sys.argv[1], sys.argv[2]
     from flink_cdc_spark import contract
     from flink_cdc_spark.session import get_spark
+    from flink_cdc_spark.sinks.iceberg_store import IcebergTableStore
     from flink_cdc_spark.sinks.lsm_store import LsmStateStore
 
     spark = get_spark("capture_state_plans")
@@ -46,6 +49,7 @@ def main():
 
     orig_read = LsmStateStore.read
     orig_merge = LsmStateStore.merge
+    orig_ice_read = IcebergTableStore.read
 
     def read_spy(self, table, *a, **kw):
         df = orig_read(self, table, *a, **kw)
@@ -64,8 +68,18 @@ def main():
         )
         return orig_merge(self, table, updates, *a, **kw)
 
+    def ice_read_spy(self, table, snapshot_id=None, predicate=None):
+        df = orig_ice_read(self, table, snapshot_id, predicate)
+        if df is not None:
+            sections.append(
+                (f"iceberg.read({table!r}, snapshot_id={snapshot_id!r}, "
+                 f"predicate={predicate!r}) [merge-on-read]", fmt(df))
+            )
+        return df
+
     LsmStateStore.read = read_spy
     LsmStateStore.merge = merge_spy
+    IcebergTableStore.read = ice_read_spy
 
     # pre-conversion (r15) incremental_join: full-state overwrite writes
     restore_write = None
@@ -93,6 +107,7 @@ def main():
     finally:
         LsmStateStore.read = orig_read
         LsmStateStore.merge = orig_merge
+        IcebergTableStore.read = orig_ice_read
         if restore_write is not None:
             IncrementalJoinView._write = restore_write
 

@@ -198,3 +198,30 @@ def test_mor_compaction_preserves_semantics(spark, tmp_path):
     # COW: compaction is a no-op
     st2 = _store(spark, tmp_path / "cow", table_type="COPY_ON_WRITE")
     assert st2.compact("db.t") == 0
+
+
+def test_create_table_survives_a_torn_properties_write(spark, tmp_path, monkeypatch):
+    """A crash mid-dump of hoodie.properties must not leave a torn file
+    that every retry skips: the write goes through a temp file and
+    os.replace, so the retry writes it whole and the table works."""
+    import json
+
+    real_dump = json.dump
+
+    def torn(obj, fp, **kw):
+        fp.write('{"hoodie.table.na')
+        raise OSError("disk full")
+
+    st = HudiTableStore(spark, str(tmp_path / "hudi"))
+    cfg = HudiTableConfig(["id"], table_type=MERGE_ON_READ)
+    monkeypatch.setattr(json, "dump", torn)
+    with pytest.raises(OSError, match="disk full"):
+        st.create_table("db.t", PAYLOAD, cfg)
+    monkeypatch.setattr(json, "dump", real_dump)
+    st.create_table("db.t", PAYLOAD, cfg)
+    st.upsert("db.t", _batch(spark, [("db.t", "INSERT", None, (1, "a", 1), {}, 1)]), PAYLOAD)
+    assert [r.id for r in st.read("db.t").collect()] == [1]
+    # the failed attempt left no temp file behind
+    assert sorted(os.listdir(tmp_path / "hudi" / "db.t" / ".hoodie")) == [
+        "00000001.deltacommit", "hoodie.properties",
+    ]

@@ -16,6 +16,7 @@ from flink_cdc_spark.core.events import (
 )
 from flink_cdc_spark.core.schema import Column, new_schema
 from flink_cdc_spark.core.table_id import TableId
+from flink_cdc_spark.sources.envelope import envelope_schema
 from flink_cdc_spark.sinks.iceberg_store import (
     IcebergMetadataApplier,
     IcebergTableStore,
@@ -275,6 +276,41 @@ def test_partitioned_commit_prunes_manifests(spark, tmp_path):
     assert {r.id for r in st.read("db.t", predicate={"name": "y"}).collect()} == {2}
     # a never-written partition prunes everything
     assert st.read("db.t", predicate={"name": "zz"}).count() == 0
+
+
+def test_partition_predicate_follows_a_rename(spark, tmp_path):
+    """A predicate names the partition column as the read schema does;
+    files written before the column was renamed must be filtered too."""
+    st = IcebergTableStore(spark, str(tmp_path / "ice"))
+    st.create_table("db.t", PAYLOAD, ["id"], partition_keys=["name"])
+    st.commit("db.t", _batch(spark, [
+        ("db.t", "INSERT", None, (1, "x", 1.0), {}, 1),
+        ("db.t", "INSERT", None, (2, "y", 2.0), {}, 2),
+    ]), PAYLOAD)
+    st.rename_column("db.t", "name", "region")
+    got = st.read("db.t", predicate={"region": "x"})
+    assert [(r.id, r.region) for r in got.collect()] == [(1, "x")]
+
+
+def test_partition_values_match_python_predicates(spark, tmp_path):
+    """Manifest partition values are recorded as Python renders them,
+    the form read() compares a predicate value in: a boolean partition
+    prunes by ``True``/``False``, not Spark's ``true``/``false``."""
+    flagged = T.StructType(
+        [T.StructField("id", T.LongType(), False), T.StructField("hot", T.BooleanType())]
+    )
+    st = IcebergTableStore(spark, str(tmp_path / "ice"))
+    st.create_table("db.f", flagged, ["id"], partition_keys=["hot"])
+    env = spark.createDataFrame(
+        [("db.f", "INSERT", None, (1, True), {}, 1),
+         ("db.f", "INSERT", None, (2, False), {}, 2)],
+        envelope_schema(flagged),
+    )
+    st.commit("db.f", env, flagged)
+    assert st.snapshots("db.f")[-1]["manifests"][0]["partition-values"] == {
+        "hot": ["False", "True"]
+    }
+    assert [r.id for r in st.read("db.f", predicate={"hot": True}).collect()] == [1]
 
 
 def test_cli_iceberg_partition_key_option(spark, tmp_path):
