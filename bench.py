@@ -77,15 +77,7 @@ def main():
                 "probe": win_probe,
                 "clean": _window_clean(win_steal, win_probe, probe_ref),
             })
-            if (attempts[-1]["clean"]
-                    or len(attempts) > _MAX_RETIMES_PER_QUERY
-                    or retime_budget <= 0
-                    # sub-second rows can't move the total: don't spend
-                    # the global retry budget on them (the first r17
-                    # protocol run burned ~13 of 30 retries on 0.4-1.4s
-                    # rows and had none left when a 20%-steal episode hit
-                    # a 37s reading of kafka_source_topic_replay)
-                    or attempts[-1]["median"] < _RETIME_MIN_SEC):
+            if _stop_retiming(attempts, retime_budget):
                 break
             retime_budget -= 1
         pick = attempts[_pick_attempt(attempts)]
@@ -261,6 +253,20 @@ def _window_clean(steal_pct, probe, ref,
     if steal_pct is not None and steal_pct > steal_max:
         return False
     return not (ref > 0 and probe < ratio_min * ref)
+
+
+def _stop_retiming(attempts, budget) -> bool:
+    """Is the last attempt final?  Yes when its window was clean, when the
+    query has used its re-times or the run its ``budget``, or when the
+    reading is under _RETIME_MIN_SEC: such a row cannot move the total, so
+    it never spends the budget (the first r17 protocol run burned ~13 of
+    30 re-times on rows of 0.4-1.4s, and had none left when a 20%-steal
+    episode hit a 37s reading of kafka_source_topic_replay)."""
+    last = attempts[-1]
+    return (last["clean"]
+            or len(attempts) > _MAX_RETIMES_PER_QUERY
+            or budget <= 0
+            or last["median"] < _RETIME_MIN_SEC)
 
 
 def _pick_attempt(attempts):

@@ -60,6 +60,7 @@ from .lsm_store import (
     merge_commits,
     newest_first,
     project,
+    read_commit_file,
     read_json,
     write_commit,
     write_json,
@@ -209,8 +210,9 @@ class IcebergTableStore:
                counted) -> dict:
         """Write one commit file under ``data/``, hive-partitioned on the
         identity spec, and return what its manifest records: the relative
-        path, the number of ``counted`` rows and, per partition column,
-        the distinct values of those rows — observed on the write."""
+        path, the schema it was written with, the number of ``counted``
+        rows and, per partition column, the distinct values of those rows
+        — observed on the write."""
         path = os.path.join(self._dir(table), "data", name)
         got = write_commit(
             rows, path, keys, [F.col(ENVELOPE_SEQ).desc()], parts,
@@ -221,6 +223,7 @@ class IcebergTableStore:
         # str() on the driver, as read() compares the predicate's values
         return {
             "file": os.path.relpath(path, self._dir(table)),
+            "schema": rows.schema.json(),
             "records": got["__n"],
             "values": {p: sorted(map(str, got[p])) for p in parts} or None,
         }
@@ -236,6 +239,11 @@ class IcebergTableStore:
             "name-to-id": {f["name"]: f["id"] for f in cur["fields"]},
             "data-file": data["file"],
             "delete-file": deletes and deletes["file"],
+            # each file's written schema: the read opens it with that
+            # schema, so no inference job runs and partition values keep
+            # their column's type
+            "data-schema": data["schema"],
+            "delete-schema": deletes and deletes["schema"],
             "equality-ids": list(meta["identifier-field-ids"]),
             # identity-partition value summaries for metadata pruning
             "partition-values": data["values"],
@@ -358,10 +366,12 @@ class IcebergTableStore:
         read_struct = self._struct_from_fields(schema["fields"])
         ddir = self._dir(table)
 
-        def scan(file: str, writer_names: Dict[str, int]) -> DataFrame:
+        def scan(file: str, writer_names: Dict[str, int],
+                 written: Optional[str]) -> DataFrame:
             by_id = {i: n for n, i in writer_names.items()}
             df = project(
-                self.spark.read.parquet(os.path.join(ddir, file)), read_struct,
+                read_commit_file(self.spark, os.path.join(ddir, file), written),
+                read_struct,
                 {f["name"]: by_id.get(f["id"]) for f in schema["fields"]},
             )
             # filtered under the read schema's names, so a file written
@@ -380,13 +390,14 @@ class IcebergTableStore:
             )
 
         parts = [
-            (scan(mf[file], mf["name-to-id"]), mf["sequence-number"])
+            (scan(mf[file], mf["name-to-id"], mf.get(written)),
+             mf["sequence-number"])
             for mf in (snap["manifests"] if snap else [])
             # data and delete files prune INDEPENDENTLY: a manifest may
             # write partition X while its delete file kills keys in Y
-            for file, values in (
-                ("data-file", "partition-values"),
-                ("delete-file", "delete-partition-values"),
+            for file, written, values in (
+                ("data-file", "data-schema", "partition-values"),
+                ("delete-file", "delete-schema", "delete-partition-values"),
             )
             if mf[file] and not prunable(mf[values])
         ]

@@ -7,12 +7,15 @@ deltas by primary key, compaction folds deltas into a new base
 operations). This module implements that storage contract on plain parquet
 + a JSON manifest, so no micro-batch rewrites the full table state:
 
-  * ``merge`` — O(batch): reduce the incoming envelope to last-image-per-
-    key *within the batch* (tombstones kept), append ONE delta commit.
-    Nothing existing is read or rewritten.
+  * ``merge`` — O(batch): append the incoming envelope's row images as
+    they are (tombstones kept, several changes of one key included) as
+    ONE delta commit — no shuffle in front of the write. Nothing existing
+    is read or rewritten.
   * ``read`` — merge-on-read: base ∪ deltas, window by primary key ordered
-    by (commit, seq), drop tombstones. The shuffle is keyed by PK and
-    scales horizontally; delta count is bounded by compaction.
+    by (commit, seq), drop tombstones. The window also resolves the
+    changes of one key within a commit, so only a lone compacted base
+    reads without it. The shuffle is keyed by PK and scales horizontally;
+    delta count is bounded by compaction.
   * ``compact`` — amortized: every ``compact_every`` commits the merged
     state becomes the new base and the delta list resets. O(state) but
     1/compact_every as often, the standard LSM trade.
@@ -33,7 +36,9 @@ sink schema and then ``merge``d (``PipelineFront.merge_routed``).
 
 The manifest is one small JSON per table, rewritten atomically
 (tmp + rename, ``write_json``) on each commit — control-plane metadata,
-like a lake table's snapshot log.
+like a lake table's snapshot log. It records the schema each commit file
+was written with, so a read opens the file with that schema instead of
+running a Parquet schema-inference job per file.
 
 The data path is a set of module functions that take files and commit
 numbers instead of the manifest, so the Iceberg and Hudi analogs
@@ -73,11 +78,6 @@ from ..sources.envelope import (
 
 TOMBSTONE = "__deleted"
 COMMIT = "__commit"
-
-# Test hook (ADVICE r15): when true, merge(batch_unique=True) verifies the
-# caller's pk-uniqueness contract with a count-vs-distinct check before
-# committing. Off by default — it costs one extra job per commit.
-DEBUG_ASSERT_BATCH_UNIQUE = False
 
 
 def read_json(path: str):
@@ -119,6 +119,20 @@ def write_commit(rows: DataFrame, path: str, keys=(), order=(),
     return obs.get if obs is not None else {}
 
 
+def read_commit_file(spark: SparkSession, path: str,
+                     written: Optional[str]) -> DataFrame:
+    """Open one commit file. ``written`` is the ``schema.json()`` the file
+    was written with (its manifest records it): the read then uses it,
+    which runs no schema-inference job and keeps each hive partition
+    column's type (a STRING value ``"007"`` stays ``"007"``). Without it
+    (a manifest written before schemas were recorded) Spark infers the
+    schema from the file."""
+    reader = spark.read
+    if written is not None:
+        reader = reader.schema(T.StructType.fromJson(json.loads(written)))
+    return reader.parquet(path)
+
+
 def project(df: DataFrame, struct: T.StructType, source=None) -> DataFrame:
     """A commit file's rows under ``struct``: each field read from the
     column ``source.get(name, name)`` (a ``None`` source is absent), cast
@@ -141,11 +155,10 @@ def merge_commits(parts, keys, *order) -> DataFrame:
     """Merge-on-read over commit files: ``parts`` is ``[(frame, commit
     number)]``; each frame is tagged with its number as ``__commit``, the
     frames are unioned, and one window keeps the first row per key under
-    ``order``. A single part skips the window: every commit file is one
-    row per key by construction (``write_commit``), so with one file
-    there is nothing to resolve. Tombstones stay in the result: a read
-    drops them (``live_rows``); a compaction that must keep a deleted
-    key's winner (Hudi precombine) writes them."""
+    ``order``. A single part skips the window: it must be one row per key
+    (a ``write_commit`` with ``keys``, or a compacted base). Tombstones
+    stay in the result: a read drops them (``live_rows``); a compaction
+    that must keep a deleted key's winner (Hudi precombine) writes them."""
     merged = None
     for df, commit in parts:
         df = df.withColumn(COMMIT, F.lit(commit))
@@ -325,23 +338,13 @@ class LsmStateStore:
         return T.StructType(fields)
 
     def merge(self, table: str, env: DataFrame, target_struct, primary_keys,
-              partition_keys=(), batch_unique: bool = False) -> None:
+              partition_keys=()) -> None:
         """Append one delta commit from an envelope batch (already coerced
         to target_struct). O(batch) — never touches existing state.
 
-        ``batch_unique``: the caller guarantees at most one row per
-        primary key in this batch (true for the epoch-state machines,
-        whose deltas are aggregation/last-image outputs), so the
-        within-batch seq-dedup window — one shuffle per commit — is
-        skipped. Commit-level pk-uniqueness is what read()'s
-        merge-on-read and the single-part window skip rely on, so only
-        set this when uniqueness holds by construction. A violating
-        caller produces a commit with duplicate pk rows whose corruption
-        is MODE-SPLIT: invisible under multi-part windowed reads (the
-        window picks one arbitrarily) but surfacing as duplicate rows on
-        the single-part windowless path — first-epoch state and
-        fully-compacted tables (ADVICE r15). Set
-        ``DEBUG_ASSERT_BATCH_UNIQUE`` in tests to check the contract.
+        The batch's row images are written as they are: several changes
+        of one key stay separate rows, and the read window (commit desc,
+        then ``__seq`` desc) resolves them, so the write runs no shuffle.
 
         ``partition_keys`` (the Paimon `partition.key` sink option /
         Schema.partitionKeys — PaimonMetadataApplier.java:157-165): delta
@@ -368,9 +371,7 @@ class LsmStateStore:
         primary_keys = [mapping.get(k, k) for k in primary_keys]
         m["pks"] = list(primary_keys)
         if partition_keys:
-            m["partition_keys"] = [
-                mapping.get(k, k) for k in partition_keys
-            ]
+            m["partition_keys"] = [mapping.get(k, k) for k in partition_keys]
 
         # write the delta under CURRENT column names: a crash-replayed
         # merge addresses columns by its own epoch's (pre-rename) names,
@@ -385,26 +386,13 @@ class LsmStateStore:
             (F.col(ENVELOPE_OP) == OP_DELETE).alias(TOMBSTONE),
             F.col(ENVELOPE_SEQ).alias(ENVELOPE_SEQ),
         )
-        if primary_keys and batch_unique and DEBUG_ASSERT_BATCH_UNIQUE:
-            n, nd = rows.select(
-                F.count(F.lit(1)),
-                F.count_distinct(*[F.col(k) for k in primary_keys]),
-            ).first()
-            if n != nd:
-                raise AssertionError(
-                    f"merge(batch_unique=True) on {table}: {n} rows but "
-                    f"{nd} distinct pks {primary_keys} — the caller's "
-                    "uniqueness contract is violated"
-                )
         cid = m["next"]
         write_commit(
             rows,
             os.path.join(self._dir(table), f"delta-{cid:08d}"),
-            () if batch_unique else primary_keys,
-            [F.col(ENVELOPE_SEQ).desc()],
-            [k for k in m.get("partition_keys", []) if k in out_names],
+            partition_by=[k for k in m.get("partition_keys", []) if k in out_names],
         )
-        delta = {"id": cid, "renames": []}
+        delta = {"id": cid, "renames": [], "schema": rows.schema.json()}
         if self._epoch is not None:
             # epoch provenance: lets a crash-replayed epoch OVERWRITE its
             # own delta (drop_epoch_deltas) instead of appending a second
@@ -426,8 +414,9 @@ class LsmStateStore:
             self.compact(table)
 
     # -- read path ---------------------------------------------------------
-    def _read_commit(self, path: str, renames, schema_struct) -> DataFrame:
-        df = self.spark.read.parquet(path)
+    def _read_commit(self, path: str, renames, schema_struct,
+                     written) -> DataFrame:
+        df = read_commit_file(self.spark, path, written)
         # renames: ordered rename EVENTS (each a list of [old, new] pairs
         # applied simultaneously — one select per event, so a single-event
         # swap reads correctly); legacy flat [old, new] pairs are treated
@@ -469,32 +458,28 @@ class LsmStateStore:
         read() passes every manifest delta; compact() passes only the
         committed-epoch ones."""
         schema_struct = T.StructType.fromJson(json.loads(m["schema"]))
+        # (file, rename events, written schema, commit number)
+        files = [] if m["base"] is None else [(
+            f"base-{m['base']:08d}", m.get("base_renames", []),
+            m.get("base_schema"), -1,
+        )]
+        files += [(f"delta-{d['id']:08d}", d["renames"], d.get("schema"), d["id"])
+                  for d in deltas]
         parts = []
-        if m["base"] is not None:
-            base = self._read_commit(
-                os.path.join(self._dir(table), f"base-{m['base']:08d}"),
-                m.get("base_renames", []),
-                schema_struct,
-            )
-            if predicate:
-                base = base.where(F.expr(predicate))
-            parts.append((base, -1))
-        for d in deltas:
-            delta = self._read_commit(
-                os.path.join(self._dir(table), f"delta-{d['id']:08d}"),
-                d["renames"],
-                schema_struct,
-            )
-            if predicate:
-                delta = delta.where(F.expr(predicate))
-            parts.append((delta, d["id"]))
+        for name, renames, written, commit in files:
+            df = self._read_commit(os.path.join(self._dir(table), name),
+                                   renames, schema_struct, written)
+            parts.append((df.where(F.expr(predicate)) if predicate else df, commit))
         if not parts:
             # truncated (or never written): an empty table with the schema
             return self.spark.createDataFrame([], schema_struct)
-        # a single-commit read (a fully-compacted table, first-epoch
-        # state) skips the pk window: merge() dedups by seq within the
-        # batch and a compacted base is the windowed merge itself
-        merged = merge_commits(parts, m.get("pks") or [], *newest_first())
+        keys = m.get("pks") or []
+        merged = merge_commits(parts, keys, *newest_first())
+        if keys and len(parts) == 1 and deltas:
+            # a delta is the batch as written: even a lone one resolves
+            # its changes of one key in the window. Only a lone compacted
+            # base is one row per key and reads windowless.
+            merged = first_per_key(merged, keys, *newest_first())
         return live_rows(merged, [f.name for f in schema_struct.fields])
 
     # -- maintenance -------------------------------------------------------
@@ -528,17 +513,16 @@ class LsmStateStore:
         in_flight = [d for d in m["deltas"] if d not in safe]
         if not safe:
             return
-        state = self._merged(table, m, safe)
+        base = base_rows(self._merged(table, m, safe))
         cid = m["next"]
         write_commit(
-            base_rows(state),
+            base,
             os.path.join(self._dir(table), f"base-{cid:08d}"),
-            partition_by=[
-                k for k in m.get("partition_keys", []) if k in state.columns
-            ],
+            partition_by=[k for k in m.get("partition_keys", []) if k in base.columns],
         )
         m["base"] = cid
         m["base_renames"] = []
+        m["base_schema"] = base.schema.json()
         m["deltas"] = in_flight
         m["next"] = cid + 1
         self._store(table, m)

@@ -131,14 +131,13 @@ def wrap_as_upsert_deletes(
     consumes. Both images carry the same payload, so the row's
     ``row_image()`` is that payload whatever its op.
 
-    Input contract: at most ONE row per primary key (ADVICE r15). The
-    ``__seq`` assigned here is ``monotonically_increasing_id()`` — stable
-    within a read but reflecting no event order across partitions — so
-    if a caller passed multiple rows per key without ``batch_unique=True``
-    downstream, the store's within-batch seq-dedup would pick an
-    arbitrary winner. Every current caller passes pk-unique frames
-    (aggregation / last-image outputs); a future multi-event-per-key
-    caller must thread a real ordering column instead."""
+    Input contract: at most ONE row per primary key. The ``__seq``
+    assigned here is ``monotonically_increasing_id()`` — stable within a
+    read but reflecting no event order across partitions — so for several
+    rows of one key the store's read window, which orders a commit's rows
+    by ``__seq``, would pick an arbitrary winner. Every current caller
+    passes pk-unique frames (aggregation / last-image outputs); a future
+    multi-event-per-key caller must thread a real ordering column instead."""
     payload_cols = [c for c in df.columns if c != delete_col]
     payload = F.struct(*[F.col(c) for c in payload_cols])
     return df.select(

@@ -226,10 +226,7 @@ class EpochMachine:
             payload = frame.drop("__dead").schema
         else:
             env, payload = wrap_as_inserts(frame, self._TABLE), frame.schema
-        self.state.merge(
-            self._TABLE, env, payload, primary_keys, partition_keys,
-            batch_unique=True,
-        )
+        self.state.merge(self._TABLE, env, payload, primary_keys, partition_keys)
         self._moved = True
 
     def _adopt(self, frame: DataFrame, epoch_id: int) -> None:

@@ -17,9 +17,18 @@ is fully merged into the sink state *before* the DDL is applied, exactly
 the "flush then apply DDL on a consistent boundary" contract of
 runtime/operators/schema/regular/SchemaOperator.java:150-228.
 
-Per-key ordering under shuffle: the MERGE orders by the wire sequence
-number within the batch and existing state sorts below every new event, so
-last-image-per-key is deterministic (SURVEY.md §7 hard-list #5).
+One control job per epoch: the DDL records are collected (few, so they
+sort on the driver) and an ``Observation`` on that same collect returns the
+tables with data rows and the data's sequence range. When no DDL falls
+inside that range, all the data is one segment and that table set is the
+segment's; otherwise a presence pass (one ``groupBy`` over segment and
+table) assigns tables to segments. The collect also fills the batch cache,
+so each table's delta write that follows is the epoch's only other job.
+
+Per-key ordering under shuffle: a delta commit keeps every change with its
+wire sequence number, the merge-on-read window orders by (commit, sequence)
+and existing state sorts below every new commit, so last-image-per-key is
+deterministic (SURVEY.md §7 hard-list #5).
 
 The state store is the Paimon-style merge-on-read ``LsmStateStore``:
 O(batch) delta commits, metadata-only DDL, amortized compaction.
@@ -28,9 +37,10 @@ O(batch) delta commits, metadata-only DDL, amortized compaction.
 from __future__ import annotations
 
 import json
+from bisect import bisect_right
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..core.table_id import TableId
 from ..pipeline.composer import PipelineFront
@@ -129,57 +139,64 @@ class StreamingPipelineRunner:
         # plane driver-side, but the scans must all hit the cached batch).
         batch = batch.cache()
         try:
-            data = batch.where(F.col("kind") == KIND_DATA)
+            is_data = F.col("kind") == KIND_DATA
+            data = batch.where(is_data)
             if self.parallel_metadata:
                 self._reduce_batch_schemas(data)
-            ddl_rows = (
-                batch.where(F.col("kind") == KIND_DDL)
+            # the control job: the DDL records (few: sorted on the driver)
+            # and, observed on the same scan, the data's tables and seq range
+            seen = Observation()
+            ddl_rows = sorted(
+                batch.observe(
+                    seen,
+                    F.collect_set(F.when(is_data, F.col("table_id"))).alias("tables"),
+                    F.min(F.when(is_data, F.col("seq"))).alias("lo"),
+                    F.max(F.when(is_data, F.col("seq"))).alias("hi"),
+                )
+                .where(F.col("kind") == KIND_DDL)
                 .select("table_id", "seq", "ddl")
-                .orderBy("seq")
-                .collect()
+                .collect(),
+                key=lambda r: r.seq,
             )
-            # segment boundaries: (-inf, ddl1.seq), [ddl1.seq, ddl2.seq), ...
+            # segment i holds the data between DDL i-1 and DDL i:
+            # (-inf, ddl1.seq), (ddl1.seq, ddl2.seq), ..., (ddlN.seq, +inf)
             bounds = [r.seq for r in ddl_rows]
-            segments = []
-            lo = None
-            for i, hi in enumerate(bounds):
-                segments.append((lo, hi, ddl_rows[i]))
-                lo = hi
-            segments.append((lo, None, None))
-
-            # ONE metadata pass computes which tables appear in which
-            # segment (instead of a distinct().collect() job per segment —
-            # a multi-slice batch used to pay n_segments scans, including
-            # scans of provably-empty segments). Control and data records
-            # never share a seq (control sits below the per-slice data
-            # band), so strict < comparisons assign segments exactly.
-            seg_idx = None
-            for i, b in enumerate(bounds):
-                cond = F.col("seq") < F.lit(b)
-                seg_idx = F.when(cond, i) if seg_idx is None else seg_idx.when(cond, i)
-            seg_idx = (
-                F.lit(0) if seg_idx is None else seg_idx.otherwise(len(bounds))
-            )
-            presence: dict = {}
-            for r in (
-                data.groupBy(seg_idx.alias("seg_no"), "table_id")
-                .count().collect()
-            ):
-                presence.setdefault(r.seg_no, []).append(r.table_id)
-
-            for i, (lo, hi, ddl_row) in enumerate(segments):
-                tables = presence.get(i, [])
-                if tables:
+            got = seen.get
+            segs = {bisect_right(bounds, got[k]) for k in ("lo", "hi")
+                    if got[k] is not None}
+            # no DDL inside the data's seq range: all of it is one segment
+            presence = ({s: got["tables"] for s in segs} if len(segs) < 2
+                        else self._presence(data, bounds))
+            for i, ddl_row in enumerate(ddl_rows + [None]):
+                if presence.get(i):
                     seg = data
-                    if lo is not None:
-                        seg = seg.where(F.col("seq") > lo)
-                    if hi is not None:
-                        seg = seg.where(F.col("seq") < hi)
-                    self._merge_segment(seg, tables=tables)
+                    if i > 0:
+                        seg = seg.where(F.col("seq") > bounds[i - 1])
+                    if i < len(bounds):
+                        seg = seg.where(F.col("seq") < bounds[i])
+                    self._merge_segment(seg, tables=presence[i])
                 if ddl_row is not None:
                     self._apply_ddl(self._decode_ddl(ddl_row))
         finally:
             batch.unpersist()
+
+    @staticmethod
+    def _presence(data: DataFrame, bounds) -> dict:
+        """{segment: tables with data in it}, for data spread over several
+        segments: ONE pass over the batch (not a distinct() job per
+        segment). Control and data records never share a seq (control
+        sits below the per-slice data band), so strict < comparisons
+        assign segments exactly."""
+        seg_no = F.when(F.col("seq") < F.lit(bounds[0]), 0)
+        for i, b in enumerate(bounds[1:], 1):
+            seg_no = seg_no.when(F.col("seq") < F.lit(b), i)
+        presence: dict = {}
+        for r in (
+            data.groupBy(seg_no.otherwise(len(bounds)).alias("seg_no"), "table_id")
+            .count().collect()
+        ):
+            presence.setdefault(r.seg_no, []).append(r.table_id)
+        return presence
 
     def _decode_ddl(self, ddl_row):
         """Wire DDL records carry either the engine's JSON event encoding

@@ -201,7 +201,7 @@ class StreamingTemporalJoin(EpochMachine):
             "valid_to_ts",
             "is_current",
         ))
-        # batch_unique: a close rewrites a version whose ordinal is <= the
+        # pk-unique: a close rewrites a version whose ordinal is <= the
         # key's pre-batch base, new rows carry ordinals strictly above it
         # — no (key, valid_from_ver) repeats within one fold's delta. The
         # LSM merge is O(batch): merge-on-read resolves a close over the

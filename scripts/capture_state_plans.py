@@ -11,6 +11,9 @@ Instrumented call sites:
     plan per epoch (its plan shows the O(delta) write volume);
   * ``IcebergTableStore.read`` — each Iceberg merge-on-read (data and
     delete files in one window), for the Iceberg registry rows;
+  * ``DataFrameWriter.parquet`` — the plan each commit file (an LSM
+    delta or base, an Iceberg or Hudi data file) is written from, i.e.
+    the commit write job itself;
   * on pre-conversion code (r15 ``IncrementalJoinView._write``), the
     per-epoch ``mode("overwrite")`` full-state write plans instead.
 
@@ -44,12 +47,15 @@ def main():
     from flink_cdc_spark.sinks.iceberg_store import IcebergTableStore
     from flink_cdc_spark.sinks.lsm_store import LsmStateStore
 
+    from pyspark.sql.readwriter import DataFrameWriter
+
     spark = get_spark("capture_state_plans")
     sections = []
 
     orig_read = LsmStateStore.read
     orig_merge = LsmStateStore.merge
     orig_ice_read = IcebergTableStore.read
+    orig_parquet = DataFrameWriter.parquet
 
     def read_spy(self, table, *a, **kw):
         df = orig_read(self, table, *a, **kw)
@@ -77,9 +83,17 @@ def main():
             )
         return df
 
+    def parquet_spy(self, path, *a, **kw):
+        sections.append(
+            (f"parquet.write({os.path.basename(path)!r}) "
+             "[commit-file write job]", fmt(self._df))
+        )
+        return orig_parquet(self, path, *a, **kw)
+
     LsmStateStore.read = read_spy
     LsmStateStore.merge = merge_spy
     IcebergTableStore.read = ice_read_spy
+    DataFrameWriter.parquet = parquet_spy
 
     # pre-conversion (r15) incremental_join: full-state overwrite writes
     restore_write = None
@@ -108,18 +122,21 @@ def main():
         LsmStateStore.read = orig_read
         LsmStateStore.merge = orig_merge
         IcebergTableStore.read = orig_ice_read
+        DataFrameWriter.parquet = orig_parquet
         if restore_write is not None:
             IncrementalJoinView._write = restore_write
 
     reads = sum(1 for t, _ in sections if t.startswith("state.read"))
     merges = sum(1 for t, _ in sections if t.startswith("state.merge"))
     writes = sum(1 for t, _ in sections if t.startswith("_write"))
+    commits = sum(1 for t, _ in sections if t.startswith("parquet.write"))
     with open(out_path, "w") as f:
         f.write(
             f"{row} — per-epoch state plans captured at sf0.001\n"
             f"rows={n}\n"
             f"state.read (disk merge-on-read resolutions): {reads}\n"
             f"state.merge (O(delta) union-tagged commits):  {merges}\n"
+            f"commit-file writes:                           {commits}\n"
             f"full-state overwrite writes (pre-conversion): {writes}\n\n"
         )
         for i, (title, plan) in enumerate(sections):

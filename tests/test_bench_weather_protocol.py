@@ -60,6 +60,20 @@ def test_retime_min_sec_guards_the_budget():
     assert bench._RETIME_MIN_SEC == 1.0
 
 
+def test_unclean_sub_second_reading_stops_without_spending_budget():
+    dirty = {"steal_pct": 5.0, "probe": 500.0, "clean": False}
+    budget = bench._MAX_RETIMES_TOTAL
+    # below the floor: final at once, so the loop never spends the budget
+    assert bench._stop_retiming([{**dirty, "median": 0.6}], budget)
+    # the same dirty window on a longer row is re-timed ...
+    assert not bench._stop_retiming([{**dirty, "median": 1.5}], budget)
+    # ... until the query's re-times or the run's budget run out
+    assert bench._stop_retiming(
+        [{**dirty, "median": 1.5}] * (bench._MAX_RETIMES_PER_QUERY + 1), budget)
+    assert bench._stop_retiming([{**dirty, "median": 1.5}], 0)
+    assert bench._stop_retiming([{**dirty, "median": 1.5, "clean": True}], budget)
+
+
 def test_probe_runs_fast_and_returns_throughput():
     import time
 

@@ -116,7 +116,8 @@ def test_store_job_counts_are_pinned(spark, tmp_path):
     """Jobs per Iceberg commit / read / compact (unpartitioned and with an
     identity partition spec) and per Hudi upsert / read / compact. Post-
     write counts and partition values are observed on the write, so no
-    commit re-reads what it wrote."""
+    commit re-reads what it wrote; an Iceberg read opens each file with
+    the schema its manifest recorded, so it runs no inference job."""
     b1, b2 = _batches(spark)
     got = {}
     for parts in ((), ("name",)):
@@ -139,8 +140,42 @@ def test_store_job_counts_are_pinned(spark, tmp_path):
         ]
     # [commit 1, commit 2, read, compact]
     assert got == {
-        "iceberg": [4, 4, 5, 5],
-        "iceberg-part": [4, 4, 5, 5],
+        "iceberg": [4, 4, 2, 2],
+        "iceberg-part": [4, 4, 2, 2],
         f"hudi-{MERGE_ON_READ}": [2, 2, 4, 4],
         f"hudi-{COPY_ON_WRITE}": [2, 3, 2, 0],
     }, got
+
+
+def test_string_partition_value_keeps_its_type(spark, tmp_path):
+    """A STRING partition column holding ``"007"`` reads back as ``"007"``
+    from a partitioned LSM table (after a merge and after a compaction)
+    and a partitioned Iceberg table: each commit file is read with the
+    schema it was written with, so hive partition discovery does not
+    re-type the directory value as an integer."""
+    schema = T.StructType([
+        T.StructField("id", T.LongType(), False),
+        T.StructField("code", T.StringType(), True),
+    ])
+    env = spark.createDataFrame(
+        [("t", "INSERT", None, (1, "007"), {}, 1),
+         ("t", "INSERT", None, (2, "010"), {}, 2)],
+        envelope_schema(schema),
+    )
+    want = {(1, "007"), (2, "010")}
+
+    def rows(df):
+        return {(r.id, r.code) for r in df.collect()}
+
+    lsm = LsmStateStore(spark, str(tmp_path / "lsm"))
+    lsm.merge("t", env, schema, ["id"], partition_keys=["code"])
+    assert rows(lsm.read("t")) == want
+    lsm.compact("t")
+    assert lsm._load("t")["deltas"] == []
+    assert rows(lsm.read("t")) == want
+
+    ice = IcebergTableStore(spark, str(tmp_path / "ice"))
+    ice.create_table("t", schema, ["id"], partition_keys=["code"])
+    ice.commit("t", env, schema)
+    assert rows(ice.read("t")) == want
+    assert rows(ice.read("t", predicate={"code": "007"})) == {(1, "007")}

@@ -28,7 +28,7 @@ def _env(spark, rows):
 
 
 def _merge(store, spark, rows):
-    store.merge("t", _env(spark, rows), STRUCT, ["id"], batch_unique=True)
+    store.merge("t", _env(spark, rows), STRUCT, ["id"])
 
 
 def test_marker_persists_and_blocks_fresh_process_compaction(spark, tmp_path):

@@ -216,16 +216,15 @@ def test_partition_column_rename_survives(spark, tmp_path):
     assert rows[100] == "ap" and rows[0] == "us"
 
 
-def test_single_commit_read_is_windowless(spark, tmp_path):
-    """Every commit is pk-unique by construction, so a single-part read
-    (one delta, or a fully-compacted base) must resolve WITHOUT the
-    merge window — no Exchange/Window in the plan (r15: the pk-window
-    skip that makes compacted lake reads and first-epoch state cheap).
-    Multi-part reads still window, and compaction collapses them back
-    to the windowless shape with identical content."""
-    from pyspark.sql import types as T
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
 
-    from flink_cdc_spark.sinks.lsm_store import LsmStateStore
+
+def test_lone_compacted_base_reads_windowless(spark, tmp_path):
+    """A compacted base is the windowed merge itself, one row per key, so
+    a read of a fully-compacted table runs no merge window. Multi-part
+    reads window; compaction collapses them back to the windowless shape
+    with identical content."""
     from flink_cdc_spark.sources.envelope import wrap_as_inserts
 
     store = LsmStateStore(spark, str(tmp_path), compact_every=100)
@@ -234,43 +233,36 @@ def test_single_commit_read_is_windowless(spark, tmp_path):
     )
     df1 = spark.createDataFrame([(i, f"a{i}") for i in range(6)], struct)
     store.merge("app.t", wrap_as_inserts(df1, "app.t"), struct, ["id"])
-
-    def plan(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    one = store.read("app.t")
-    assert "Window" not in plan(one)
-    assert one.count() == 6
-
     df2 = spark.createDataFrame([(2, "b2"), (9, "b9")], struct)
     store.merge("app.t", wrap_as_inserts(df2, "app.t"), struct, ["id"])
     two = store.read("app.t")
-    assert "Window" in plan(two)  # cross-commit upsert needs the merge
+    assert "Window" in _plan(two)  # cross-commit upsert needs the merge
     want = {(0, "a0"), (1, "a1"), (2, "b2"), (3, "a3"), (4, "a4"),
             (5, "a5"), (9, "b9")}
     assert {(r.id, r.v) for r in two.collect()} == want
 
     store.compact("app.t")
     compacted = store.read("app.t")
-    assert "Window" not in plan(compacted)  # base-only: windowless again
+    assert "Window" not in _plan(compacted)  # base-only: windowless
     assert {(r.id, r.v) for r in compacted.collect()} == want
 
 
-def test_batch_unique_debug_assertion(spark, tmp_path):
-    """ADVICE r15: under the debug flag, a batch_unique=True caller that
-    violates pk-uniqueness fails loudly at merge time instead of
-    corrupting the single-part windowless read path."""
-    from flink_cdc_spark.sinks import lsm_store as mod
-
+def test_lone_delta_resolves_changes_of_one_key(spark, tmp_path):
+    """``merge`` writes the batch as it is, several changes of one key
+    included, so even a lone delta reads through the window, which keeps
+    each key's image with the higher ``__seq`` (INSERT then UPDATE keeps
+    the update; UPDATE then DELETE deletes)."""
     st = _state(spark, tmp_path, compact_every=100)
-    dup = _env(spark, [("INSERT", None, (1, "a"), 1),
-                       ("INSERT", None, (1, "b"), 2)])
-    mod.DEBUG_ASSERT_BATCH_UNIQUE = True
-    try:
-        with pytest.raises(AssertionError, match="uniqueness contract"):
-            st.merge("db.t", dup, PAYLOAD, ["id"], batch_unique=True)
-    finally:
-        mod.DEBUG_ASSERT_BATCH_UNIQUE = False
-    # the same batch WITHOUT the flag's contract claim dedups soundly
-    st.merge("db.t", dup, PAYLOAD, ["id"])
-    assert st.read("db.t").count() == 1
+    st.merge("db.t", _env(spark, [
+        ("UPDATE", (1, "a"), (1, "a2"), 5),
+        ("INSERT", None, (1, "a"), 1),
+        ("INSERT", None, (2, "b"), 2),
+        ("UPDATE", (2, "b"), (2, "b2"), 3),
+        ("DELETE", (2, "b2"), None, 4),
+    ]), PAYLOAD, ["id"])
+    d = os.path.join(st._dir("db.t"), "delta-00000000")
+    assert spark.read.parquet(d).count() == 5  # written as it came
+    got = st.read("db.t")
+    assert "Window" in _plan(got)
+    assert {(r.id, r.name) for r in got.collect()} == {(1, "a2")}
+

@@ -62,7 +62,7 @@ def test_merge_state_drops_zero_count_groups(spark):
 def test_merge_state_merges_null_group_rows(spark):
     """NULL grp pin (ADVICE r16): groupBy merges NULL-group rows into
     ONE group — standard GROUP BY semantics, and the behavior that
-    upholds the commit's batch_unique pk contract (the old full_outer
+    keeps the commit one row per pk (the old full_outer
     join never matched NULL grp and emitted two rows for one pk)."""
     prev = spark.createDataFrame(
         [(None, 1, 1000)], "grp string, n_rows bigint, sum_cents bigint"
@@ -208,7 +208,8 @@ def test_epoch_job_counts_are_pinned(spark, tmp_path, monkeypatch):
     """Spark jobs per epoch, counted with the status tracker under one
     job group per ``_merge_epoch`` call. Job counts do not move with
     host contention, so this pins the fold's fixed per-epoch cost: the
-    state read is one unpruned merge-on-read, and the batch's deltas
+    state read is one unpruned merge-on-read that opens each commit file
+    with its recorded schema (no inference job), and the batch's deltas
     are recomputed rather than cached."""
     import uuid
 
@@ -239,7 +240,7 @@ def test_epoch_job_counts_are_pinned(spark, tmp_path, monkeypatch):
     ra.run()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = [len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups]
-    assert jobs == [2, 6, 7], jobs
+    assert jobs == [2, 5, 5], jobs
     out = {r.grp: (r.n_rows, r.sum_cents)
            for r in ra.current_state().collect()}
     assert out == {"A": (1, 1500), "B": (1, 2000)}

@@ -20,7 +20,6 @@ import random
 
 import pytest
 
-from flink_cdc_spark.sinks import lsm_store
 from flink_cdc_spark.sinks.lsm_store import LsmStateStore
 from flink_cdc_spark.streaming.retract_agg import RetractAggregateStream
 from flink_cdc_spark.streaming.retract_topn import RetractTopNStream
@@ -31,13 +30,6 @@ from tests.test_crash_restart_differential import (
 )
 
 SEED = 0x16B
-
-
-@pytest.fixture(autouse=True)
-def _assert_batch_unique(monkeypatch):
-    """Every machine commit is merge(batch_unique=True): verify that its
-    first_per_key delta really is pk-unique."""
-    monkeypatch.setattr(lsm_store, "DEBUG_ASSERT_BATCH_UNIQUE", True)
 
 
 def _batches(machine, spark):

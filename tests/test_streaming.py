@@ -491,3 +491,64 @@ def test_stream_interval_join_matches_across_batches(spark, tmp_path):
     out = stream_interval_join(spark, str(staged), str(tmp_path / "work"))
     pairs = sorted((r.view_id, r.click_id) for r in out.collect())
     assert pairs == [(1, 3), (2, 5)]
+
+
+def test_epoch_job_counts_are_pinned(spark, tmp_path, monkeypatch):
+    """Spark jobs per ``process_batch``, counted with the status tracker
+    under one job group set inside the callback. An epoch whose data is
+    one segment runs the control job (the DDL collect, observing the
+    data's tables and seq range) and one delta write; only data spread
+    over several segments adds the presence pass."""
+    import uuid
+
+    from flink_cdc_spark.streaming.wire import events_to_wire_lines
+
+    t1, t2 = TableId.parse("db.t1"), TableId.parse("db.t2")
+    create1, create2 = CreateTableEvent(t1, SCHEMA_V1), CreateTableEvent(t2, SCHEMA_V1)
+    files = [
+        # DDL ahead of its data
+        [create1, create2] + [
+            DataChangeEvent.insert(t1, (i, f"n{i}", float(i))) for i in (1, 2, 3)
+        ],
+        # no DDL
+        [DataChangeEvent.update(t1, (1, "n1", 1.0), (1, "n1", 10.0)),
+         DataChangeEvent.delete(t1, (2, "n2", 2.0)),
+         DataChangeEvent.insert(t1, (4, "n4", 4.0))],
+        # a DDL between two tables' data: the presence fallback
+        [DataChangeEvent.update(t1, (1, "n1", 10.0), (1, "n1", 11.0)),
+         AddColumnEvent.last(t2, Column("age", ct.int_())),
+         DataChangeEvent.insert(t2, (10, "x", 1.0, 7))],
+    ]
+    sc = spark.sparkContext
+    run_id = uuid.uuid4().hex
+    groups = []
+    process_batch = StreamingPipelineRunner.process_batch
+
+    def counted(self, batch, batch_id):
+        groups.append(f"wire-{run_id}-{batch_id}")
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", groups[-1])
+        try:
+            process_batch(self, batch, batch_id)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+
+    monkeypatch.setattr(StreamingPipelineRunner, "process_batch", counted)
+    src = tmp_path / "src"
+    src.mkdir()
+    runner = _runner(spark, tmp_path)
+    seq = 0
+    for i, events in enumerate(files):
+        # later files: the CREATEs only give the encoder its schemas
+        known = [] if i == 0 else [create1, create2]
+        lines = events_to_wire_lines(known + events, seq)[len(known):]
+        (src / f"f{i}.json").write_text("\n".join(lines) + "\n")
+        seq += len(known) + len(events)
+        runner.run_available(str(src))
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = [len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups]
+    assert jobs == [2, 2, 5], jobs
+    rows = {r.id: r.score for r in runner.state.read("db.t1").collect()}
+    assert rows == {1: 11.0, 3: 3.0, 4: 4.0}
+    got = [(r.id, r.name, r.age) for r in runner.state.read("db.t2").collect()]
+    assert got == [(10, "x", 7)]
