@@ -31,6 +31,7 @@ from dataclasses import dataclass, field
 from typing import Optional
 
 from ..core import types as ct
+from ..core.sql_text import quote as _q, sql_string as _sql_str, sql_type
 from .datetime_patterns import translate_simple_date_format
 from .parser import ParseError, parse
 
@@ -44,14 +45,6 @@ METADATA_COLUMNS = (
 
 class CompileError(ValueError):
     pass
-
-
-def _sql_str(s: str) -> str:
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _q(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
 
 
 # SQL SIMILAR TO pattern -> Java regex (Calcite SqlFunctions.similar analog)
@@ -124,8 +117,7 @@ class ExpressionContext:
 
 # Spark type names for CAST targets (dialect names incl. BYTE/SHORT/LONG)
 def _cast_type_sql(type_text: str) -> str:
-    dt = ct.parse_type(type_text)
-    return ct.to_spark_type(dt).simpleString()
+    return sql_type(ct.to_spark_type(ct.parse_type(type_text)))
 
 
 class ExpressionCompiler:

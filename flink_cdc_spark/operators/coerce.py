@@ -4,20 +4,17 @@ Spark rendition of SchemaDerivator.coerceDataRecord / SchemaMergingUtils
 .coerceRow (runtime/operators/schema/common/SchemaDerivator.java:299,
 common/utils/SchemaMergingUtils.java:267): project each image struct onto
 the target column list, casting widened types and null-padding missing
-columns. Pure column expressions — stays in whole-stage codegen.
+columns. The two images are ``named_struct`` SQL text applied with one
+``selectExpr``; a column whose type already matches is not cast. Pure
+column expressions — stays in whole-stage codegen.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 
-from ..sources.envelope import (
-    ENVELOPE_META,
-    ENVELOPE_OP,
-    ENVELOPE_SEQ,
-    ENVELOPE_TABLE_ID,
-    payload_struct,
-)
+from ..core.sql_text import quote, sql_string, sql_type
+from ..sources.envelope import payload_struct, select_envelope
 
 
 def coerce_envelope_payload(
@@ -28,24 +25,21 @@ def coerce_envelope_payload(
     source_names maps target column name -> source column name for columns
     that were renamed between the frame's emission schema and the target
     (rename_map_through in pipeline/schema_coordinator.py)."""
-    have = {f_.name for f_ in payload_struct(df).fields}
+    have = {f_.name: f_.dataType for f_ in payload_struct(df).fields}
     source_names = source_names or {}
 
-    def image(name: str):
-        cols = []
+    def image(name: str) -> str:
+        fields = []
         for f_ in target_struct.fields:
             src = source_names.get(f_.name, f_.name)
-            if src in have:
-                cols.append(F.col(f"{name}.{src}").cast(f_.dataType).alias(f_.name))
+            if src not in have:
+                value = f"CAST(NULL AS {sql_type(f_.dataType)})"
+            elif have[src] == f_.dataType:
+                value = f"{quote(name)}.{quote(src)}"
             else:
-                cols.append(F.lit(None).cast(f_.dataType).alias(f_.name))
-        return F.when(F.col(name).isNotNull(), F.struct(*cols)).otherwise(F.lit(None))
+                value = f"CAST({quote(name)}.{quote(src)} AS {sql_type(f_.dataType)})"
+            fields.append(f"{sql_string(f_.name)}, {value}")
+        return (f"CASE WHEN {quote(name)} IS NOT NULL "
+                f"THEN named_struct({', '.join(fields)}) END")
 
-    return df.select(
-        F.col(ENVELOPE_TABLE_ID),
-        F.col(ENVELOPE_OP),
-        image("before").alias("before"),
-        image("after").alias("after"),
-        F.col(ENVELOPE_META),
-        F.col(ENVELOPE_SEQ),
-    )
+    return select_envelope(df, {"before": image("before"), "after": image("after")})

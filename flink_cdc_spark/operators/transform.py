@@ -2,13 +2,19 @@
 
 The Spark rebuild of the reference's PreTransform/PostTransform pair
 (runtime/operators/transform/PreTransformOperator.java:311-345,
-PostTransformOperator.java:276-414), as ONE narrow DataFrame select —
-no shuffle, fully inside whole-stage codegen:
+PostTransformOperator.java:276-414) as narrow DataFrame selects built
+from SQL text — no shuffle, fully inside whole-stage codegen:
 
-  * Projection expressions are compiled (expressions/compiler.py) twice:
-    once bound to the `after` image, once to `before`, because computed
-    columns are evaluated per-image with per-image __data_event_type__
-    (TransformContext.java:86).
+  * Projection expressions are compiled (expressions/compiler.py) to SQL
+    text per image, once bound to `after` and once to `before`, because
+    computed columns are evaluated per-image with per-image
+    __data_event_type__ (TransformContext.java:86). Compiling is pure
+    Python and cheap, so a processor is built per epoch, not cached.
+  * ``apply`` wraps that text in ``named_struct`` / ``CASE`` / ``coalesce``
+    text and applies it with one ``selectExpr`` (plus, with a filter, one
+    ``where`` and one normalizing ``selectExpr``): a handful of
+    driver→JVM calls however many columns the projection has, where a
+    plan of ``Column`` objects costs several calls per field.
   * Column pruning (the reference's PreTransformOperator) is Catalyst's
     job: because the projection is expressed as a select over envelope
     struct fields, unreferenced payload fields never leave the scan.
@@ -27,12 +33,13 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Optional
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 
 from ..core.schema import Schema
 from ..core.selectors import Selectors
 from ..core.table_id import TableId
 from ..core import types as ct
+from ..core.sql_text import quote, sql_string
 from ..expressions.compiler import (
     CompileError,
     ExpressionCompiler,
@@ -44,13 +51,13 @@ from ..expressions.parser import parse
 from ..sources.envelope import (
     ENVELOPE_META,
     ENVELOPE_OP,
-    ENVELOPE_SEQ,
     ENVELOPE_TABLE_ID,
     OP_DELETE,
     OP_INSERT,
     OP_REPLACE,
     OP_UPDATE,
-    row_image,
+    ROW_IMAGE_SQL,
+    select_envelope,
 )
 
 
@@ -139,9 +146,9 @@ class TransformProcessor:
     def _bindings(self, image: str) -> dict:
         b = _meta_bindings(image)
         for c in self.input_columns:
-            b[c] = f"`{image}`.`{c}`"
+            b[c] = f"{quote(image)}.{quote(c)}"
         for k in self.meta_keys:
-            b[k] = f"element_at(`{ENVELOPE_META}`, '{k}')"
+            b[k] = f"element_at({quote(ENVELOPE_META)}, {sql_string(k)})"
         return b
 
     def _compiler(self, image: str, extra_bindings: Optional[dict] = None) -> ExpressionCompiler:
@@ -245,7 +252,7 @@ class TransformProcessor:
                     src = ast[1] if ast is not None else name
                     if src not in self.input_columns and src not in comp.ctx.column_bindings:
                         raise CompileError(f"Column '{src}' not found in table {rule.source_table}")
-                    cols.append((name, comp.ctx.column_bindings.get(src, f"`{image}`.`{src}`")))
+                    cols.append((name, comp.ctx.column_bindings.get(src, f"{quote(image)}.{quote(src)}")))
                 else:
                     # projection boundary: decimal arithmetic stores with
                     # the reference's declared-type reinterpretation
@@ -263,83 +270,57 @@ class TransformProcessor:
                 self._filter_sql[image] = comp.render(ast)
 
     # -- application -------------------------------------------------------------
+    def _image_sql(self, image: str) -> str:
+        """The projected image: a ``named_struct`` of the compiled
+        projection, NULL where the input image is."""
+        fields = ", ".join(
+            f"{sql_string(name)}, {sql}" for name, sql in self._proj_sql[image]
+        )
+        return f"CASE WHEN {quote(image)} IS NOT NULL THEN named_struct({fields}) END"
+
     def apply(self, df: DataFrame) -> DataFrame:
         """Apply projection + filter + update-splitting to an envelope frame."""
-        op = F.col(ENVELOPE_OP)
-
-        def image_struct(image: str):
-            cols = [F.expr(sql).alias(name) for name, sql in self._proj_sql[image]]
-            return F.when(F.col(image).isNotNull(), F.struct(*cols)).otherwise(F.lit(None))
-
-        new_before = image_struct("before")
-        new_after = image_struct("after")
-
+        images = {image: self._image_sql(image) for image in ("before", "after")}
+        op = quote(ENVELOPE_OP)
         if not self._filter_sql:
-            out = df.select(
-                F.col(ENVELOPE_TABLE_ID),
-                op.alias(ENVELOPE_OP),
-                new_before.alias("before"),
-                new_after.alias("after"),
-                F.col(ENVELOPE_META),
-                F.col(ENVELOPE_SEQ),
-            )
+            out = select_envelope(df, images)
         else:
-            # evaluate predicate per image; null -> false (SQL filter semantics)
-            keep_b = F.coalesce(F.expr(self._filter_sql["before"]), F.lit(False))
-            keep_a = F.coalesce(F.expr(self._filter_sql["after"]), F.lit(False))
-
-            is_update = op == OP_UPDATE
-            # UPDATE splitting (PostTransformOperator.java:314-343)
+            # the predicate per projected image; null -> false (SQL filter
+            # semantics). Each is computed once, as a column, so a
+            # nondeterministic filter decides the op and the row alike.
+            out = select_envelope(
+                df, images,
+                f"coalesce({self._filter_sql['before']}, false) AS __kb",
+                f"coalesce({self._filter_sql['after']}, false) AS __ka",
+            ).where(
+                f"CASE WHEN {op} = '{OP_UPDATE}' THEN __kb OR __ka "
+                f"WHEN {op} IN ('{OP_INSERT}', '{OP_REPLACE}') THEN __ka "
+                f"WHEN {op} = '{OP_DELETE}' THEN __kb ELSE false END"
+            )
+            # UPDATE splitting (PostTransformOperator.java:314-343), then
+            # the images normalized to the (possibly rewritten) op
+            is_update = f"{op} = '{OP_UPDATE}'"
             new_op = (
-                F.when(is_update & keep_b & keep_a, F.lit(OP_UPDATE))
-                .when(is_update & keep_b & ~keep_a, F.lit(OP_DELETE))
-                .when(is_update & ~keep_b & keep_a, F.lit(OP_INSERT))
-                .when(~is_update, op)
+                f"CASE WHEN {is_update} AND __kb AND __ka THEN '{OP_UPDATE}' "
+                f"WHEN {is_update} AND __kb AND NOT __ka THEN '{OP_DELETE}' "
+                f"WHEN {is_update} AND NOT __kb AND __ka THEN '{OP_INSERT}' "
+                f"WHEN NOT {is_update} THEN {op} END"
             )
-            keep_row = (
-                F.when(is_update, keep_b | keep_a)
-                .when(op.isin(OP_INSERT, OP_REPLACE), keep_a)
-                .when(op == OP_DELETE, keep_b)
-                .otherwise(F.lit(False))
-            )
-            out = (
-                df.select(
-                    F.col(ENVELOPE_TABLE_ID),
-                    new_op.alias(ENVELOPE_OP),
-                    new_before.alias("before"),
-                    new_after.alias("after"),
-                    F.col(ENVELOPE_META),
-                    F.col(ENVELOPE_SEQ),
-                    keep_row.alias("__keep"),
-                )
-                .where(F.col("__keep"))
-                .drop("__keep")
-            )
-            # normalize images to the (possibly rewritten) op
-            out = out.select(
-                F.col(ENVELOPE_TABLE_ID),
-                F.col(ENVELOPE_OP),
-                F.when(F.col(ENVELOPE_OP).isin(OP_INSERT, OP_REPLACE), F.lit(None))
-                .otherwise(F.col("before"))
-                .alias("before"),
-                F.when(F.col(ENVELOPE_OP) == OP_DELETE, F.lit(None))
-                .otherwise(F.col("after"))
-                .alias("after"),
-                F.col(ENVELOPE_META),
-                F.col(ENVELOPE_SEQ),
-            )
+            out = select_envelope(out, {
+                ENVELOPE_OP: new_op,
+                "before": f"CASE WHEN ({new_op}) IN ('{OP_INSERT}', '{OP_REPLACE}') "
+                          f"THEN NULL ELSE `before` END",
+                "after": f"CASE WHEN ({new_op}) = '{OP_DELETE}' THEN NULL ELSE `after` END",
+            })
 
         if self.rule.converter_after_transform == "SOFT_DELETE":
             # DELETE -> INSERT carrying the before image (transform.md:48-61)
-            is_del = F.col(ENVELOPE_OP) == OP_DELETE
-            out = out.select(
-                F.col(ENVELOPE_TABLE_ID),
-                F.when(is_del, F.lit(OP_INSERT)).otherwise(F.col(ENVELOPE_OP)).alias(ENVELOPE_OP),
-                F.when(is_del, F.lit(None)).otherwise(F.col("before")).alias("before"),
-                row_image().alias("after"),
-                F.col(ENVELOPE_META),
-                F.col(ENVELOPE_SEQ),
-            )
+            is_del = f"{op} = '{OP_DELETE}'"
+            out = select_envelope(out, {
+                ENVELOPE_OP: f"CASE WHEN {is_del} THEN '{OP_INSERT}' ELSE {op} END",
+                "before": f"CASE WHEN {is_del} THEN NULL ELSE `before` END",
+                "after": ROW_IMAGE_SQL,
+            })
         return out
 
     # -- output schema -------------------------------------------------------------
@@ -361,8 +342,9 @@ class TransformProcessor:
         )
         try:
             empty = spark.createDataFrame([], envelope_schema(nullable_payload))
-            exprs = [F.expr(sql).alias(name) for name, sql in self._proj_sql["after"]]
-            analyzed = empty.select(*exprs).schema
+            analyzed = empty.selectExpr(
+                *[f"{sql} AS {quote(name)}" for name, sql in self._proj_sql["after"]]
+            ).schema
             return {f.name: ct.from_spark_type(f.dataType) for f in analyzed.fields}
         except Exception:
             return {}

@@ -38,7 +38,10 @@ Public-Hudi semantics reproduced natively:
     folds the logs; a COPY_ON_WRITE upsert is the compaction of (latest
     base slice ∪ batch), so a COW read is one slice and no merge;
   * timeline: `.hoodie/<instant>.deltacommit` / `.commit` JSON instants,
-    next to an atomically written `hoodie.properties`;
+    next to an atomically written `hoodie.properties`; each instant
+    records the schema its slice was written with, and a read opens the
+    slice with it (``lsm_store.read_commit_file``), so no slice costs a
+    Parquet schema-inference job;
   * Hudi meta columns `_hoodie_commit_time`, `_hoodie_record_key`,
     `_hoodie_partition_path` stored in every data file.
 """
@@ -60,6 +63,7 @@ from .lsm_store import (
     TOMBSTONE,
     live_rows,
     merge_commits,
+    read_commit_file,
     read_json,
     write_commit,
     write_json,
@@ -186,36 +190,40 @@ class HudiTableStore:
         )
 
     # -- file slices ---------------------------------------------------------
-    def _write(self, table: str, name: str, rows: DataFrame) -> int:
-        """Write one file slice and return its row count, observed on the
-        write."""
+    def _write(self, table: str, name: str, rows: DataFrame) -> dict:
+        """Write one file slice; returns the instant fields that describe
+        it: the file, its row count (observed on the write) and the schema
+        it was written with, which a read opens it with."""
         got = write_commit(
             rows, os.path.join(self._dir(table), name), [META_RECORD_KEY],
             _precombine(), [_BUCKET], [F.count(F.lit(1)).alias("n")],
         )
-        return got["n"]
+        return {"records": got["n"], "file": name, "schema": rows.schema.json()}
 
     def _slices(self, table: str) -> list:
         """What a read merges, each with its instant: the latest base slice
-        (a COW commit or a MOR compaction) and the logs after it."""
+        (a COW commit or a MOR compaction) and the logs after it, each
+        opened with the schema its instant recorded (an instant written
+        before schemas were recorded has none: Spark infers it)."""
         ddir = self._dir(table)
         path = lambda kind, i: os.path.join(ddir, f"{kind}-{i:08d}")
-        instants = self._instants(table)
+        written = {t["instant"]: t.get("schema") for t in self.timeline(table)}
         floor = max(
-            (i for i in instants if os.path.isdir(path("base", i))), default=0
+            (i for i in written if os.path.isdir(path("base", i))), default=0
         )
         slices = [("base", floor)] if floor else []
         slices += [
-            ("log", i) for i in instants
+            ("log", i) for i in sorted(written)
             if i > floor and os.path.isdir(path("log", i))
         ]
-        return [(self.spark.read.parquet(path(k, i)), i) for k, i in slices]
+        return [(read_commit_file(self.spark, path(k, i), written[i]), i)
+                for k, i in slices]
 
-    def _compact(self, table: str, instant: int, parts) -> int:
+    def _compact(self, table: str, instant: int, parts) -> dict:
         """Merge ``parts`` into base slice ``instant``, tombstones and
-        ordering values kept; returns its row count. A lone part is
-        written unmerged, so the slice write's own precombine reduces a
-        first COW batch to one row per key."""
+        ordering values kept; returns the slice's instant fields. A lone
+        part is written unmerged, so the slice write's own precombine
+        reduces a first COW batch to one row per key."""
         merged = merge_commits(parts, [META_RECORD_KEY], *_precombine(COMMIT))
         return self._write(table, f"base-{instant:08d}", merged.drop(COMMIT))
 
@@ -256,16 +264,16 @@ class HudiTableStore:
             F.col(ENVELOPE_SEQ),
         )
         if props["hoodie.table.type"] == MERGE_ON_READ:
-            name, action = f"log-{instant:08d}", "deltacommit"
-            count = self._write(table, name, rows)
+            action = "deltacommit"
+            written = self._write(table, f"log-{instant:08d}", rows)
         else:
             # COPY_ON_WRITE: rewrite the file slice with the batch merged
             # in (classic COW write amplification)
-            name, action = f"base-{instant:08d}", "commit"
-            count = self._compact(
+            action = "commit"
+            written = self._compact(
                 table, instant, self._slices(table) + [(rows, instant)]
             )
-        self._write_instant(table, instant, action, {"records": count, "file": name})
+        self._write_instant(table, instant, action, written)
         return instant
 
     def compact(self, table: str) -> int:
@@ -281,11 +289,9 @@ class HudiTableStore:
         if not parts:
             return 0
         instant = self._next_instant(table)
-        count = self._compact(table, instant, parts)
         self._write_instant(
             table, instant, "commit",
-            {"records": count, "file": f"base-{instant:08d}",
-             "operation": "compaction"},
+            {**self._compact(table, instant, parts), "operation": "compaction"},
         )
         return instant
 

@@ -67,13 +67,14 @@ from ..core.events import (
     RenameColumnEvent,
     TruncateTableEvent,
 )
+from ..core.sql_text import quote, sql_type
 from ..core.types import to_spark_type
 from ..sources.envelope import (
     ENVELOPE_OP,
     ENVELOPE_SEQ,
     OP_DELETE,
+    ROW_IMAGE_SQL,
     first_per_key,
-    row_image,
 )
 
 TOMBSTONE = "__deleted"
@@ -142,13 +143,15 @@ def project(df: DataFrame, struct: T.StructType, source=None) -> DataFrame:
     cols = []
     for f in struct.fields:
         src = (source or {}).get(f.name, f.name)
-        if have.get(src) == f.dataType and src == f.name:
-            cols.append(F.col(src))  # no-op cast elided
+        if have.get(src) == f.dataType:
+            # no-op cast elided
+            cols.append(quote(src) if src == f.name
+                        else f"{quote(src)} AS {quote(f.name)}")
         elif src in have:
-            cols.append(F.col(src).cast(f.dataType).alias(f.name))
+            cols.append(f"CAST({quote(src)} AS {sql_type(f.dataType)}) AS {quote(f.name)}")
         else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return df.select(*cols, F.col(TOMBSTONE), F.col(ENVELOPE_SEQ))
+            cols.append(f"CAST(NULL AS {sql_type(f.dataType)}) AS {quote(f.name)}")
+    return df.selectExpr(*cols, quote(TOMBSTONE), quote(ENVELOPE_SEQ))
 
 
 def merge_commits(parts, keys, *order) -> DataFrame:
@@ -177,16 +180,14 @@ def newest_first():
 def live_rows(merged: DataFrame, names) -> DataFrame:
     """The rows a merge-on-read returns: tombstones dropped, ``names``
     kept."""
-    return merged.where(~F.col(TOMBSTONE)).select(*names)
+    return merged.where(f"NOT {quote(TOMBSTONE)}").selectExpr(*map(quote, names))
 
 
 def base_rows(state: DataFrame) -> DataFrame:
     """A merged live state as commit-file rows for a compacted base: no
     tombstones, and a sequence below every change."""
-    return state.select(
-        *[F.col(c) for c in state.columns],
-        F.lit(False).alias(TOMBSTONE),
-        F.lit(-1).cast("long").alias(ENVELOPE_SEQ),
+    return state.selectExpr(
+        "*", f"false AS {quote(TOMBSTONE)}", f"CAST(-1 AS BIGINT) AS {quote(ENVELOPE_SEQ)}"
     )
 
 
@@ -380,11 +381,11 @@ class LsmStateStore:
         # bake NULLs into the base (wave-12 widening trials). Forward
         # path: the translation is the identity.
         out_names = [mapping.get(c, c) for c in payload_cols]
-        img = row_image()
-        rows = env.select(
-            *[img[c].alias(n) for c, n in zip(payload_cols, out_names)],
-            (F.col(ENVELOPE_OP) == OP_DELETE).alias(TOMBSTONE),
-            F.col(ENVELOPE_SEQ).alias(ENVELOPE_SEQ),
+        rows = env.selectExpr(
+            *[f"{ROW_IMAGE_SQL}.{quote(c)} AS {quote(n)}"
+              for c, n in zip(payload_cols, out_names)],
+            f"{quote(ENVELOPE_OP)} = '{OP_DELETE}' AS {quote(TOMBSTONE)}",
+            quote(ENVELOPE_SEQ),
         )
         cid = m["next"]
         write_commit(
@@ -432,8 +433,8 @@ class LsmStateStore:
         for event in renames:
             ev_map = dict(event)
             if any(old in df.columns for old in ev_map):
-                df = df.select(
-                    *[F.col(c).alias(ev_map.get(c, c)) for c in df.columns]
+                df = df.selectExpr(
+                    *[f"{quote(c)} AS {quote(ev_map.get(c, c))}" for c in df.columns]
                 )
         return project(df, schema_struct)
 
@@ -469,7 +470,7 @@ class LsmStateStore:
         for name, renames, written, commit in files:
             df = self._read_commit(os.path.join(self._dir(table), name),
                                    renames, schema_struct, written)
-            parts.append((df.where(F.expr(predicate)) if predicate else df, commit))
+            parts.append((df.where(predicate) if predicate else df, commit))
         if not parts:
             # truncated (or never written): an empty table with the schema
             return self.spark.createDataFrame([], schema_struct)

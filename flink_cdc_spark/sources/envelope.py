@@ -20,6 +20,7 @@ is its only implementation; stores, sinks and carry machines import it:
 
     row_image()       the image a keyed consumer writes or keys on —
                       ``before`` for a DELETE, ``after`` otherwise
+                      (``ROW_IMAGE_SQL`` is its SQL text)
     first_per_key()   the one ``row_number() = 1`` window: one row per key,
                       the first under the given order
     from_images()     the envelope a keyed sink's records decode to — a
@@ -32,6 +33,8 @@ from typing import Sequence, Union
 
 from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
+from ..core.sql_text import quote
+
 ENVELOPE_TABLE_ID = "__table_id"
 ENVELOPE_OP = "__op"
 ENVELOPE_META = "__meta"
@@ -43,6 +46,11 @@ OP_DELETE = "DELETE"
 OP_REPLACE = "REPLACE"
 
 ENVELOPE_SYSTEM_COLUMNS = [ENVELOPE_TABLE_ID, ENVELOPE_OP, "before", "after", ENVELOPE_META, ENVELOPE_SEQ]
+
+# row_image() as SQL text, for plans built from strings
+ROW_IMAGE_SQL = (
+    f"(CASE WHEN {quote(ENVELOPE_OP)} = '{OP_DELETE}' THEN `before` ELSE `after` END)"
+)
 
 
 def envelope_schema(payload: T.StructType) -> T.StructType:
@@ -71,10 +79,21 @@ def payload_struct(df: DataFrame) -> T.StructType:
     raise ValueError("Not an envelope DataFrame (no 'after' column)")
 
 
+def select_envelope(df: DataFrame, parts: dict, *extra: str) -> DataFrame:
+    """One ``selectExpr`` over an envelope frame: the six envelope columns
+    in order, each from the SQL text ``parts`` maps its name to (or the
+    column itself), then the ``extra`` expressions."""
+    return df.selectExpr(
+        *[f"{parts[c]} AS {quote(c)}" if c in parts else quote(c)
+          for c in ENVELOPE_SYSTEM_COLUMNS],
+        *extra,
+    )
+
+
 def row_image() -> Column:
     """The image a keyed consumer writes or keys on: ``before`` for a
     DELETE, ``after`` for every other op."""
-    return F.when(F.col(ENVELOPE_OP) == OP_DELETE, F.col("before")).otherwise(F.col("after"))
+    return F.expr(ROW_IMAGE_SQL)
 
 
 def first_per_key(

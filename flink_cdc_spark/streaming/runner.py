@@ -25,6 +25,15 @@ segment's; otherwise a presence pass (one ``groupBy`` over segment and
 table) assigns tables to segments. The collect also fills the batch cache,
 so each table's delta write that follows is the epoch's only other job.
 
+The epoch's plans are rebuilt every epoch from SQL text: the control
+job, the wire decode (``from_json`` with the source schema as DDL text),
+the transform, the coercion and the LSM row-image select are each one
+``where`` / ``selectExpr`` over strings. A plan of ``Column`` objects
+costs one or more driver→JVM calls per field and operator, which at a
+few thousand calls was the largest fixed cost of a small epoch; as text
+an epoch takes a few dozen. Nothing is cached per schema version: most
+epochs of an evolving stream change the schema anyway.
+
 Per-key ordering under shuffle: a delta commit keeps every change with its
 wire sequence number, the merge-on-read window orders by (commit, sequence)
 and existing state sorts below every new commit, so last-image-per-key is
@@ -42,6 +51,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from ..core.sql_text import quote, sql_string, sql_type
 from ..core.table_id import TableId
 from ..pipeline.composer import PipelineFront
 from ..pipeline.definition import PipelineDef
@@ -139,7 +149,7 @@ class StreamingPipelineRunner:
         # plane driver-side, but the scans must all hit the cached batch).
         batch = batch.cache()
         try:
-            is_data = F.col("kind") == KIND_DATA
+            is_data = f"kind = '{KIND_DATA}'"
             data = batch.where(is_data)
             if self.parallel_metadata:
                 self._reduce_batch_schemas(data)
@@ -149,12 +159,12 @@ class StreamingPipelineRunner:
             ddl_rows = sorted(
                 batch.observe(
                     seen,
-                    F.collect_set(F.when(is_data, F.col("table_id"))).alias("tables"),
-                    F.min(F.when(is_data, F.col("seq"))).alias("lo"),
-                    F.max(F.when(is_data, F.col("seq"))).alias("hi"),
+                    F.expr(f"collect_set(CASE WHEN {is_data} THEN table_id END) AS tables"),
+                    F.expr(f"min(CASE WHEN {is_data} THEN seq END) AS lo"),
+                    F.expr(f"max(CASE WHEN {is_data} THEN seq END) AS hi"),
                 )
-                .where(F.col("kind") == KIND_DDL)
-                .select("table_id", "seq", "ddl")
+                .where(f"kind = '{KIND_DDL}'")
+                .selectExpr("table_id", "seq", "ddl")
                 .collect(),
                 key=lambda r: r.seq,
             )
@@ -169,12 +179,10 @@ class StreamingPipelineRunner:
                         else self._presence(data, bounds))
             for i, ddl_row in enumerate(ddl_rows + [None]):
                 if presence.get(i):
-                    seg = data
-                    if i > 0:
-                        seg = seg.where(F.col("seq") > bounds[i - 1])
-                    if i < len(bounds):
-                        seg = seg.where(F.col("seq") < bounds[i])
-                    self._merge_segment(seg, tables=presence[i])
+                    seg = ([f"seq > {bounds[i - 1]}"] if i > 0 else []) + (
+                        [f"seq < {bounds[i]}"] if i < len(bounds) else [])
+                    self._merge_segment(data.where(" AND ".join(seg)) if seg else data,
+                                        tables=presence[i])
                 if ddl_row is not None:
                     self._apply_ddl(self._decode_ddl(ddl_row))
         finally:
@@ -187,12 +195,11 @@ class StreamingPipelineRunner:
         segment). Control and data records never share a seq (control
         sits below the per-slice data band), so strict < comparisons
         assign segments exactly."""
-        seg_no = F.when(F.col("seq") < F.lit(bounds[0]), 0)
-        for i, b in enumerate(bounds[1:], 1):
-            seg_no = seg_no.when(F.col("seq") < F.lit(b), i)
+        seg_no = " ".join(f"WHEN seq < {b} THEN {i}" for i, b in enumerate(bounds))
         presence: dict = {}
         for r in (
-            data.groupBy(seg_no.otherwise(len(bounds)).alias("seg_no"), "table_id")
+            data.groupBy(F.expr(f"CASE {seg_no} ELSE {len(bounds)} END AS seg_no"),
+                         "table_id")
             .count().collect()
         ):
             presence.setdefault(r.seg_no, []).append(r.table_id)
@@ -263,20 +270,22 @@ class StreamingPipelineRunner:
         self.front.apply_sink_ddl(self.state, event)
 
     def _merge_segment(self, seg: DataFrame, tables) -> None:
+        """Merge each table's rows of the segment: one ``where`` and one
+        decoding ``selectExpr``, then the transform and the sink path."""
         for table in sorted(tables):
             tid = TableId.parse(table)
             schema = self.front.source_schema(tid)
             if schema is None:
                 raise ValueError(f"Data before CreateTableEvent for {table}")
-            payload = schema.to_spark_struct()
-            rows = seg.where(F.col("table_id") == table)
-            env = rows.select(
-                F.col("table_id").alias(ENVELOPE_TABLE_ID),
-                F.col("op").alias(ENVELOPE_OP),
-                F.from_json("before", payload).alias("before"),
-                F.from_json("after", payload).alias("after"),
-                F.col("meta").alias(ENVELOPE_META),
-                F.col("seq").alias(ENVELOPE_SEQ),
+            payload = sql_string(sql_type(schema.to_spark_struct()))
+            rows = seg.where(f"table_id = {sql_string(table)}")
+            env = rows.selectExpr(
+                f"table_id AS {quote(ENVELOPE_TABLE_ID)}",
+                f"op AS {quote(ENVELOPE_OP)}",
+                f"from_json(before, {payload}) AS before",
+                f"from_json(after, {payload}) AS after",
+                f"meta AS {quote(ENVELOPE_META)}",
+                f"seq AS {quote(ENVELOPE_SEQ)}",
             )
             env = self.front.transform(tid, env, schema)
             # data decodes with the *current* source schema, so no rename

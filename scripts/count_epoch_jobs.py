@@ -1,4 +1,5 @@
-"""Count the Spark jobs, stages and tasks of one timed perfbench pass.
+"""Count the Spark jobs, stages, tasks and py4j round trips of one timed
+perfbench pass.
 
     python scripts/count_epoch_jobs.py WORKLOAD [--seed N]
 
@@ -13,9 +14,17 @@ do not move with host contention, so they compare two trees where wall
 times cannot. The pass's final state is checked against DuckDB as in a
 benchmark run.
 
+Driver→JVM py4j round trips are counted in this process too: py4j's
+``ClientServerConnection.send_command`` is wrapped, and a call made on
+the thread of a ``foreachBatch`` callback counts toward that batch. Every
+other call (query start and stop, listener callbacks, reads) counts
+outside the epochs. Like job counts, they do not move with host load;
+they measure the driver-side cost of building each epoch's plans.
+
 The last line of standard output is one JSON object: ``workload``,
 ``seed``, ``correct``, ``total`` and ``epochs`` (``{batch: [jobs, stages,
-tasks]}``, empty for workloads with no streaming query).
+tasks]}``, empty for workloads with no streaming query), and
+``round_trips`` (``{"total": n, "epochs": {batch: n}}``).
 """
 
 from __future__ import annotations
@@ -26,6 +35,8 @@ import os
 import re
 import shutil
 import sys
+import threading
+from collections import Counter
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _BATCH = re.compile(r"^batch = (\d+)$", re.M)
@@ -49,6 +60,47 @@ def jobs_by_id(spark) -> dict:
             j.numCompletedTasks() + j.numFailedTasks() + j.numKilledTasks(),
         )
     return out
+
+
+class RoundTrips:
+    """Driver→JVM py4j round trips of this process, keyed by the
+    ``foreachBatch`` batch whose callback thread made them (``None`` for
+    every other call). ``install`` wraps py4j's ``send_command`` and
+    PySpark's ``DataStreamWriter.foreachBatch``; it must run before the
+    streaming queries start."""
+
+    def __init__(self):
+        self.counts: Counter = Counter()
+        self._lock = threading.Lock()
+        self._local = threading.local()
+
+    def install(self) -> None:
+        from py4j.clientserver import ClientServerConnection
+        from pyspark.sql.streaming import DataStreamWriter
+
+        send, foreach = ClientServerConnection.send_command, DataStreamWriter.foreachBatch
+        counts, lock, local = self.counts, self._lock, self._local
+
+        def send_command(conn, command):
+            with lock:
+                counts[getattr(local, "batch", None)] += 1
+            return send(conn, command)
+
+        def foreach_batch(writer, func):
+            def call(df, batch_id):
+                local.batch = batch_id
+                try:
+                    return func(df, batch_id)
+                finally:
+                    local.batch = None
+            return foreach(writer, call)
+
+        ClientServerConnection.send_command = send_command
+        DataStreamWriter.foreachBatch = foreach_batch
+
+    def snapshot(self) -> Counter:
+        with self._lock:
+            return Counter(self.counts)
 
 
 def census(jobs) -> tuple:
@@ -85,6 +137,8 @@ def main(argv=None) -> int:
             ap.error(f"WORKLOAD must be one of {', '.join(sorted(WORKLOADS))}")
         cls = WORKLOADS[args.workload]
         spark = harness.start_spark()
+        trips = RoundTrips()
+        trips.install()
         wl = None
         try:
             listener = harness.EpochListener()
@@ -97,7 +151,9 @@ def main(argv=None) -> int:
             pass_dir = os.path.join(work_dir, "pass1")
             os.makedirs(pass_dir)
             before = set(jobs_by_id(spark))
+            trips_before = trips.snapshot()
             wl.run_pass(pass_dir, None)
+            pass_trips = trips.snapshot() - trips_before
             after = jobs_by_id(spark)
             correct = wl.output_digest(con, pass_dir) == expected
             con.close()
@@ -110,15 +166,23 @@ def main(argv=None) -> int:
 
     total, epochs = census(v for k, v in sorted(after.items()) if k not in before)
     outside = epochs.pop(None, None)
-    for batch in sorted(epochs):
-        print(f"epoch {batch}: jobs/stages/tasks {'/'.join(map(str, epochs[batch]))}")
-    if outside:
-        print(f"outside epochs: jobs/stages/tasks {'/'.join(map(str, outside))}")
-    print(f"total: jobs/stages/tasks {'/'.join(map(str, total))}, correct={correct}")
+    epoch_trips = {b: n for b, n in pass_trips.items() if b is not None}
+    for batch in sorted(set(epochs) | set(epoch_trips)):
+        counts = "/".join(map(str, epochs.get(batch, [0, 0, 0])))
+        print(f"epoch {batch}: jobs/stages/tasks {counts}, "
+              f"py4j round trips {epoch_trips.get(batch, 0)}")
+    if outside or pass_trips[None]:
+        counts = "/".join(map(str, outside or [0, 0, 0]))
+        print(f"outside epochs: jobs/stages/tasks {counts}, "
+              f"py4j round trips {pass_trips[None]}")
+    n_trips = sum(pass_trips.values())
+    print(f"total: jobs/stages/tasks {'/'.join(map(str, total))}, "
+          f"py4j round trips {n_trips}, correct={correct}")
     print(json.dumps({
         "workload": args.workload, "seed": args.seed, "correct": correct,
         "total": total, "epochs": epochs,
         **({"outside": outside} if outside else {}),
+        "round_trips": {"total": n_trips, "epochs": epoch_trips},
     }))
     return 0 if correct else 1
 

@@ -86,6 +86,34 @@ def test_mor_upsert_delete_roundtrip(spark, tmp_path):
     assert [t["instant"] for t in tl] == [1, 2]
 
 
+def test_slices_read_with_recorded_schemas_or_inferred(spark, tmp_path):
+    """Every instant records the schema its slice was written with, and a
+    read opens the slice with it. A timeline from before instants
+    recorded schemas still reads, with Spark inferring each slice's."""
+    import json
+
+    st = _store(spark, tmp_path, table_type=MERGE_ON_READ)
+    st.upsert("db.t", _batch(spark, [
+        ("db.t", "INSERT", None, (1, "a", 1), {}, 1),
+        ("db.t", "INSERT", None, (2, "b", 1), {}, 2),
+    ]), PAYLOAD)
+    st.compact("db.t")
+    st.upsert("db.t", _batch(spark, [
+        ("db.t", "UPDATE", (1, "a", 1), (1, "a2", 2), {}, 3),
+        ("db.t", "DELETE", (2, "b", 1), None, {}, 4),
+    ]), PAYLOAD)
+    want = {(1, "a2", 2)}
+    assert {tuple(r) for r in st.read("db.t").collect()} == want
+    hoodie = tmp_path / "hudi" / "db.t" / ".hoodie"
+    instants = sorted(p for p in hoodie.iterdir() if p.suffix in (".commit", ".deltacommit"))
+    assert len(instants) == 3
+    for path in instants:
+        instant = json.loads(path.read_text())
+        assert "_hoodie_record_key" in instant.pop("schema")
+        path.write_text(json.dumps(instant))
+    assert {tuple(r) for r in st.read("db.t").collect()} == want
+
+
 def test_precombine_ordering_field_wins_over_arrival(spark, tmp_path):
     st = _store(spark, tmp_path, ordering_field="ord")
     # second arrival has a LOWER ordering value -> first must win

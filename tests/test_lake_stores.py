@@ -117,7 +117,9 @@ def test_store_job_counts_are_pinned(spark, tmp_path):
     identity partition spec) and per Hudi upsert / read / compact. Post-
     write counts and partition values are observed on the write, so no
     commit re-reads what it wrote; an Iceberg read opens each file with
-    the schema its manifest recorded, so it runs no inference job."""
+    the schema its manifest recorded and a Hudi read each slice with the
+    schema its timeline instant recorded, so neither runs an inference
+    job."""
     b1, b2 = _batches(spark)
     got = {}
     for parts in ((), ("name",)):
@@ -142,8 +144,8 @@ def test_store_job_counts_are_pinned(spark, tmp_path):
     assert got == {
         "iceberg": [4, 4, 2, 2],
         "iceberg-part": [4, 4, 2, 2],
-        f"hudi-{MERGE_ON_READ}": [2, 2, 4, 4],
-        f"hudi-{COPY_ON_WRITE}": [2, 3, 2, 0],
+        f"hudi-{MERGE_ON_READ}": [2, 2, 2, 2],
+        f"hudi-{COPY_ON_WRITE}": [2, 2, 1, 0],
     }, got
 
 

@@ -552,3 +552,82 @@ def test_epoch_job_counts_are_pinned(spark, tmp_path, monkeypatch):
     assert rows == {1: 11.0, 3: 3.0, 4: 4.0}
     got = [(r.id, r.name, r.age) for r in runner.state.read("db.t2").collect()]
     assert got == [(10, "x", 7)]
+
+
+def test_epoch_round_trips_are_bounded(spark, tmp_path, monkeypatch):
+    """Driver→JVM py4j round trips per ``process_batch``, counted on the
+    thread running the callback, through a transform with a computed
+    column and a filter. Each stage of the epoch's plan (the control job,
+    the wire decode, the transform, the coercion, the LSM row-image
+    select) is SQL text applied with one call, so an epoch costs tens of
+    round trips, not several per field: built from ``Column`` objects,
+    these four epochs took 1,900-2,100 each. Upper bounds, not exact
+    counts, so a PySpark patch release does not break it."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    t1 = TableId.parse("db.t1")
+    create = CreateTableEvent(t1, SCHEMA_V1)
+    add_age = AddColumnEvent.last(t1, Column("age", ct.int_()))
+    files = [
+        # DDL: the CREATE ahead of its data (id 7 is filtered out)
+        [create] + [DataChangeEvent.insert(t1, (i, n, float(i)))
+                    for i, n in ((1, "a"), (2, "b"), (7, "x"))],
+        # ordinary
+        [DataChangeEvent.update(t1, (1, "a", 1.0), (1, "a1", 10.0)),
+         DataChangeEvent.delete(t1, (2, "b", 2.0)),
+         DataChangeEvent.insert(t1, (3, "c", 3.0))],
+        # DDL: ADD COLUMN ahead of data that sets it
+        [add_age,
+         DataChangeEvent.insert(t1, (4, "d", 4.0, 40)),
+         DataChangeEvent.update(t1, (1, "a1", 10.0, None), (1, "a1", 11.0, 5))],
+        # ordinary
+        [DataChangeEvent.update(t1, (3, "c", 3.0, None), (3, "c2", 3.0, 30)),
+         DataChangeEvent.delete(t1, (4, "d", 4.0, 40))],
+    ]
+    send, process_batch = ClientServerConnection.send_command, StreamingPipelineRunner.process_batch
+    local = threading.local()
+    trips = []
+
+    def send_command(conn, command):
+        if getattr(local, "counting", False):
+            trips[-1] += 1
+        return send(conn, command)
+
+    def counted(self, batch, batch_id):
+        trips.append(0)
+        local.counting = True
+        try:
+            process_batch(self, batch, batch_id)
+        finally:
+            local.counting = False
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", send_command)
+    monkeypatch.setattr(StreamingPipelineRunner, "process_batch", counted)
+    src = tmp_path / "src"
+    src.mkdir()
+    runner = _runner(spark, tmp_path, """
+source: {type: wire}
+sink: {type: state}
+transform:
+  - source-table: db.t1
+    projection: "*, UPPER(name) AS name_uc"
+    filter: "id <> 7"
+pipeline: {schema.change.behavior: EVOLVE}
+""")
+    known, seq = [], 0
+    for i, events in enumerate(files):
+        # the DDL of earlier files only gives the encoder its schemas
+        lines = events_to_wire_lines(known + events, seq)[len(known):]
+        (src / f"f{i}.json").write_text("\n".join(lines) + "\n")
+        seq += len(known) + len(events)
+        known += [e for e in events if not isinstance(e, DataChangeEvent)]
+        runner.run_available(str(src))
+    assert len(trips) == 4, trips
+    ddl_epochs, ordinary = trips[0::2], trips[1::2]
+    assert all(n <= 300 for n in ddl_epochs), trips
+    assert all(n <= 200 for n in ordinary), trips
+    got = {(r.id, r.name, r.score, r.name_uc, r.age)
+           for r in runner.state.read("db.t1").collect()}
+    assert got == {(1, "a1", 11.0, "A1", 5), (3, "c2", 3.0, "C2", 30)}
