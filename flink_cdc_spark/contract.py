@@ -3205,6 +3205,7 @@ def jdbc_warehouse_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     from .sinks.jdbc_sink import JdbcWarehouseSink
     from .sources.envelope import ENVELOPE_SEQ
     from .sources.jdbc_live import derby_url
+    from .sources.parquet_source import UPDATE_BAND
 
     pin_session(spark)
     src = ParquetTableSource(spark, sf_dir)
@@ -3219,8 +3220,8 @@ def jdbc_warehouse_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
         sink.apply_schema_change(CreateTableEvent(tid, schema))
         full = src.changelog("customer", "wh.customer", mutations=_WH_SPEC)
         # batch 1: the snapshot inserts; batch 2: the mutation tail
-        sink.write_batch(tid, full.where(F.col(ENVELOPE_SEQ) < (1 << 41)), schema)
-        sink.write_batch(tid, full.where(F.col(ENVELOPE_SEQ) >= (1 << 41)), schema)
+        sink.write_batch(tid, full.where(F.col(ENVELOPE_SEQ) < UPDATE_BAND), schema)
+        sink.write_batch(tid, full.where(F.col(ENVELOPE_SEQ) >= UPDATE_BAND), schema)
         result = sink.read_table(tid).select(
             "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"
         )

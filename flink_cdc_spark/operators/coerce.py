@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, types as T
 
-from ..core.sql_text import quote, sql_string, sql_type
+from ..core.sql_text import named_struct, quote, sql_type
 from ..sources.envelope import payload_struct, select_envelope
 
 
@@ -38,8 +38,7 @@ def coerce_envelope_payload(
                 value = f"{quote(name)}.{quote(src)}"
             else:
                 value = f"CAST({quote(name)}.{quote(src)} AS {sql_type(f_.dataType)})"
-            fields.append(f"{sql_string(f_.name)}, {value}")
-        return (f"CASE WHEN {quote(name)} IS NOT NULL "
-                f"THEN named_struct({', '.join(fields)}) END")
+            fields.append((f_.name, value))
+        return f"CASE WHEN {quote(name)} IS NOT NULL THEN {named_struct(fields)} END"
 
     return select_envelope(df, {"before": image("before"), "after": image("after")})

@@ -39,7 +39,7 @@ from ..core.schema import Schema
 from ..core.selectors import Selectors
 from ..core.table_id import TableId
 from ..core import types as ct
-from ..core.sql_text import quote, sql_string
+from ..core.sql_text import ddl_exact, named_struct, quote, sql_string, sql_type
 from ..expressions.compiler import (
     CompileError,
     ExpressionCompiler,
@@ -273,10 +273,8 @@ class TransformProcessor:
     def _image_sql(self, image: str) -> str:
         """The projected image: a ``named_struct`` of the compiled
         projection, NULL where the input image is."""
-        fields = ", ".join(
-            f"{sql_string(name)}, {sql}" for name, sql in self._proj_sql[image]
-        )
-        return f"CASE WHEN {quote(image)} IS NOT NULL THEN named_struct({fields}) END"
+        return (f"CASE WHEN {quote(image)} IS NOT NULL "
+                f"THEN {named_struct(self._proj_sql[image])} END")
 
     def apply(self, df: DataFrame) -> DataFrame:
         """Apply projection + filter + update-splitting to an envelope frame."""
@@ -325,12 +323,15 @@ class TransformProcessor:
 
     # -- output schema -------------------------------------------------------------
     def _deduce_output_types(self) -> dict:
-        """Computed-column types via Catalyst: plan the projection over an
-        empty envelope frame and read the analyzed schema (the analog of
+        """Computed-column types via Catalyst: plan the projection over
+        typed-NULL envelope columns selected from ``spark.range(0)`` (no
+        rows) and read the analyzed schema (the analog of
         TransformParser.deduceSubExpressionType via Calcite RelNode types,
         runtime/parser/TransformParser.java:753 — Spark's analyzer is the
-        type checker here)."""
-        from pyspark.sql import SparkSession
+        type checker here). The NULLs are cast to DDL text, or, when DDL
+        cannot state the payload (non-null array elements or map values),
+        to its ``StructType`` — which costs ~30 more driver→JVM calls."""
+        from pyspark.sql import SparkSession, functions as F
 
         from ..sources.envelope import envelope_schema
 
@@ -341,8 +342,17 @@ class TransformProcessor:
             [T.StructField(f.name, f.dataType, True) for f in self.payload.fields]
         )
         try:
-            empty = spark.createDataFrame([], envelope_schema(nullable_payload))
-            analyzed = empty.selectExpr(
+            envelope = envelope_schema(nullable_payload)
+            if ddl_exact(envelope):
+                row = spark.range(0).selectExpr(*[
+                    f"CAST(NULL AS {sql_type(f.dataType)}) AS {quote(f.name)}"
+                    for f in envelope.fields
+                ])
+            else:
+                row = spark.range(0).select(
+                    F.lit(None).cast(envelope).alias("e")
+                ).selectExpr("e.*")
+            analyzed = row.selectExpr(
                 *[f"{sql} AS {quote(name)}" for name, sql in self._proj_sql["after"]]
             ).schema
             return {f.name: ct.from_spark_type(f.dataType) for f in analyzed.fields}

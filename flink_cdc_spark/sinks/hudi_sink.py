@@ -57,6 +57,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.functions import pandas_udf
 
+from ..core.sql_text import quote
 from ..sources.envelope import ENVELOPE_OP, ENVELOPE_SEQ, OP_DELETE, row_image
 from .lsm_store import (
     COMMIT,
@@ -82,7 +83,7 @@ MERGE_ON_READ = "MERGE_ON_READ"
 def _precombine(*by):
     """Precombine order: the highest ordering value first, then ``by``
     (the instant, when merging slices), then the later change."""
-    return [F.col(c).desc() for c in (_ORDERING, *by, ENVELOPE_SEQ)]
+    return [f"{quote(c)} DESC" for c in (_ORDERING, *by, ENVELOPE_SEQ)]
 
 
 def _java_string_hash(s: str) -> int:
@@ -195,7 +196,7 @@ class HudiTableStore:
         it: the file, its row count (observed on the write) and the schema
         it was written with, which a read opens it with."""
         got = write_commit(
-            rows, os.path.join(self._dir(table), name), [META_RECORD_KEY],
+            rows, os.path.join(self._dir(table), name), [quote(META_RECORD_KEY)],
             _precombine(), [_BUCKET], [F.count(F.lit(1)).alias("n")],
         )
         return {"records": got["n"], "file": name, "schema": rows.schema.json()}
@@ -224,7 +225,7 @@ class HudiTableStore:
         ordering values kept; returns the slice's instant fields. A lone
         part is written unmerged, so the slice write's own precombine
         reduces a first COW batch to one row per key."""
-        merged = merge_commits(parts, [META_RECORD_KEY], *_precombine(COMMIT))
+        merged = merge_commits(parts, [quote(META_RECORD_KEY)], *_precombine(COMMIT))
         return self._write(table, f"base-{instant:08d}", merged.drop(COMMIT))
 
     # -- write path ---------------------------------------------------------
@@ -307,7 +308,7 @@ class HudiTableStore:
         if not parts:
             return self.spark.createDataFrame([], struct)
         return live_rows(
-            merge_commits(parts, [META_RECORD_KEY], *_precombine(COMMIT)),
+            merge_commits(parts, [quote(META_RECORD_KEY)], *_precombine(COMMIT)),
             struct.fieldNames(),
         )
 

@@ -46,6 +46,7 @@ from typing import Dict, List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from ..core.sql_text import quote
 from ..sources.envelope import (
     ENVELOPE_OP,
     ENVELOPE_SEQ,
@@ -215,7 +216,8 @@ class IcebergTableStore:
         — observed on the write."""
         path = os.path.join(self._dir(table), "data", name)
         got = write_commit(
-            rows, path, keys, [F.col(ENVELOPE_SEQ).desc()], parts,
+            rows, path, [quote(k) for k in keys],
+            [f"{quote(ENVELOPE_SEQ)} DESC"], parts,
             [F.count_if(counted).alias("__n")] + [
                 F.collect_set(F.when(counted, F.col(p))).alias(p) for p in parts
             ],
@@ -404,7 +406,8 @@ class IcebergTableStore:
         if not parts:  # no snapshot, truncated, or every file pruned
             return self.spark.createDataFrame([], read_struct)
         return live_rows(
-            merge_commits(parts, self._keys(meta, schema), *newest_first()),
+            merge_commits(parts, [quote(k) for k in self._keys(meta, schema)],
+                          *newest_first()),
             read_struct.fieldNames(),
         )
 

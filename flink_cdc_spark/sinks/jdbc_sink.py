@@ -36,6 +36,7 @@ from ..core.events import (
     TruncateTableEvent,
 )
 from ..core.schema import Schema
+from ..core.sql_text import quote
 from ..sources.envelope import (
     ENVELOPE_OP,
     ENVELOPE_SEQ,
@@ -170,7 +171,7 @@ class JdbcWarehouseSink:
             .alias("__op_flag"),
             F.col(ENVELOPE_SEQ).alias("__seq_tmp"),
         )
-        reduced = first_per_key(rows, pks, F.col("__seq_tmp").desc()).select(
+        reduced = first_per_key(rows, [quote(k) for k in pks], "`__seq_tmp` DESC").select(
             *[F.col(c).alias(c.upper()) for c in cols],
             F.col("__op_flag").alias("OP_FLAG"),
         )

@@ -104,10 +104,11 @@ def write_commit(rows: DataFrame, path: str, keys=(), order=(),
                  partition_by=(), metrics=()) -> dict:
     """Write one commit file: payload images + ``__deleted`` + ``__seq``
     (plus any columns a format keeps). With ``keys``, one row per key —
-    the first under ``order``. ``partition_by`` lays the file out
-    hive-partitioned. ``metrics`` (aggregate columns) are observed on the
-    rows as they are written and returned by alias, so post-write counts
-    cost no second read."""
+    the first under ``order`` (both SQL text, as ``first_per_key``
+    takes them). ``partition_by`` lays the file out hive-partitioned.
+    ``metrics`` (aggregate columns) are observed on the rows as they are
+    written and returned by alias, so post-write counts cost no second
+    read."""
     if keys:
         rows = first_per_key(rows, keys, *order)
     obs = Observation() if metrics else None
@@ -158,8 +159,9 @@ def merge_commits(parts, keys, *order) -> DataFrame:
     """Merge-on-read over commit files: ``parts`` is ``[(frame, commit
     number)]``; each frame is tagged with its number as ``__commit``, the
     frames are unioned, and one window keeps the first row per key under
-    ``order``. A single part skips the window: it must be one row per key
-    (a ``write_commit`` with ``keys``, or a compacted base). Tombstones
+    ``order`` (``keys`` and ``order`` are SQL text, as ``first_per_key``
+    takes them). A single part skips the window: it must be one row per
+    key (a ``write_commit`` with ``keys``, or a compacted base). Tombstones
     stay in the result: a read drops them (``live_rows``); a compaction
     that must keep a deleted key's winner (Hudi precombine) writes them."""
     merged = None
@@ -172,9 +174,10 @@ def merge_commits(parts, keys, *order) -> DataFrame:
 
 
 def newest_first():
-    """The merge order of a keyed LSM read: the newest commit, then the
-    newest change within it (``__seq`` desc, nulls last)."""
-    return F.col(COMMIT).desc(), F.col(ENVELOPE_SEQ).desc()
+    """The merge order of a keyed LSM read, as SQL sort items: the newest
+    commit, then the newest change within it (``__seq`` desc, nulls
+    last)."""
+    return f"{quote(COMMIT)} DESC", f"{quote(ENVELOPE_SEQ)} DESC NULLS LAST"
 
 
 def live_rows(merged: DataFrame, names) -> DataFrame:
@@ -474,7 +477,7 @@ class LsmStateStore:
         if not parts:
             # truncated (or never written): an empty table with the schema
             return self.spark.createDataFrame([], schema_struct)
-        keys = m.get("pks") or []
+        keys = [quote(k) for k in m.get("pks") or []]
         merged = merge_commits(parts, keys, *newest_first())
         if keys and len(parts) == 1 and deltas:
             # a delta is the batch as written: even a lone one resolves

@@ -9,8 +9,13 @@ final state is the map's contents. On Spark this is last-image-per-key:
                narrow projection, NO shuffle. At 100 TB this is the path the
                initial snapshot load takes, so it must not shuffle.
     general    one hash shuffle on the primary key: the highest __seq per
-               key via ``first_per_key`` (sources/envelope.py), then drop
-               keys whose last image is DELETE.
+               key via ``first_per_key`` (sources/envelope.py), keyed on
+               ``coalesce(after.k, before.k)`` so a DELETE keys on its
+               before image, then drop keys whose last image is DELETE.
+
+The plan is SQL text (``core/sql_text.py``): keys, order and filters are
+strings applied with one ``selectExpr`` / ``where`` each, so building it
+costs a handful of driver→JVM calls however wide the key is.
 
 Without a primary key the changelog degenerates to append-only semantics
 (deletes/updates need keys), matching the reference's non-PK behavior.
@@ -20,8 +25,9 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
+from ..core.sql_text import quote
 from ..sources.envelope import ENVELOPE_OP, ENVELOPE_SEQ, OP_DELETE, first_per_key
 
 
@@ -31,9 +37,10 @@ def materialize_changelog(
     insert_only: bool = False,
 ) -> DataFrame:
     """Reduce an envelope frame (single table) to its final state."""
+    live = f"{quote(ENVELOPE_OP)} <> '{OP_DELETE}'"
     if insert_only or not primary_keys:
-        return df.where(F.col(ENVELOPE_OP) != OP_DELETE).select("after.*")
+        return df.where(live).select("after.*")
 
-    keys = [F.coalesce(F.col(f"after.{k}"), F.col(f"before.{k}")) for k in primary_keys]
-    latest = first_per_key(df, keys, F.col(ENVELOPE_SEQ).desc())
-    return latest.where(F.col(ENVELOPE_OP) != OP_DELETE).select("after.*")
+    keys = [f"coalesce(`after`.{quote(k)}, `before`.{quote(k)})" for k in primary_keys]
+    latest = first_per_key(df, keys, f"{quote(ENVELOPE_SEQ)} DESC")
+    return latest.where(live).select("after.*")

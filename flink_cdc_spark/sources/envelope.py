@@ -29,11 +29,11 @@ is its only implementation; stores, sinks and carry machines import it:
 
 from __future__ import annotations
 
-from typing import Sequence, Union
+from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from ..core.sql_text import quote
+from ..core.sql_text import named_struct, quote, sql_string, sql_type
 
 ENVELOPE_TABLE_ID = "__table_id"
 ENVELOPE_OP = "__op"
@@ -96,15 +96,14 @@ def row_image() -> Column:
     return F.expr(ROW_IMAGE_SQL)
 
 
-def first_per_key(
-    df: DataFrame, keys: Sequence[Union[str, Column]], *order: Column
-) -> DataFrame:
-    """One row per ``keys`` (names or expressions): the first under
-    ``order``. One window partitioned on the keys, and no helper column
-    left behind. Last-image-per-key passes a descending sequence."""
-    w = Window.partitionBy(*keys).orderBy(*order)
-    ranked = df.withColumn("__rn", F.row_number().over(w))
-    return ranked.where(F.col("__rn") == 1).drop("__rn")
+def first_per_key(df: DataFrame, keys: Sequence[str], *order: str) -> DataFrame:
+    """One row per ``keys`` (SQL expressions): the first under ``order``
+    (SQL sort items, e.g. ``"`__seq` DESC"``). One window partitioned on
+    the keys, and no helper column left behind. Last-image-per-key passes
+    a descending sequence."""
+    rank = F.expr(f"row_number() OVER (PARTITION BY {', '.join(keys)} "
+                  f"ORDER BY {', '.join(order)})")
+    return df.withColumn("__rn", rank).where("__rn = 1").drop("__rn")
 
 
 def from_images(
@@ -130,14 +129,14 @@ def wrap_as_inserts(df: DataFrame, table_id: str, seq_offset: int = 0) -> DataFr
     The sequence number is derived from a monotonically increasing id —
     stable within a batch read, no shuffle introduced.
     """
-    payload = F.struct(*[F.col(c) for c in df.columns])
-    return df.select(
-        F.lit(table_id).alias(ENVELOPE_TABLE_ID),
-        F.lit(OP_INSERT).alias(ENVELOPE_OP),
-        F.lit(None).cast(T.StructType(df.schema.fields)).alias("before"),
-        payload.alias("after"),
-        F.create_map().cast("map<string,string>").alias(ENVELOPE_META),
-        (F.monotonically_increasing_id() + F.lit(seq_offset)).alias(ENVELOPE_SEQ),
+    payload = df.schema
+    return df.selectExpr(
+        f"{sql_string(table_id)} AS {quote(ENVELOPE_TABLE_ID)}",
+        f"'{OP_INSERT}' AS {quote(ENVELOPE_OP)}",
+        f"CAST(NULL AS {sql_type(payload)}) AS `before`",
+        f"{named_struct((c, quote(c)) for c in payload.fieldNames())} AS `after`",
+        f"CAST(map() AS MAP<STRING, STRING>) AS {quote(ENVELOPE_META)}",
+        f"monotonically_increasing_id() + {seq_offset} AS {quote(ENVELOPE_SEQ)}",
     )
 
 

@@ -9,17 +9,29 @@ keyed by primary key; FIXTURES.md F4) so downstream operators exercise
 changelog semantics (update splitting, last-per-key materialization). The
 mutation recipe is pure column arithmetic on the key — SQL-expressible, so
 a DuckDB oracle can reproduce the exact final state.
+
+The table is scanned once, and the plan is SQL text
+(``core/sql_text.py``): one ``selectExpr`` normalizes TIMESTAMP(NANOS)
+columns, one ``inline`` generator emits each row's INSERT and, where the
+key selects them, its UPDATE and DELETE (whose before image is the
+updated one when both apply), a ``where`` drops the events a row does not
+have, and one ``selectExpr`` builds the envelope. ``__seq`` is
+``monotonically_increasing_id()`` over the generator's rows plus a band
+per op — 0 for INSERT, ``1 << 41`` for UPDATE, ``1 << 42`` for DELETE —
+so every key's events order as INSERT < UPDATE < DELETE, and a consumer
+can split a changelog at a band.
 """
 
 from __future__ import annotations
 
+import glob
+import os
 from dataclasses import dataclass
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession
 
-from ..core.schema import Schema
-from ..core.table_id import TableId
+from ..core.sql_text import named_struct, quote, sql_string, sql_type
 from .envelope import (
     ENVELOPE_META,
     ENVELOPE_OP,
@@ -31,21 +43,26 @@ from .envelope import (
     wrap_as_inserts,
 )
 
+UPDATE_BAND = 1 << 41
+DELETE_BAND = 1 << 42
+
 
 def _nanos_timestamp_columns(path: str) -> set:
-    """Columns stored as parquet TIMESTAMP(NANOS) (pyarrow timestamp[ns])."""
+    """Columns stored as parquet TIMESTAMP(NANOS) (pyarrow timestamp[ns]).
+    A directory table is read through its first ``*.parquet`` file."""
     try:
         import pyarrow.parquet as pq
 
+        if os.path.isdir(path):
+            files = sorted(glob.glob(os.path.join(path, "**", "*.parquet"),
+                                     recursive=True))
+            if not files:
+                return set()
+            path = files[0]
         schema = pq.read_schema(path)
     except Exception:
         return set()
-    out = set()
-    for field in schema:
-        t = field.type
-        if str(t).startswith("timestamp[ns"):
-            out.add(field.name)
-    return out
+    return {f.name for f in schema if str(f.type).startswith("timestamp[ns")}
 
 
 @dataclass
@@ -68,15 +85,61 @@ class MutationSpec:
     def oracle_final_state_sql(self, table: str, columns: list) -> str:
         """DuckDB SQL computing the exact post-changelog state."""
         sets = self.update_exprs or {}
+        key = _duck_quote(self.key_column)
         proj = ", ".join(
-            f"CASE WHEN ({self.key_column} % {self.update_mod}) = {self.update_rem} "
-            f"THEN ({sets[c]}) ELSE {c} END AS {c}" if c in sets else c
+            f"CASE WHEN ({key} % {self.update_mod}) = {self.update_rem} "
+            f"THEN ({sets[c]}) ELSE {_duck_quote(c)} END AS {_duck_quote(c)}"
+            if c in sets else _duck_quote(c)
             for c in columns
         )
         return (
             f"SELECT {proj} FROM {table} "
-            f"WHERE ({self.key_column} % {self.delete_mod}) <> {self.delete_rem}"
+            f"WHERE ({key} % {self.delete_mod}) <> {self.delete_rem}"
         )
+
+
+def _duck_quote(name: str) -> str:
+    """``name`` as a DuckDB (double-quoted) identifier."""
+    return '"' + name.replace('"', '""') + '"'
+
+
+def _with_tail(df: DataFrame, table_id: str, spec: MutationSpec) -> DataFrame:
+    """``df``'s rows as INSERTs followed by ``spec``'s tail, from one scan:
+    each row's events come out of one ``inline`` generator, and a
+    DELETE's before image is the updated one when the row was also
+    updated."""
+    payload = df.schema
+    image = named_struct((c, quote(c)) for c in payload.fieldNames())
+    sets = spec.update_exprs or {}
+    updated = named_struct(
+        (f.name, f"CAST(({sets[f.name]}) AS {sql_type(f.dataType)})"
+         if f.name in sets else quote(f.name))
+        for f in payload.fields
+    )
+    absent = f"CAST(NULL AS {sql_type(payload)})"
+    key = quote(spec.key_column)
+    is_update = f"{key} % {spec.update_mod} = {spec.update_rem}"
+    is_delete = f"{key} % {spec.delete_mod} = {spec.delete_rem}"
+
+    def event(op: str, before: str, after: str) -> str:
+        return named_struct(((ENVELOPE_OP, f"'{op}'"), ("before", before),
+                             ("after", after)))
+
+    deleted = f"CASE WHEN {is_update} THEN {updated} ELSE {image} END"
+    op = quote(ENVELOPE_OP)
+    return df.selectExpr(
+        f"inline(array({event(OP_INSERT, absent, image)}, "
+        f"CASE WHEN {is_update} THEN {event(OP_UPDATE, image, updated)} END, "
+        f"CASE WHEN {is_delete} THEN {event(OP_DELETE, deleted, absent)} END))"
+    ).where(f"{op} IS NOT NULL").selectExpr(
+        f"{sql_string(table_id)} AS {quote(ENVELOPE_TABLE_ID)}",
+        op, "`before`", "`after`",
+        f"CAST(map() AS MAP<STRING, STRING>) AS {quote(ENVELOPE_META)}",
+        f"monotonically_increasing_id() + CASE {op} "
+        f"WHEN '{OP_UPDATE}' THEN {UPDATE_BAND} "
+        f"WHEN '{OP_DELETE}' THEN {DELETE_BAND} ELSE 0 END "
+        f"AS {quote(ENVELOPE_SEQ)}",
+    )
 
 
 class ParquetTableSource:
@@ -103,14 +166,11 @@ class ParquetTableSource:
         if nanos_cols:
             # nanos were read as long (spark.sql.legacy.parquet.nanosAsLong);
             # normalize to micros TIMESTAMP_NTZ, matching DuckDB's cast
-            df = df.select(
-                *[
-                    F.expr(f"cast(timestamp_micros(`{c}` div 1000) as timestamp_ntz)").alias(c)
-                    if c in nanos_cols
-                    else F.col(c)
-                    for c in df.columns
-                ]
-            )
+            df = df.selectExpr(*[
+                f"CAST(timestamp_micros({quote(c)} div 1000) AS timestamp_ntz) AS {quote(c)}"
+                if c in nanos_cols else quote(c)
+                for c in df.columns
+            ])
         return df
 
     def changelog(
@@ -121,53 +181,9 @@ class ParquetTableSource:
     ) -> DataFrame:
         tid = table_id or f"default.{table}"
         df = self.snapshot(table)
-        inserts = wrap_as_inserts(df, tid)
         if mutations is None:
-            return inserts
-        return inserts.unionByName(self._mutation_tail(df, tid, mutations))
-
-    def _mutation_tail(self, df: DataFrame, table_id: str, spec: MutationSpec) -> DataFrame:
-        key = F.col(spec.key_column)
-        payload_before = F.struct(*[F.col(c) for c in df.columns])
-        updated_cols = [
-            F.expr(spec.update_exprs[c]).cast(df.schema[c].dataType).alias(c)
-            if spec.update_exprs and c in spec.update_exprs
-            else F.col(c)
-            for c in df.columns
-        ]
-        payload_after = F.struct(*updated_cols)
-        null_payload = F.lit(None).cast(T.StructType(df.schema.fields))
-        empty_meta = F.create_map().cast("map<string,string>")
-
-        # updates sequence after all inserts; deletes after all updates.
-        # 2^40 offsets keep the bands disjoint from monotonically_increasing_id.
-        upd = (
-            df.where((key % spec.update_mod) == spec.update_rem)
-            .select(
-                F.lit(table_id).alias(ENVELOPE_TABLE_ID),
-                F.lit(OP_UPDATE).alias(ENVELOPE_OP),
-                payload_before.alias("before"),
-                payload_after.alias("after"),
-                empty_meta.alias(ENVELOPE_META),
-                (F.monotonically_increasing_id() + F.lit(1 << 41)).alias(ENVELOPE_SEQ),
-            )
-        )
-        # the delete's before image reflects the update when one applied
-        deleted_payload = F.when(
-            (key % spec.update_mod) == spec.update_rem, payload_after
-        ).otherwise(payload_before)
-        dele = (
-            df.where((key % spec.delete_mod) == spec.delete_rem)
-            .select(
-                F.lit(table_id).alias(ENVELOPE_TABLE_ID),
-                F.lit(OP_DELETE).alias(ENVELOPE_OP),
-                deleted_payload.alias("before"),
-                null_payload.alias("after"),
-                empty_meta.alias(ENVELOPE_META),
-                (F.monotonically_increasing_id() + F.lit(1 << 42)).alias(ENVELOPE_SEQ),
-            )
-        )
-        return upd.unionByName(dele)
+            return wrap_as_inserts(df, tid)
+        return _with_tail(df, tid, mutations)
 
 
 def read_table_as_changelog(

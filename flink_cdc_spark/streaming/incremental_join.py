@@ -51,6 +51,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..core.sql_text import quote
 from ..sources.envelope import (
     ENVELOPE_OP,
     ENVELOPE_SEQ,
@@ -79,7 +80,7 @@ def two_sided_delta(
         F.coalesce(F.col(f"after.{pk_right}"), F.col(f"before.{pk_right}")),
     )
     keyed = env.select("*", is_left.alias("__left"), pk_col.alias("__pk"))
-    return first_per_key(keyed, ["__left", "__pk"], F.col(ENVELOPE_SEQ).desc()).select(
+    return first_per_key(keyed, ["`__left`", "`__pk`"], f"{quote(ENVELOPE_SEQ)} DESC").select(
         "__left", "__pk", (F.col(ENVELOPE_OP) != OP_DELETE).alias("__alive"), "after"
     )
 

@@ -42,6 +42,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..core.sql_text import quote
 from ..sources.envelope import ENVELOPE_OP, ENVELOPE_SEQ, OP_DELETE, first_per_key
 from .epoch import EpochMachine
 
@@ -86,7 +87,7 @@ class RetractTopNStream(EpochMachine):
             pk = F.coalesce(F.col(f"after.{k}"), F.col(f"before.{k}"))
             keyed = batch_df.withColumn("__pk", pk)
             delta = self._hold(
-                first_per_key(keyed, ["__pk"], F.col(ENVELOPE_SEQ).desc()).select(
+                first_per_key(keyed, ["`__pk`"], f"{quote(ENVELOPE_SEQ)} DESC").select(
                     "__pk",
                     (F.col(ENVELOPE_OP) != OP_DELETE).alias("__alive"),
                     F.col(f"after.{g}").alias("__g_new"),

@@ -49,6 +49,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..core.sql_text import quote
 from ..operators.temporal_join import temporal_join
 from ..sources.envelope import (
     ENVELOPE_OP,
@@ -125,7 +126,7 @@ class StreamingTemporalJoin(EpochMachine):
             F.expr(self.ts_expr).alias("__ts"),
         )
         w = Window.partitionBy(k).orderBy(F.col("__seq").asc())
-        firsts = first_per_key(events, [k], F.col("__seq").asc()).select(
+        firsts = first_per_key(events, [quote(k)], "`__seq` ASC").select(
             k, F.col("__ts").alias("__first_ts")
         )
 

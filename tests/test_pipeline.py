@@ -207,3 +207,126 @@ pipeline: {{execution.runtime-mode: BATCH, schema.change.behavior: {behavior}}}
     rows = {x.col1: (x.newCol2, x.col3) for x in t.collect()}
     assert rows["3"] == ("3", "c3b")
     assert rows["1"] == ("1", None)
+
+
+# -- the one-scan snapshot changelog (sources/parquet_source.py) --------------
+
+ODD = ["id", "my col", "we`ird", "v"]
+
+
+def _odd_table(tmp_path, n=240):
+    """A two-file directory table whose payload names need quoting."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out = tmp_path / "odd.parquet"
+    out.mkdir()
+    for i, lo in enumerate((0, n // 2)):
+        ids = list(range(lo, lo + n // 2))
+        pq.write_table(pa.table({
+            "id": pa.array(ids, pa.int64()),
+            "my col": [f"s{k}" for k in ids],
+            "we`ird": [k % 7 for k in ids],
+            "v": [k * 1.5 for k in ids],
+        }), str(out / f"part-{i}.parquet"))
+    return str(tmp_path)
+
+
+# key 5 mod 12 is both updated (1 mod 4) and deleted (5 mod 6)
+ODD_SPEC = MutationSpec(
+    key_column="id", update_mod=4, update_rem=1,
+    update_exprs={"v": "v + 1000", "we`ird": "-1"},
+    delete_mod=6, delete_rem=5,
+)
+
+
+def test_mutation_changelog_scans_the_table_once(spark, tmp_path):
+    df = ParquetTableSource(spark, _odd_table(tmp_path)).changelog("odd", "app.odd", ODD_SPEC)
+    qe = df._jdf.queryExecution()
+    assert "Union" not in qe.optimizedPlan().toString()
+    assert qe.executedPlan().toString().count("FileScan") == 1
+
+
+def test_mutation_changelog_sequence_bands(spark, tmp_path):
+    df = ParquetTableSource(spark, _odd_table(tmp_path)).changelog("odd", "app.odd", ODD_SPEC)
+    rows = df.collect()
+    seqs = {op: [r["__seq"] for r in rows if r["__op"] == op]
+            for op in ("INSERT", "UPDATE", "DELETE")}
+    assert len(seqs["INSERT"]) == 240
+    assert len(seqs["UPDATE"]) == 60 and len(seqs["DELETE"]) == 40
+    assert max(seqs["INSERT"]) < 1 << 41 <= min(seqs["UPDATE"])
+    assert max(seqs["UPDATE"]) < 1 << 42 <= min(seqs["DELETE"])
+    assert len({r["__seq"] for r in rows}) == len(rows)
+    assert {r["__table_id"] for r in rows} == {"app.odd"}
+
+
+def test_mutation_changelog_delete_carries_the_updated_image(spark, tmp_path):
+    df = ParquetTableSource(spark, _odd_table(tmp_path)).changelog("odd", "app.odd", ODD_SPEC)
+    deletes = {r["before"]["id"]: r for r in df.where("__op = 'DELETE'").collect()}
+    assert deletes and all(r["after"] is None for r in deletes.values())
+    for k, r in deletes.items():
+        b = r["before"]
+        if k % 4 == 1:
+            assert (b["v"], b["we`ird"]) == (k * 1.5 + 1000, -1), k
+        else:
+            assert (b["v"], b["we`ird"]) == (k * 1.5, k % 7), k
+        assert b["my col"] == f"s{k}"
+    assert 17 in deletes and 5 in deletes
+
+
+def test_mutation_changelog_materializes_to_the_oracle(spark, tmp_path):
+    from flink_cdc_spark.sinks.materialize import materialize_changelog
+
+    sf = _odd_table(tmp_path)
+    env = ParquetTableSource(spark, sf).changelog("odd", "app.odd", ODD_SPEC)
+    got = sorted(tuple(r) for r in materialize_changelog(env, ["id"]).select(
+        *[f"`{c.replace('`', '``')}`" for c in ODD]).collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW odd AS SELECT * FROM read_parquet('{sf}/odd.parquet/*.parquet')")
+    want = sorted(con.sql(ODD_SPEC.oracle_final_state_sql("odd", ODD)).fetchall())
+    assert len(got) == 240 - 40
+    assert got == want
+
+
+def test_wrap_as_inserts_keeps_nested_not_null(spark):
+    from pyspark.sql import types as T
+
+    from flink_cdc_spark.sources.envelope import wrap_as_inserts
+
+    payload = T.StructType([
+        T.StructField("id", T.LongType(), False),
+        T.StructField("s", T.StructType([
+            T.StructField("a", T.IntegerType(), False),
+            T.StructField("b c", T.StringType()),
+        ])),
+    ])
+    env = wrap_as_inserts(spark.createDataFrame([(1, (2, "x"))], payload), "app.t", 7)
+    assert env.schema["before"].dataType == payload
+    assert env.schema["after"].dataType == payload
+    (row,) = env.collect()
+    assert (row["__op"], row["before"]) == ("INSERT", None) and row["__seq"] >= 7
+    assert row["after"]["s"]["b c"] == "x"
+
+
+def test_nanos_timestamps_in_a_directory_table(spark, tmp_path):
+    """A TIMESTAMP(NANOS) column of a directory-form table reads as
+    TIMESTAMP_NTZ (micros), as it does from a single file."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    out = tmp_path / "ev.parquet"
+    out.mkdir()
+    base = datetime.datetime(2024, 3, 1, 12, 0, 0)
+    stamps = [base + datetime.timedelta(seconds=k, microseconds=k) for k in range(4)]
+    for i in range(2):
+        part = stamps[2 * i: 2 * i + 2]
+        pq.write_table(pa.table({
+            "id": pa.array([2 * i, 2 * i + 1], pa.int64()),
+            "ts": pa.array(part, pa.timestamp("ns")),
+        }), str(out / f"part-{i}.parquet"))
+    df = ParquetTableSource(spark, str(tmp_path)).snapshot("ev")
+    assert isinstance(df.schema["ts"].dataType, T.TimestampNTZType)
+    assert sorted((r.id, r.ts) for r in df.collect()) == list(enumerate(stamps))

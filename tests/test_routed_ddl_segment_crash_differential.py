@@ -63,30 +63,35 @@ class _Crash(Exception):
 class CrashingRunner(StreamingPipelineRunner):
     def arm(self, phase):
         self._phase = phase
+        self.crashed = None  # the message of the crash raised, once it is
         self._merges = 0
         self._ddls = 0
 
+    def _crash(self, message):
+        self.crashed = message
+        raise _Crash(message)
+
     def process_batch(self, batch, batch_id):
         if self._phase == "pre":
-            raise _Crash("pre-batch crash")
+            self._crash("pre-batch crash")
         super().process_batch(batch, batch_id)
         if self._phase == "post":
-            raise _Crash("post-batch pre-commit crash")
+            self._crash("post-batch pre-commit crash")
 
     def _merge_segment(self, seg, tables=None):
         super()._merge_segment(seg, tables=tables)
         self._merges += 1
         if self._phase == "seg1" and self._merges == 1:
-            raise _Crash("crash after first segment merge")
+            self._crash("crash after first segment merge")
         if self._phase == "seg2" and self._merges == 2:
-            raise _Crash("crash after second segment merge")
+            self._crash("crash after second segment merge")
 
     def _apply_ddl(self, event):
         super()._apply_ddl(event)
         if self._phase == "ddl1" and not isinstance(event, CreateTableEvent):
             self._ddls += 1
             if self._ddls == 1:
-                raise _Crash("crash after first mid-batch DDL apply")
+                self._crash("crash after first mid-batch DDL apply")
 
 
 def _schema_of(cols):
@@ -192,8 +197,11 @@ def _drain(spark, work, slices, crash_at=None, phase=None):
         if i == crash_at:
             crasher = mk(CrashingRunner)
             crasher.arm(phase)
-            with pytest.raises(Exception):
+            with pytest.raises(Exception) as err:
                 crasher.run_available(src)
+            # the planted crash stopped the run, not some other error
+            assert crasher.crashed is not None, err.value
+            assert crasher.crashed in str(err.value)
             mk(StreamingPipelineRunner).run_available(src)
         else:
             mk(StreamingPipelineRunner).run_available(src)

@@ -62,20 +62,25 @@ class CrashingRunner(StreamingPipelineRunner):
 
     def arm(self, phase):
         self._phase = phase
+        self.crashed = None  # the message of the crash raised, once it is
         self._merges = 0
+
+    def _crash(self, message):
+        self.crashed = message
+        raise _Crash(message)
 
     def process_batch(self, batch, batch_id):
         if self._phase == "pre":
-            raise _Crash("pre-batch crash")
+            self._crash("pre-batch crash")
         super().process_batch(batch, batch_id)
         if self._phase == "post":
-            raise _Crash("post-batch pre-commit crash")
+            self._crash("post-batch pre-commit crash")
 
     def _merge_segment(self, seg, tables=None):
         super()._merge_segment(seg, tables=tables)
         if self._phase == "mid":
             self._merges += 1
-            raise _Crash("mid-batch crash after first segment merge")
+            self._crash("mid-batch crash after first segment merge")
 
 
 def _schema_of(cols):
@@ -224,8 +229,11 @@ def _drain(spark, runner_cls, work, slices, crash_at=None, phase=None,
         if i == crash_at:
             crasher = mk(runner_cls)
             crasher.arm(phase)
-            with pytest.raises(Exception):
+            with pytest.raises(Exception) as err:
                 crasher.run_available(src)
+            # the planted crash stopped the run, not some other error
+            assert crasher.crashed is not None, err.value
+            assert crasher.crashed in str(err.value)
             # fresh runner, empty coordinator: schema recovery comes from
             # the slice-prefix CREATE, state/offsets from ckpt + LSM
             mk(StreamingPipelineRunner).run_available(src)

@@ -207,3 +207,22 @@ def test_error_unknown_column(spark):
     with pytest.raises(Exception) as ei:
         apply_transform(df, rule)
     assert "not found" in str(ei.value)
+
+
+def test_computed_column_type_keeps_non_null_elements(spark):
+    """Computed-column types are deduced over the payload's exact type: an
+    array whose elements are NOT NULL keeps them NOT NULL through an
+    expression, which DDL type text could not state."""
+    from pyspark.sql import types as T
+
+    from flink_cdc_spark.operators.transform import TransformProcessor
+
+    payload = T.StructType([
+        T.StructField("id", T.LongType(), False),
+        T.StructField("arr", T.ArrayType(T.IntegerType(), False)),
+    ])
+    rule = TransformRule(source_table="db.users", projection="id, slice(arr, 1, 1) AS head")
+    out = TransformProcessor(rule, payload).output_schema()
+    head = out.get_column("head").type
+    assert head.root == "ARRAY" and head.element.root == "INT"
+    assert not head.element.nullable
