@@ -28,8 +28,7 @@ def sql_type(dt: T.DataType) -> str:
     ``from_json`` schema). Nested field names are quoted and a non-null
     nested field keeps ``NOT NULL``; atomic types render as
     ``simpleString()``. DDL cannot state that an array's elements or a
-    map's values are non-null, so those come back nullable
-    (``ddl_exact`` tells)."""
+    map's values are non-null, so those come back nullable."""
     if isinstance(dt, T.StructType):
         return "STRUCT<" + ", ".join(
             f"{quote(f.name)}: {sql_type(f.dataType)}"
@@ -41,19 +40,6 @@ def sql_type(dt: T.DataType) -> str:
     if isinstance(dt, T.MapType):
         return f"MAP<{sql_type(dt.keyType)}, {sql_type(dt.valueType)}>"
     return dt.simpleString()
-
-
-def ddl_exact(dt: T.DataType) -> bool:
-    """Whether ``sql_type(dt)`` parses back to ``dt``: false when some
-    array's elements or some map's values are non-null."""
-    if isinstance(dt, T.StructType):
-        return all(ddl_exact(f.dataType) for f in dt.fields)
-    if isinstance(dt, T.ArrayType):
-        return dt.containsNull and ddl_exact(dt.elementType)
-    if isinstance(dt, T.MapType):
-        return (dt.valueContainsNull and ddl_exact(dt.keyType)
-                and ddl_exact(dt.valueType))
-    return True
 
 
 def named_struct(fields) -> str:

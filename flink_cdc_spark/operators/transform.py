@@ -39,7 +39,7 @@ from ..core.schema import Schema
 from ..core.selectors import Selectors
 from ..core.table_id import TableId
 from ..core import types as ct
-from ..core.sql_text import ddl_exact, named_struct, quote, sql_string, sql_type
+from ..core.sql_text import named_struct, quote, sql_string
 from ..expressions.compiler import (
     CompileError,
     ExpressionCompiler,
@@ -323,15 +323,12 @@ class TransformProcessor:
 
     # -- output schema -------------------------------------------------------------
     def _deduce_output_types(self) -> dict:
-        """Computed-column types via Catalyst: plan the projection over
-        typed-NULL envelope columns selected from ``spark.range(0)`` (no
-        rows) and read the analyzed schema (the analog of
+        """Computed-column types via Catalyst: plan the projection over an
+        empty envelope frame and read the analyzed schema (the analog of
         TransformParser.deduceSubExpressionType via Calcite RelNode types,
         runtime/parser/TransformParser.java:753 — Spark's analyzer is the
-        type checker here). The NULLs are cast to DDL text, or, when DDL
-        cannot state the payload (non-null array elements or map values),
-        to its ``StructType`` — which costs ~30 more driver→JVM calls."""
-        from pyspark.sql import SparkSession, functions as F
+        type checker here)."""
+        from pyspark.sql import SparkSession
 
         from ..sources.envelope import envelope_schema
 
@@ -342,17 +339,8 @@ class TransformProcessor:
             [T.StructField(f.name, f.dataType, True) for f in self.payload.fields]
         )
         try:
-            envelope = envelope_schema(nullable_payload)
-            if ddl_exact(envelope):
-                row = spark.range(0).selectExpr(*[
-                    f"CAST(NULL AS {sql_type(f.dataType)}) AS {quote(f.name)}"
-                    for f in envelope.fields
-                ])
-            else:
-                row = spark.range(0).select(
-                    F.lit(None).cast(envelope).alias("e")
-                ).selectExpr("e.*")
-            analyzed = row.selectExpr(
+            empty = spark.createDataFrame([], envelope_schema(nullable_payload))
+            analyzed = empty.selectExpr(
                 *[f"{sql} AS {quote(name)}" for name, sql in self._proj_sql["after"]]
             ).schema
             return {f.name: ct.from_spark_type(f.dataType) for f in analyzed.fields}

@@ -66,6 +66,20 @@ def envelope_schema(payload: T.StructType) -> T.StructType:
     )
 
 
+def envelope_sql(table_id: str, op: str, before: str, after: str, seq: str) -> list:
+    """The six envelope columns as ``selectExpr`` items, in order: the
+    op, the images and the sequence from SQL text, ``table_id`` as a
+    literal and an empty meta map."""
+    return [
+        f"{sql_string(table_id)} AS {quote(ENVELOPE_TABLE_ID)}",
+        f"{op} AS {quote(ENVELOPE_OP)}",
+        f"{before} AS `before`",
+        f"{after} AS `after`",
+        f"CAST(map() AS MAP<STRING, STRING>) AS {quote(ENVELOPE_META)}",
+        f"{seq} AS {quote(ENVELOPE_SEQ)}",
+    ]
+
+
 def is_envelope(df: DataFrame) -> bool:
     names = set(df.columns)
     return {ENVELOPE_TABLE_ID, ENVELOPE_OP, "before", "after", ENVELOPE_SEQ} <= names
@@ -130,14 +144,13 @@ def wrap_as_inserts(df: DataFrame, table_id: str, seq_offset: int = 0) -> DataFr
     stable within a batch read, no shuffle introduced.
     """
     payload = df.schema
-    return df.selectExpr(
-        f"{sql_string(table_id)} AS {quote(ENVELOPE_TABLE_ID)}",
-        f"'{OP_INSERT}' AS {quote(ENVELOPE_OP)}",
-        f"CAST(NULL AS {sql_type(payload)}) AS `before`",
-        f"{named_struct((c, quote(c)) for c in payload.fieldNames())} AS `after`",
-        f"CAST(map() AS MAP<STRING, STRING>) AS {quote(ENVELOPE_META)}",
-        f"monotonically_increasing_id() + {seq_offset} AS {quote(ENVELOPE_SEQ)}",
-    )
+    return df.selectExpr(*envelope_sql(
+        table_id,
+        f"'{OP_INSERT}'",
+        f"CAST(NULL AS {sql_type(payload)})",
+        named_struct((c, quote(c)) for c in payload.fieldNames()),
+        f"monotonically_increasing_id() + {seq_offset}",
+    ))
 
 
 def wrap_as_upsert_deletes(

@@ -31,15 +31,13 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..core.sql_text import named_struct, quote, sql_string, sql_type
+from ..core.sql_text import named_struct, quote, sql_type
 from .envelope import (
-    ENVELOPE_META,
     ENVELOPE_OP,
-    ENVELOPE_SEQ,
-    ENVELOPE_TABLE_ID,
     OP_DELETE,
     OP_INSERT,
     OP_UPDATE,
+    envelope_sql,
     wrap_as_inserts,
 )
 
@@ -131,15 +129,12 @@ def _with_tail(df: DataFrame, table_id: str, spec: MutationSpec) -> DataFrame:
         f"inline(array({event(OP_INSERT, absent, image)}, "
         f"CASE WHEN {is_update} THEN {event(OP_UPDATE, image, updated)} END, "
         f"CASE WHEN {is_delete} THEN {event(OP_DELETE, deleted, absent)} END))"
-    ).where(f"{op} IS NOT NULL").selectExpr(
-        f"{sql_string(table_id)} AS {quote(ENVELOPE_TABLE_ID)}",
-        op, "`before`", "`after`",
-        f"CAST(map() AS MAP<STRING, STRING>) AS {quote(ENVELOPE_META)}",
+    ).where(f"{op} IS NOT NULL").selectExpr(*envelope_sql(
+        table_id, op, "`before`", "`after`",
         f"monotonically_increasing_id() + CASE {op} "
         f"WHEN '{OP_UPDATE}' THEN {UPDATE_BAND} "
-        f"WHEN '{OP_DELETE}' THEN {DELETE_BAND} ELSE 0 END "
-        f"AS {quote(ENVELOPE_SEQ)}",
-    )
+        f"WHEN '{OP_DELETE}' THEN {DELETE_BAND} ELSE 0 END",
+    ))
 
 
 class ParquetTableSource:
